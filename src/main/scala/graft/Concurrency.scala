@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Driver-side overlap of INDEPENDENT Spark jobs (optimization guide §2.6):
   * actions are only sequential because driver code calls them sequentially,
   * and a lifecycle gate full of small jobs leaves most of the cluster idle
@@ -22,6 +24,21 @@ object Concurrency {
     */
   val DefaultMaxConcurrent = 4
 
+  /** Run `body` with `session` (when given) as this thread's active
+    * session, then put back the session the thread had before — a worker
+    * that already had one keeps it.
+    */
+  private[graft] def withActiveSession[T](session: Option[SparkSession])(
+      body: => T): T = {
+    val prior = SparkSession.getActiveSession
+    session.foreach(SparkSession.setActiveSession)
+    try body
+    finally prior match {
+      case Some(p) => SparkSession.setActiveSession(p)
+      case None => SparkSession.clearActiveSession()
+    }
+  }
+
   def inParallel[T](thunks: Seq[() => T], maxConcurrent: Int = 0): Seq[T] = {
     if (thunks.isEmpty) return Seq.empty
     if (thunks.size == 1 || sys.env.contains("GRAFT_NO_PARALLEL"))
@@ -34,19 +51,14 @@ object Concurrency {
     // pool thread spawned from a context with none set (e.g. a ScalaTest
     // runner thread) would leave ambient lookups session-less. Capture it
     // here, install it in each worker, restore after.
-    val callerSession = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+    val callerSession = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
     try {
       import scala.jdk.CollectionConverters._
       val futures = pool.invokeAll(
         thunks.map(t => new java.util.concurrent.Callable[T] {
-          override def call(): T = {
-            callerSession.foreach(
-              org.apache.spark.sql.SparkSession.setActiveSession)
-            try t()
-            finally org.apache.spark.sql.SparkSession.clearActiveSession()
-          }
+          override def call(): T = withActiveSession(callerSession)(t())
         }).asJava)
       futures.asScala.toSeq.map { f =>
         try f.get()

@@ -245,32 +245,6 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
 
   private val commitLogPath = s"$warehouse/commitlog"
 
-  /** Run a MULTI-TABLE write sequence inside a write-ahead intent marker —
-    * the sandbox-scale stand-in for the Delta/Iceberg commit the mutation
-    * paths cite. Plain parquet gives each table swap/write atomicity but
-    * nothing spans tables: a crash between "raw appended" and "registry
-    * swapped" leaves a torn warehouse. Two layers of defense:
-    *
-    *  - DETECTION, all mutations: `<version>.intent` is committed (temp +
-    *    rename) before the first table write, renamed to
-    *    `<version>.commit` after the last; a crash leaves the intent
-    *    behind, a mid-sequence failure renames it to `<version>.failed` —
-    *    both surface in `tornOperations` and as a startup warning.
-    *  - ISOLATION, append-shaped mutations: each commit also writes a
-    *    `<version>.manifest` snapshot of the raw fact table's file set,
-    *    and readers resolve the newest committed manifest instead of
-    *    listing the directory (`rawDatapointsInRange`) — so the files a
-    *    torn append left behind are simply never visible, and readers
-    *    stay on the pre-mutation snapshot with no remediation needed
-    *    (`vacuumRaw` reclaims the orphans). Rewrite-shaped mutations
-    *    (delete purge, compaction) delete old files in place, so a crash
-    *    there still needs `reprocessStreams`/restore — retained file
-    *    versions, i.e. a real table format, is the full answer.
-    *
-    * Callers wrap ONLY the write sequence (validation failures precede the
-    * intent and leave no marker). Single-writer per warehouse, as with the
-    * registry swap.
-    */
   /** Advisory warehouse writer lock — the batch-facade analog of the
     * reference's maintenance lock (T5; the streaming side's state is owned
     * by its checkpoint instead). Every mutation verb routes through
@@ -956,6 +930,33 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
         else None
     }
 
+  /** Run a MULTI-TABLE write sequence inside a write-ahead intent marker —
+    * the sandbox-scale stand-in for the Delta/Iceberg commit the mutation
+    * paths cite. Plain parquet gives each table swap/write atomicity but
+    * nothing spans tables: a crash between "raw appended" and "registry
+    * swapped" leaves a torn warehouse. Two layers of defense:
+    *
+    *  - DETECTION, all mutations: `<version>.intent` is committed (temp +
+    *    rename) before the first table write, renamed to
+    *    `<version>.commit` after the last; a crash leaves the intent
+    *    behind, a mid-sequence failure renames it to `<version>.failed` —
+    *    both surface in `tornOperations` and as a startup warning.
+    *  - ISOLATION, all mutations: each commit also writes a
+    *    `<version>.manifest` snapshot of every manifest table's file set
+    *    ([[manifestTables]]), and readers resolve the newest committed
+    *    manifest instead of listing the directory
+    *    (`rawDatapointsInRange`) — so the files a torn mutation left
+    *    behind are simply never visible, and readers stay on the
+    *    pre-mutation snapshot with no remediation needed (`vacuumRaw`
+    *    reclaims the orphans). Rewrite-shaped mutations (delete purge,
+    *    compaction, derived refresh) retire replaced files LOGICALLY
+    *    ([[retireFiles]]): the files stay on disk for older snapshots and
+    *    `restore` until vacuum reclaims them.
+    *
+    * Callers wrap ONLY the write sequence (validation failures precede the
+    * intent and leave no marker). Single-writer per warehouse, as with the
+    * registry swap.
+    */
   private def withCommit[T](op: String, adoptAll: Boolean = false)(body: => T): T = withWriterLock(op) {
     io.mkdirs(commitLogPath)
     def markerOf(v: Long, suffix: String) = f"$commitLogPath/$v%09d.$suffix"
@@ -2102,7 +2103,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * append; streams with derived dependents are refused like
     * [[deleteDatapoints]] (`OutstandingDependenciesError` — silently
     * rewriting a derivation's inputs would orphan its outputs); CHECK
-    * constraints gate the batch at the front door. Time travel to a
+    * constraints gate the batch at the front door; an empty batch commits
+    * nothing and returns 0. Time travel to a
     * pre-upsert version serves the original rows; [[restore]] undoes the
     * merge wholesale.
     *
@@ -2168,6 +2170,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
         min("ts").as("_lo"), max("ts").as("_hi"),
         collect_set(to_date(col("ts"))).as("_dates"),
         sum(when(isNullKey, 1L).otherwise(0L)).as("null_keys")).first()
+      // an empty batch commits nothing (and its sums above are null)
+      if (flags.getLong(2) == 0) return 0L
       // null merge keys are rejected BEFORE any write: the declared write
       // scope below comes from collect_set(to_date(ts)), which drops
       // nulls, so a null-ts row would land in the default partition
@@ -2204,7 +2208,6 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       if (violSample.nonEmpty)
         throw new errors.OutstandingDependenciesError(
           violSample.mkString(", "))
-      if (flags.getLong(2) == 0L) return 0L
       val loTs = flags.getTimestamp(4)
       val hiTs = flags.getTimestamp(5)
       val touchedDates = flags.getSeq[java.sql.Date](6)
@@ -2592,7 +2595,10 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
         sum(when(isBadNumeric, 1L).otherwise(0L)).as("bad_numeric"),
         sum(when(isStale, 1L).otherwise(0L)).as("stale"),
         collect_set(when(!isStale, to_date(col("ts")))).as("_dates"),
-        sum(when(isNullKey, 1L).otherwise(0L)).as("null_keys")).first()
+        sum(when(isNullKey, 1L).otherwise(0L)).as("null_keys"),
+        count(lit(1)).as("_n")).first()
+      // an empty batch commits nothing (and its sums above are null)
+      if (flags.getLong(5) == 0) return
       // null keys rejected pre-write: the commit's declared scope is the
       // collect_set of dates above, which silently drops nulls — a
       // null-ts row would otherwise write an undeclared default-partition
@@ -4537,167 +4543,40 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       case "derivative" => Derive.derivative(src)
       case "counter_reset" => Derive.counterReset(src)
       case "counter_derivative" =>
-        val maxV = meta.derive_args.flatMap { s =>
-          "max_value\"?\\s*[:=]\\s*([0-9.eE+-]+)".r.findFirstMatchIn(s).map(_.group(1).toDouble)
-        }
+        val maxV = meta.derive_args.flatMap(s =>
+          MaxValueArg.r.findFirstMatchIn(s).map(_.group(1).toDouble))
         Derive.counterDerivative(src, maxV)
       case other => throw new errors.InvalidOperatorArguments(s"unknown derive op $other")
     }
   }
 
-  /** `deriveDatapoints` in the fact table's `(stream_id, ts, value)` shape,
-    * carrying the DERIVED stream's id.
-    */
-  private def derivedAsDatapoints(streamId: String): DataFrame = {
-    val out = deriveDatapoints(streamId)
-    val valueCol = out.columns
-      .find(Set("derivative", "reset", "counter_derivative", "sum").contains)
-      .getOrElse(throw new errors.InvalidOperatorArguments(
-        s"unrecognized derive output shape: ${out.columns.mkString(",")}"))
-    val tsCol = if (out.columns.contains("ts")) "ts" else "bucket_start"
-    out.select(lit(streamId).as("stream_id"), col(tsCol).as("ts"),
-      col(valueCol).cast("double").as("value"),
-      lit(null).cast("string").as("value_json"))
-  }
+  /** `max_value` in a counter_derivative stream's `derive_args`. */
+  private val MaxValueArg = "max_value\"?\\s*[:=]\\s*([0-9.eE+-]+)"
 
   /** The reference updates derived streams at append
     * [ds :: backends/mongodb.py :: append → _process_contributes_to]; the
     * batch-native equivalent recomputes every derived stream's datapoints
-    * and replaces ONLY those streams' slices of the `derived/` sibling table
-    * (dynamic partition overwrite on `stream_id`). The appended fact table
-    * is never rewritten — at 100 TB a derived-stream refresh costs
-    * O(sources read + derived written), not a full fact-table round-trip.
-    * `rawDatapoints` unions the slice back in, so `getData` and the
-    * maintenance cascade serve derived streams exactly like ordinary ones.
-    * Idempotent.
+    * and replaces ONLY those streams' slices of the `derived/` sibling table.
+    * The appended fact table is never rewritten — at 100 TB a derived-stream
+    * refresh costs O(sources read + derived written), not a full fact-table
+    * round-trip. `rawDatapoints` unions the slice back in, so `getData` and
+    * the maintenance cascade serve derived streams exactly like ordinary
+    * ones. Idempotent.
     *
-    * ONE join-based pass per op class — never a per-stream driver loop: the
-    * registry's derived rows (derived id, op, parsed args, exploded sources)
-    * broadcast-join into the fact table, and each op class runs as a single
-    * window/groupBy keyed by (derived id, source id). N derived streams cost
-    * ~4 plans total (one per op class present), not 2N driver-side jobs —
-    * the reference's per-stream Python loop is exactly what SURVEY §7.4.5
-    * forbids at scale. Driver state is O(op classes) + O(empty recomputes),
-    * never O(derived streams).
+    * This is [[updateDerivedStreamsIncremental]] run from an empty
+    * watermark with no upper bound: every derived stream bootstraps, the
+    * whole previous derived table is retired from the next snapshot, and
+    * the `"derived"` watermarks and the prev-point sidecar are cleared — a
+    * stream whose recompute comes back empty simply has no files in the
+    * new manifest. It is also the remedy for every state the incremental
+    * bookkeeping cannot repair (see there).
     */
-  def updateDerivedStreams(): Unit = {
-    val derivedMeta = streams.where(col("derive_op").isNotNull)
-      .select(col("stream_id").as("derived_id"), col("derive_op"),
-        col("derive_args"), col("derived_from"), col("highest_granularity"))
-    // op-class histogram: decides which per-class plans to build. The
-    // collect is O(|distinct ops|) ≤ 4 rows — never the derived ids.
-    val opCounts = derivedMeta.groupBy("derive_op").count().collect()
-      .map(r => r.getString(0)).toSet
-    if (opCounts.isEmpty || !exists(rawPath)) return
-    // ensure-time validation admits only Derive.ops; re-checked here because
-    // this also reads registries written by older/foreign tools
-    opCounts.find(!Derive.ops(_)).foreach { op =>
-      throw new errors.InvalidOperatorArguments(s"unknown derive op $op")
-    }
-    // per-stream max_value parsed from derive_args as a COLUMN (same regex
-    // as the single-stream path); validation is a ≤1-row sample job
-    val maxvExpr = regexp_extract(col("derive_args"),
-      "max_value\"?\\s*[:=]\\s*([0-9.eE+-]+)", 1).cast("double")
-    if (opCounts("counter_derivative")) {
-      val bad = derivedMeta
-        .where(col("derive_op") === "counter_derivative" &&
-          maxvExpr.isNotNull && maxvExpr <= 0)
-        .select("derived_id").limit(1).collect()
-      if (bad.nonEmpty)
-        throw new errors.InvalidOperatorArguments(
-          s"counter_derivative max_value must be positive " +
-            s"(stream ${bad.head.getString(0)})")
-    }
-    // route every source row to every derived stream consuming it: one
-    // broadcast of the registry-sized derived metadata, one fact-table read
-    val routes = broadcast(derivedMeta
-      .withColumn("max_value", maxvExpr)
-      .select(col("derived_id"), col("derive_op"), col("max_value"),
-        col("highest_granularity"),
-        explode(col("derived_from")).as("stream_id")))
-    val src = rawDatapoints.join(routes, Seq("stream_id"))
-      .withColumn("event_id", monotonically_increasing_id())
-    val part = Seq("derived_id", "stream_id")
-    def shape(out: DataFrame, valueCol: String, tsCol: String = "ts"): DataFrame =
-      out.select(col("derived_id").as("stream_id"), col(tsCol).as("ts"),
-        col(valueCol).cast("double").as("value"),
-        lit(null).cast("string").as("value_json"))
-    // per-row bucket duration from each derived stream's granularity —
-    // the same epoch-µs floor as Downsample.bucketStart, duration via the
-    // joined metadata instead of a plan-time literal
-    val durUs = element_at(
-      typedLit(Granularity.ladder
-        .map(g => g.name -> g.durationSeconds * 1000000L).toMap),
-      col("highest_granularity"))
-    val plans = opCounts.toSeq.sorted.map {
-      case "sum" =>
-        shape(src.where(col("derive_op") === "sum")
-          .groupBy(col("derived_id"),
-            timestamp_micros(unix_micros(col("ts")) -
-              pmod(unix_micros(col("ts")), durUs)).as("ts"))
-          .agg(sum(col("value").cast(Downsample.DecV)).cast("double").as("sum")),
-          "sum")
-      case "derivative" =>
-        shape(Derive.derivative(
-          src.where(col("derive_op") === "derivative"), part), "derivative")
-      case "counter_reset" =>
-        shape(Derive.counterReset(
-          src.where(col("derive_op") === "counter_reset"), part), "reset")
-      case "counter_derivative" =>
-        shape(Derive.counterDerivativeByCol(
-          src.where(col("derive_op") === "counter_derivative"),
-          col("max_value"), part), "counter_derivative")
-    }
-    // checkpoint, not cache: a derived stream's sources may include OTHER
-    // derived streams — slices this commit is about to retire. A plain
-    // cache lost mid-write would silently recompute from lineage against
-    // the table being replaced; the lineage-free checkpoint cannot.
-    val (derived, rdds) = Plans.checkpointTracked(plans.reduce(_.unionByName(_)))
-    try withCommit("update_derived") {
-      // full-refresh semantics: every derived slice is recomputed, so the
-      // ENTIRE previous derived table is retired from the next snapshot
-      // and the recomputed slices land as fresh files. A crash anywhere
-      // leaves readers on the complete pre-refresh table; a derived
-      // stream whose recompute came back empty simply has no files in the
-      // new manifest (no stale-slice cleanup pass needed).
-      scopeWrite("derived")
-      retireFiles("derived", Seq(""))
-      derived.write.mode(SaveMode.Append)
-        .partitionBy("stream_id")
-        .parquet(derivedPath)
-      // a full recompute supersedes the incremental bookkeeping: the
-      // "derived" watermarks and the prev-point sidecar describe a slice
-      // history this rewrite just replaced wholesale — clear both so the
-      // next incremental refresh bootstraps cleanly from the new table
-      rmTree(derivePrevPath)
-      // maintain the derived streams' earliest/latest registry bounds from
-      // the recomputed slices (a recompute REPLACES a slice, so this is a
-      // set, not a min/max merge). Derived streams never pass through
-      // appendMultiple, so without this they'd have null bounds — and the
-      // bounds-pruned deleteStreams purge would skip their rollup rows.
-      val dBounds = derived.groupBy("stream_id")
-        .agg(min("ts").as("_lo"), max("ts").as("_hi"))
-      val updated = streams.join(dBounds, Seq("stream_id"), "left")
-        .withColumn("earliest_datapoint",
-          when(col("_lo").isNotNull, col("_lo")).otherwise(col("earliest_datapoint")))
-        .withColumn("latest_datapoint",
-          when(col("_hi").isNotNull, col("_hi")).otherwise(col("latest_datapoint")))
-        .withColumn("downsampled_until",
-          when(col("derive_op").isNotNull,
-            map_filter(coalesce(col("downsampled_until"),
-              map().cast("map<string,bigint>")), (k, _) => k =!= "derived"))
-            .otherwise(col("downsampled_until")))
-        .drop("_lo", "_hi")
-      swapRegistry(updated)
-    } finally rdds.foreach(_.unpersist(blocking = false))
-  }
+  def updateDerivedStreams(): Unit = refreshDerived(None)
 
   /** INCREMENTAL derived-stream maintenance — the `downsampled_until`
-    * watermark pattern applied to the derived table, closing the gap where
-    * [[updateDerivedStreams]] recomputes every derived stream's ENTIRE
-    * history per call (the reference derives incrementally at append
-    * [ds :: backends/mongodb.py :: append → _process_contributes_to]; at
-    * 100 TB a daily refresh must cost O(new data), not O(history)).
+    * watermark pattern applied to the derived table, so a refresh costs
+    * O(new data), not O(history) (the reference derives incrementally at
+    * append; at 100 TB a daily refresh must not re-read the past).
     *
     * Per derived stream the registry carries a `"derived"` entry in its
     * `downsampled_until` map: the granularity-aligned bound below which
@@ -4716,41 +4595,65 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * bucket-aligned, so every emitted bucket's rows lie wholly in the new
     * slice.
     *
-    * A stream with NO watermark (first refresh, or after a full
-    * recompute) BOOTSTRAPS: its existing slice is retired and its full
-    * history re-derived up to the bound — thereafter every refresh is
-    * incremental. Incremental-in-N-steps ≡ one-shot (asserted in tests
-    * and by the `q_derive_incremental` oracle gate): decimal bucket sums
-    * are exact under any split, and the lag stitch reproduces the
-    * unsplit window.
+    * A stream with NO watermark (first refresh, after a full
+    * [[updateDerivedStreams]], or after a `restore` to a version before its
+    * first refresh) BOOTSTRAPS: its existing slice is retired and its full
+    * history re-derived up to the bound, with no sidecar rows — thereafter
+    * every refresh is incremental. Incremental-in-N-steps ≡ one-shot
+    * (asserted in tests and by the `q_derive_incremental` oracle gate):
+    * decimal bucket sums are exact under any split, and the lag stitch
+    * reproduces the unsplit window.
     *
-    * Crash windows: the data write precedes the sidecar/registry swaps,
-    * which precede the manifest commit — a crash during the (dominant)
-    * data write is fully invisible; the remaining swap→commit tail
-    * (milliseconds) can leave the watermark ahead of invisible data,
-    * which the intent marker flags and a full `updateDerivedStreams`
-    * (clearing watermark + sidecar) remediates — the same
-    * registry-ahead-of-data tail deleteStreams documents.
+    * Open cases, both remedied by a full [[updateDerivedStreams]]:
+    *  - the sidecar is not in the snapshot manifest, so a `restore` to a
+    *    version whose watermark is OLDER (but present) still stitches from
+    *    the newer sidecar;
+    *  - crash windows: the data write precedes the sidecar/registry swaps,
+    *    which precede the manifest commit — a crash during the (dominant)
+    *    data write is fully invisible; the remaining swap→commit tail
+    *    (milliseconds) can leave the watermark ahead of invisible data,
+    *    which the intent marker flags — the same registry-ahead-of-data
+    *    tail deleteStreams documents.
     */
-  def updateDerivedStreamsIncremental(until: Timestamp): Unit = {
-    val untilUs = until.toInstant.getEpochSecond * 1000000L +
-      until.toInstant.getNano / 1000L
+  def updateDerivedStreamsIncremental(until: Timestamp): Unit =
+    refreshDerived(Some(until))
+
+  /** The one derived-stream refresh body. `until = None` is the full
+    * refresh: every stream bootstraps, no upper bound, no sidecar.
+    *
+    * ONE join-based pass per op class — never a per-stream driver loop: the
+    * registry's derived rows (derived id, op, parsed args, exploded sources)
+    * broadcast-join into the fact table, and each op class runs as a single
+    * window/groupBy keyed by (derived id, source id). N derived streams cost
+    * ~4 plans total (one per op class present), not 2N driver-side jobs —
+    * the reference's per-stream Python loop is exactly what SURVEY §7.4.5
+    * forbids at scale. Driver state is O(op classes), never O(derived
+    * streams).
+    */
+  private def refreshDerived(until: Option[Timestamp]): Unit = {
+    val full = until.isEmpty
+    // per-row bucket duration from each derived stream's granularity —
+    // the same epoch-µs floor as Downsample.bucketStart, duration via the
+    // joined metadata instead of a plan-time literal
     val durUs = element_at(
       typedLit(Granularity.ladder
         .map(g => g.name -> g.durationSeconds * 1000000L).toMap),
       col("highest_granularity"))
-    val maxvExpr = regexp_extract(col("derive_args"),
-      "max_value\"?\\s*[:=]\\s*([0-9.eE+-]+)", 1).cast("double")
-    // per-derived work window: lo = watermark (MinValue ⇒ bootstrap),
-    // hi = floor(until, granularity); a stream already at hi has no work
-    val metaBase = streams.where(col("derive_op").isNotNull)
-      .withColumn("max_value", maxvExpr)
-      .withColumn("_dur", durUs)
-      .withColumn("_hi", lit(untilUs) - pmod(lit(untilUs), col("_dur")))
-      .withColumn("_lo", coalesce(
-        element_at(col("downsampled_until"), lit("derived")),
-        lit(Long.MinValue)))
-    val work = metaBase
+    // per-derived work window [_lo, _hi): lo = watermark (MinValue ⇒
+    // bootstrap), hi = floor(until, granularity); a stream already at hi
+    // has no work
+    val hi = until.fold(lit(Long.MaxValue)) { u =>
+      val us = u.toInstant.getEpochSecond * 1000000L + u.toInstant.getNano / 1000L
+      lit(us) - pmod(lit(us), durUs)
+    }
+    val lo = if (full) lit(Long.MinValue)
+      else coalesce(element_at(col("downsampled_until"), lit("derived")),
+        lit(Long.MinValue))
+    val work = streams.where(col("derive_op").isNotNull)
+      .withColumn("max_value",
+        regexp_extract(col("derive_args"), MaxValueArg, 1).cast("double"))
+      .withColumn("_hi", hi)
+      .withColumn("_lo", lo)
       .where(col("_lo") < col("_hi"))
       .select(col("stream_id").as("derived_id"), col("derive_op"),
         col("max_value"), col("highest_granularity"), col("derived_from"),
@@ -4768,6 +4671,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       .collect()
     if (stats.isEmpty || !exists(rawPath)) return
     val opCounts = stats.map(_.getString(0)).toSet
+    // ensure-time validation admits only Derive.ops; re-checked here because
+    // this also reads registries written by older/foreign tools
     opCounts.find(!Derive.ops(_)).foreach { op =>
       throw new errors.InvalidOperatorArguments(s"unknown derive op $op")
     }
@@ -4782,15 +4687,19 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     val globalLo = stats.map(_.getLong(1)).min
     val globalHi = stats.map(_.getLong(2)).max
     val anyBootstrap = stats.map(_.getLong(3)).sum > 0
+    // route every source row to every derived stream consuming it: one
+    // broadcast of the registry-sized derived metadata
     val routes = broadcast(work
       .select(col("derived_id"), col("derive_op"), col("max_value"),
         col("highest_granularity"), col("_lo"), col("_hi"),
         explode(col("derived_from")).as("stream_id")))
-    withCommit("update_derived_incremental") {
+    withCommit(if (full) "update_derived" else "update_derived_incremental") {
       // bootstrapping streams re-derive their full history: retire their
       // current slices (files stay until vacuum; readers on the previous
-      // snapshot keep them until this commit lands)
-      if (anyBootstrap) {
+      // snapshot keep them until this commit lands). In the full refresh
+      // every stream bootstraps, so the whole table goes.
+      if (full) retireFiles("derived", Seq(""))
+      else if (anyBootstrap) {
         val segs = rawSnapshot.flatMap(_.tableFiles("derived"))
           .getOrElse(listFilesUnder("derived"))
           .map(_.split('/').head).filter(_.startsWith("stream_id="))
@@ -4812,41 +4721,39 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       // this is THE property that makes a refresh cost O(new data)
       val slice = rawDatapointsInRange(
           if (globalLo != Long.MinValue) Some(tsOf(globalLo)) else None,
-          Some(tsOf(globalHi)))
+          until.map(_ => tsOf(globalHi)))
         .join(routes, Seq("stream_id"))
         .where(unix_micros(col("ts")) < col("_hi") &&
           (col("_lo") === Long.MinValue || unix_micros(col("ts")) >= col("_lo")))
-      // lag stitch: each (derived, source) pair's persisted prev point
-      // rides in as one extra source row BELOW the window; its own output
-      // (emitted by the previous refresh) is filtered back out below.
-      // Only lag ops get prev rows — a prev row in a `sum` group would
-      // double-count a bucket contribution.
+      // lag stitch: each watermarked (derived, source) pair's persisted
+      // prev point rides in as one extra source row BELOW the window; its
+      // own output (emitted by the previous refresh) is filtered back out
+      // below. Only lag ops get prev rows — a prev row in a `sum` group
+      // would double-count a bucket contribution — and bootstrapping
+      // streams get none: they re-derive from their whole history, and a
+      // sidecar row can only be stale for them.
       val prevRows =
-        if (!exists(derivePrevPath)) None
+        if (full || !exists(derivePrevPath)) None
         else Some(spark.read.parquet(derivePrevPath)
-          .join(routes.where(col("derive_op") =!= "sum"),
-            Seq("derived_id", "stream_id"))
+          .join(routes.where(col("derive_op") =!= "sum" &&
+            col("_lo") =!= Long.MinValue), Seq("derived_id", "stream_id"))
           .select(col("stream_id"), col("ts"), col("value"),
             lit(null).cast("string").as("value_json"), col("derived_id"),
             col("derive_op"), col("max_value"), col("highest_granularity"),
             col("_lo"), col("_hi")))
-      val src0 = prevRows.map(slice.unionByName(_)).getOrElse(slice)
-      val src = src0.withColumn("event_id", monotonically_increasing_id())
+      val src = prevRows.fold(slice)(slice.unionByName(_))
+        .withColumn("event_id", monotonically_increasing_id())
       val part = Seq("derived_id", "stream_id")
-      def shape(out: DataFrame, valueCol: String, tsCol: String = "ts"): DataFrame =
-        out.select(col("derived_id").as("stream_id"), col(tsCol).as("ts"),
+      def shape(out: DataFrame, valueCol: String): DataFrame =
+        out.select(col("derived_id").as("stream_id"), col("ts"),
           col(valueCol).cast("double").as("value"),
           lit(null).cast("string").as("value_json"))
-      val rowDur = element_at(
-        typedLit(Granularity.ladder
-          .map(g => g.name -> g.durationSeconds * 1000000L).toMap),
-        col("highest_granularity"))
       val plans = opCounts.toSeq.sorted.map {
         case "sum" =>
           shape(src.where(col("derive_op") === "sum")
             .groupBy(col("derived_id"),
               timestamp_micros(unix_micros(col("ts")) -
-                pmod(unix_micros(col("ts")), rowDur)).as("ts"))
+                pmod(unix_micros(col("ts")), durUs)).as("ts"))
             .agg(sum(col("value").cast(Downsample.DecV)).cast("double").as("sum")),
             "sum")
         case "derivative" =>
@@ -4868,52 +4775,64 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
         .join(loDf, Seq("stream_id"))
         .where(col("_lo") === Long.MinValue || unix_micros(col("ts")) >= col("_lo"))
         .drop("_lo", "_hi")
+      // checkpoint, not cache: a derived stream's sources may include OTHER
+      // derived streams — slices this commit is retiring. A plain cache
+      // lost mid-write would silently recompute from lineage against the
+      // table being replaced; the lineage-free checkpoint cannot.
       val (emitted, rdds) = Plans.checkpointTracked(out)
       try {
         emitted.write.mode(SaveMode.Append)
           .partitionBy("stream_id")
           .parquet(derivedPath)
-        // advance the prev-point sidecar: per (derived, source) lag pair,
-        // the max-(ts, event_id) row of this window (the unioned prev row
-        // itself loses to any newer row); untouched pairs keep their rows
-        val newPrev = src.where(col("derive_op") =!= "sum")
-          .groupBy("derived_id", "stream_id")
-          .agg(max_by(struct(col("ts"), col("value")),
-            struct(col("ts"), col("event_id"))).as("_p"))
-          .select(col("derived_id"), col("stream_id"),
-            col("_p.ts").as("ts"), col("_p.value").as("value"))
-        val mergedPrev =
-          if (!exists(derivePrevPath)) newPrev
-          else spark.read.parquet(derivePrevPath)
-            .join(newPrev.select("derived_id", "stream_id"),
-              Seq("derived_id", "stream_id"), "left_anti")
-            .unionByName(newPrev)
-        overwriteSwap(mergedPrev, derivePrevPath)
-        // registry: per worked stream, watermark → hi; bounds merge (a
-        // bootstrap SETS bounds — its slice was replaced — others extend)
+        if (full) rmTree(derivePrevPath)
+        else {
+          // advance the prev-point sidecar: per (derived, source) lag pair,
+          // the max-(ts, event_id) row of this window (the unioned prev row
+          // itself loses to any newer row); untouched pairs keep their rows
+          val newPrev = src.where(col("derive_op") =!= "sum")
+            .groupBy("derived_id", "stream_id")
+            .agg(max_by(struct(col("ts"), col("value")),
+              struct(col("ts"), col("event_id"))).as("_p"))
+            .select(col("derived_id"), col("stream_id"),
+              col("_p.ts").as("ts"), col("_p.value").as("value"))
+          val mergedPrev =
+            if (!exists(derivePrevPath)) newPrev
+            else spark.read.parquet(derivePrevPath)
+              .join(newPrev.select("derived_id", "stream_id"),
+                Seq("derived_id", "stream_id"), "left_anti")
+              .unionByName(newPrev)
+          overwriteSwap(mergedPrev, derivePrevPath)
+        }
+        // registry, per worked stream: bounds from the emitted points — a
+        // bootstrap SETS them (its slice was replaced), others extend; and
+        // the watermark → hi (the full refresh clears it instead). Derived
+        // streams never pass through appendMultiple, so without this they'd
+        // have null bounds — and the bounds-pruned deleteStreams purge
+        // would skip their rollup rows.
         val emittedBounds = emitted.groupBy("stream_id")
           .agg(min("ts").as("_elo"), max("ts").as("_ehi"))
+        val boot = col("_lo") === Long.MinValue
+        val kept = map_filter(coalesce(col("downsampled_until"),
+          map().cast("map<string,bigint>")), (k, _) => k =!= "derived")
         val updated = streams
           .join(work.select(col("derived_id").as("stream_id"), col("_lo"),
             col("_hi")), Seq("stream_id"), "left")
           .join(emittedBounds, Seq("stream_id"), "left")
           .withColumn("earliest_datapoint",
             when(col("_elo").isNotNull,
-              when(col("_lo") === Long.MinValue, col("_elo"))
+              when(boot, col("_elo"))
                 .otherwise(least(coalesce(col("earliest_datapoint"),
                   col("_elo")), col("_elo"))))
               .otherwise(col("earliest_datapoint")))
           .withColumn("latest_datapoint",
             when(col("_ehi").isNotNull,
-              greatest(coalesce(col("latest_datapoint"), col("_ehi")),
-                col("_ehi")))
+              when(boot, col("_ehi"))
+                .otherwise(greatest(coalesce(col("latest_datapoint"),
+                  col("_ehi")), col("_ehi"))))
               .otherwise(col("latest_datapoint")))
           .withColumn("downsampled_until",
             when(col("_hi").isNotNull,
-              map_concat(
-                map_filter(coalesce(col("downsampled_until"),
-                  map().cast("map<string,bigint>")), (k, _) => k =!= "derived"),
-                map(lit("derived"), col("_hi"))))
+              if (full) kept else map_concat(kept, map(lit("derived"), col("_hi"))))
               .otherwise(col("downsampled_until")))
           .drop("_lo", "_hi", "_elo", "_ehi")
         swapRegistry(updated)

@@ -34,40 +34,27 @@ object Derive {
   private def dtSeconds(tsCol: Column, prevTs: Column): Column =
     (unix_micros(tsCol) - unix_micros(prevTs)).cast("double") / 1000000.0
 
-  /** W2 `derivative`: (vᵢ − vᵢ₋₁) / Δt_seconds for consecutive datapoints of
-    * one stream; the first datapoint emits nothing. Reference timestamps are
-    * strictly increasing (monotone append), so Δt=0 rows are dropped too.
+  // Lag ops: two predecessor primitives (`windowPrev`, `chunkedPrev`) and
+  // one emitter per op over either, so each op's arithmetic exists once.
+
+  /** Each row plus its predecessor's `(_pv, _pt)` under (partition, order),
+    * from one window over the whole partition.
     */
-  def derivative(df: DataFrame,
-                 partition: Seq[String] = Seq("stream_id"),
-                 order: Seq[String] = Seq("ts", "event_id"),
-                 valueCol: String = "value"): DataFrame = {
+  private def windowPrev(df: DataFrame, partition: Seq[String],
+                         order: Seq[String], valueCol: String): DataFrame = {
     val win = w(partition, order)
-    val v = col(valueCol)
-    df.withColumn("_pv", lag(v, 1).over(win))
+    df.withColumn("_pv", lag(col(valueCol), 1).over(win))
       .withColumn("_pt", lag(col("ts"), 1).over(win))
-      .where(col("_pv").isNotNull &&
-        unix_micros(col("ts")) > unix_micros(col("_pt")))
-      .select(partition.map(col) :+ col("ts") :+
-        ((v - col("_pv")) / dtSeconds(col("ts"), col("_pt"))).as("derivative"): _*)
   }
 
-  /** W2 for unbounded stream length: the single-window formulation above
-    * routes an ENTIRE stream's history through one task — fine for millions
-    * of modest streams, a straggler for one 10-year stream at 100 TB. This
-    * chunked formulation computes lags inside (stream, day) partitions
-    * (bounded tasks) and stitches chunk boundaries with a per-(stream, day)
-    * summary: the summary window orders DAYS per stream — days-per-stream
-    * cardinality, never datapoints — and each chunk's first row takes its
-    * predecessor from the previous chunk's last row via an equi-join.
-    * Row-for-row identical to `derivative` (shared oracle).
-    */
   /** Each row plus its predecessor's `(_pv, _pt)` under (partition, order),
     * computed with BOUNDED (partition, day) window tasks: intra-chunk lags,
     * then each chunk's first row takes its predecessor from the previous
     * chunk's last row (a per-(partition, day) summary whose window orders
     * DAYS per partition — days-per-stream cardinality, never datapoints).
-    * The shared primitive behind every chunked derive flavor.
+    * `windowPrev` routes an ENTIRE stream's history through one task —
+    * fine for millions of modest streams, a straggler for one 10-year
+    * stream at 100 TB; this is the primitive behind every chunked flavor.
     */
   private def chunkedPrev(df: DataFrame,
                           partition: Seq[String], order: Seq[String],
@@ -97,53 +84,67 @@ object Derive {
       .withColumn("_pt", col("_prev.t"))
   }
 
-  def derivativeChunked(df: DataFrame,
-                        partition: Seq[String] = Seq("stream_id"),
-                        order: Seq[String] = Seq("ts", "event_id"),
-                        valueCol: String = "value"): DataFrame =
-    chunkedPrev(df, partition, order, valueCol)
-      .where(col("_pv").isNotNull &&
-        unix_micros(col("ts")) > unix_micros(col("_pt")))
-      .select(partition.map(col) :+ col("ts") :+
-        ((col(valueCol) - col("_pv")) / dtSeconds(col("ts"), col("_pt")))
-          .as("derivative"): _*)
+  /** Rows with a predecessor strictly earlier in time. */
+  private def advancing(prev: DataFrame): DataFrame =
+    prev.where(col("_pv").isNotNull &&
+      unix_micros(col("ts")) > unix_micros(col("_pt")))
 
-  /** W3's bounded-task flavor — same stitch, same result as `counterReset`. */
-  def counterResetChunked(df: DataFrame,
-                          partition: Seq[String] = Seq("stream_id"),
-                          order: Seq[String] = Seq("ts", "event_id"),
-                          valueCol: String = "value"): DataFrame =
-    chunkedPrev(df, partition, order, valueCol)
-      .where(col("_pv").isNotNull && col(valueCol) < col("_pv"))
+  /** W2 emitter: (vᵢ − vᵢ₋₁) / Δt_seconds. */
+  private def derivativeOf(prev: DataFrame, partition: Seq[String],
+                           valueCol: String): DataFrame =
+    advancing(prev).select(partition.map(col) :+ col("ts") :+
+      ((col(valueCol) - col("_pv")) / dtSeconds(col("ts"), col("_pt")))
+        .as("derivative"): _*)
+
+  /** W3 emitter: `1` wherever vᵢ < vᵢ₋₁. */
+  private def counterResetOf(prev: DataFrame, partition: Seq[String],
+                             valueCol: String): DataFrame =
+    prev.where(col("_pv").isNotNull && col(valueCol) < col("_pv"))
       .select(partition.map(col) :+ col("ts") :+ lit(1L).as("reset"): _*)
 
-  /** W4's bounded-task flavor — same stitch, same wraparound arithmetic as
-    * `counterDerivative`.
+  /** W4 emitter: like W2 with wraparound — on a decrease the delta is
+    * v + (maxValue − prev), or no sample when the row's `maxValue` is null.
     */
-  def counterDerivativeChunked(df: DataFrame,
-                               maxValue: Option[Double],
-                               partition: Seq[String] = Seq("stream_id"),
-                               order: Seq[String] = Seq("ts", "event_id"),
-                               valueCol: String = "value"): DataFrame = {
-    maxValue.foreach { m =>
-      if (m <= 0) throw new errors.InvalidOperatorArguments(
-        s"counter_derivative max_value must be positive, got $m")
-    }
+  private def counterDerivativeOf(prev: DataFrame, maxValue: Column,
+                                  partition: Seq[String],
+                                  valueCol: String): DataFrame = {
     val v = col(valueCol)
-    val base = chunkedPrev(df, partition, order, valueCol)
-      .where(col("_pv").isNotNull &&
-        unix_micros(col("ts")) > unix_micros(col("_pt")))
-    val delta = maxValue match {
-      case Some(m) => when(v >= col("_pv"), v - col("_pv"))
-        .otherwise(v + (lit(m) - col("_pv")))
-      case None => when(v >= col("_pv"), v - col("_pv"))
-    }
-    base.withColumn("_delta", delta)
+    advancing(prev)
+      .withColumn("_delta", when(v >= col("_pv"), v - col("_pv"))
+        .otherwise(when(maxValue.isNotNull, v + (maxValue - col("_pv")))))
       .where(col("_delta").isNotNull)
       .select(partition.map(col) :+ col("ts") :+
         (col("_delta").cast("double") / dtSeconds(col("ts"), col("_pt")))
           .as("counter_derivative"): _*)
   }
+
+  /** A global `max_value` as the emitter's column; must be positive. */
+  private def maxValueLit(maxValue: Option[Double]): Column = {
+    maxValue.foreach { m =>
+      if (m <= 0) throw new errors.InvalidOperatorArguments(
+        s"counter_derivative max_value must be positive, got $m")
+    }
+    maxValue.map(lit).getOrElse(lit(null).cast("double"))
+  }
+
+  /** W2 `derivative`: (vᵢ − vᵢ₋₁) / Δt_seconds for consecutive datapoints of
+    * one stream; the first datapoint emits nothing. Reference timestamps are
+    * strictly increasing (monotone append), so Δt=0 rows are dropped too.
+    */
+  def derivative(df: DataFrame,
+                 partition: Seq[String] = Seq("stream_id"),
+                 order: Seq[String] = Seq("ts", "event_id"),
+                 valueCol: String = "value"): DataFrame =
+    derivativeOf(windowPrev(df, partition, order, valueCol), partition, valueCol)
+
+  /** W2 for unbounded stream length, on [[chunkedPrev]]'s bounded tasks.
+    * Row-for-row identical to `derivative` (shared oracle).
+    */
+  def derivativeChunked(df: DataFrame,
+                        partition: Seq[String] = Seq("stream_id"),
+                        order: Seq[String] = Seq("ts", "event_id"),
+                        valueCol: String = "value"): DataFrame =
+    derivativeOf(chunkedPrev(df, partition, order, valueCol), partition, valueCol)
 
   /** W3 `counter_reset`: emit datapoint `1` at tᵢ whenever vᵢ < vᵢ₋₁ (a
     * monotone counter restarted).
@@ -151,13 +152,15 @@ object Derive {
   def counterReset(df: DataFrame,
                    partition: Seq[String] = Seq("stream_id"),
                    order: Seq[String] = Seq("ts", "event_id"),
-                   valueCol: String = "value"): DataFrame = {
-    val win = w(partition, order)
-    val v = col(valueCol)
-    df.withColumn("_pv", lag(v, 1).over(win))
-      .where(col("_pv").isNotNull && v < col("_pv"))
-      .select(partition.map(col) :+ col("ts") :+ lit(1L).as("reset"): _*)
-  }
+                   valueCol: String = "value"): DataFrame =
+    counterResetOf(windowPrev(df, partition, order, valueCol), partition, valueCol)
+
+  /** W3's bounded-task flavor — same result as `counterReset`. */
+  def counterResetChunked(df: DataFrame,
+                          partition: Seq[String] = Seq("stream_id"),
+                          order: Seq[String] = Seq("ts", "event_id"),
+                          valueCol: String = "value"): DataFrame =
+    counterResetOf(chunkedPrev(df, partition, order, valueCol), partition, valueCol)
 
   /** W4 `counter_derivative`: like W2 for wrap-around counters. On decrease,
     * delta = v + (maxValue − prev) when `maxValue` is given; without
@@ -168,56 +171,32 @@ object Derive {
                         maxValue: Option[Double],
                         partition: Seq[String] = Seq("stream_id"),
                         order: Seq[String] = Seq("ts", "event_id"),
-                        valueCol: String = "value"): DataFrame = {
-    maxValue.foreach { m =>
-      if (m <= 0) throw new errors.InvalidOperatorArguments(
-        s"counter_derivative max_value must be positive, got $m")
-    }
-    val win = w(partition, order)
-    val v = col(valueCol)
-    val base = df
-      .withColumn("_pv", lag(v, 1).over(win))
-      .withColumn("_pt", lag(col("ts"), 1).over(win))
-      .where(col("_pv").isNotNull &&
-        unix_micros(col("ts")) > unix_micros(col("_pt")))
-    val delta = maxValue match {
-      case Some(m) => when(v >= col("_pv"), v - col("_pv"))
-        .otherwise(v + (lit(m) - col("_pv")))
-      case None => when(v >= col("_pv"), v - col("_pv")) // decrease ⇒ null ⇒ dropped
-    }
-    base.withColumn("_delta", delta)
-      .where(col("_delta").isNotNull)
-      .select(partition.map(col) :+ col("ts") :+
-        (col("_delta").cast("double") / dtSeconds(col("ts"), col("_pt")))
-          .as("counter_derivative"): _*)
-  }
+                        valueCol: String = "value"): DataFrame =
+    counterDerivativeByCol(df, maxValueLit(maxValue), partition, order, valueCol)
 
   /** W4 with a PER-ROW `max_value` column instead of a global option — the
     * shape the facade's join-based derived-stream refresh needs, where ONE
     * window evaluates counter_derivative for every derived stream at once
     * and each stream's parsed `max_value` rides the joined metadata. A null
-    * `maxValue` cell reproduces the Option-None arm (decrease ⇒ dropped);
-    * arithmetic is identical to `counterDerivative`.
+    * `maxValue` cell reproduces the Option-None arm (decrease ⇒ dropped).
     */
   def counterDerivativeByCol(df: DataFrame, maxValue: Column,
                              partition: Seq[String] = Seq("stream_id"),
                              order: Seq[String] = Seq("ts", "event_id"),
-                             valueCol: String = "value"): DataFrame = {
-    val win = w(partition, order)
-    val v = col(valueCol)
-    val base = df
-      .withColumn("_pv", lag(v, 1).over(win))
-      .withColumn("_pt", lag(col("ts"), 1).over(win))
-      .where(col("_pv").isNotNull &&
-        unix_micros(col("ts")) > unix_micros(col("_pt")))
-    val delta = when(v >= col("_pv"), v - col("_pv"))
-      .otherwise(when(maxValue.isNotNull, v + (maxValue - col("_pv"))))
-    base.withColumn("_delta", delta)
-      .where(col("_delta").isNotNull)
-      .select(partition.map(col) :+ col("ts") :+
-        (col("_delta").cast("double") / dtSeconds(col("ts"), col("_pt")))
-          .as("counter_derivative"): _*)
-  }
+                             valueCol: String = "value"): DataFrame =
+    counterDerivativeOf(windowPrev(df, partition, order, valueCol), maxValue,
+      partition, valueCol)
+
+  /** W4's bounded-task flavor — same wraparound arithmetic as
+    * `counterDerivative`.
+    */
+  def counterDerivativeChunked(df: DataFrame,
+                               maxValue: Option[Double],
+                               partition: Seq[String] = Seq("stream_id"),
+                               order: Seq[String] = Seq("ts", "event_id"),
+                               valueCol: String = "value"): DataFrame =
+    counterDerivativeOf(chunkedPrev(df, partition, order, valueCol),
+      maxValueLit(maxValue), partition, valueCol)
 
   /** W1 `sum` (multi-stream): align the datapoints of N source streams on
     * their rounded timestamp and emit the per-bucket sum (J2). All sources

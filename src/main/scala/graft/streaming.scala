@@ -209,52 +209,6 @@ object Streaming {
       }
   }
 
-  /** The same stateful derive on the `transformWithState` API (Spark 4's
-    * successor to flatMapGroupsWithState, state-store-backed `ValueState`).
-    * Semantics identical to `derive` — asserted equivalent in tests; kept
-    * alongside because `transformWithState` is the forward-looking home for
-    * custom state (timers, TTL, column-family state) at cluster scale.
-    * Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass`).
-    */
-  private class DeriveProcessor(op: String, maxValue: Option[Double])
-      extends StatefulProcessor[String, Point, Derived] {
-    @transient private var last: ValueState[LastPoint] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      last = getHandle.getValueState[LastPoint](
-        "last", Encoders.product[LastPoint], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[Point],
-                                 timers: TimerValues): Iterator[Derived] = {
-      val f = transition(op, maxValue) _
-      val sorted = rows.toVector.sortBy(p => us(p.ts))
-      var prev = Option(last.get())
-      val out = Vector.newBuilder[Derived]
-      sorted.foreach { p =>
-        val t = us(p.ts)
-        prev match {
-          case Some(s) if t < s.tsUs => // stale arrival: drop
-          case Some(s) =>
-            f(s, t, p.value).foreach(d => out += Derived(key, p.ts, d))
-            prev = Some(LastPoint(t, p.value))
-          case None =>
-            prev = Some(LastPoint(t, p.value))
-        }
-      }
-      prev.foreach(last.update)
-      out.result().iterator
-    }
-  }
-
-  def deriveTWS(points: Dataset[Point], op: String,
-                maxValue: Option[Double] = None): Dataset[Derived] = {
-    implicit val enc: Encoder[Derived] = Encoders.product[Derived]
-    points.groupByKey(_.stream_id)(Encoders.STRING)
-      .transformWithState(new DeriveProcessor(op, maxValue),
-        TimeMode.None(), OutputMode.Append(), enc)
-  }
-
   /** T3 for the INGEST path: per-stream monotonicity enforcement as a
     * stateful pre-sink filter, closing the batch/streaming policy
     * divergence (batch `appendMultiple` rejects or drops stale rows
@@ -478,8 +432,9 @@ object Streaming {
     }
   }
 
-  /** `Derive.rollingAnomaly` as a real streaming query (requires the
-    * RocksDB state store provider, like `deriveTWS`).
+  /** `Derive.rollingAnomaly` as a real streaming query on the
+    * `transformWithState` API (requires the RocksDB state store provider,
+    * `spark.sql.streaming.stateStore.providerClass`).
     */
   def anomaly(points: Dataset[Point], k: Int = 20, z: Double = 3.0,
               minPrior: Int = 5): Dataset[Scored] = {

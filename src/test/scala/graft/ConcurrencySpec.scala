@@ -58,6 +58,22 @@ class ConcurrencySpec extends AnyFunSuite {
     sessions.foreach(s => assert(s eq spark))
   }
 
+  test("a worker thread that already has an active session gets it back") {
+    import org.apache.spark.sql.SparkSession
+    val spark = SparkSpec.session
+    val own = spark.newSession()
+    val seen = new java.util.concurrent.atomic.AtomicReference[(SparkSession, SparkSession)]()
+    val worker = new Thread(() => {
+      SparkSession.setActiveSession(own)
+      val inside = Concurrency.withActiveSession(Some(spark))(SparkSession.active)
+      seen.set((inside, SparkSession.active))
+    })
+    worker.start(); worker.join()
+    val (inside, after) = seen.get()
+    assert(inside eq spark)
+    assert(after eq own)
+  }
+
   test("single-thunk input short-circuits on the caller thread") {
     val caller = Thread.currentThread().getId
     val ran = Concurrency.inParallel(Seq(

@@ -76,29 +76,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState derive equals the flatMapGroupsWithState path") {
-    implicit val sqlCtx = spark.sqlContext
-    // transformWithState requires the RocksDB state store (column families)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[Streaming.Point]
-    val out = Streaming.deriveTWS(mem.toDS(), "derivative")
-    val q = out.writeStream.format("memory").queryName("stws")
-      .outputMode("append").start()
-    try {
-      mem.addData(points.take(3): _*); q.processAllAvailable()
-      mem.addData(points.drop(3): _*); q.processAllAvailable()
-      val tws = spark.table("stws")
-        .select("stream_id", "ts", "value")
-        .as[(String, java.sql.Timestamp, Double)].collect().toSet
-      val batch = Derive.derivative(
-        points.toDF("stream_id", "ts", "value").withColumn("event_id", lit(0L)))
-        .select(col("stream_id"), col("ts"), col("derivative"))
-        .as[(String, java.sql.Timestamp, Double)].collect().toSet
-      assert(tws == batch)
-    } finally q.stop()
-  }
-
   test("monotone streaming ingest drops stale arrivals across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
