@@ -114,20 +114,22 @@ object Bench {
         .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     val ok = results.collect { case (_, v) if v >= 0 => v }
     val total = if (ok.nonEmpty) ok.sum else 0.0
-    def secMap(m: scala.collection.Map[String, Double]): String =
-      m.map { case (k, v) => s"\"$k\":" + f"$v%.3f" }.mkString("{", ",", "}")
+    def secMap(m: Iterable[(String, Double)]): String =
+      m.map { case (k, v) => s"${jstr(k)}:" + f"$v%.3f" }.mkString("{", ",", "}")
     val qs = secMap(results.filter { case (_, v) => v >= 0 })
-    // Two output lines, most-detailed FIRST: the driver's artifact capture
-    // keeps the TAIL of stdout, so nine rounds of single-line output were
-    // head-truncated into `parsed: null` (and round 9's visible fragment —
-    // the taskrun map — was misread as a 20× wall regression). The FINAL
-    // line is the short wall-clock contract JSON ({"metric","value","unit",
-    // "queries","sf"}, ~2.5 KB at 113 queries with %.3f values); the
-    // cpu/taskrun diagnostics ride the earlier "detail" line, which may be
-    // truncated without harming parseability of the last line.
-    println(s"""{"metric":"detail","cpu_total":${f"${cpuSecs.values.sum}%.3f"},""" +
-      s""""cpu_queries":${secMap(cpuSecs)},""" +
-      s""""taskrun_queries":${secMap(runSecs)},"sf":"$sfDir"}""")
+    // The stdout contract, kept short because the driver keeps only the
+    // TAIL of stdout: the wall-clock contract line ({"metric","value",
+    // "unit","queries","sf"}, ~2.5 KB at 113 queries with %.3f values),
+    // the per-query chunk lines, then the short total line LAST. The
+    // cpu/taskrun diagnostics ("detail", ~7 KB) go to a file beside the
+    // build output instead, where they crowd out nothing.
+    val detail = java.nio.file.Paths.get("target", "bench_detail.json")
+    java.nio.file.Files.createDirectories(detail.getParent)
+    java.nio.file.Files.writeString(detail,
+      s"""{"metric":"detail","cpu_total":${f"${cpuSecs.values.sum}%.3f"},""" +
+        s""""cpu_queries":${secMap(cpuSecs)},""" +
+        s""""taskrun_queries":${secMap(runSecs)},"sf":${jstr(sfDir)}}""" + "\n")
+    System.err.println(s"[bench] per-query cpu/taskrun detail: ${detail.toAbsolutePath}")
     println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs$errJson,"sf":"$sfDir"}""")
     // Per-query map AGAIN in short self-contained chunk lines (≤ ~1 KB
     // each, ascending by wall time so the expensive queries land in the
@@ -135,25 +137,16 @@ object Bench {
     // map line above is head-truncated past its opening brace at 188
     // queries, which left PERF's per_query/scaling comparison empty for
     // two rounds. Chunks near the end survive any tail window; each line
-    // parses on its own. Additions-only: the contract line above and the
-    // final short total line are unchanged.
+    // parses on its own. No chunk line when no query succeeded.
     val sortedQ = results.filter(_._2 >= 0).toSeq.sortBy(_._2)
-    val chunks = scala.collection.mutable.ArrayBuffer(
-      scala.collection.mutable.ArrayBuffer.empty[(String, Double)])
-    sortedQ.foreach { kv =>
-      if (chunks.last.size >= 30) chunks +=
-        scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-      chunks.last += kv
-    }
+    val chunks = sortedQ.grouped(30).toSeq
     chunks.zipWithIndex.foreach { case (c, i) =>
-      val m = c.map { case (k, v) => s"\"$k\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
       println(s"""{"metric":"queries_chunk","chunk":${i + 1},""" +
-        s""""n_chunks":${chunks.size},"queries":$m}""")
+        s""""n_chunks":${chunks.size},"queries":${secMap(c)}}""")
     }
-    // THIRD, final, SHORT line (~100 B): the driver keeps only the TAIL of
-    // stdout and the per-query line above (~3.5 KB) is head-truncated past
-    // its opening brace, so eleven rounds of artifacts carried parsed:null.
+    // Final SHORT line (~100 B): the driver keeps only the TAIL of stdout
+    // and the per-query contract line (~3.5 KB) is head-truncated past its
+    // opening brace, so eleven rounds of artifacts carried parsed:null.
     // This line repeats the wall-clock contract fields WITHOUT the
     // per-query map — short enough to always survive the tail window (the
     // full map still rides the line above for humans and local tooling).

@@ -9,7 +9,11 @@ import org.apache.spark.sql.functions._
   * [ds :: datastream/api.py :: Datastream] (SURVEY.md §2.1, §7.1).
   *
   * Layout under `warehouse/`:
-  *   streams/                         — metadata table (small, broadcast side)
+  *   streams_versions/g<N>/           — metadata table (small, broadcast
+  *                                      side): one immutable generation per
+  *                                      registry swap, live = the highest
+  *                                      `CURRENT.g<N>` marker, held in
+  *                                      driver memory once read
   *   raw/                             — appended datapoints (100 TB side; at
   *                                      cluster scale partitioned by date(ts),
   *                                      bucketed by stream_id — flat here)
@@ -54,6 +58,12 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   // prev-point sidecar for incremental derived maintenance: one row per
   // (derived, source) pair — registry-sized, swap-written like the registry
   private val derivePrevPath = s"$warehouse/derive_prev"
+  private val derivePrevSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("derived_id", StringType),
+      StructField("stream_id", StringType), StructField("ts", TimestampType),
+      StructField("value", DoubleType)))
+  }
   private def rollupPath(g: Granularity) = s"$warehouse/rollup/granularity=${g.name}"
 
   private def exists(path: String): Boolean = io.exists(path)
@@ -126,13 +136,59 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   /** The live registry generation (max `CURRENT.g<N>` marker), or None on
     * a warehouse still carrying only the legacy single `streams` dir.
     */
-  private def registryGen: Option[Long] =
+  private def registryGen: Option[Long] = registryHead.map(_._1)
+
+  /** The live generation paired with its `CURRENT.g<N>` marker's
+    * modification time (one listing, one stat): the key of the in-memory
+    * registry. A warehouse wiped and recreated under a live facade
+    * restarts its generation numbers, but not its marker times.
+    */
+  private def registryHead: Option[(Long, Long)] =
     io.childNames(streamsVersionsPath)
       .filter(_.startsWith("CURRENT.g"))
       .flatMap(_.stripPrefix("CURRENT.g").toLongOption)
       .maxOption
+      .map(g => g -> io.modificationTime(s"$streamsVersionsPath/CURRENT.g$g"))
 
   private def registryDir(gen: Long): String = s"$streamsVersionsPath/g$gen"
+
+  /** The columns of every registry generation the engine writes: reads
+    * pass them instead of inferring the schema from the files.
+    */
+  private val registrySchema =
+    org.apache.spark.sql.Encoders.product[StreamMeta].schema
+
+  private def readRegistry(dir: String): Seq[StreamMeta] =
+    spark.read.schema(registrySchema).parquet(dir).as[StreamMeta]
+      .collect().toSeq
+
+  /** One registry generation held in driver memory: its rows, the same
+    * rows as a local frame (a `LocalRelation`: filters, projections and
+    * collects over it run on the driver, with no file scan and no Spark
+    * job), and the rows by stream id. Generations are immutable, so an
+    * entry is valid for as long as its `key` is the live [[registryHead]].
+    */
+  private final class Registry(val key: Option[(Long, Long)],
+                               val rows: Seq[StreamMeta]) {
+    val frame: DataFrame = rows.toDF()
+    val byId: Map[String, StreamMeta] = rows.map(m => m.stream_id -> m).toMap
+  }
+
+  @volatile private var loadedRegistry: Option[Registry] = None
+
+  /** The live registry, loaded at most once per generation. A legacy
+    * single `streams` directory has no generation key and is read per call.
+    */
+  private def registry: Registry = registryHead match {
+    case head @ Some((g, _)) =>
+      loadedRegistry.filter(_.key == head).getOrElse {
+        val r = new Registry(head, readRegistry(registryDir(g)))
+        loadedRegistry = Some(r)
+        r
+      }
+    case None if exists(streamsPath) => new Registry(None, readRegistry(streamsPath))
+    case None => new Registry(None, Seq.empty)
+  }
 
   /** Swap-write the registry as a fresh IMMUTABLE generation — the
     * metadata analog of the fact tables' snapshot manifests. Where
@@ -154,21 +210,29 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * grace window; the rest (superseded, unreferenced, aged out) are
     * reclaimed — the same retention interplay the data files get from
     * vacuum. Single-writer (every caller holds the writer lock).
+    *
+    * The new rows are collected before the write and become the
+    * in-memory registry once the marker is down, so the swap's own
+    * facade never reads back the generation it wrote.
     */
-  private def swapRegistry(df: DataFrame): Unit = {
+  private def swapRegistry(df: DataFrame): Unit =
+    swapRegistry(df.as[StreamMeta].collect().toSeq)
+
+  private def swapRegistry(rows: Seq[StreamMeta]): Unit = {
     val next = registryGen.getOrElse(0L) + 1
     // a crash between a previous swap's dir rename and its marker create
     // leaves an UNPUBLISHED g<next> orphan — reclaim it, its content was
     // never visible
     if (exists(registryDir(next))) rmTree(registryDir(next))
     val tmp = s"$streamsVersionsPath/g$next.tmp-${System.nanoTime()}"
-    // one job: the plan may READ the pre-swap registry; its files are
-    // untouched until the marker below publishes the new generation
-    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
+    rows.toDF().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
     if (!io.rename(tmp, registryDir(next)))
       throw new IllegalStateException(
         s"swapRegistry: cannot promote $tmp to generation g$next")
-    io.writeString(s"$streamsVersionsPath/CURRENT.g$next", s"g$next")
+    val marker = s"$streamsVersionsPath/CURRENT.g$next"
+    io.writeString(marker, s"g$next")
+    loadedRegistry =
+      Some(new Registry(Some(next -> io.modificationTime(marker)), rows))
     // the legacy live dir is never consulted once a generation exists
     if (exists(streamsPath)) rmTree(streamsPath)
     sweepRegistryGenerations(next)
@@ -1321,11 +1385,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
 
   private def hasStreams: Boolean = registryGen.isDefined || exists(streamsPath)
 
-  def streams: DataFrame = registryGen match {
-    case Some(g) => spark.read.parquet(registryDir(g))
-    case None if exists(streamsPath) => spark.read.parquet(streamsPath)
-    case None => Seq.empty[StreamMeta].toDF()
-  }
+  /** The live registry as a local frame: reading it runs no Spark job. */
+  def streams: DataFrame = registry.frame
 
   /** REGISTRY TIME TRAVEL: the stream metadata (tags, watermarks, derive
     * config, bounds) exactly as committed snapshot `version` published it
@@ -1341,11 +1402,13 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     snapshotAt(version) // validates the version is committed and retained
     parseManifest(version).registry match {
       case Some(g) =>
-        if (!exists(registryDir(g)))
+        val live = registry
+        if (live.key.exists(_._1 == g)) live.frame
+        else if (!exists(registryDir(g)))
           throw new IllegalStateException(
             s"registry generation g$g for snapshot $version was reclaimed " +
               "out of band — commit-log and streams_versions disagree")
-        spark.read.parquet(registryDir(g))
+        else spark.read.schema(registrySchema).parquet(registryDir(g))
       case None => streams
     }
   }
@@ -1361,7 +1424,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   }
 
   def streamMeta(streamId: String): StreamMeta =
-    streamMetaFrom(streams, streamId)
+    registry.byId.getOrElse(streamId,
+      throw new errors.StreamNotFound(s"no such stream: $streamId"))
 
   /** Idempotent stream creation; re-ensure with same id returns existing
     * metadata. Derived streams must share their sources' granularity.
@@ -1378,8 +1442,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       throw new errors.InvalidOperatorArguments(s"unknown derive op $op " +
         s"(expected one of ${Derive.ops.toSeq.sorted.mkString(", ")})")
     }
-    val existing = streams.where(col("stream_id") === streamId).as[StreamMeta].collect()
-    if (existing.nonEmpty) return existing.head
+    val existing = registry.byId.get(streamId)
+    if (existing.nonEmpty) return existing.get
     derivedFrom.foreach { src =>
       val meta = streamMeta(src) // throws StreamNotFound
       if (meta.highest_granularity != highestGranularity.name)
@@ -1397,14 +1461,13 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     // file regardless of how many ensures a session performs. The writer
     // lock covers the read-modify-swap (a racing ensure would otherwise
     // silently lose one of the two registry rows).
-    withWriterLock("ensure")(
-      swapRegistry(streams.unionByName(Seq(meta).toDF())))
+    withWriterLock("ensure")(swapRegistry(registry.rows :+ meta))
     meta
   }
 
-  /** Batch `ensureStream`: N streams in ONE registry job + ONE swap write
-    * (the single-stream verb costs a registry round-trip per call — fine
-    * interactively, quadratic for a many-streams fixture). Existing ids are
+  /** Batch `ensureStream`: N streams in ONE swap write (the single-stream
+    * verb costs a swap per call — fine interactively, quadratic for a
+    * many-streams fixture). Existing ids are
     * skipped (idempotent); sources referenced by derived specs may be
     * earlier entries of the SAME batch. Validation mirrors the
     * single-stream verb: unknown value type, missing derive sources
@@ -1433,20 +1496,14 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       time_downsamplers = Downsamplers.allTime.toSeq.sorted,
       earliest_datapoint = None, latest_datapoint = None,
       downsampled_until = Map.empty))
-    // driver-side validation against batch-local sources plus a SINGLE
-    // registry read for the rest — never a per-spec round-trip
+    // driver-side validation against batch-local sources plus the
+    // in-memory registry for the rest
     val granByIdLocal = metas.map(m => m.stream_id -> m.highest_granularity).toMap
-    val externalSrcs = metas.flatMap(_.derived_from).distinct
-      .filterNot(granByIdLocal.contains)
-    val granByIdReg: Map[String, String] =
-      if (externalSrcs.isEmpty) Map.empty
-      else streams
-        .join(externalSrcs.toDF("stream_id"), Seq("stream_id"), "left_semi")
-        .select("stream_id", "highest_granularity")
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val reg = registry.byId
     metas.foreach { m =>
       m.derived_from.foreach { src =>
-        val srcGran = granByIdLocal.get(src).orElse(granByIdReg.get(src))
+        val srcGran = granByIdLocal.get(src)
+          .orElse(reg.get(src).map(_.highest_granularity))
           .getOrElse(throw new errors.StreamNotFound(s"no such stream: $src"))
         if (srcGran != m.highest_granularity)
           throw new errors.IncompatibleGranularities(
@@ -1455,10 +1512,10 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       }
     }
     // one swap: existing rows win (idempotent ensure), new rows appended
-    val incoming = metas.toDF()
-      .join(streams.select("stream_id"), Seq("stream_id"), "left_anti")
-    withWriterLock("ensure_batch")(
-      swapRegistry(streams.unionByName(incoming)))
+    withWriterLock("ensure_batch") {
+      val live = registry
+      swapRegistry(live.rows ++ metas.filterNot(m => live.byId.contains(m.stream_id)))
+    }
   }
 
   def findStreams(tagQuery: Map[String, String] = Map.empty): DataFrame =
@@ -1478,17 +1535,16 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
 
   /** Merge `tags` into every stream matching `tagQuery` (new values win on
     * key collision) — the reference's `Datastream.update_tags`
-    * [ds :: api.py :: Datastream.update_tags]. One registry job + one swap
-    * write; returns the number of streams retagged. Both the count and the
-    * rewrite plan read the same pre-swap registry state (the swap writes to
-    * a temp dir first), so no off-path materialization is needed.
+    * [ds :: api.py :: Datastream.update_tags]. One swap write; returns
+    * the number of streams retagged. The count and the rewrite both read
+    * the same in-memory registry generation.
     */
   def updateTags(tagQuery: Map[String, String],
                  tags: Map[String, String]): Long = {
     if (!hasStreams || tags.isEmpty) return 0L
     val matched = StreamRegistry.findStreams(streams, tagQuery)
       .select(col("stream_id"), lit(true).as("_m"))
-    val n = matched.count()
+    val n = matched.collect().length.toLong // local rows: no Spark job
     if (n == 0) return 0L
     // merge = old tags minus overridden keys, then concat the new map —
     // deterministic override without relying on a mapKeyDedupPolicy setting
@@ -1512,7 +1568,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     if (!hasStreams || keys.isEmpty) return 0L
     val matched = StreamRegistry.findStreams(streams, tagQuery)
       .select(col("stream_id"), lit(true).as("_m"))
-    val n = matched.count()
+    val n = matched.collect().length.toLong
     if (n == 0) return 0L
     val pruned = map_filter(col("tags"), (k, _) => !k.isin(keys: _*))
     val updated = streams.join(matched, Seq("stream_id"), "left")
@@ -1551,141 +1607,134 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       .limit(5).collect()
     if (violSample.nonEmpty)
       throw new errors.OutstandingDependenciesError(violSample.mkString(", "))
-    // materialize the doomed id set (plus its metadata bounds) OFF the
-    // registry path before any overwrite: rewriting a parquet path
-    // invalidates every plan that reads it (a plain cache can be lost and
-    // silently recompute against the rewritten registry — the round-2 bug).
-    // localCheckpoint is lineage-free AND executor-resident, so the delete
-    // path holds nothing O(streams) on the driver.
-    val (doomedMeta, doomedRdds) = Plans.checkpointTracked(
-      doomed0.select("stream_id", "earliest_datapoint", "latest_datapoint"))
+    // the doomed rows come from the in-memory registry generation: local
+    // rows the registry swap at the end cannot change
+    val doomedMeta =
+      doomed0.select("stream_id", "earliest_datapoint", "latest_datapoint")
     val doomedIds = doomedMeta.select("stream_id")
-    try {
-      // one metadata-sized agg answers everything driver-side: doomed count,
-      // combined date bounds, and whether ANY doomed stream lacks bounds.
-      // Null bounds do NOT mean "no data rows": rows written around the
-      // bound-maintaining APIs (out-of-band parquet writes into the
-      // warehouse, pre-upgrade warehouses whose derived streams carried
-      // null bounds) exist without a registry trace — such a stream
-      // disables the bounds window and its delete scans every partition.
-      val b = doomedMeta.agg(
-        count(lit(1)).as("n"),
-        min("earliest_datapoint").as("lo"), max("latest_datapoint").as("hi"),
-        sum(when(col("earliest_datapoint").isNull ||
-          col("latest_datapoint").isNull, 1L).otherwise(0L)).as("n_null"))
-        .first()
-      val n = b.getLong(0)
-      val anyNullBounds = n > 0 && b.getLong(3) > 0
-      withCommit("delete_streams") {
-      /** Rewrite only the `partCol` partitions containing doomed rows:
-        * discovery scan partition-pruned by the registry bounds, exact
-        * affected set from that slice (O(affected dates) on the driver),
-        * then anti-join the SNAPSHOT files of those partitions, append the
-        * survivors as fresh files, and logically retire the old files from
-        * the manifest this commit publishes. Nothing is deleted in place:
-        * a crash at ANY instant (including after every write) leaves the
-        * committed manifest — and so every reader — on the complete
-        * pre-mutation snapshot; the new files are orphans vacuum reclaims.
-        * Discovery and the rewrite both read through the snapshot file
-        * list, never the live directory, so orphan rows from an earlier
-        * torn mutation are neither merged nor adopted.
-        *
-        * The bounds window is only trusted as far as the registry is: when
-        * any doomed stream has NULL bounds the discovery scans every
-        * partition, and when bounds exist a limit-1 existence probe checks
-        * OUTSIDE the window for escaped rows (both the out-of-band-write
-        * cases above). The probe reads one dictionary column and stops at
-        * the first hit, so the happy path keeps the pruned cost; a hit
-        * escalates that delete to full discovery rather than letting
-        * doomed datapoints silently survive.
-        */
-      def purgePruned(table: String, schema: org.apache.spark.sql.types.StructType,
-                      partCol: String): Unit =
-        commitRead(table, schema).foreach { full =>
-          if (n > 0) {
-          def affectedIn(df: DataFrame): Array[java.sql.Date] =
-            df.join(broadcast(doomedIds), Seq("stream_id"), "left_semi")
-              .select(partCol).distinct().collect().map(_.getDate(0))
-          val affected: Array[java.sql.Date] =
-            if (anyNullBounds) affectedIn(full)
-            else {
-              val (lo, hi) = (b.getTimestamp(1), b.getTimestamp(2))
-              val inWindow =
-                col(partCol) >= to_date(lit(lo)) && col(partCol) <= to_date(lit(hi))
-              val outside = full.where(!inWindow)
-              val escaped = outside
-                .join(broadcast(doomedIds), Seq("stream_id"), "left_semi")
-                .limit(1).count() > 0
-              val base = affectedIn(full.where(inWindow))
-              if (escaped) (base ++ affectedIn(outside)).distinct else base
-            }
-          if (affected.nonEmpty) {
-            val prefixes = affected.toSeq.map(d => s"$partCol=$d")
-            scopeWrite(table, prefixes)
-            val old = retireFiles(table, prefixes)
-            if (old.nonEmpty) {
-              val slice = spark.read.option("basePath", tablePath(table))
-                .schema(schema)
-                .parquet(old.toSeq.sorted.map(f => s"${tablePath(table)}/$f"): _*)
-              // survivors land as NEW files beside the retired ones — no
-              // checkpoint needed: the source files are immutable until
-              // vacuum, so the write never reads paths it is replacing
-              slice.join(broadcast(doomedIds), Seq("stream_id"), "left_anti")
-                .write.mode(SaveMode.Append).partitionBy(partCol)
-                .parquet(tablePath(table))
-            }
+    // one metadata-sized agg answers everything driver-side: doomed count,
+    // combined date bounds, and whether ANY doomed stream lacks bounds.
+    // Null bounds do NOT mean "no data rows": rows written around the
+    // bound-maintaining APIs (out-of-band parquet writes into the
+    // warehouse, pre-upgrade warehouses whose derived streams carried
+    // null bounds) exist without a registry trace — such a stream
+    // disables the bounds window and its delete scans every partition.
+    val b = doomedMeta.agg(
+      count(lit(1)).as("n"),
+      min("earliest_datapoint").as("lo"), max("latest_datapoint").as("hi"),
+      sum(when(col("earliest_datapoint").isNull ||
+        col("latest_datapoint").isNull, 1L).otherwise(0L)).as("n_null"))
+      .first()
+    val n = b.getLong(0)
+    val anyNullBounds = n > 0 && b.getLong(3) > 0
+    withCommit("delete_streams") {
+    /** Rewrite only the `partCol` partitions containing doomed rows:
+      * discovery scan partition-pruned by the registry bounds, exact
+      * affected set from that slice (O(affected dates) on the driver),
+      * then anti-join the SNAPSHOT files of those partitions, append the
+      * survivors as fresh files, and logically retire the old files from
+      * the manifest this commit publishes. Nothing is deleted in place:
+      * a crash at ANY instant (including after every write) leaves the
+      * committed manifest — and so every reader — on the complete
+      * pre-mutation snapshot; the new files are orphans vacuum reclaims.
+      * Discovery and the rewrite both read through the snapshot file
+      * list, never the live directory, so orphan rows from an earlier
+      * torn mutation are neither merged nor adopted.
+      *
+      * The bounds window is only trusted as far as the registry is: when
+      * any doomed stream has NULL bounds the discovery scans every
+      * partition, and when bounds exist a limit-1 existence probe checks
+      * OUTSIDE the window for escaped rows (both the out-of-band-write
+      * cases above). The probe reads one dictionary column and stops at
+      * the first hit, so the happy path keeps the pruned cost; a hit
+      * escalates that delete to full discovery rather than letting
+      * doomed datapoints silently survive.
+      */
+    def purgePruned(table: String, schema: org.apache.spark.sql.types.StructType,
+                    partCol: String): Unit =
+      commitRead(table, schema).foreach { full =>
+        if (n > 0) {
+        def affectedIn(df: DataFrame): Array[java.sql.Date] =
+          df.join(broadcast(doomedIds), Seq("stream_id"), "left_semi")
+            .select(partCol).distinct().collect().map(_.getDate(0))
+        val affected: Array[java.sql.Date] =
+          if (anyNullBounds) affectedIn(full)
+          else {
+            val (lo, hi) = (b.getTimestamp(1), b.getTimestamp(2))
+            val inWindow =
+              col(partCol) >= to_date(lit(lo)) && col(partCol) <= to_date(lit(hi))
+            val outside = full.where(!inWindow)
+            val escaped = outside
+              .join(broadcast(doomedIds), Seq("stream_id"), "left_semi")
+              .limit(1).count() > 0
+            val base = affectedIn(full.where(inWindow))
+            if (escaped) (base ++ affectedIn(outside)).distinct else base
           }
+        if (affected.nonEmpty) {
+          val prefixes = affected.toSeq.map(d => s"$partCol=$d")
+          scopeWrite(table, prefixes)
+          val old = retireFiles(table, prefixes)
+          if (old.nonEmpty) {
+            val slice = spark.read.option("basePath", tablePath(table))
+              .schema(schema)
+              .parquet(old.toSeq.sorted.map(f => s"${tablePath(table)}/$f"): _*)
+            // survivors land as NEW files beside the retired ones — no
+            // checkpoint needed: the source files are immutable until
+            // vacuum, so the write never reads paths it is replacing
+            slice.join(broadcast(doomedIds), Seq("stream_id"), "left_anti")
+              .write.mode(SaveMode.Append).partitionBy(partCol)
+              .parquet(tablePath(table))
           }
         }
-      /** The derived table is partitioned BY stream_id: a doomed stream's
-        * entire slice is its own partition — retire its files, write
-        * nothing. Matching rides a join against the snapshot's partition
-        * segments (decoded from their %XX-escaped dir names); the collect
-        * is O(doomed ∩ derived).
-        */
-      def purgeDerived(): Unit = {
-        val dirs = rawSnapshot.flatMap(_.tableFiles("derived"))
-          .getOrElse(listFilesUnder("derived"))
-          .map(_.split('/').head).filter(_.startsWith("stream_id="))
-          .map(d => (d, unescapePartitionValue(d.stripPrefix("stream_id="))))
-          .toSeq
-        if (dirs.nonEmpty) {
-          val doomedDirs = dirs.toDF("dir", "stream_id")
-            .join(doomedIds, Seq("stream_id"), "left_semi")
-            .select("dir").collect().map(_.getString(0))
-          if (doomedDirs.nonEmpty) retireFiles("derived", doomedDirs.toSeq)
-          ()
         }
       }
-      // the per-path purges are independent read→rewrite pipelines; submit
-      // them as concurrent Spark jobs (thread-safe on one SparkContext) —
-      // the scheduler interleaves their stages instead of serializing
-      // 9 × (materialize + write) round-trips
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val purges =
-        Seq(Future(purgePruned("raw", rawSchemaPartitioned, "dp_date")),
-          Future(purgeDerived())) ++
-          Granularity.ladder.map(g => Future(
-            purgePruned(s"rollup/granularity=${g.name}",
-              Schemas.downsampledPartitioned, "bucket_date")))
-      Await.result(Future.sequence(purges), scala.concurrent.duration.Duration.Inf)
-      // crash seam for tests: the instant after ALL data rewrites, before
-      // the registry swap — the widest mid-purge window, where isolation
-      // must be total (nothing committed, registry untouched)
-      if (crashBeforeCommitOf("delete_streams_purge"))
-        throw new IllegalStateException("injected crash mid delete_streams")
-      // registry swap LAST: the data rewrites above publish nothing until
-      // the manifest commits, so a crash anywhere during them leaves the
-      // warehouse fully on the pre-mutation snapshot — registry included.
-      // Only the swap→commit tail (milliseconds, vs seconds of rewrites)
-      // can leave the registry ahead of the data; the intent marker flags
-      // exactly that window. Survivors read the pre-swap registry during
-      // the temp write (doomed ids come from the checkpoint).
-      swapRegistry(all.join(doomedIds, Seq("stream_id"), "left_anti"))
+    /** The derived table is partitioned BY stream_id: a doomed stream's
+      * entire slice is its own partition — retire its files, write
+      * nothing. Matching rides a join against the snapshot's partition
+      * segments (decoded from their %XX-escaped dir names); the collect
+      * is O(doomed ∩ derived).
+      */
+    def purgeDerived(): Unit = {
+      val dirs = rawSnapshot.flatMap(_.tableFiles("derived"))
+        .getOrElse(listFilesUnder("derived"))
+        .map(_.split('/').head).filter(_.startsWith("stream_id="))
+        .map(d => (d, unescapePartitionValue(d.stripPrefix("stream_id="))))
+        .toSeq
+      if (dirs.nonEmpty) {
+        val doomedDirs = dirs.toDF("dir", "stream_id")
+          .join(doomedIds, Seq("stream_id"), "left_semi")
+          .select("dir").collect().map(_.getString(0))
+        if (doomedDirs.nonEmpty) retireFiles("derived", doomedDirs.toSeq)
+        ()
       }
-      n
-    } finally doomedRdds.foreach(_.unpersist(blocking = false))
+    }
+    // the per-path purges are independent read→rewrite pipelines; submit
+    // them as concurrent Spark jobs (thread-safe on one SparkContext) —
+    // the scheduler interleaves their stages instead of serializing
+    // 9 × (materialize + write) round-trips
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val purges =
+      Seq(Future(purgePruned("raw", rawSchemaPartitioned, "dp_date")),
+        Future(purgeDerived())) ++
+        Granularity.ladder.map(g => Future(
+          purgePruned(s"rollup/granularity=${g.name}",
+            Schemas.downsampledPartitioned, "bucket_date")))
+    Await.result(Future.sequence(purges), scala.concurrent.duration.Duration.Inf)
+    // crash seam for tests: the instant after ALL data rewrites, before
+    // the registry swap — the widest mid-purge window, where isolation
+    // must be total (nothing committed, registry untouched)
+    if (crashBeforeCommitOf("delete_streams_purge"))
+      throw new IllegalStateException("injected crash mid delete_streams")
+    // registry swap LAST: the data rewrites above publish nothing until
+    // the manifest commits, so a crash anywhere during them leaves the
+    // warehouse fully on the pre-mutation snapshot — registry included.
+    // Only the swap→commit tail (milliseconds, vs seconds of rewrites)
+    // can leave the registry ahead of the data; the intent marker flags
+    // exactly that window.
+    swapRegistry(all.join(doomedIds, Seq("stream_id"), "left_anti"))
+    }
+    n
   }
 
   // ---- row-level deletes (GDPR takedown; Iceberg-style equality deletes) --
@@ -2641,11 +2690,12 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
           .write.mode(SaveMode.Append).partitionBy("dp_date").parquet(rawPath)
         // advance the per-stream earliest/latest bookkeeping from the KEPT
         // rows only (dropped stale rows must not lower earliest). Computed as
-        // a JOIN against the registry — no driver-side collect of all stream
-        // metadata, so the append path stays O(changed streams) on the driver
-        // even at millions of registered streams. The registry file itself is
-        // still rewritten (plain parquet has no row-level update; at cluster
-        // scale this table is Delta/Iceberg MERGE territory).
+        // a JOIN against the in-memory registry generation: the driver holds
+        // one whole generation, as the validation broadcast above already
+        // required, and the swap collects the joined rows back into it. The
+        // registry file itself is still rewritten (plain parquet has no
+        // row-level update; at cluster scale this table is Delta/Iceberg
+        // MERGE territory).
         val bounds = kept.groupBy("stream_id")
           .agg(min("ts").as("_lo"), max("ts").as("_hi"))
         val updated = streams.join(bounds, Seq("stream_id"), "left")
@@ -3792,7 +3842,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
             s"restore: registry generation g$g for snapshot $version was " +
               "reclaimed out of band — commit-log and streams_versions " +
               "disagree")
-        swapRegistry(spark.read.parquet(registryDir(g)))
+        swapRegistry(readRegistry(registryDir(g)))
       }
     }
   }
@@ -3834,62 +3884,35 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     if (!exists(rawPath) && !exists(derivedPath)) return Map.empty
     val untilUs = until.toInstant.getEpochSecond * 1000000L +
       until.toInstant.getNano / 1000L
-    // Snapshot the maintenance-relevant registry columns ONCE, eagerly
-    // (lineage-free localCheckpoint): the per-level watermark joins and the
-    // returned `produced` read-backs must be immune to the registry
-    // overwrite at the end of this call. Unlike the previous collect-based
-    // implementation, the driver never holds O(streams) state — only the
-    // ≤ |ladder| per-level stats below. The snapshot blocks stay pinned
-    // because the caller's `produced` frames reference them; they are
-    // metadata-sized and released by the ContextCleaner with the frames.
-    val selectedIds =
-      if (filterTags.isEmpty) streams.select("stream_id")
-      else StreamRegistry.findStreams(streams, filterTags).select("stream_id")
-    val (regSnap, _) = Plans.checkpointTracked(
-      streams.select(col("stream_id"), col("downsampled_until"),
-          col("highest_granularity"))
-        .join(selectedIds.withColumn("_sel", lit(true)), Seq("stream_id"), "left")
-        .withColumn("_sel", coalesce(col("_sel"), lit(false)))
-        .coalesce(1)) // metadata-sized: single-partition snapshot
+    // The per-level watermark frames and the returned `produced` read-backs
+    // are built from the in-memory registry generation: local frames that
+    // the registry swap at the end of this call cannot change.
+    val live = registry
+    val selected: Set[String] =
+      if (filterTags.isEmpty) live.byId.keySet
+      else StreamRegistry.findStreams(live.frame, filterTags)
+        .select("stream_id").collect().map(_.getString(0)).toSet
+    val selectedRows = live.rows.filter(m => selected(m.stream_id))
     import spark.implicits._
     def hiOf(g: Granularity): Long = {
       val durUs = g.durationSeconds * 1000000L
       (untilUs / durUs) * durUs // first NOT-complete bucket start
     }
-    // ONE metadata-sized job answers every driver-side question: the finest
-    // highest-granularity over ALL streams (sentinel row) and, per ladder
-    // level, the min watermark among selected streams with work (lo < hi).
-    // The collect is ≤ |ladder| + 1 rows — never O(streams).
-    val durByName = broadcast(Granularity.ladder
-      .map(g => (g.name, g.durationSeconds))
-      .toDF("highest_granularity", "_dur"))
-    val levelsAllDf = broadcast(Granularity.ladder
-      .map(g => (g.name, hiOf(g))).toDF("_g", "_hi"))
-    val statRows = regSnap.where(col("_sel"))
-      .crossJoin(levelsAllDf)
-      .select(col("_g"),
-        coalesce(element_at(col("downsampled_until"), col("_g")),
-          lit(Long.MinValue)).as("_lo"),
-        col("_hi"))
-      .where(col("_lo") < col("_hi"))
-      .groupBy("_g").agg(min("_lo").as("_v"))
-      .unionByName(regSnap.join(durByName, "highest_granularity")
-        .agg(min("_dur").as("_v")).select(lit("__finest").as("_g"), col("_v"))
-        .where(col("_v").isNotNull))
-      .collect()
-    val finestOpt = statRows.find(_.getString(0) == "__finest").map(_.getLong(1))
+    def loOf(m: StreamMeta, g: Granularity): Long =
+      Option(m.downsampled_until).flatMap(_.get(g.name)).getOrElse(Long.MinValue)
+    // the finest highest-granularity over ALL streams, and per ladder
+    // level the min watermark among selected streams with work (lo < hi)
+    val finestOpt = live.rows
+      .flatMap(m => Granularity.ladder.find(_.name == m.highest_granularity))
+      .map(_.durationSeconds).minOption
     if (finestOpt.isEmpty) return Map.empty // empty registry
     val levels = Granularity.ladder.filter(_.durationSeconds >= finestOpt.get)
-    val levelNames = levels.map(_.name).toSet
-    val stats: Map[String, Long] = statRows
-      .filter(r => levelNames(r.getString(0)))
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val stats: Map[String, Long] = levels.flatMap { g =>
+      selectedRows.map(loOf(_, g)).filter(_ < hiOf(g)).minOption.map(g.name -> _)
+    }.toMap
     def loDfOf(g: Granularity): DataFrame =
-      regSnap.where(col("_sel"))
-        .select(col("stream_id"),
-          coalesce(element_at(col("downsampled_until"), lit(g.name)),
-            lit(Long.MinValue)).as("_lo"))
-        .where(col("_lo") < lit(hiOf(g)))
+      selectedRows.map(m => (m.stream_id, loOf(m, g)))
+        .filter(_._2 < hiOf(g)).toDF("stream_id", "_lo")
     var produced = Map.empty[Granularity, DataFrame]
     var advanced = Map.empty[String, Long] // level name -> hi actually written
     // no level with work ⇒ no writes at all: skip the commit-log entry too
@@ -3953,25 +3976,18 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       }
     } }
     if (advanced.nonEmpty) {
-      // join-based watermark advance: for selected streams, each written
-      // level's entry becomes max(old, hi) — identical to the per-stream
-      // semantics (work streams move to hi; already-current streams keep
-      // their ≥ hi value; unselected streams are untouched). No driver-side
-      // registry round-trip.
-      val updated = streams
-        .join(regSnap.where(col("_sel")).select(col("stream_id"),
-          lit(true).as("_sel")), Seq("stream_id"), "left")
-        .withColumn("downsampled_until",
-          when(col("_sel").isNotNull,
-            map_zip_with(
-              coalesce(col("downsampled_until"),
-                map().cast("map<string,bigint>")),
-              typedLit(advanced),
-              (_, o, u) => when(u.isNull, o)
-                .otherwise(greatest(coalesce(o, lit(Long.MinValue)), u))))
-            .otherwise(col("downsampled_until")))
-        .drop("_sel")
-      swapRegistry(updated)
+      // watermark advance: for selected streams, each written level's
+      // entry becomes max(old, hi) — identical to the per-stream semantics
+      // (work streams move to hi; already-current streams keep their ≥ hi
+      // value; unselected streams are untouched)
+      swapRegistry(registry.rows.map { m =>
+        if (!selected(m.stream_id)) m
+        else {
+          val du = Option(m.downsampled_until).getOrElse(Map.empty[String, Long])
+          m.copy(downsampled_until = du ++ advanced.map { case (k, hi) =>
+            k -> du.get(k).fold(hi)(math.max(_, hi)) })
+        }
+      })
     }
     }
     produced
@@ -3995,12 +4011,10 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       // pre-reprocess rollups intact and still served
       Granularity.ladder.foreach(g =>
         retireFiles(s"rollup/granularity=${g.name}", Seq("")))
-      // reset every stream's per-granularity watermark — a column rewrite
-      // through the swap write, no driver-side collect of the registry
+      // reset every stream's per-granularity watermark
       if (hasStreams)
         swapRegistry(
-          streams.withColumn("downsampled_until",
-            map().cast("map<string,bigint>")))
+          registry.rows.map(_.copy(downsampled_until = Map.empty)))
     }
     downsampleStreams(until)
     // the warehouse is now rebuilt from its raw tables — any torn-mutation
@@ -4262,7 +4276,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     val slice = spark.read.option("basePath", rawPath)
       .schema(rawSchemaPartitioned)
       .parquet(old.toSeq.sorted.map(f => s"$rawPath/$f"): _*)
-    val nStreams = math.max(streams.count(), 1L)
+    val nStreams = math.max(registry.rows.size.toLong, 1L)
     // stream ranks, SIZE-ADAPTIVE: a plain `Window.orderBy(stream_id)`
     // coalesces the registry into ONE task — fine (and cheapest: no
     // range shuffle, no checkpoint) up to tens of thousands of streams,
@@ -4498,8 +4512,9 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * range). On a warehouse where streams land in distinct commits —
     * ingest-per-source, the common shape — a 2-stream tag selection plans
     * a strict subset of the snapshot's files before Spark sees the scan.
-    * Exactness is still enforced by the broadcast semi-join on top
-    * ([[StreamRegistry.selectDatapoints]]); the skip is a plan-size
+    * Exactness is still enforced on top, by an IN filter on the matched
+    * ids (or, past the cap, the broadcast semi-join
+    * [[StreamRegistry.selectDatapoints]]); the skip is a plan-size
     * optimization, never a correctness dependency.
     */
   def datapointsForStreams(tagQuery: Map[String, String],
@@ -4519,10 +4534,14 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     val exact = Seq(
       start.map(s => col("ts") >= lit(s)),
       end.map(e => col("ts") <= lit(e))).flatten
-    StreamRegistry.selectDatapoints(
-      exact.foldLeft(
-        rawDatapointsInRange(start, end, asOfVersion, skip))(_.where(_)),
-      matched)
+    val rows = exact.foldLeft(
+      rawDatapointsInRange(start, end, asOfVersion, skip))(_.where(_))
+    // a collected id set is an IN filter (pushed into the scan, no
+    // broadcast job); past the cap, the semi-join against the registry
+    skip match {
+      case Some(sids) => rows.where(col("stream_id").isInCollection(sids))
+      case None => StreamRegistry.selectDatapoints(rows, matched)
+    }
   }
 
   /** Batch materialization of a derived stream's datapoints from its
@@ -4734,7 +4753,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       // sidecar row can only be stale for them.
       val prevRows =
         if (full || !exists(derivePrevPath)) None
-        else Some(spark.read.parquet(derivePrevPath)
+        else Some(spark.read.schema(derivePrevSchema).parquet(derivePrevPath)
           .join(routes.where(col("derive_op") =!= "sum" &&
             col("_lo") =!= Long.MinValue), Seq("derived_id", "stream_id"))
           .select(col("stream_id"), col("ts"), col("value"),
@@ -4797,7 +4816,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
               col("_p.ts").as("ts"), col("_p.value").as("value"))
           val mergedPrev =
             if (!exists(derivePrevPath)) newPrev
-            else spark.read.parquet(derivePrevPath)
+            else spark.read.schema(derivePrevSchema).parquet(derivePrevPath)
               .join(newPrev.select("derived_id", "stream_id"),
                 Seq("derived_id", "stream_id"), "left_anti")
               .unionByName(newPrev)

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** IVF (inverted-file) approximate nearest neighbor — the second scale path
   * next to random-hyperplane LSH (builder brief: "an IVF or LSH-bucketed
@@ -29,8 +30,7 @@ object Ivf {
     s
   }
 
-  private def nearestCells(vec: Array[Float], cents: Array[(Int, Array[Float], Double)],
-                           n: Int): Seq[Int] = {
+  private def nearestCells(vec: Array[Float], cents: Centroids, n: Int): Seq[Int] = {
     val vn = math.sqrt(dotLoop(vec, vec))
     cents.map { case (cell, cv, cn) => (cell, dotLoop(vec, cv) / (cn * vn)) }
       .sortBy { case (cell, cos) => (-cos, cell) }
@@ -181,6 +181,78 @@ object Ivf {
                          dir: String): Seq[String] =
     VersionedIndex.shardsOf(spark, path, dir, "cells")
 
+  // Schemas of a version's tables, passed on every read: inferring them
+  // costs a Spark job per table (per shard, for the cells).
+  private val centroidSchema = StructType(Seq(
+    StructField("cell", IntegerType), StructField("centroid", ArrayType(FloatType))))
+  private val ivfCellSchema = StructType(Seq(StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType)), StructField("cell", IntegerType)))
+  private val pqCellSchema = StructType(Seq(StructField("vec_id", LongType),
+    StructField("codes", ArrayType(IntegerType)), StructField("norm", DoubleType),
+    StructField("cell", IntegerType)))
+  private val tombstoneSchema = StructType(Seq(StructField("vec_id", LongType)))
+
+  /** `(cell, centroid, norm)` rows of a version's centroid table. */
+  private type Centroids = Array[(Int, Array[Float], Double)]
+
+  /** Centroid tables by file set, shared by every session (the content is
+    * the files'); cleared whole past 256 entries.
+    */
+  private val centroidCache = new java.util.concurrent.ConcurrentHashMap[String, Centroids]()
+
+  /** A version's centroid table is written once and never changed, so its
+    * part files' names, lengths and modification times identify the
+    * content: an index deleted and rebuilt at the same version number
+    * never matches an old key.
+    */
+  private def centroidMemo(spark: org.apache.spark.sql.SparkSession, dir: String)(
+      load: => Array[(Int, Array[Float])]): Centroids = {
+    val files = VersionedIndex.io(spark, dir).children(s"$dir/centroids")
+      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
+      .filterNot { case (n, _, _) => n.startsWith(".") || n.startsWith("_") }
+      .sorted
+    if (centroidCache.size > 256) centroidCache.clear()
+    centroidCache.computeIfAbsent(s"$dir|${files.mkString(",")}",
+      _ => load.map { case (c, v) => (c, v, math.sqrt(dotLoop(v, v))) })
+  }
+
+  /** The centroid table of the version at `dir`: the one read of it,
+    * memoized per committed version directory. Callers share the
+    * returned array and must not mutate it.
+    */
+  private def centroidsOf(spark: org.apache.spark.sql.SparkSession, dir: String): Centroids = {
+    import spark.implicits._
+    centroidMemo(spark, dir)(spark.read.schema(centroidSchema)
+      .parquet(s"$dir/centroids").as[(Int, Array[Float])].collect())
+  }
+
+  /** Write `cents` as the centroid table of version `dir`; the written
+    * table is memoized as [[centroidsOf]] would load it, and returned.
+    */
+  private def writeCentroids(spark: org.apache.spark.sql.SparkSession, dir: String,
+                             cents: Array[(Int, Array[Float])]): Centroids = {
+    import spark.implicits._
+    cents.toSeq.toDF("cell", "centroid").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/centroids")
+    centroidMemo(spark, dir)(cents)
+  }
+
+  /** Copy version `cur`'s centroid table forward into version `dir`. */
+  private def copyCentroids(spark: org.apache.spark.sql.SparkSession, cur: String,
+                            dir: String): Centroids =
+    writeCentroids(spark, dir, centroidsOf(spark, cur).map { case (c, v, _) => (c, v) })
+
+  /** Copy version `cur`'s model tables (centroids, and the PQ codebooks
+    * when present) forward into version `dir`.
+    */
+  private def copyModel(spark: org.apache.spark.sql.SparkSession, s: graft.WarehouseIO,
+                        cur: String, dir: String): Unit = {
+    if (s.exists(s"$cur/centroids")) copyCentroids(spark, cur, dir)
+    if (s.exists(s"$cur/pq"))
+      spark.read.parquet(s"$cur/pq").coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/pq")
+  }
+
   /** PUBLIC read surface for a version's inverted file: the union of its
     * cell shards (one partitioned parquet table per shard; `cell` pruning
     * applies per shard). Read THROUGH this, not `indexDir(..)+"/cells"` —
@@ -196,9 +268,13 @@ object Ivf {
   }
 
   private def readCells(spark: org.apache.spark.sql.SparkSession,
-                        path: String, dir: String): DataFrame =
-    cellShards(spark, path, dir).map(d => spark.read.parquet(d))
+                        path: String, dir: String): DataFrame = {
+    val schema =
+      if (VersionedIndex.io(spark, path).exists(s"$dir/pq")) pqCellSchema
+      else ivfCellSchema
+    cellShards(spark, path, dir).map(d => spark.read.schema(schema).parquet(d))
       .reduce(_.unionByName(_))
+  }
 
   // ---- takedown (right-to-be-forgotten for persisted indexes) -------------
 
@@ -210,7 +286,8 @@ object Ivf {
   private def tombstonesOf(spark: org.apache.spark.sql.SparkSession,
                            path: String, dir: String): Option[DataFrame] = {
     val s = VersionedIndex.io(spark, path)
-    if (s.exists(s"$dir/tombstones")) Some(spark.read.parquet(s"$dir/tombstones"))
+    if (s.exists(s"$dir/tombstones"))
+      Some(spark.read.schema(tombstoneSchema).parquet(s"$dir/tombstones"))
     else None
   }
 
@@ -262,11 +339,7 @@ object Ivf {
     val dir = s"$path/v$next"
     val s = VersionedIndex.io(spark, path)
     // self-contained per-version metadata, like the append paths
-    Seq("centroids", "pq").foreach { sub =>
-      if (s.exists(s"$cur/$sub"))
-        spark.read.parquet(s"$cur/$sub").coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/$sub")
-    }
+    copyModel(spark, s, cur, dir)
     val merged = tombstonesOf(spark, path, cur) match {
       case Some(t) => t.select("vec_id").unionByName(dead).distinct()
       case None => dead
@@ -307,10 +380,7 @@ object Ivf {
     val spark = vecs.sparkSession
     val next = currentVersion(spark, path).getOrElse(0L) + 1
     val dir = s"$path/v$next"
-    cents.toSeq.toDF("cell", "centroid").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    val centB = vecs.sparkSession.sparkContext.broadcast(
-      cents.map { case (c, v) => (c, v, math.sqrt(dotLoop(v, v))) })
+    val centB = spark.sparkContext.broadcast(writeCentroids(spark, dir, cents))
     vecs.select(col(idCol).cast("long"), col(vecCol))
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
@@ -351,17 +421,12 @@ object Ivf {
     import newVecs.sparkSession.implicits._
     val spark = newVecs.sparkSession
     val cur = indexDir(spark, path)
-    val cents = spark.read.parquet(s"$cur/centroids")
-      .select(col("cell"), col("centroid"))
-      .as[(Int, Array[Float])].collect()
-      .map { case (c, v) => (c, v, math.sqrt(dotLoop(v, v))) }
     val next = currentVersion(spark, path).getOrElse(0L) + 1
     val dir = s"$path/v$next"
     // self-contained per-version metadata: the tiny centroid table (and
     // any takedown tombstones, which stay in force) copied forward
     // (driver-scale); only the big cell shards share by reference
-    spark.read.parquet(s"$cur/centroids").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
+    val cents = copyCentroids(spark, cur, dir)
     carryTombstones(spark, path, cur, dir)
     val centB = spark.sparkContext.broadcast(cents)
     newVecs.select(col(idCol).cast("long"), col(vecCol))
@@ -474,11 +539,7 @@ object Ivf {
     val live = minusTombstones(readCells(spark, path, cur),
       tombstonesOf(spark, path, cur))
     if (live.isEmpty) return false
-    Seq("centroids", "pq").foreach { sub =>
-      if (s.exists(s"$cur/$sub"))
-        spark.read.parquet(s"$cur/$sub").coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/$sub")
-    }
+    copyModel(spark, s, cur, dir)
     live.write.mode("overwrite").partitionBy("cell").parquet(s"$dir/cells")
     commitVersion(spark, path, next)
     true
@@ -516,16 +577,11 @@ object Ivf {
     val all = minusTombstones(readCells(spark, path, cur),
         tombstonesOf(spark, path, cur))
       .select("vec_id", "embedding")
-    val init = spark.read.parquet(s"$cur/centroids")
-      .select(col("cell"), col("centroid"))
-      .as[(Int, Array[Float])].collect().sortBy(_._1)
+    val init = centroidsOf(spark, cur).map { case (c, v, _) => (c, v) }.sortBy(_._1)
     val refined = refineCentroids(all, init, refineIters)
     val next = currentVersion(spark, path).getOrElse(0L) + 1
     val dir = s"$path/v$next"
-    refined.toSeq.toDF("cell", "centroid").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    val centB = spark.sparkContext.broadcast(
-      refined.map { case (c, v) => (c, v, math.sqrt(dotLoop(v, v))) })
+    val centB = spark.sparkContext.broadcast(writeCentroids(spark, dir, refined))
     all.as[(Long, Array[Float])]
       .mapPartitions { it =>
         val cs = centB.value
@@ -561,11 +617,7 @@ object Ivf {
     import queries.sparkSession.implicits._
     val spark = queries.sparkSession
     val dir = indexDir(spark, path, asOfVersion)
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .select(col("cell"), col("centroid"))
-      .as[(Int, Array[Float])].collect()
-      .map { case (c, v) => (c, v, math.sqrt(dotLoop(v, v))) }
-    val centB = spark.sparkContext.broadcast(cents)
+    val centB = spark.sparkContext.broadcast(centroidsOf(spark, dir))
     val probes = queries.select(col(idCol).cast("long"), col(vecCol))
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
@@ -675,14 +727,11 @@ object Ivf {
     val spark = corpus.sparkSession
     val next = currentVersion(spark, path).getOrElse(0L) + 1
     val dir = s"$path/v$next"
-    cents.toSeq.toDF("cell", "centroid").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
+    val centB = spark.sparkContext.broadcast(writeCentroids(spark, dir, cents))
     model.codebooks.zipWithIndex.flatMap { case (book, s) =>
       book.zipWithIndex.map { case (cb, c) => (s, c, cb.toSeq) }
     }.toSeq.toDF("sub", "code", "centroid").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/pq")
-    val centB = corpus.sparkSession.sparkContext.broadcast(
-      cents.map { case (c, v) => (c, v, math.sqrt(dotLoop(v, v))) })
     val pqB = corpus.sparkSession.sparkContext.broadcast(model)
     corpus.select(col(idCol).cast("long"), col(vecCol))
       .as[(Long, Array[Float])]
@@ -715,18 +764,13 @@ object Ivf {
     import newVecs.sparkSession.implicits._
     val spark = newVecs.sparkSession
     val cur = indexDir(spark, path)
-    val cents = spark.read.parquet(s"$cur/centroids")
-      .select(col("cell"), col("centroid"))
-      .as[(Int, Array[Float])].collect()
-      .map { case (c, v) => (c, v, math.sqrt(dotLoop(v, v))) }
     val model = loadPqModel(spark, cur)
     val next = currentVersion(spark, path).getOrElse(0L) + 1
     val dir = s"$path/v$next"
     // per-version metadata copied forward (all driver-scale tables,
     // takedown tombstones included); the codes shards share by reference
     // like the plain index's vectors
-    spark.read.parquet(s"$cur/centroids").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
+    val cents = copyCentroids(spark, cur, dir)
     spark.read.parquet(s"$cur/pq").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/pq")
     carryTombstones(spark, path, cur, dir)
@@ -769,10 +813,7 @@ object Ivf {
     val spark = queries.sparkSession
     import spark.implicits._
     val dir = indexDir(spark, path, asOfVersion)
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .select(col("cell"), col("centroid"))
-      .as[(Int, Array[Float])].collect()
-      .map { case (c, v) => (c, v, math.sqrt(dotLoop(v, v))) }
+    val cents = centroidsOf(spark, dir)
     val model = loadPqModel(spark, dir)
     val books = model.codebooks
     val mM = model.m

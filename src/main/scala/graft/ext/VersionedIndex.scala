@@ -38,14 +38,28 @@ private[graft] object VersionedIndex {
   def io(spark: SparkSession, path: String): graft.WarehouseIO =
     new graft.WarehouseIO(confOf(spark), path)
 
+  /** Each session's Hadoop conf, with the session entries it was built
+    * from. `newHadoopConf()` copies every runtime conf entry verbatim, so
+    * a Hadoop key set at runtime (`fs.s3a.endpoint`, say) is a plain
+    * entry; the `spark.*` ones other than `spark.hadoop.*` are left out
+    * of the comparison, as they do not configure Hadoop.
+    */
   private val confCache =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession,
-        org.apache.hadoop.conf.Configuration]())
-  private def confOf(spark: SparkSession) = {
+        (Map[String, String], org.apache.hadoop.conf.Configuration)]())
+
+  private def confOf(spark: SparkSession): org.apache.hadoop.conf.Configuration = {
+    val entries = spark.sessionState.conf.getAllConfs.filter { case (k, _) =>
+      !k.startsWith("spark.") || k.startsWith("spark.hadoop.")
+    }
     val c = confCache.get(spark)
-    if (c != null) c
-    else { val n = spark.sessionState.newHadoopConf(); confCache.put(spark, n); n }
+    if (c != null && c._1 == entries) c._2
+    else {
+      val n = spark.sessionState.newHadoopConf()
+      confCache.put(spark, entries -> n)
+      n
+    }
   }
 
   /** Versions ever committed via a `CURRENT.v<N>` marker, ascending.

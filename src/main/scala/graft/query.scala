@@ -9,11 +9,13 @@ import org.apache.spark.sql.functions._
   *
   * Range scan of one stream at one granularity with inclusive/exclusive
   * bounds, optional descending order, and projection of a subset of
-  * downsampler fields. In Spark this is a pure filter+project+sort plan:
-  * the time predicate and `stream_id` equality push down to the parquet
-  * scan (partition pruning + row-group min/max stand in for the
+  * downsampler fields. In Spark this is a filter+project plan under a
+  * sort: the time predicate and `stream_id` equality push down to the
+  * parquet scan (partition pruning + row-group min/max stand in for the
   * reference's `_id`-range index scans, SURVEY.md §4), and struct-field
-  * projection rides Catalyst's nested-schema pruning (P3). No shuffle.
+  * projection rides Catalyst's nested-schema pruning (P3). The `orderBy`
+  * is a global range sort, so a read does shuffle: a one-hour raw read
+  * runs three jobs (the range-bound sample, the exchange, the result).
   */
 object GetData {
 

@@ -126,6 +126,13 @@ private[graft] final class WarehouseIO(conf: Configuration, root: String) {
       catch { case _: java.io.FileNotFoundException => Seq.empty }
     }
 
+  /** Modification time of `p` in epoch ms; 0 when absent. */
+  def modificationTime(p: String): Long =
+    if (isLocal) new java.io.File(localPath(p).toString).lastModified()
+    else
+      try fs.getFileStatus(q(p)).getModificationTime
+      catch { case _: java.io.FileNotFoundException => 0L }
+
   def childNames(dir: String): Seq[String] =
     if (isLocal) {
       val names = new java.io.File(localPath(dir).toString).list()

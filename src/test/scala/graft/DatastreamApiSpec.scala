@@ -889,4 +889,70 @@ class DatastreamApiSpec extends SparkSpec {
     assert(merged === derivedRows(b))
     assert(merged.map(_._1).toSet === Set("d:sum", "d:der", "d:rst", "d:cdr"))
   }
+
+  test("the in-memory registry shows every registry swap at once") {
+    val dir = Files.createTempDirectory("graft-ds").toString
+    val ds = new Datastream(spark, dir)
+    def found(q: Map[String, String]): Set[String] =
+      ds.findStreams(q).collect().map(_.getAs[String]("stream_id")).toSet
+    ds.ensureStream("a", Map("grp" -> "g", "id" -> "a"))
+    assert(found(Map("grp" -> "g")) == Set("a"))
+    ds.ensureStreams(Seq(
+      StreamMeta("b", Map("grp" -> "g", "id" -> "b"), ValueType.Numeric,
+        Seq.empty, Seq.empty, Granularity.Seconds.name),
+      StreamMeta("d", Map("id" -> "d"), ValueType.Numeric, Seq.empty, Seq.empty,
+        Granularity.Seconds.name, Some("derivative"), None, Seq("a"))))
+    assert(found(Map("grp" -> "g")) == Set("a", "b"))
+    assert(ds.streamMeta("d").derived_from == Seq("a"))
+    ds.appendMultiple(dp(Seq(
+      ("a", "2024-01-01T00:00:00Z", 1.0), ("a", "2024-01-01T00:00:10Z", 3.0),
+      ("b", "2024-01-01T00:00:05Z", 2.0))).select("stream_id", "ts", "value"))
+    assert(ds.streamMeta("a").latest_datapoint.contains(ts("2024-01-01T00:00:10Z")))
+    val appended = ds.currentVersion.get
+    assert(ds.updateTags(Map("grp" -> "g"), Map("tier" -> "hot")) == 2)
+    assert(found(Map("tier" -> "hot")) == Set("a", "b"))
+    assert(ds.streamMeta("b").tags.get("tier").contains("hot"))
+    assert(ds.removeTags(Map("id" -> "a"), Seq("tier")) == 1)
+    assert(found(Map("tier" -> "hot")) == Set("b"))
+    ds.downsampleStreams(ts("2024-01-02T00:00:00Z"))
+    assert(ds.streamMeta("a").downsampled_until.contains(Granularity.Days.name))
+    ds.updateDerivedStreamsIncremental(ts("2024-01-02T00:00:00Z"))
+    assert(ds.streamMeta("d").downsampled_until.contains("derived"))
+    assert(ds.streamMeta("d").latest_datapoint.contains(ts("2024-01-01T00:00:10Z")))
+    // a swap made through a second facade on the same warehouse
+    val other = new Datastream(spark, dir)
+    assert(other.updateTags(Map("id" -> "b"), Map("by" -> "other")) == 1)
+    assert(found(Map("by" -> "other")) == Set("b"))
+    assert(ds.streamMeta("b").tags.get("by").contains("other"))
+    assert(ds.deleteStreams(Map("id" -> "b")) == 1)
+    assert(found(Map("grp" -> "g")) == Set("a"))
+    assertThrows[errors.StreamNotFound](ds.streamMeta("b"))
+    assertThrows[errors.StreamNotFound](ds.getData("b", Granularity.Seconds))
+    // a pinned read resolves the generation its snapshot recorded
+    assert(ds.getData("b", Granularity.Seconds, asOfVersion = Some(appended))
+      .count() == 1)
+    assert(ds.findStreamsAt(Map("grp" -> "g"), appended).count() == 2)
+    ds.restore(appended)
+    assert(found(Map("grp" -> "g")) == Set("a", "b"))
+    assert(found(Map("tier" -> "hot")).isEmpty)
+    assert(ds.streamMeta("b").tags.get("by").isEmpty)
+    assert(!ds.streamMeta("a").downsampled_until.contains(Granularity.Days.name))
+    // the other facade sees the restore too
+    assert(other.streamMeta("b").tags.get("tier").isEmpty)
+  }
+
+  test("a warehouse wiped and recreated under a live facade is read afresh") {
+    val dir = Files.createTempDirectory("graft-ds").toString
+    val ds = new Datastream(spark, dir)
+    ds.ensureStream("old", Map("era" -> "1"))
+    assert(ds.streams.count() == 1)
+    val walk = Files.walk(java.nio.file.Paths.get(dir))
+    try walk.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    finally walk.close()
+    val fresh = new Datastream(spark, dir)
+    fresh.ensureStream("new", Map("era" -> "2"))
+    // same generation number as before the wipe, a new marker
+    assert(ds.streams.collect().map(_.getAs[String]("stream_id")).toSeq == Seq("new"))
+    assertThrows[errors.StreamNotFound](ds.streamMeta("old"))
+  }
 }

@@ -626,4 +626,55 @@ class DotProductSpec extends SparkSpec {
       .select("query_vec_id", "vec_id", "rank").as[(Long, Long, Long)].collect().toSet
     assert(viaRefined == brute)
   }
+
+  test("IVF queries probe the live version's centroids after append, " +
+      "refresh and a rebuild at the same path") {
+    val n = 6
+    // six distinct directions; every corpus vector becomes a centroid
+    // (nCells = corpus size), so each cell holds its own centroid's vector
+    val base = (0 until n).map(i => Array.tabulate(n)(j =>
+      if (j == i) 1.0f else 0.02f * ((i + j) % n)))
+    def corpus(vec: Int => Array[Float]) =
+      (0 until n).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding")
+    def cos(a: Array[Float], b: Array[Float]): Double = {
+      def dot(x: Array[Float], y: Array[Float]) =
+        x.indices.map(i => x(i).toDouble * y(i)).sum
+      dot(a, b) / math.sqrt(dot(a, a) * dot(b, b))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivfmemo").toString
+    def top1(q: Array[Float]): Long =
+      ext.Ivf.queryIndex(dir, Seq((-1L, q)).toDF("vec_id", "embedding"), k = 1,
+        nProbe = 1).select("vec_id").as[Long].collect().head
+    // the answer a one-cell probe gives under the centroids on disk
+    def expected(q: Array[Float]): Long = {
+      val d = ext.Ivf.indexDir(spark, dir)
+      val cell = spark.read.parquet(s"$d/centroids").select("cell", "centroid")
+        .as[(Int, Array[Float])].collect()
+        .minBy { case (c, v) => (-cos(q, v), c) }._1
+      ext.Ivf.cells(spark, dir).where(col("cell") === cell)
+        .select("vec_id", "embedding").as[(Long, Array[Float])].collect()
+        .minBy { case (id, v) => (-cos(q, v), id) }._1
+    }
+    val queries = base.map(_.map(_ * 0.9f))
+    ext.Ivf.buildIndex(corpus(base), dir, nCells = n)
+    queries.zipWithIndex.foreach { case (q, i) => assert(top1(q) == i) }
+    ext.Ivf.appendBatchToIndex(
+      Seq((100L, base(2).map(_ + 0.01f))).toDF("vec_id", "embedding"), dir, 1L)
+    queries.foreach(q => assert(top1(q) == expected(q)))
+    ext.Ivf.refreshIndex(dir, spark, refineIters = 2)
+    queries.foreach(q => assert(top1(q) == expected(q)))
+    // the same ids with their vectors rotated by three, rebuilt at v1 of
+    // the same path: the old centroid of cell c now fronts a cell holding
+    // another direction, so a stale table would answer with the wrong id
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try walk.sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => java.nio.file.Files.delete(p))
+    finally walk.close()
+    ext.Ivf.buildIndex(corpus(i => base((i + 3) % n)), dir, nCells = n)
+    assert(ext.Ivf.indexDir(spark, dir).endsWith("/v1"))
+    queries.zipWithIndex.foreach { case (q, i) =>
+      assert(top1(q) == (i + n - 3) % n)
+      assert(top1(q) == expected(q))
+    }
+  }
 }

@@ -107,4 +107,21 @@ class IndexProtocolSpec extends SparkSpec {
     assert(exact.isEmpty,
       "rerank == k must exact-rescore, not serve SQ8-approximate scores")
   }
+
+  test("a Hadoop conf entry set after the first index operation reaches index I/O") {
+    val path = java.nio.file.Files.createTempDirectory("graft-conf").toString
+    ext.Ivf.buildIndex(vecs, path, nCells = 2)
+    // the scheme resolves only through the entry set below
+    val key = "fs.graftlocal.impl"
+    spark.conf.set(key, classOf[SchemeLocalFileSystem].getName)
+    try assert(ext.Ivf.indexDir(spark, s"graftlocal://$path") ==
+      s"graftlocal://$path/v1")
+    finally spark.conf.unset(key)
+  }
+}
+
+/** The local filesystem under its own URI scheme, `graftlocal`. */
+class SchemeLocalFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftlocal:///")
+  override def getScheme: String = "graftlocal"
 }

@@ -1,0 +1,103 @@
+package graft
+
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.GraftBridge
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+
+/** Spark jobs launched by warm read-path calls. Stream metadata comes from
+  * the in-memory registry generation and IVF centroids from the memoized
+  * centroid table, so neither may cost a job once loaded: a regression
+  * fails here instead of surfacing as a slower benchmark.
+  */
+class JobBudgetSpec extends SparkSpec {
+
+  /** What `body` launched: the long call site of every job (the final
+    * stage's details, one stack frame per line) and the physical plan of
+    * every SQL execution.
+    */
+  private def launched(body: => Unit): (Seq[String], Seq[String]) = {
+    val sc = spark.sparkContext
+    val group = s"job-budget-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.add(e.stageInfos.map(_.details).mkString("\n"))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
+          plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    GraftBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job budget")
+    try {
+      body
+      GraftBridge.drainListenerBus(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    (jobs.asScala.toSeq, plans.asScala.toSeq)
+  }
+
+  private def warehouse(): Datastream = {
+    val ds = new Datastream(spark, Files.createTempDirectory("graft-budget").toString)
+    ds.ensureStream("s1", Map("site" -> "a"))
+    ds.ensureStream("s2", Map("site" -> "b"))
+    ds.appendMultiple(dp(Seq(
+      ("s1", "2024-01-01T00:00:00Z", 1.0), ("s1", "2024-01-01T00:30:00Z", 2.0),
+      ("s2", "2024-01-01T00:10:00Z", 3.0))).select("stream_id", "ts", "value"))
+    ds
+  }
+
+  test("warm streamMeta and findStreams launch no Spark job") {
+    val ds = warehouse()
+    ds.streamMeta("s1")
+    val (jobs, _) = launched {
+      assert(ds.streamMeta("s1").tags == Map("site" -> "a"))
+      assert(ds.findStreams(Map("site" -> "b")).collect()
+        .map(_.getAs[String]("stream_id")).toSeq == Seq("s2"))
+    }
+    assert(jobs.isEmpty, jobs.mkString("\n----\n"))
+  }
+
+  test("a warm raw getData launches no job from the registry") {
+    val ds = warehouse()
+    def read() = ds.getData("s1", Granularity.Seconds,
+      Some(ts("2024-01-01T00:00:00Z")), Some(ts("2024-01-01T01:00:00Z"))).collect()
+    read()
+    val (jobs, _) = launched(assert(read().length == 2))
+    assert(jobs.nonEmpty) // the data read itself runs
+    val registryFrames = Seq("graft.Datastream.streams(",
+      "graft.Datastream.streamMeta(", "graft.Datastream.registry(")
+    val fromRegistry = jobs.filter(j => registryFrames.exists(j.contains))
+    assert(fromRegistry.isEmpty, fromRegistry.mkString("\n----\n"))
+  }
+
+  test("Ivf.queryIndex on a warm version reads no centroid table") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-budget-ivf").toString
+    val rnd = new scala.util.Random(7)
+    val corpus = (0 until 64).map(i => (i.toLong, Array.fill(8)(rnd.nextFloat() - 0.5f)))
+      .toDF("vec_id", "embedding")
+    ext.Ivf.buildIndex(corpus, dir, nCells = 4)
+    val queries = corpus.where($"vec_id" < 2)
+    ext.Ivf.queryIndex(dir, queries, k = 3, nProbe = 2).collect()
+    def centroidReads(plans: Seq[String]) =
+      plans.filter(p => p.contains(dir) && p.contains("/centroids"))
+    // the probe sees a centroid read where there is one
+    val (_, direct) = launched(
+      spark.read.parquet(s"${ext.Ivf.indexDir(spark, dir)}/centroids").collect())
+    assert(centroidReads(direct).nonEmpty)
+    val (_, plans) = launched(
+      assert(ext.Ivf.queryIndex(dir, queries, k = 3, nProbe = 2).count() == 6))
+    assert(centroidReads(plans).isEmpty, centroidReads(plans).mkString("\n----\n"))
+  }
+}
