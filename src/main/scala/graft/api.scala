@@ -45,9 +45,11 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * vacuum, pointers) goes through the Hadoop FileSystem API resolved
     * from the warehouse URI — see [[WarehouseIO]] for the per-store
     * rename-semantics contract. The warehouse therefore addresses
-    * `file://`, `hdfs://` or `s3a://` with one code path.
+    * `file://`, `hdfs://` or `s3a://` with one code path. Its Hadoop conf
+    * follows the session, so a filesystem setting changed at runtime
+    * reaches the next metadata operation.
     */
-  private val io = new WarehouseIO(spark.sessionState.newHadoopConf(), warehouse)
+  private val io = new WarehouseIO(() => WarehouseIO.confOf(spark), warehouse)
 
   private val streamsPath = s"$warehouse/streams"
   // immutable registry generations (time-travelled metadata): one parquet
@@ -3158,8 +3160,10 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     val bounds = Seq(
       start.map(s => col("dp_date") >= to_date(lit(s))),
       end.map(e => col("dp_date") <= to_date(lit(e)))).flatten
+    // a local relation: its size is known (0), so the empty side of a
+    // read does not make the read's planned input unknown
     def emptyRaw =
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         schema)
     val skip = usSkipRange(start, end)
     val sids = streamIds.map(_.sorted.toIndexedSeq)
@@ -4357,11 +4361,13 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * stream has no finalized data for is NULL, so the frame is a dense
     * time grid over a sparse union of series.
     *
-    * Scale shape: ONE rollup read (partition-pruned to the window), one
-    * pivot shuffle on `bucket_start`; the matched stream ids are collected
-    * (bounded by the house `head(max+1)` fail-fast) because they become
-    * COLUMNS — a matrix is driver-width by construction, which is also
-    * why `maxStreams` defaults low; wide exports should raise it
+    * Scale shape: ONE rollup read (partition-pruned to the window) under
+    * the pivot's aggregate; the pivot runs in the scan's own task when the
+    * read is no larger than one file-open ([[GetData.oneTaskIfSmall]]) and
+    * shuffles on `bucket_start` above that. The matched stream ids are
+    * collected (bounded by the house `head(max+1)` fail-fast) because they
+    * become COLUMNS — a matrix is driver-width by construction, which is
+    * also why `maxStreams` defaults low; wide exports should raise it
     * deliberately or stay in the long (stream_id, bucket, value) shape.
     */
   def getDataMatrix(tagQuery: Map[String, String], granularity: Granularity,
@@ -4394,7 +4400,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     val slice = rollup(granularity)
       .where(col("stream_id").isInCollection(sids) &&
         col("bucket_start") >= lit(start) && col("bucket_start") <= lit(end))
-    Downsample.finalizeView(slice)
+    Downsample.finalizeView(GetData.oneTaskIfSmall(slice))
       .select(col("stream_id"), col("bucket_start"),
         col(downsampler).as("_v"))
       .groupBy("bucket_start")
@@ -4487,9 +4493,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             Schemas.downsampledPartitioned)))(_.where(_))
         .drop("bucket_date")
-      GetData.paginate(
-        GetData.downsampled(pruned, streamId, start, end,
-          startExclusive, endExclusive, reverse, requested, timeDownsamplers),
+      GetData.downsampledPage(pruned, streamId, start, end,
+        startExclusive, endExclusive, reverse, requested, timeDownsamplers,
         limit, offset)
     }
   }

@@ -32,35 +32,9 @@ private[graft] object VersionedIndex {
     * ambient `SparkSession.active` resolution is thread-context-dependent
     * (a pool/stream thread without an inherited active or default session
     * throws), and every caller already holds the session it means.
-    * The per-session Hadoop conf is cached: `newHadoopConf()` copies the
-    * full property map per call, and index metadata ops call here often.
     */
   def io(spark: SparkSession, path: String): graft.WarehouseIO =
-    new graft.WarehouseIO(confOf(spark), path)
-
-  /** Each session's Hadoop conf, with the session entries it was built
-    * from. `newHadoopConf()` copies every runtime conf entry verbatim, so
-    * a Hadoop key set at runtime (`fs.s3a.endpoint`, say) is a plain
-    * entry; the `spark.*` ones other than `spark.hadoop.*` are left out
-    * of the comparison, as they do not configure Hadoop.
-    */
-  private val confCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        (Map[String, String], org.apache.hadoop.conf.Configuration)]())
-
-  private def confOf(spark: SparkSession): org.apache.hadoop.conf.Configuration = {
-    val entries = spark.sessionState.conf.getAllConfs.filter { case (k, _) =>
-      !k.startsWith("spark.") || k.startsWith("spark.hadoop.")
-    }
-    val c = confCache.get(spark)
-    if (c != null && c._1 == entries) c._2
-    else {
-      val n = spark.sessionState.newHadoopConf()
-      confCache.put(spark, entries -> n)
-      n
-    }
-  }
+    new graft.WarehouseIO(() => graft.WarehouseIO.confOf(spark), path)
 
   /** Versions ever committed via a `CURRENT.v<N>` marker, ascending.
     * Markers are KEPT past supersession (tiny files, and the audit trail

@@ -14,13 +14,52 @@ import org.apache.spark.sql.functions._
   * parquet scan (partition pruning + row-group min/max stand in for the
   * reference's `_id`-range index scans, SURVEY.md §4), and struct-field
   * projection rides Catalyst's nested-schema pruning (P3). The `orderBy`
-  * is a global range sort, so a read does shuffle: a one-hour raw read
-  * runs three jobs (the range-bound sample, the exchange, the result).
+  * is sized to the input ([[oneTaskIfSmall]]): a read whose planned input
+  * is no larger than Spark's cost of opening one file sorts in the scan's
+  * own task, one job and no shuffle; a larger one runs a parallel scan
+  * under a global range sort (the range-bound sample, the exchange, the
+  * result). A limited read plans a take-ordered with no exchange either
+  * way, so it keeps the parallel scan.
   */
 object GetData {
 
   private def us(t: Timestamp): Long =
     t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
+
+  /** `df` as one partition when its planned input is no larger than
+    * `spark.sql.files.openCostInBytes`, Spark's own estimate of the cost
+    * of opening one file; `df` itself otherwise. Put the result directly
+    * under an operator that needs a distribution (a global sort, an
+    * aggregate, a window): one partition satisfies it, so that operator
+    * runs in the scan's own task, with no exchange and in one job.
+    *
+    * The planned input is the sum of the analyzed plan's leaf sizes, which
+    * costs no job: for a snapshot relation it is the summed length of the
+    * hint-pruned manifest files ([[plans.GraftFileIndex]]). A leaf of
+    * unknown size reports `spark.sql.defaultSizeInBytes`, so the frame
+    * keeps its parallel plan. `fanOut` scales the input for a plan that
+    * emits each input row that many times before the operator (a kNN
+    * candidate row scored once per query probing its cell).
+    */
+  private[graft] def oneTaskIfSmall(df: DataFrame, fanOut: Long = 1): DataFrame =
+    if (plannedInput(df) * fanOut <= df.sparkSession.sessionState.conf.filesOpenCostInBytes)
+      df.coalesce(1)
+    else df
+
+  /** The sum of `df`'s analyzed leaf sizes, in bytes (see [[oneTaskIfSmall]]). */
+  private[graft] def plannedInput(df: DataFrame): BigInt =
+    df.queryExecution.analyzed.collectLeaves().map(_.stats.sizeInBytes).sum
+
+  /** `df` ordered on `tsCol`, then paged. An unlimited read of a small
+    * input sorts in one task ([[oneTaskIfSmall]]); a limited one plans a
+    * take-ordered, which has no exchange to save, so its scan stays
+    * parallel.
+    */
+  private def ordered(df: DataFrame, tsCol: String, reverse: Boolean,
+                      limit: Option[Int], offset: Int): DataFrame = {
+    val input = if (limit.isEmpty) oneTaskIfSmall(df) else df
+    paginate(input.orderBy(if (reverse) col(tsCol).desc else col(tsCol)), limit, offset)
+  }
 
   /** Inclusive/exclusive time-range predicate on `tsCol` (P1). */
   def rangePredicate(tsCol: Column,
@@ -83,9 +122,7 @@ object GetData {
       .where(pushable)
       .where(rangePredicate(col("ts"), start, end, startExclusive, endExclusive))
       .select((Seq("stream_id", "ts") ++ valueCols).map(col): _*)
-    paginate(
-      if (reverse) filtered.orderBy(col("ts").desc) else filtered.orderBy(col("ts")),
-      limit, offset)
+    ordered(filtered, "ts", reverse, limit, offset)
   }
 
   /** ISO-8601 rendering of datapoint timestamps — the facade's wire format
@@ -141,7 +178,18 @@ object GetData {
                   reverse: Boolean = false,
                   valueDownsamplers: Seq[String] = Downsamplers.allValue.toSeq.sorted,
                   timeDownsamplers: Seq[String] = Seq(Downsamplers.TimeFirst, Downsamplers.TimeLast))
-      : DataFrame = {
+      : DataFrame =
+    downsampledPage(partial, streamId, start, end, startExclusive, endExclusive,
+      reverse, valueDownsamplers, timeDownsamplers, None, 0)
+
+  /** [[downsampled]], paged by `limit`/`offset` ([[paginate]]). */
+  private[graft] def downsampledPage(partial: DataFrame, streamId: String,
+                                     start: Option[Timestamp], end: Option[Timestamp],
+                                     startExclusive: Boolean, endExclusive: Boolean,
+                                     reverse: Boolean,
+                                     valueDownsamplers: Seq[String],
+                                     timeDownsamplers: Seq[String],
+                                     limit: Option[Int], offset: Int): DataFrame = {
     validate(valueDownsamplers, Downsamplers.allValue, "value")
     validate(timeDownsamplers, Downsamplers.allTime, "time")
     val view = Downsample.finalizeView(
@@ -155,7 +203,6 @@ object GetData {
     }
     val projected = view.select(
       col("stream_id") +: col("bucket_start") +: (valueCols ++ timeCols): _*)
-    if (reverse) projected.orderBy(col("bucket_start").desc)
-    else projected.orderBy(col("bucket_start"))
+    ordered(projected, "bucket_start", reverse, limit, offset)
   }
 }

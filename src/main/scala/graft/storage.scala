@@ -32,12 +32,31 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * The `FileSystem` instance is private (`newInstance`, not the global
   * cache) so disabling checksum sidecars for the engine's tiny marker
   * files cannot leak into Spark's shared cached filesystem, and it is
-  * memoized per (scheme, authority) so facade churn in tests does not
-  * accumulate handles.
+  * memoized per (scheme, authority, the scheme's `fs.<scheme>.*` entries)
+  * so facade churn in tests does not accumulate handles. `conf` is read
+  * on each use of [[fs]] ([[WarehouseIO.confOf]] follows the session), so
+  * a filesystem setting changed at runtime reaches a live facade's next
+  * operation. The memo keeps at most 32 instances; one it drops is not
+  * closed, as a facade or an operation in flight may still hold it, and
+  * is collected once nothing does.
   */
-private[graft] final class WarehouseIO(conf: Configuration, root: String) {
+private[graft] final class WarehouseIO(conf: () => Configuration, root: String) {
   private val rootPath = new Path(root)
-  private[graft] val fs: FileSystem = WarehouseIO.fsFor(rootPath, conf)
+
+  // the instance for the conf last seen; a rebuilt conf (a setting
+  // changed) resolves its own through the memo
+  @volatile private var bound: (Configuration, FileSystem) = (null, null)
+
+  private[graft] def fs: FileSystem = {
+    val c = conf()
+    val b = bound
+    if (b._1 eq c) b._2
+    else {
+      val f = WarehouseIO.fsFor(rootPath, c)
+      bound = (c, f)
+      f
+    }
+  }
 
   /** Local warehouses keep the `java.nio` advisory OS file lock (T5):
     * kernel-arbitrated, leak-proof across crashed holders. Remote stores
@@ -233,22 +252,66 @@ private[graft] final class WarehouseIO(conf: Configuration, root: String) {
 }
 
 private[graft] object WarehouseIO {
-  // one private instance per (scheme, authority): checksum flags below are
-  // ours alone (the global FileSystem.get cache is shared with Spark)
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, FileSystem]()
+  import org.apache.spark.sql.SparkSession
+
+  /** Instances the memo keeps; the least recently used one past this is
+    * dropped, not closed.
+    */
+  private val MaxInstances = 32
+
+  // one private instance per (scheme, authority, the scheme's `fs.<scheme>.*`
+  // settings): checksum flags below are ours alone (the global
+  // FileSystem.get cache is shared with Spark), and a setting changed at
+  // runtime (new `fs.s3a.*` credentials, say) gets an instance built
+  // from it. Access-ordered, so eviction drops the least recently used.
+  private val cache = new java.util.LinkedHashMap[String, FileSystem](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, FileSystem]): Boolean =
+      size > MaxInstances
+  }
 
   private def fsFor(p: Path, conf: Configuration): FileSystem = {
     val uri = p.toUri
-    val key = s"${uri.getScheme}://${Option(uri.getAuthority).getOrElse("")}"
-    cache.computeIfAbsent(key, _ => {
-      val fs = FileSystem.newInstance(uri, conf)
-      // no .crc sidecars for commit-log markers/manifests (they would
-      // pollute name-based version listings); data files are written by
-      // Spark's own fs instance, unaffected
-      fs.setWriteChecksum(false)
-      fs.setVerifyChecksum(false)
-      fs
-    })
+    val scheme = Option(uri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme)
+    val settings = new java.util.TreeMap[String, String](conf.getPropsWithPrefix(s"fs.$scheme."))
+    val key = s"$scheme://${Option(uri.getAuthority).getOrElse("")} $settings"
+    cache.synchronized {
+      Option(cache.get(key)).getOrElse {
+        val fs = FileSystem.newInstance(uri, conf)
+        // no .crc sidecars for commit-log markers/manifests (they would
+        // pollute name-based version listings); data files are written by
+        // Spark's own fs instance, unaffected
+        fs.setWriteChecksum(false)
+        fs.setVerifyChecksum(false)
+        cache.put(key, fs)
+        fs
+      }
+    }
+  }
+
+  /** Each session's Hadoop conf, with the session entries it was built
+    * from. `newHadoopConf()` copies every runtime conf entry verbatim, so
+    * a Hadoop key set at runtime (`fs.s3a.endpoint`, say) is a plain
+    * entry; the `spark.*` ones other than `spark.hadoop.*` are left out
+    * of the comparison, as they do not configure Hadoop.
+    */
+  private val confCache =
+    java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession, (Map[String, String], Configuration)]())
+
+  /** `spark`'s Hadoop conf, rebuilt only when a Hadoop-relevant entry of
+    * the session changed: `newHadoopConf()` copies the full property map
+    * per call, and metadata operations ask often.
+    */
+  def confOf(spark: SparkSession): Configuration = {
+    val entries = spark.sessionState.conf.getAllConfs.filter { case (k, _) =>
+      !k.startsWith("spark.") || k.startsWith("spark.hadoop.")
+    }
+    val c = confCache.get(spark)
+    if (c != null && c._1 == entries) c._2
+    else {
+      val n = spark.sessionState.newHadoopConf()
+      confCache.put(spark, entries -> n)
+      n
+    }
   }
 }

@@ -118,10 +118,112 @@ class IndexProtocolSpec extends SparkSpec {
       s"graftlocal://$path/v1")
     finally spark.conf.unset(key)
   }
+
+  test("a filesystem setting changed after the first index operation reaches index I/O") {
+    val path = java.nio.file.Files.createTempDirectory("graft-fsconf").toString
+    ext.Ivf.buildIndex(vecs, path, nCells = 2)
+    val uri = s"graftlocal://$path"
+    val (impl, tag) = ("fs.graftlocal.impl", "fs.graftlocal.tag")
+    spark.conf.set(impl, classOf[SchemeLocalFileSystem].getName)
+    try {
+      spark.conf.set(tag, "first")
+      assert(ext.Ivf.indexDir(spark, uri) == s"$uri/v1")
+      spark.conf.set(tag, "second")
+      val io = ext.VersionedIndex.io(spark, uri)
+      assert(io.exists(s"$uri/v1/centroids"))
+      assert(io.fs.getConf.get(tag) == "second")
+    } finally {
+      spark.conf.unset(impl)
+      spark.conf.unset(tag)
+    }
+  }
+
+  test("a filesystem setting changed at runtime reaches a live facade's warehouse I/O") {
+    val path = java.nio.file.Files.createTempDirectory("graft-fsfacade").toString
+    val (impl, tag) = ("fs.graftlocal.impl", "fs.graftlocal.tag")
+    spark.conf.set(impl, classOf[SchemeLocalFileSystem].getName)
+    try {
+      spark.conf.set(tag, "first")
+      val ds = new Datastream(spark, s"graftlocal://$path")
+      ds.ensureStream("s1", Map("site" -> "a"))
+      spark.conf.set(tag, "second")
+      SchemeLocalFileSystem.created.clear()
+      ds.ensureStream("s2", Map("site" -> "b"))
+      // the registry swap's commit marker is written by the facade's own
+      // instance, never by Spark's
+      val markers = SchemeLocalFileSystem.created.toArray.toSeq.collect {
+        case (t: String, p: String) if p.contains("CURRENT.g") => t
+      }
+      assert(markers.nonEmpty)
+      assert(markers.forall(_ == "second"))
+      Seq("s1", "s2").foreach(ds.streamMeta)
+    } finally {
+      spark.conf.unset(impl)
+      spark.conf.unset(tag)
+    }
+  }
+
+  test("warehouse I/O keeps at most 32 filesystem instances and leaves the ones it drops open") {
+    val path = java.nio.file.Files.createTempDirectory("graft-fsbound").toString
+    val uri = s"graftlocal://$path"
+    val (impl, tag) = ("fs.graftlocal.impl", "fs.graftlocal.tag")
+    spark.conf.set(impl, classOf[SchemeLocalFileSystem].getName)
+    def tagged(t: String) = {
+      spark.conf.set(tag, t)
+      ext.VersionedIndex.io(spark, uri).fs.asInstanceOf[SchemeLocalFileSystem]
+    }
+    try {
+      spark.conf.set(tag, "bound-0")
+      val held = ext.VersionedIndex.io(spark, uri)
+      val first = held.fs.asInstanceOf[SchemeLocalFileSystem]
+      val rest = (1 to 32).map(i => tagged(s"bound-$i"))
+      assert(tagged("bound-32") eq rest.last)
+      // dropped from the memo, yet still usable by whoever holds it
+      assert(!first.closed)
+      assert(first.exists(new org.apache.hadoop.fs.Path(path)))
+      spark.conf.set(tag, "bound-0")
+      assert(held.exists(path))
+      assert(held.fs ne first)
+    } finally {
+      spark.conf.unset(impl)
+      spark.conf.unset(tag)
+    }
+  }
 }
 
-/** The local filesystem under its own URI scheme, `graftlocal`. */
+/** The local filesystem under its own URI scheme, `graftlocal`. Its
+  * operations fail once it is closed, as a remote store's do, and it
+  * records each file it creates with its `fs.graftlocal.tag` setting.
+  */
 class SchemeLocalFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  import org.apache.hadoop.fs.permission.FsPermission
+  @volatile var closed = false
+  private def open(): Unit =
+    if (closed) throw new java.io.IOException("Filesystem closed")
+  override def close(): Unit = { closed = true; super.close() }
   override def getUri: java.net.URI = java.net.URI.create("graftlocal:///")
   override def getScheme: String = "graftlocal"
+  override def getFileStatus(p: Path): FileStatus = { open(); super.getFileStatus(p) }
+  override def listStatus(p: Path): Array[FileStatus] = { open(); super.listStatus(p) }
+  private def creating(p: Path): Unit = {
+    open()
+    SchemeLocalFileSystem.created.add((getConf.get("fs.graftlocal.tag", ""), p.toString))
+  }
+  override def create(p: Path, overwrite: Boolean, buf: Int, rep: Short, block: Long,
+                      prog: org.apache.hadoop.util.Progressable) = {
+    creating(p)
+    super.create(p, overwrite, buf, rep, block, prog)
+  }
+  override def create(p: Path, perm: FsPermission, overwrite: Boolean, buf: Int,
+                      rep: Short, block: Long,
+                      prog: org.apache.hadoop.util.Progressable) = {
+    creating(p)
+    super.create(p, perm, overwrite, buf, rep, block, prog)
+  }
+}
+
+object SchemeLocalFileSystem {
+  /** (tag, path) of every file created through any instance. */
+  val created = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
 }

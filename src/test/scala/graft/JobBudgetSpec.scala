@@ -10,8 +10,10 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Spark jobs launched by warm read-path calls. Stream metadata comes from
   * the in-memory registry generation and IVF centroids from the memoized
-  * centroid table, so neither may cost a job once loaded: a regression
-  * fails here instead of surfacing as a slower benchmark.
+  * centroid table, so neither may cost a job once loaded, and a read of
+  * at most one file-open's worth of input runs as one job with no
+  * exchange: a regression fails here instead of surfacing as a slower
+  * benchmark.
   */
 class JobBudgetSpec extends SparkSpec {
 
@@ -99,5 +101,62 @@ class JobBudgetSpec extends SparkSpec {
     val (_, plans) = launched(
       assert(ext.Ivf.queryIndex(dir, queries, k = 3, nProbe = 2).count() == 6))
     assert(centroidReads(plans).isEmpty, centroidReads(plans).mkString("\n----\n"))
+  }
+
+  /** `read`, run warm, launches exactly one job and plans no exchange. */
+  private def oneJob(read: => Unit): Unit = {
+    read
+    val (jobs, plans) = launched(read)
+    assert(jobs.size == 1, jobs.mkString("\n----\n"))
+    assert(plans.nonEmpty)
+    assert(plans.forall(!_.contains("Exchange")), plans.mkString("\n----\n"))
+  }
+
+  private def downsampled(): Datastream = {
+    val ds = warehouse()
+    ds.downsampleStreams(ts("2024-01-02T00:00:00Z"))
+    ds
+  }
+
+  test("a warm small raw getData with no limit runs one job and no exchange") {
+    val ds = warehouse()
+    oneJob(assert(ds.getData("s1", Granularity.Seconds,
+      Some(ts("2024-01-01T00:00:00Z")), Some(ts("2024-01-01T01:00:00Z"))).collect().length == 2))
+  }
+
+  test("a warm small rollup getData runs one job and no exchange") {
+    val ds = downsampled()
+    oneJob(assert(ds.getData("s1", Granularity.Minutes).collect().length == 2))
+  }
+
+  test("a warm small getDataMatrix runs one job and no exchange") {
+    val ds = downsampled()
+    oneJob(assert(ds.getDataMatrix(Map("site" -> "a"), Granularity.Minutes,
+      ts("2024-01-01T00:00:00Z"), ts("2024-01-01T01:00:00Z")).collect().length == 2))
+  }
+
+  test("a warm Ivf.queryIndex of 2 queries runs one job with no exchange or broadcast") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-budget-knn").toString
+    val rnd = new scala.util.Random(11)
+    val corpus = (0 until 64).map(i => (i.toLong, Array.fill(8)(rnd.nextFloat() - 0.5f)))
+      .toDF("vec_id", "embedding")
+    ext.Ivf.buildIndex(corpus, dir, nCells = 4)
+    val queries = corpus.where($"vec_id" < 2)
+    oneJob(assert(ext.Ivf.queryIndex(dir, queries, k = 3, nProbe = 2).collect().length == 6))
+  }
+
+  test("a raw read larger than one file-open keeps its range sort") {
+    val ds = warehouse()
+    def read() = ds.getData("s1", Granularity.Seconds).collect()
+    val key = "spark.sql.files.openCostInBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try {
+      read()
+      val (jobs, plans) = launched(assert(read().length == 2))
+      assert(jobs.size > 1)
+      assert(plans.exists(_.contains("rangepartitioning")), plans.mkString("\n----\n"))
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }
