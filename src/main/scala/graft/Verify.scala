@@ -18,7 +18,7 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter (same contract as Bench/Probe/Explain); the
+    // local-iteration filter (same contract as Bench/Explain); the
     // driver runs without it and dumps everything
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)

@@ -58,7 +58,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   private val rawPath = s"$warehouse/raw"
   private val derivedPath = s"$warehouse/derived"
   // prev-point sidecar for incremental derived maintenance: one row per
-  // (derived, source) pair — registry-sized, swap-written like the registry
+  // (derived, source) pair — registry-sized, a manifest table like `derived`
   private val derivePrevPath = s"$warehouse/derive_prev"
   private val derivePrevSchema = {
     import org.apache.spark.sql.types._
@@ -95,44 +95,6 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       }
     }
     sb.toString
-  }
-
-  /** Overwrite the (small) registry path with a plan that READS that same
-    * path: write to a sibling temp dir, then swap directories. One Spark job
-    * — no cache+count materialization round-trip — and the source files stay
-    * intact until the write commits. Plain-parquet local-fs rename; on an
-    * object store this swap is what a Delta/Iceberg commit does
-    * transactionally.
-    *
-    * Crash safety: the new copy is FULLY written (parquet `_SUCCESS`
-    * committed) before any rename, and the live copy is only moved aside,
-    * never deleted, until the promotion rename succeeds — so at every
-    * instant a complete registry exists on disk under one of `path`,
-    * `path.swap-*` (committed temp) or `path.bak-*`. A JVM death between
-    * the two renames leaves no live dir; `recoverSwap` (run at facade
-    * construction) detects that and promotes the committed temp — the state
-    * the interrupted swap was about to reach — falling back to the `.bak`
-    * copy, then clears leftovers. Single-writer per warehouse assumed (as
-    * with any non-transactional table format).
-    */
-  private def overwriteSwap(df: DataFrame, path: String): Unit = {
-    val tmp = path + ".swap-" + System.nanoTime()
-    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    // move the live copy ASIDE (not away) before promoting the new one:
-    // every rename result is checked, and on failure the original is
-    // restored — a swap must never be able to silently lose the registry
-    val bak = path + ".bak-" + System.nanoTime()
-    val hadOld = io.exists(path)
-    if (hadOld && !io.rename(path, bak))
-      throw new IllegalStateException(s"overwriteSwap: cannot move $path aside")
-    if (!io.rename(tmp, path)) {
-      if (hadOld) io.rename(bak, path)
-      throw new IllegalStateException(s"overwriteSwap: cannot promote $tmp to $path")
-    }
-    if (hadOld) rmTree(bak)
-    // a successful swap owns the path: any sibling leftovers are garbage
-    // from an earlier crashed swap — clear them so they cannot accumulate
-    recoverSwap(path)
   }
 
   /** The live registry generation (max `CURRENT.g<N>` marker), or None on
@@ -193,9 +155,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   }
 
   /** Swap-write the registry as a fresh IMMUTABLE generation — the
-    * metadata analog of the fact tables' snapshot manifests. Where
-    * [[overwriteSwap]] replaces the live directory in place (correct for
-    * the derive-prev sidecar, which nothing time-travels), the registry
+    * metadata analog of the fact tables' snapshot manifests. The registry
     * must stay addressable AS OF any retained commit: each manifest
     * records the generation current at its commit
     * ([[ManifestFile.registry]]), so `getData(asOfVersion=)` /
@@ -277,11 +237,13 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     }
   }
 
-  /** Startup (and post-swap) recovery for `overwriteSwap` leftovers: if the
-    * live dir is missing, promote the newest COMMITTED `.swap-*` temp (it
-    * carries parquet's `_SUCCESS` marker — the registry content the
-    * interrupted swap was promoting), else restore the newest `.bak-*`;
-    * then delete remaining `.swap-*`/`.bak-*` siblings.
+  /** Startup repair of a crashed directory swap left by older engine
+    * versions, which replaced the legacy `streams` registry and the
+    * `derive_prev` sidecar in place (`.swap-*` temp, `.bak-*` copy): if
+    * the live dir is missing, promote the newest COMMITTED `.swap-*` temp
+    * (it carries parquet's `_SUCCESS` marker — the content the interrupted
+    * swap was promoting), else restore the newest `.bak-*`; then delete
+    * remaining `.swap-*`/`.bak-*` siblings. Nothing writes these any more.
     */
   private def recoverSwap(path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -360,12 +322,14 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   }
 
   /** Warehouse tables covered by snapshot manifests, keyed by path
-    * relative to the warehouse root. The registry is NOT here: it has its
-    * own whole-table swap atomicity (`overwriteSwap`), and manifests track
-    * data files, not single-file dimension swaps.
+    * relative to the warehouse root. The registry is NOT here: it commits
+    * by its own immutable generations and `CURRENT.g<N>` markers
+    * ([[swapRegistry]]), which each manifest records by number.
+    * `derive_prev` is the derived refresh's prev-point sidecar: a manifest
+    * table so `restore` brings back the sidecar matching its watermarks.
     */
   private def manifestTables: Seq[String] =
-    Seq("raw", "derived", "raw_deletes") ++
+    Seq("raw", "derived", "raw_deletes", "derive_prev") ++
       Granularity.ladder.map(g => s"rollup/granularity=${g.name}")
 
   private def tablePath(table: String) = s"$warehouse/$table"
@@ -567,7 +531,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
                                   removes: Seq[(String, String)],
                                   legacy: Boolean,
                                   registry: Option[Long],
-                                  rawCols: Seq[(String, String)])
+                                  rawCols: Seq[(String, String)],
+                                  txn: Map[String, Long])
 
   /** Manifest format, one file per committed version:
     *
@@ -596,6 +561,19 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * lines, no parent) to bound the resolution chain — the checkpoint
     * cadence table formats use for exactly this reason. Files without the
     * header are pre-delta legacy manifests: a full raw-only file list.
+    *
+    * Optional header attributes after `tables=`: `registry=g<N>` (the
+    * registry generation live at the commit), `rawcols=` (declared raw
+    * columns, see `ManifestEvolvedWriteVersion`) and
+    * `txn=<sink>:<batchId>,...` — the batch-sink cursors (`ingest`,
+    * `upsert`; Delta's `SetTransaction`). A commit made by a batch sink
+    * records its batch id in the same manifest as its data, so the
+    * manifest write is the sink's one commit point: a replay of a
+    * committed batch is skipped by construction. `txn=` is re-recorded
+    * whole on every commit (carried from the parent), so restore never
+    * rewinds a cursor. Readers ignore header attributes they do not know,
+    * so `txn=` needs no protocol bump; a downgraded binary falls back to
+    * its cursor marker files, which stop advancing here.
     *
     * The optional trailing pair is the file's MIN/MAX of its table's time
     * column (epoch-µs, from the parquet footer the commit just wrote) —
@@ -657,7 +635,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       ManifestFile(v, -1L, 0, full = true, Set("raw"),
         lines.map(f => ("raw", f.trim, Option.empty[FileStats]))
           .filter(_._2.nonEmpty),
-        Seq.empty, legacy = true, registry = None, rawCols = Seq.empty)
+        Seq.empty, legacy = true, registry = None, rawCols = Seq.empty,
+        txn = Map.empty)
     else {
       // reader-protocol guard (see the format scaladoc): an unknown
       // version token means a newer writer whose lines this parser would
@@ -747,7 +726,14 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
           .flatMap(_.split(':') match {
             case Array(n, t) => Some((dec(n), dec(t)))
             case _ => None
-          }))
+          }),
+        // batch-sink cursors: `<sink>:<batchId>,...`, re-recorded whole
+        // by every commit, like `rawcols=`
+        txn = attrs.get("txn").toSeq.flatMap(_.split(',').toSeq)
+          .flatMap(_.split(':') match {
+            case Array(k, id) => id.toLongOption.map(k -> _)
+            case _ => None
+          }).toMap)
     }
   }
 
@@ -1021,9 +1007,11 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     *
     * Callers wrap ONLY the write sequence (validation failures precede the
     * intent and leave no marker). Single-writer per warehouse, as with the
-    * registry swap.
+    * registry swap. A batch sink passes `txn = Some(sink -> batchId)`: the
+    * manifest records it as that sink's cursor (see [[batchCursor]]).
     */
-  private def withCommit[T](op: String, adoptAll: Boolean = false)(body: => T): T = withWriterLock(op) {
+  private def withCommit[T](op: String, adoptAll: Boolean = false,
+                            txn: Option[(String, Long)] = None)(body: => T): T = withWriterLock(op) {
     io.mkdirs(commitLogPath)
     def markerOf(v: Long, suffix: String) = f"$commitLogPath/$v%09d.$suffix"
     def alloc(): Long = 1L + io.childNames(commitLogPath)
@@ -1184,9 +1172,15 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     val writeVer =
       if (rawColsNow.nonEmpty) ManifestEvolvedWriteVersion
       else ManifestWriteVersion
+    // batch-sink cursors: the parent's, plus this commit's own entry
+    val txnNow = prev.map(s => parseManifest(s.version).txn)
+      .getOrElse(Map.empty[String, Long]) ++ txn
+    val txnAttr =
+      if (txnNow.isEmpty) ""
+      else " txn=" + txnNow.toSeq.sorted.map { case (k, id) => s"$k:$id" }.mkString(",")
     val header = s"#graft v$writeVer parent=${prev.map(_.version).getOrElse(-1L)} " +
       s"depth=${if (full) 0 else prevDepth + 1} full=${if (full) "1" else "0"} " +
-      s"tables=${manifestTables.mkString(",")}" + regAttr + colsAttr
+      s"tables=${manifestTables.mkString(",")}" + regAttr + colsAttr + txnAttr
     val body0 = new StringBuilder(header).append('\n')
     manifestTables.foreach { t =>
       val now = snapshot(t)
@@ -1374,7 +1368,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   }
 
   // run recovery once per facade instance, before any registry read
-  recoverSwap(streamsPath)
+  Seq(streamsPath, derivePrevPath).foreach(recoverSwap)
   locally {
     val torn = tornOperations
     if (torn.nonEmpty)
@@ -2170,7 +2164,14 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     */
   def upsertDatapoints(points0: DataFrame,
                        maxPruneStreams: Int =
-                         Datastream.DefaultMaxPruneStreams): Long = {
+                         Datastream.DefaultMaxPruneStreams): Long =
+    upsertRows(points0, maxPruneStreams, txn = None)
+
+  /** [[upsertDatapoints]], committing `txn` (a batch sink's cursor) with
+    * the merge.
+    */
+  private def upsertRows(points0: DataFrame, maxPruneStreams: Int,
+                         txn: Option[(String, Long)]): Long = {
     val withJson = if (points0.columns.contains("value_json")) points0
       else points0.withColumn("value_json", lit(null).cast("string"))
     // declared extra columns: batch-supplied values ride, absences null-fill
@@ -2307,7 +2308,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       try {
         val nReplaced = matchedKeyCounts
           .agg(coalesce(sum("_n"), lit(0L))).first().getLong(0)
-        withCommit("upsert_datapoints") {
+        withCommit("upsert_datapoints", txn = txn) {
           if (nReplaced > 0) {
             // copy-on-write: retire the snapshot files overlapping the
             // matched streams×window, rewrite them minus the matched keys
@@ -2395,9 +2396,10 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * batch containing any violating row is rejected whole with the pinned
     * [[errors.ConstraintViolation]] naming the constraint and a sample
     * row, BEFORE anything is written. SQL-standard tri-state: only FALSE
-    * violates; NULL passes. Stored as monotone versioned files (readers
-    * take the max version — the same no-atomic-overwrite pattern as the
-    * ingest watermark), mutated only under the writer lock.
+    * violates; NULL passes. Stored as monotone versioned files beside the
+    * commit log (readers take the max version, so no store needs an
+    * atomic overwrite), mutated only under the writer lock; a
+    * declaration is not a commit and does not appear in [[history]].
     */
   def checkConstraints: Map[String, String] = {
     val vs = constraintVersions
@@ -2599,7 +2601,14 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     minusDeleted(raw, deleteRangesDF(snap))
   }
 
-  def appendMultiple(points0: DataFrame, checkTimestamp: Boolean = true): Unit = {
+  def appendMultiple(points0: DataFrame, checkTimestamp: Boolean = true): Unit =
+    appendRows(points0, checkTimestamp, txn = None)
+
+  /** [[appendMultiple]], committing `txn` (a batch sink's cursor) with the
+    * rows.
+    */
+  private def appendRows(points0: DataFrame, checkTimestamp: Boolean,
+                         txn: Option[(String, Long)]): Unit = {
     val points1 =
       if (points0.columns.contains("value_json")) points0
       else points0.withColumn("value_json", lit(null).cast("string"))
@@ -2678,7 +2687,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
           rawExtras.map(_._1)).map(col): _*)
       // validation is done — everything from here mutates two tables (raw
       // + registry), so it runs under an intent marker
-      withCommit("append") {
+      withCommit("append", txn = txn) {
         // declared write scope = the touched date partitions (from the one
         // validation job above), so the commit diffs this append's files
         // with an O(batch dates) walk — per-append driver cost stays flat
@@ -2721,79 +2730,53 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
 
   /** Streaming-ingest entry (the `foreachBatch` body of
     * `Streaming.ingestToWarehouse`): append `batch` only if `batchId` is
-    * strictly above the recorded high-watermark, else skip — foreachBatch
-    * replays micro-batches on retry (its writes are at-least-once), and
-    * this is the standard idempotent-sink pattern that restores
-    * exactly-once. Stale rows are dropped rather than rejected
-    * (`checkTimestamp = false`): the documented streaming arm of the T3
-    * policy; compose the stateful monotone pre-filter (as in
-    * `Streaming.ingestMonotone`) upstream for strict cross-batch parity. The remaining at-least-once window is the instant
-    * between the append's commit and the watermark write — a crash there
-    * replays one batch AND leaves the append's commit marker for
-    * `tornOperations` to surface; closing it fully is transactional-table
-    * territory, like every multi-table atomicity note in this file.
+    * strictly above the `ingest` cursor, else skip — foreachBatch replays
+    * micro-batches on retry (its writes are at-least-once), and this is
+    * the standard idempotent-sink pattern that restores exactly-once. The
+    * cursor commits in the SAME manifest as the rows (the `txn=` header
+    * attribute), so a crash either loses both or keeps both: there is no
+    * window in which a replay re-appends a committed batch. An empty batch
+    * commits nothing and so records no cursor; its replay is as empty.
+    * Stale rows are dropped rather than rejected (`checkTimestamp =
+    * false`): the documented streaming arm of the T3 policy; compose the
+    * stateful monotone pre-filter (as in `Streaming.ingestMonotone`)
+    * upstream for strict cross-batch parity.
     */
-  def appendBatch(batch: DataFrame, batchId: Long): Unit = {
-    if (batchId <= ingestHighWatermark) return
-    appendMultiple(batch, checkTimestamp = false)
-    advanceIngestHwm(batchId)
-  }
-
-  /** Advance the idempotent-ingest watermark to `batchId`. The watermark is
-    * MONOTONIC marker files (`ingest_batch_hwm.v<id>`), not an overwritten
-    * file: readers take the max marker, the writer creates a fresh name per
-    * advance and sweeps older ones after — so no store class needs atomic
-    * overwrite-rename (S3 has none), a crash mid-sweep only leaves extra
-    * markers whose max is still correct, and a legacy plain
-    * `ingest_batch_hwm` file keeps counting.
-    */
-  private def advanceIngestHwm(batchId: Long): Unit =
-    advanceBatchHwm("ingest_batch_hwm", batchId)
-
-  private def advanceBatchHwm(base: String, batchId: Long): Unit = {
-    val hwmBase = s"$warehouse/$base"
-    def markerIds = io.childNames(warehouse)
-      .filter(_.startsWith(s"$base.v"))
-      .flatMap(_.stripPrefix(s"$base.v").toLongOption)
-    io.writeString(s"$hwmBase.v$batchId", batchId.toString)
-    markerIds.filter(_ < batchId)
-      .foreach(v => io.deleteFile(s"$hwmBase.v$v"))
-    if (io.exists(hwmBase)) io.deleteFile(hwmBase)
-    ()
-  }
+  def appendBatch(batch: DataFrame, batchId: Long): Unit =
+    if (batchId > ingestHighWatermark)
+      appendRows(batch, checkTimestamp = false, txn = Some("ingest" -> batchId))
 
   /** Idempotent streaming RESTATEMENT sink body (the `foreachBatch` of
     * [[Streaming.upsertToWarehouse]]): merge the micro-batch by key unless
-    * `batchId` is at or below the recorded high-watermark — the same
-    * replayed-micro-batch guard as [[appendBatch]], on a SEPARATE marker
-    * family (`upsert_batch_hwm`) so a pipeline that both ingests and
-    * restates does not share a cursor between the two sinks. (An upsert
+    * `batchId` is at or below the `upsert` cursor — the same
+    * replayed-micro-batch guard as [[appendBatch]], committed with the
+    * merge, on a SEPARATE cursor so a pipeline that both ingests and
+    * restates does not share one between the two sinks. (An upsert
     * replay would also converge by idempotence of the merge itself; the
-    * watermark spares the wasted commit.) Batch keys must be unique per
+    * cursor spares the wasted commit.) Batch keys must be unique per
     * micro-batch, as for [[upsertDatapoints]] — dedupe upstream.
     */
   def upsertBatch(batch: DataFrame, batchId: Long,
                   maxPruneStreams: Int =
-                    Datastream.DefaultMaxPruneStreams): Unit = {
-    if (batchId <= batchHwm("upsert_batch_hwm")) return
-    upsertDatapoints(batch, maxPruneStreams)
-    advanceBatchHwm("upsert_batch_hwm", batchId)
-  }
+                    Datastream.DefaultMaxPruneStreams): Unit =
+    if (batchId > batchCursor("upsert")) {
+      upsertRows(batch, maxPruneStreams, txn = Some("upsert" -> batchId)); ()
+    }
 
-  /** Idempotently apply a set of row-delete ranges under the SAME batch-id
-    * watermark [[appendBatch]] uses — the delete twin of the exactly-once
+  /** Idempotently apply a set of row-delete ranges under the SAME `ingest`
+    * cursor [[appendBatch]] uses — the delete twin of the exactly-once
     * ingest verb, and what lets [[replicateTo]] propagate a source
     * merge-on-read delete instead of degrading the replica to insert-only.
     * Commits one merge-on-read delete file plus the rollup repair for each
-    * distinct range window; a batch id at or below the watermark is a
-    * no-op. No dependency check: the ranges were validated where they were
-    * first issued (the source warehouse), and a replica mirrors, not
-    * re-adjudicates.
+    * distinct range window, with the cursor; a batch id at or below the
+    * cursor is a no-op. No dependency check: the ranges were validated
+    * where they were first issued (the source warehouse), and a replica
+    * mirrors, not re-adjudicates.
     */
   def applyDeleteBatch(ranges: Seq[(String, Long, Long)], batchId: Long): Unit = {
     if (ranges.isEmpty || batchId <= ingestHighWatermark) return
     import spark.implicits._
-    withCommit("delete_datapoints") {
+    withCommit("delete_datapoints", txn = Some("ingest" -> batchId)) {
       scopeWrite("raw_deletes")
       ranges.toDF("stream_id", "lo_us", "hi_us").coalesce(1)
         .write.mode(SaveMode.Append).parquet(tablePath("raw_deletes"))
@@ -2803,26 +2786,36 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
           repairRollups(broadcast(sids.toDF("stream_id")), Some(sids), lo, hi)
       }
     }
-    advanceIngestHwm(batchId)
   }
 
-  /** The idempotent-ingest high-watermark [[appendBatch]] enforces: the
-    * max recorded batch id, −1 when none. [[replicateTo]] reads the
-    * DESTINATION's watermark to know which source commits were already
-    * applied — the cursor lives with the data it guards.
+  /** The idempotent-ingest cursor [[appendBatch]] enforces: the last
+    * batch id committed through the `ingest` sink, −1 when none.
+    * [[replicateTo]] reads the DESTINATION's cursor to know which source
+    * commits were already applied — the cursor lives with the data it
+    * guards.
     */
-  private[graft] def ingestHighWatermark: Long = batchHwm("ingest_batch_hwm")
+  private[graft] def ingestHighWatermark: Long = batchCursor("ingest")
 
-  private def batchHwm(base: String): Long = {
-    val hwmBase = s"$warehouse/$base"
-    val markerIds = io.childNames(warehouse)
-      .filter(_.startsWith(s"$base.v"))
-      .flatMap(_.stripPrefix(s"$base.v").toLongOption)
-    val legacy =
-      if (io.exists(hwmBase)) io.readString(hwmBase).trim.toLongOption
-      else None
-    (markerIds ++ legacy).foldLeft(-1L)(math.max)
-  }
+  /** `sink`'s cursor as the newest committed manifest records it (memoized
+    * per version: one `commitlog/` listing, no Spark job). While that
+    * manifest has no entry for the sink, the warehouse predates manifest
+    * cursors: read the marker files older versions wrote, never written
+    * again (the highest `<sink>_batch_hwm.v<id>`, or a plain
+    * `<sink>_batch_hwm` file).
+    */
+  private def batchCursor(sink: String): Long =
+    committedVersions.lastOption.flatMap(v => parseManifest(v).txn.get(sink))
+      .getOrElse {
+        val base = s"${sink}_batch_hwm"
+        val markers = io.childNames(warehouse)
+          .filter(_.startsWith(s"$base.v"))
+          .flatMap(_.stripPrefix(s"$base.v").toLongOption)
+        val plain =
+          if (io.exists(s"$warehouse/$base"))
+            io.readString(s"$warehouse/$base").trim.toLongOption
+          else None
+        (markers ++ plain).foldLeft(-1L)(math.max)
+      }
 
   /** Every datapoint the engine serves: the appended fact table plus the
     * derived streams' sibling table (maintained by `updateDerivedStreams`).
@@ -3619,7 +3612,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   /** EXACTLY-ONCE incremental replication of the RAW fact table into
     * `dest` — the changefeed's canonical consumer (DR copy, region
     * fan-out, prod→dev seed): every source commit above the DESTINATION's
-    * ingest high-watermark that appended raw files is applied to `dest`
+    * `ingest` cursor that appended raw files is applied to `dest`
     * as one idempotent [[appendBatch]] whose batch id IS the source
     * commit version. The cursor therefore lives in dest with the data it
     * guards — no separate cursor file to lose — and re-running after any
@@ -3634,7 +3627,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * maintenance — so replication cost stays proportional to new raw
     * data. MERGE-ON-READ ROW DELETES PROPAGATE: the replica applies the
     * same delete ranges ([[applyDeleteBatch]]) under the same idempotent
-    * batch-id watermark, so takedowns reach every replica exactly once.
+    * batch-id cursor, so takedowns reach every replica exactly once.
     * Raw-REWRITING commits: `compact` (row-preserving) and
     * `apply_deletes` (physically rewrites deletions already propagated at
     * their merge-on-read commit) are skipped silently; any other
@@ -3712,7 +3705,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
               "will NOT propagate), or re-seed the replica from a restore")
       } else if (delAdds.nonEmpty) {
         // a merge-on-read row delete PROPAGATES: the replica applies the
-        // same delete ranges under the same idempotent batch-id watermark
+        // same delete ranges under the same idempotent batch-id cursor
         // appends use — the delete is exactly-once like everything else.
         // skipChangeCommits still opts into an insert-only follower.
         if (!skipChangeCommits) {
@@ -3770,9 +3763,9 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     val outDir = s"$warehouse/_symlink_manifest/v${snap.version}"
     io.mkdirs(outDir)
     var n = 0L
-    // raw_deletes is engine-internal (and empty past the guard) — not a
-    // table external readers should see
-    snap.covered.toSeq.filter(_ != "raw_deletes").sorted.foreach { t =>
+    // raw_deletes (empty past the guard) and the derive_prev sidecar are
+    // engine-internal — not tables external readers should see
+    snap.covered.toSeq.filterNot(Set("raw_deletes", "derive_prev")).sorted.foreach { t =>
       val files = snap.files.getOrElse(t, Set.empty).toSeq.sorted
       io.writeString(s"$outDir/${t.replace('/', '_')}.txt",
         files.map(f => s"${tablePath(t)}/$f").mkString("\n"))
@@ -3803,7 +3796,10 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * the data: the target manifest's recorded generation is re-published
     * as a fresh generation (generations are immutable — re-pointing would
     * alias two manifests to one mutable slot), rolling tags, watermarks
-    * and derive config back in the same commit.
+    * and derive config back in the same commit, and the derived refresh's
+    * prev-point sidecar (`derive_prev`) travels with those watermarks.
+    * Batch-sink cursors are NOT rewound: they carry forward like every
+    * commit's, so a batch id already applied stays skipped.
     *
     * Fails loudly when: `version` is outside the retained window; a
     * needed historical file was reclaimed by an aggressive
@@ -3816,7 +3812,9 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   def restore(version: Long): Unit = {
     val target = snapshotAt(version)
     withCommit("restore") {
-      manifestTables.foreach { t =>
+      // a target from before `derive_prev` became a manifest table recorded
+      // no sidecar: keep the current one
+      manifestTables.filter(t => t != "derive_prev" || target.covered(t)).foreach { t =>
         val targetFiles =
           if (target.covered(t)) target.files.getOrElse(t, Set.empty)
           else Set.empty[String]
@@ -4628,16 +4626,15 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * decimal bucket sums are exact under any split, and the lag stitch
     * reproduces the unsplit window.
     *
-    * Open cases, both remedied by a full [[updateDerivedStreams]]:
-    *  - the sidecar is not in the snapshot manifest, so a `restore` to a
-    *    version whose watermark is OLDER (but present) still stitches from
-    *    the newer sidecar;
-    *  - crash windows: the data write precedes the sidecar/registry swaps,
-    *    which precede the manifest commit — a crash during the (dominant)
-    *    data write is fully invisible; the remaining swap→commit tail
-    *    (milliseconds) can leave the watermark ahead of invisible data,
-    *    which the intent marker flags — the same registry-ahead-of-data
-    *    tail deleteStreams documents.
+    * The sidecar is a manifest table (`derive_prev`) committed with the
+    * derived rows, so `restore` brings back the sidecar that matches the
+    * restored watermarks. Open case, remedied by a full
+    * [[updateDerivedStreams]]: the data and sidecar writes precede the
+    * registry swap, which precedes the manifest commit — a crash during
+    * the (dominant) writes is fully invisible; the remaining swap→commit
+    * tail (milliseconds) can leave the watermark ahead of invisible data,
+    * which the intent marker flags — the same registry-ahead-of-data tail
+    * deleteStreams documents.
     */
   def updateDerivedStreamsIncremental(until: Timestamp): Unit =
     refreshDerived(Some(until))
@@ -4718,6 +4715,12 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
         col("highest_granularity"), col("_lo"), col("_hi"),
         explode(col("derived_from")).as("stream_id")))
     withCommit(if (full) "update_derived" else "update_derived_incremental") {
+      // the prev-point sidecar as the previous snapshot published it: the
+      // incremental refresh replaces it whole below, the full refresh
+      // clears it (its files stay on disk for older snapshots until vacuum)
+      val prevSidecar =
+        if (full) None else commitRead("derive_prev", derivePrevSchema)
+      retireFiles("derive_prev", Seq(""))
       // bootstrapping streams re-derive their full history: retire their
       // current slices (files stay until vacuum; readers on the previous
       // snapshot keep them until this commit lands). In the full refresh
@@ -4756,9 +4759,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       // would double-count a bucket contribution — and bootstrapping
       // streams get none: they re-derive from their whole history, and a
       // sidecar row can only be stale for them.
-      val prevRows =
-        if (full || !exists(derivePrevPath)) None
-        else Some(spark.read.schema(derivePrevSchema).parquet(derivePrevPath)
+      val prevRows = prevSidecar.map(_
           .join(routes.where(col("derive_op") =!= "sum" &&
             col("_lo") =!= Long.MinValue), Seq("derived_id", "stream_id"))
           .select(col("stream_id"), col("ts"), col("value"),
@@ -4808,8 +4809,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
         emitted.write.mode(SaveMode.Append)
           .partitionBy("stream_id")
           .parquet(derivedPath)
-        if (full) rmTree(derivePrevPath)
-        else {
+        if (!full) {
           // advance the prev-point sidecar: per (derived, source) lag pair,
           // the max-(ts, event_id) row of this window (the unioned prev row
           // itself loses to any newer row); untouched pairs keep their rows
@@ -4819,13 +4819,12 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
               struct(col("ts"), col("event_id"))).as("_p"))
             .select(col("derived_id"), col("stream_id"),
               col("_p.ts").as("ts"), col("_p.value").as("value"))
-          val mergedPrev =
-            if (!exists(derivePrevPath)) newPrev
-            else spark.read.schema(derivePrevSchema).parquet(derivePrevPath)
-              .join(newPrev.select("derived_id", "stream_id"),
-                Seq("derived_id", "stream_id"), "left_anti")
-              .unionByName(newPrev)
-          overwriteSwap(mergedPrev, derivePrevPath)
+          val mergedPrev = prevSidecar.fold(newPrev)(_
+            .join(newPrev.select("derived_id", "stream_id"),
+              Seq("derived_id", "stream_id"), "left_anti")
+            .unionByName(newPrev))
+          scopeWrite("derive_prev")
+          mergedPrev.coalesce(1).write.mode(SaveMode.Append).parquet(derivePrevPath)
         }
         // registry, per worked stream: bounds from the emitted points — a
         // bootstrap SETS them (its slice was replaced), others extend; and

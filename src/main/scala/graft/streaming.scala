@@ -249,8 +249,9 @@ object Streaming {
     * never hears about — degrading the bounds-pruned delete purge to its
     * full-scan fallback and breaking monotonicity bookkeeping; this sink
     * keeps the registry contract on the streaming path. Exactly-once rides
-    * the batch-id high-watermark in `appendBatch` (foreachBatch's own
-    * writes are only at-least-once), not the parquet-sink commit log.
+    * the batch-id cursor `appendBatch` commits in the same snapshot
+    * manifest as the rows (foreachBatch's own writes are only
+    * at-least-once), not the parquet-sink commit log.
     */
   def ingestToWarehouse(points: DataFrame, ds: Datastream, checkpoint: String) =
     points.select(col("stream_id"), col("ts"), col("value"))
@@ -264,7 +265,7 @@ object Streaming {
   /** Streaming RESTATEMENT sink — the upsert twin of [[ingestToWarehouse]]:
     * each micro-batch MERGES by `(stream_id, ts)` through
     * [[Datastream.upsertBatch]] (idempotent under foreachBatch replays via
-    * its own watermark family), so a correction feed — sensors re-reporting
+    * its own batch-id cursor), so a correction feed — sensors re-reporting
     * a window, a backfill restating a slice — lands through the same
     * atomic copy-on-write commit and same-commit rollup repair as the
     * batch verb. Keys must be unique within each micro-batch (the upsert

@@ -159,4 +159,32 @@ class JobBudgetSpec extends SparkSpec {
       assert(plans.exists(_.contains("rangepartitioning")), plans.mkString("\n----\n"))
     } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
+
+  private def batchAt(t: String) =
+    dp(Seq(("s1", t, 1.0), ("s2", t, 2.0))).select("stream_id", "ts", "value")
+
+  test("a warm appendBatch launches exactly the jobs of appendMultiple: the cursor costs none") {
+    val plain = warehouse()
+    val sink = warehouse()
+    plain.appendMultiple(batchAt("2024-01-01T01:00:00Z"))
+    sink.appendBatch(batchAt("2024-01-01T01:00:00Z"), 0L)
+    val (plainJobs, _) = launched(plain.appendMultiple(batchAt("2024-01-01T02:00:00Z")))
+    val (sinkJobs, _) = launched(sink.appendBatch(batchAt("2024-01-01T02:00:00Z"), 1L))
+    assert(plainJobs.nonEmpty)
+    assert(sinkJobs.size == plainJobs.size,
+      sinkJobs.mkString("\n----\n") + "\n====\n" + plainJobs.mkString("\n----\n"))
+  }
+
+  test("a replayed appendBatch or upsertBatch id launches no job and commits nothing") {
+    val ds = warehouse()
+    ds.appendBatch(batchAt("2024-01-01T01:00:00Z"), 0L)
+    ds.upsertBatch(batchAt("2024-01-01T01:00:00Z"), 0L)
+    val v = ds.currentVersion
+    val (jobs, _) = launched {
+      ds.appendBatch(batchAt("2024-01-01T01:00:00Z"), 0L)
+      ds.upsertBatch(batchAt("2024-01-01T01:00:00Z"), 0L)
+    }
+    assert(jobs.isEmpty, jobs.mkString("\n----\n"))
+    assert(ds.currentVersion == v)
+  }
 }
