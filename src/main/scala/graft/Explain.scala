@@ -1,26 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: prints the formatted physical plan of each registered
   * query (or the SPARK_GRAFT_ONLY subset) so pushdown, broadcast, partial
-  * aggregation, and codegen spans can be inspected per round.
+  * aggregation, and codegen spans can be inspected per round. Plans are
+  * captured under the gates' own session ([[Verify.session]]).
   *
   * Usage: sbt "runMain graft.Explain <sfDir>"
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Verify.session()
     spark.sparkContext.setLogLevel("ERROR")
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => Verify.selected(name) }
       .foreach { case (name, fn) =>
         println(s"\n===================== $name =====================")
         try fn(spark, sfDir).explain("formatted")

@@ -3020,8 +3020,8 @@ object Queries {
 
   /** The IVF index MAINTENANCE lifecycle on the gate: build over the even
     * half, incrementally append the odd half (a fresh shard-manifest
-    * version referencing the base shards — O(shard), atomic pointer
-    * publish), compact via refreshIndex (centroids re-learned from the
+    * version referencing the base shards — O(shard), one marker
+    * create), compact via refreshIndex (centroids re-learned from the
     * index's own contents, the shard chain collapsed into one full
     * version), vacuum past retention (reclaims the superseded build and
     * append versions — the full retire/reclaim lifecycle), then query at
@@ -4316,7 +4316,8 @@ object Queries {
   /** STREAM-MAINTAINED search index on the gate: the corpus arrives as a
     * two-micro-batch file stream through `Streaming.ingestToSearchIndex`
     * (first batch builds, second folds in as an O(shard) versioned
-    * append, both exactly-once via the index-side batch watermark), and
+    * append, both exactly-once via the batch id each version's commit
+    * marker records), and
     * the same two queries served from the live index must land on the
     * one-pass scan twin's rows bit-for-bit — df, N and avgdl compose
     * additively across the streamed shards or the hash breaks.

@@ -4,10 +4,14 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+  /** The session the gates run under: `local[SPARK_GRAFT_CPUS]` with as
+    * many shuffle partitions, UTC session time, and the FileSystem-based
+    * streaming checkpoint manager (see `Bench`). `Explain` captures plans
+    * under the same session.
+    */
+  def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -16,13 +20,21 @@ object Verify {
         "org.apache.spark.sql.execution.streaming.checkpointing." +
           "FileSystemBasedCheckpointFileManager")
       .getOrCreate()
+  }
+
+  /** Whether gate `name` is in the comma-separated `SPARK_GRAFT_ONLY`
+    * subset (every gate when it is unset) — a local-iteration filter; the
+    * driver runs without it and dumps everything.
+    */
+  def selected(name: String): Boolean =
+    sys.env.get("SPARK_GRAFT_ONLY")
+      .forall(_.split(",").map(_.trim).filter(_.nonEmpty).contains(name))
+
+  def main(args: Array[String]): Unit = {
+    val Array(sfDir, outDir) = args
+    val spark = session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter (same contract as Bench/Explain); the
-    // driver runs without it and dumps everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def selected(name: String) = only.forall(_(name))
     SparkEntry.queries.filter(q => selected(q._1)).foreach { case (name, fn) =>
       try {
         val result = fn(spark, sfDir)

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * hashes for the exact arm — never the corpus text.
   *
   * VERSIONED layout under `path` (same [[VersionedIndex]] protocol as the
-  * IVF indexes — atomic `CURRENT.v<N>` marker commits, shard-manifest
-  * appends, retention + explicit [[vacuumIndex]]):
+  * IVF indexes — one exclusive `CURRENT.v<N>` marker create per commit,
+  * shard-manifest appends, retention + explicit [[vacuumIndex]]):
   *
   *   v<N>/params/     (n, bands, rows_per_band, probe_hash) — pinned at
   *                    build, copied forward by appends; queries and
@@ -72,21 +72,9 @@ object DedupIndex {
     */
   private def readSide(spark: org.apache.spark.sql.SparkSession,
                        path: String, dir: String, side: String): DataFrame = {
-    val raw = dataRoots(spark, path, dir).map(r => spark.read.parquet(s"$r/$side"))
-      .reduce(_.unionByName(_))
-    tombstonesOf(spark, path, dir) match {
-      case None => raw
-      case Some(t) =>
-        val d = t.select(col("doc_id").as("_dead_id"))
-        raw.join(broadcast(d), raw("doc_id") === col("_dead_id"), "left_anti")
-    }
-  }
-
-  private def tombstonesOf(spark: org.apache.spark.sql.SparkSession,
-                           path: String, dir: String): Option[DataFrame] = {
-    val s = VersionedIndex.io(spark, path)
-    if (s.exists(s"$dir/tombstones")) Some(spark.read.parquet(s"$dir/tombstones"))
-    else None
+    VersionedIndex.minusTombstones(spark, dir,
+      dataRoots(spark, path, dir).map(r => spark.read.parquet(s"$r/$side"))
+        .reduce(_.unionByName(_)), "doc_id")
   }
 
   /** TAKEDOWN for the dedup index, the twin of [[Ivf.removeFromIndex]]:
@@ -107,17 +95,10 @@ object DedupIndex {
     val present = readSide(spark, path, cur, "exact").select("doc_id")
       .join(broadcast(dead), Seq("doc_id"), "left_semi").count()
     if (present == 0L) return 0L
-    val next = VersionedIndex.currentVersion(spark, path).getOrElse(0L) + 1
-    val dir = s"$path/v$next"
-    spark.read.parquet(s"$cur/params").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/params")
-    val merged = tombstonesOf(spark, path, cur) match {
-      case Some(t) => t.select("doc_id").unionByName(dead).distinct()
-      case None => dead
+    VersionedIndex.publish(spark, path, "data", VersionedIndex.Carry) { (_, dir) =>
+      VersionedIndex.copyTable(spark, cur, dir, "params")
+      VersionedIndex.writeTombstones(spark, cur, dir, "doc_id", Some(dead))
     }
-    merged.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$dir/tombstones")
-    VersionedIndex.publishCarry(spark, path, cur, next, "data")
     present
   }
 
@@ -133,46 +114,50 @@ object DedupIndex {
 
   def buildIndex(docs: DataFrame, path: String, n: Int = 3,
                  bands: Int = 16, rowsPerBand: Int = 4,
-                 textCol: String = "text", idCol: String = "doc_id"): Unit = {
+                 textCol: String = "text", idCol: String = "doc_id"): Unit =
+    VersionedIndex.publish(docs.sparkSession, path, "data", VersionedIndex.Full)(
+      (_, dir) => writeBuild(docs, dir, n, bands, rowsPerBand, textCol, idCol))
+
+  /** A complete version of `docs` in `dir`: the banding params, then the
+    * side tables.
+    */
+  private def writeBuild(docs: DataFrame, dir: String, n: Int, bands: Int,
+                         rowsPerBand: Int, textCol: String, idCol: String): Unit = {
     import docs.sparkSession.implicits._
-    val spark = docs.sparkSession
-    val next = VersionedIndex.currentVersion(spark, path).getOrElse(0L) + 1
-    val dir = s"$path/v$next"
     Seq((n, bands, rowsPerBand, probeHash(bands, rowsPerBand)))
       .toDF("n", "bands", "rows_per_band", "probe_hash")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/params")
     writeSides(docs, s"$dir/data", n, bands, rowsPerBand, textCol, idCol)
-    VersionedIndex.commit(spark, path, next)
   }
 
   /** Fold a shard into the index as a fresh VERSION: the same side-table
     * computation written as this version's own data shard, published with
     * the parent's data roots referenced by manifest — O(shard) work, one
-    * atomic pointer move, never an in-place append into live directories
-    * (a crash mid-append used to leave bands/shingles/exact mutually
-    * torn, silently losing recall). The caller appends the SURVIVORS of
-    * `dedupeAgainstIndex` — which (with the default `withinShard = true`)
-    * are duplicate-free both against the index and among themselves, so
-    * the index stays internally duplicate-free. (With `withinShard =
-    * false` the caller takes over that obligation: a shard carrying
-    * internal duplicates would fold them all in.)
+    * exclusive marker create, never an in-place append into live
+    * directories (a crash mid-append used to leave bands/shingles/exact
+    * mutually torn, silently losing recall). The caller appends the
+    * SURVIVORS of `dedupeAgainstIndex` — which (with the default
+    * `withinShard = true`) are duplicate-free both against the index and
+    * among themselves, so the index stays internally duplicate-free.
+    * (With `withinShard = false` the caller takes over that obligation: a
+    * shard carrying internal duplicates would fold them all in.)
     */
   def appendToIndex(docs: DataFrame, path: String,
-                    textCol: String = "text", idCol: String = "doc_id"): Unit = {
+                    textCol: String = "text", idCol: String = "doc_id"): Unit =
+    VersionedIndex.publish(docs.sparkSession, path, "data", VersionedIndex.Append)(
+      writeAppend(docs, _, _, textCol, idCol))
+
+  /** Version `dir`'s own data shard of `docs`, under its parent `cur`'s
+    * banding params; the params and the takedown tombstones are copied
+    * forward (driver-scale), only the big side tables share by reference.
+    */
+  private def writeAppend(docs: DataFrame, cur: String, dir: String,
+                          textCol: String, idCol: String): Unit = {
     val spark = docs.sparkSession
-    val cur = indexDir(spark, path)
-    val (n, bands, rowsPerBand) = readParams(docs, path)
-    val next = VersionedIndex.currentVersion(spark, path).getOrElse(0L) + 1
-    val dir = s"$path/v$next"
-    // per-version metadata copied forward (driver-scale, takedown
-    // tombstones included); only the big side tables share by reference
-    docs.sparkSession.read.parquet(s"$cur/params").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/params")
-    tombstonesOf(docs.sparkSession, path, cur).foreach(t =>
-      t.coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$dir/tombstones"))
+    val (n, bands, rowsPerBand) = paramsAt(spark, cur)
+    VersionedIndex.copyTable(spark, cur, dir, "params")
+    VersionedIndex.writeTombstones(spark, cur, dir, "doc_id")
     writeSides(docs, s"$dir/data", n, bands, rowsPerBand, textCol, idCol)
-    VersionedIndex.publishAppend(spark, path, cur, next, "data")
   }
 
   /** Chain compaction, the twin of [[Ivf.compactIndex]]: merge each side
@@ -186,24 +171,20 @@ object DedupIndex {
     */
   def compactIndex(path: String,
                    spark: org.apache.spark.sql.SparkSession): Boolean = {
-    val cur = indexDir(spark, path)
-    val next = VersionedIndex.currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"compactIndex: no committed version at $path")) + 1
-    val dir = s"$path/v$next"
+    val cur = VersionedIndex.requireLive(spark, path, "compactIndex")
     // fully-tombstoned chain: refuse (no-op, nothing committed) — a
     // zero-row write can emit no part files, leaving unreadable data
     // dirs in the committed version (see Ivf.compactIndex)
     if (readSide(spark, path, cur, "exact").isEmpty) return false
-    spark.read.parquet(s"$cur/params").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/params")
-    // independent merged-side writes into the unpublished version dir —
-    // overlap them; the commit marker below still lands strictly after
-    graft.Concurrency.inParallel[Unit](
-      Seq("exact", "shingles", "bands").map(side => () =>
-        readSide(spark, path, cur, side)
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/data/$side")))
-    VersionedIndex.commit(spark, path, next)
+    VersionedIndex.publish(spark, path, "data", VersionedIndex.Full) { (_, dir) =>
+      VersionedIndex.copyTable(spark, cur, dir, "params")
+      // independent merged-side writes into the unpublished version dir —
+      // overlap them; the commit marker still lands strictly after
+      graft.Concurrency.inParallel[Unit](
+        Seq("exact", "shingles", "bands").map(side => () =>
+          readSide(spark, path, cur, side)
+            .write.mode(SaveMode.Overwrite).parquet(s"$dir/data/$side")))
+    }
     true
   }
 
@@ -228,8 +209,8 @@ object DedupIndex {
     * zero-row build pins the banding params so the uniform
     * dedupe-then-append path applies from batch 0 (guarded by
     * `currentVersion.isEmpty`, so a replay never re-builds). An all-dup
-    * batch appends nothing — naturally idempotent, the root watermark
-    * still advances.
+    * batch appends nothing and records nothing — its replay dedupes to
+    * nothing again.
     */
   def appendBatchDeduped(docs: DataFrame, path: String, batchId: Long,
                          threshold: Double = 0.8,
@@ -239,12 +220,11 @@ object DedupIndex {
     val spark = docs.sparkSession
     if (VersionedIndex.currentVersion(spark, path).isEmpty)
       buildIndex(docs.limit(0), path, n, bands, rowsPerBand, textCol, idCol)
-    VersionedIndex.foldBatch(spark, path, batchId) {
-      val clean = dedupeAgainstIndex(docs, path, threshold, textCol, idCol)
-        .localCheckpoint(true) // consumed twice: emptiness probe + append
-      if (!clean.isEmpty) appendToIndex(clean, path, textCol, idCol)
-    }
-    ()
+    VersionedIndex.foldBatch(spark, path, batchId, "data",
+        // consumed twice: emptiness probe + append
+        dedupeAgainstIndex(docs, path, threshold, textCol, idCol).localCheckpoint(true))(
+      writeBuild(_, _, n, bands, rowsPerBand, textCol, idCol),
+      writeAppend(_, _, _, textCol, idCol))
   }
 
   /** Survivors of `newDocs` after removing every exact (md5) or near
@@ -267,8 +247,9 @@ object DedupIndex {
                          idCol: String = "doc_id",
                          withinShard: Boolean = true,
                          asOfVersion: Option[Long] = None): DataFrame = {
-    val (n, bands, rowsPerBand) = readParams(newDocs, path, asOfVersion)
     val spark = newDocs.sparkSession
+    val dir = indexDir(spark, path, asOfVersion)
+    val (n, bands, rowsPerBand) = paramsAt(spark, dir)
     // referenced by both the candidate and verification branches, so the
     // shard is shingled twice — deliberate: the result is returned LAZY,
     // so a persist here could not be released safely (the round-2 cache
@@ -276,7 +257,6 @@ object DedupIndex {
     // small side), never the indexed corpus
     val shN = Dedup.shingled(newDocs, n, textCol, idCol)
       .where(size(col("sh")) > 0)
-    val dir = indexDir(spark, path, asOfVersion)
     val candidates = Dedup.bandedRows(shN, bands, rowsPerBand)
       .join(readSide(spark, path, dir, "bands")
           .select(col("doc_id").as("idx_id"), col("band"), col("band_hash")),
@@ -341,17 +321,18 @@ object DedupIndex {
     } finally { sh.unpersist(); () }
   }
 
-  private def readParams(any: DataFrame, path: String,
-                         asOfVersion: Option[Long] = None): (Int, Int, Int) = {
-    val spark = any.sparkSession
-    val row = any.sparkSession.read.parquet(
-      s"${indexDir(spark, path, asOfVersion)}/params")
+  /** The banding params of index version `dir`, checked against this
+    * runtime's hashing scheme.
+    */
+  private def paramsAt(spark: org.apache.spark.sql.SparkSession,
+                       dir: String): (Int, Int, Int) = {
+    val row = spark.read.parquet(s"$dir/params")
       .select("n", "bands", "rows_per_band", "probe_hash").head()
     val (n, bands, rowsPerBand) = (row.getInt(0), row.getInt(1), row.getInt(2))
     val expected = probeHash(bands, rowsPerBand)
     if (row.getLong(3) != expected)
       throw new IllegalStateException(
-        s"dedup index at $path was built under a different hashing scheme " +
+        s"dedup index at $dir was built under a different hashing scheme " +
           s"(stored probe ${row.getLong(3)}, this runtime computes $expected) — " +
           "MurmurHash3/Random internals differ from build time; stored band " +
           "hashes would never collide with freshly computed signatures. " +

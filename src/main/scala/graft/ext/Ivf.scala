@@ -119,7 +119,8 @@ object Ivf {
     * assignment on every call — fine for one-shot analytics, wasteful under
     * a query workload). Layout under `path`:
     *
-    *   CURRENT               — one-line pointer `v<N>` to the live version
+    *   CURRENT.v<N>          — commit marker of version N; the live version
+    *                           is the newest
     *   v<N>/centroids/       (cell, centroid) — tiny, read to the driver
     *   v<N>/cells/cell=<c>/  (vec_id, embedding) — the inverted file
     *                         itself, PARTITIONED BY CELL with the vectors
@@ -127,51 +128,47 @@ object Ivf {
     *                         cells' partitions (scan cost ≈ nProbe/nCells
     *                         of the corpus before any row is touched)
     *
-    * Readers resolve CURRENT first ([[indexDir]]); both index tables of a
-    * version become visible in ONE atomic pointer move, so a rebuild or
-    * [[refreshIndex]] crash at any instant leaves queries on a complete
-    * older version — never a half-swapped index (pre-versioned layouts
-    * without a CURRENT file still resolve to `path` itself, so legacy
-    * indexes stay readable and migrate on their next refresh). On an
-    * object store the pointer move is the metadata commit a table format
-    * provides.
+    * Readers resolve the newest marker first ([[indexDir]]); both index
+    * tables of a version become visible in ONE exclusive marker create
+    * ([[VersionedIndex.publish]]), so a rebuild or [[refreshIndex]] crash
+    * at any instant leaves queries on a complete older version — never a
+    * half-swapped index (pre-versioned layouts without a marker still
+    * resolve to `path` itself, so legacy indexes stay readable and migrate
+    * on their next refresh). On an object store the marker create is the
+    * metadata commit a table format provides.
     *
     * Build = the same assignment map `ivfTopK` runs, plus one partitioned
     * write; optional spherical-k-means refinement before persisting.
     */
   def buildIndex(corpus: DataFrame, path: String, nCells: Int = 64,
                  refineIters: Int = 0,
-                 vecCol: String = "embedding", idCol: String = "vec_id"): Unit = {
+                 vecCol: String = "embedding", idCol: String = "vec_id"): Unit =
+    VersionedIndex.publish(corpus.sparkSession, path, "cells", VersionedIndex.Full)(
+      (_, dir) => writeBuild(corpus, dir, nCells, refineIters, vecCol, idCol))
+
+  /** A complete version of `corpus` in `dir`: trained centroids, then the
+    * assignment.
+    */
+  private def writeBuild(corpus: DataFrame, dir: String, nCells: Int, refineIters: Int,
+                         vecCol: String, idCol: String): Unit = {
     val seeds = centroids(corpus, nCells, vecCol, idCol)
     val refined =
       if (refineIters > 0) refineCentroids(corpus, seeds, refineIters, vecCol, idCol)
       else seeds
-    writeVersion(corpus, path, refined, vecCol, idCol)
+    writeCells(corpus, dir, writeCentroids(corpus.sparkSession, dir, refined), vecCol, idCol)
   }
 
-  // ---- versioned-pointer plumbing (shared: [[VersionedIndex]]) -----------
-
-  /** The live version is the max over `CURRENT.v<N>` MARKER files — a
-    * commit CREATES a fresh marker (atomic on every store class: visible
-    * only once closed/PUT) rather than overwriting a single `CURRENT`
-    * file, because overwrite-rename is atomic on POSIX but not on
-    * HDFS+S3A's rename semantics. A crash mid-sweep leaves extra markers
-    * whose max is still the committed version; a legacy single `CURRENT`
-    * file (pre-marker layout) keeps resolving until the next commit
-    * migrates it.
-    */
-  private def currentVersion(spark: org.apache.spark.sql.SparkSession, path: String): Option[Long] =
-    VersionedIndex.currentVersion(spark, path)
+  // ---- versioned layout (shared: [[VersionedIndex]]) ----------------------
 
   /** Directory holding the index tables (`centroids/`, `cells/` or a
-    * `shards` manifest): the LIVE version per the CURRENT pointer — or
-    * `path` itself for an index written by a pre-versioned build — or,
-    * with `asOfVersion`, a PINNED historical version. Superseded versions
-    * stay resolvable until [[vacuumIndex]] reclaims them (retention
-    * mirrors the warehouse snapshot contract); a pinned resolve fails
-    * loudly on a version that was never committed or whose directory
-    * vacuum already reclaimed — never serves the wrong version silently.
-    * (Plumbing shared with the dedup index: [[VersionedIndex]].)
+    * `shards` manifest): the LIVE version (the newest `CURRENT.v<N>`
+    * marker) — or `path` itself for an index written by a pre-versioned
+    * build — or, with `asOfVersion`, a PINNED historical version.
+    * Superseded versions stay resolvable until [[vacuumIndex]] reclaims
+    * them (retention mirrors the warehouse snapshot contract); a pinned
+    * resolve fails loudly on a version that was never committed or whose
+    * directory vacuum already reclaimed — never serves the wrong version
+    * silently.
     */
   def indexDir(spark: org.apache.spark.sql.SparkSession, path: String,
                asOfVersion: Option[Long] = None): String =
@@ -190,7 +187,6 @@ object Ivf {
   private val pqCellSchema = StructType(Seq(StructField("vec_id", LongType),
     StructField("codes", ArrayType(IntegerType)), StructField("norm", DoubleType),
     StructField("cell", IntegerType)))
-  private val tombstoneSchema = StructType(Seq(StructField("vec_id", LongType)))
 
   /** `(cell, centroid, norm)` rows of a version's centroid table. */
   private type Centroids = Array[(Int, Array[Float], Double)]
@@ -245,12 +241,11 @@ object Ivf {
   /** Copy version `cur`'s model tables (centroids, and the PQ codebooks
     * when present) forward into version `dir`.
     */
-  private def copyModel(spark: org.apache.spark.sql.SparkSession, s: graft.WarehouseIO,
+  private def copyModel(spark: org.apache.spark.sql.SparkSession,
                         cur: String, dir: String): Unit = {
+    val s = VersionedIndex.io(spark, cur)
     if (s.exists(s"$cur/centroids")) copyCentroids(spark, cur, dir)
-    if (s.exists(s"$cur/pq"))
-      spark.read.parquet(s"$cur/pq").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/pq")
+    if (s.exists(s"$cur/pq")) VersionedIndex.copyTable(spark, cur, dir, "pq")
   }
 
   /** PUBLIC read surface for a version's inverted file: the union of its
@@ -260,12 +255,8 @@ object Ivf {
     * a literal read would silently see only the newest shard.
     */
   def cells(spark: org.apache.spark.sql.SparkSession, path: String,
-            asOfVersion: Option[Long] = None): DataFrame = {
-    val dir = indexDir(spark, path, asOfVersion)
-    // LOGICAL content: the version's shards minus its tombstones — a
-    // takedown is invisible here the instant its version commits
-    minusTombstones(readCells(spark, path, dir), tombstonesOf(spark, path, dir))
-  }
+            asOfVersion: Option[Long] = None): DataFrame =
+    liveCells(spark, path, indexDir(spark, path, asOfVersion))
 
   private def readCells(spark: org.apache.spark.sql.SparkSession,
                         path: String, dir: String): DataFrame = {
@@ -276,41 +267,15 @@ object Ivf {
       .reduce(_.unionByName(_))
   }
 
+  /** The LOGICAL content of version `dir`: its shards minus its
+    * tombstones — a takedown is invisible here the instant its version
+    * commits.
+    */
+  private def liveCells(spark: org.apache.spark.sql.SparkSession,
+                        path: String, dir: String): DataFrame =
+    VersionedIndex.minusTombstones(spark, dir, readCells(spark, path, dir), "vec_id")
+
   // ---- takedown (right-to-be-forgotten for persisted indexes) -------------
-
-  /** The resolved version's tombstone set (`v<N>/tombstones`, vec_id) —
-    * None when the version carries no takedowns. Each version's table is
-    * the FULL accumulated set (self-contained, so pinned reads need no
-    * chain walk); appends copy it forward, [[refreshIndex]] drains it.
-    */
-  private def tombstonesOf(spark: org.apache.spark.sql.SparkSession,
-                           path: String, dir: String): Option[DataFrame] = {
-    val s = VersionedIndex.io(spark, path)
-    if (s.exists(s"$dir/tombstones"))
-      Some(spark.read.schema(tombstoneSchema).parquet(s"$dir/tombstones"))
-    else None
-  }
-
-  /** Void tombstoned ids from an index read — broadcast anti-join, like
-    * the warehouse's merge-on-read delete filter. No-op plan when the
-    * version carries no tombstones. Tombstone sets are takedown-request
-    * sized by contract (broadcastable); a refresh rebuilds without them.
-    */
-  private def minusTombstones(df: DataFrame, dead: Option[DataFrame]): DataFrame =
-    dead match {
-      case None => df
-      case Some(t) =>
-        val d = t.select(col("vec_id").as("_dead_id"))
-        df.join(broadcast(d), df("vec_id") === col("_dead_id"), "left_anti")
-    }
-
-  /** Copy the parent version's tombstones forward into `dir` (appends keep
-    * takedowns in force over the shards they reference).
-    */
-  private def carryTombstones(spark: org.apache.spark.sql.SparkSession,
-                              path: String, cur: String, dir: String): Unit =
-    tombstonesOf(spark, path, cur).foreach(t =>
-      t.coalesce(1).write.mode("overwrite").parquet(s"$dir/tombstones"))
 
   /** TAKEDOWN for a persisted index (plain IVF or IVF-PQ): void `removeIds`
     * from every subsequent read — queries, [[cells]], refresh input — by
@@ -328,30 +293,21 @@ object Ivf {
   def removeFromIndex(path: String, removeIds: DataFrame,
                       idCol: String = "vec_id"): Long = {
     val spark = removeIds.sparkSession
-    val cur = indexDir(spark, path)
     val dead = removeIds.select(col(idCol).cast("long").as("vec_id")).distinct()
-    val present = minusTombstones(
-        readCells(spark, path, cur).select("vec_id"),
-        tombstonesOf(spark, path, cur))
+    val present = liveCells(spark, path, indexDir(spark, path)).select("vec_id")
       .join(broadcast(dead), Seq("vec_id"), "left_semi").count()
     if (present == 0L) return 0L
-    val next = currentVersion(spark, path).getOrElse(0L) + 1
-    val dir = s"$path/v$next"
-    val s = VersionedIndex.io(spark, path)
-    // self-contained per-version metadata, like the append paths
-    copyModel(spark, s, cur, dir)
-    val merged = tombstonesOf(spark, path, cur) match {
-      case Some(t) => t.select("vec_id").unionByName(dead).distinct()
-      case None => dead
+    VersionedIndex.publish(spark, path, "cells", VersionedIndex.Carry) { (cur, dir) =>
+      // self-contained per-version metadata, like the append paths
+      copyModel(spark, cur, dir)
+      VersionedIndex.writeTombstones(spark, cur, dir, "vec_id", Some(dead))
     }
-    merged.coalesce(1).write.mode("overwrite").parquet(s"$dir/tombstones")
-    VersionedIndex.publishCarry(spark, path, cur, next, "cells")
     present
   }
 
   /** Reclaim index versions superseded past the retention window —
     * the explicit GC verb, mirroring the warehouse `vacuumRaw` contract
-    * ([[commitVersion]] only RETIRES versions logically, so an in-flight
+    * (a publish only RETIRES versions logically, so an in-flight
     * reader resolved on the old version completes its scan). Keeps the
     * newest `retainVersions` committed versions PLUS any older version
     * directory a retained version's shard manifest still references
@@ -365,22 +321,13 @@ object Ivf {
     VersionedIndex.vacuum(spark, path, retainVersions, "cells",
       Seq("cells", "centroids", "pq", "centroids_next", "cells_next"))
 
-
-  /** Write a complete index version (centroids + assignment) into a fresh
-    * `v<N>` directory, then atomically move the CURRENT pointer onto it.
-    * The pointer move is the ONLY commit point — a crash anywhere before
-    * it leaves CURRENT (and readers) on the previous complete version;
-    * superseded versions are retired logically and reclaimed only by
-    * [[vacuumIndex]].
+  /** Assign `vecs` to their nearest of `cents` and write them as version
+    * `dir`'s cell shard, partitioned by cell.
     */
-  private def writeVersion(vecs: DataFrame, path: String,
-                           cents: Array[(Int, Array[Float])],
-                           vecCol: String, idCol: String): Unit = {
+  private def writeCells(vecs: DataFrame, dir: String, cents: Centroids,
+                         vecCol: String, idCol: String): Unit = {
     import vecs.sparkSession.implicits._
-    val spark = vecs.sparkSession
-    val next = currentVersion(spark, path).getOrElse(0L) + 1
-    val dir = s"$path/v$next"
-    val centB = spark.sparkContext.broadcast(writeCentroids(spark, dir, cents))
+    val centB = vecs.sparkSession.sparkContext.broadcast(cents)
     vecs.select(col(idCol).cast("long"), col(vecCol))
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
@@ -388,27 +335,17 @@ object Ivf {
         it.map { case (id, v) => (id, v, nearestCells(v, cs, 1).head) }
       }.toDF("vec_id", "embedding", "cell")
       .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/cells")
-    commitVersion(spark, path, next)
   }
-
-  // the marker CREATE is the commit point. Superseded versions are
-  // RETIRED, not reclaimed: an in-flight reader that resolved the
-  // previous version mid-commit still completes its scan, and pinned
-  // (`asOfVersion`) reads keep working — explicit [[vacuumIndex]] is the
-  // only reclamation path, exactly the retention/vacuum split the
-  // warehouse snapshots carry.
-  private def commitVersion(spark: org.apache.spark.sql.SparkSession, path: String, v: Long): Unit =
-    VersionedIndex.commit(spark, path, v)
 
   /** INCREMENTAL index maintenance: assign a new shard to the EXISTING
     * centroids and publish it as a fresh index VERSION — O(shard) work
     * per ingest (one narrow assignment map + one partitioned shard write;
     * the already-indexed corpus is never re-clustered OR rewritten: the
     * new version's `shards` manifest references the parent's cell shards
-    * by name and adds its own). The commit is the same atomic
-    * CURRENT-pointer move every build/refresh uses — a reader never
-    * observes a half-appended inverted file, and a crash mid-append
-    * leaves queries on the previous complete version (the earlier
+    * by name and adds its own). The commit is the same exclusive marker
+    * create every build/refresh uses — a reader never observes a
+    * half-appended inverted file, and a crash mid-append leaves queries
+    * on the previous complete version (the earlier
     * mode(append)-into-the-live-directory design had exactly that torn
     * window). The flip side of folding into fixed centroids is drift: as
     * appended data shifts the distribution, cells get lopsided and probe
@@ -417,69 +354,41 @@ object Ivf {
     * is for. Same single-writer contract as the dedup index.
     */
   def appendToIndex(newVecs: DataFrame, path: String,
-                    vecCol: String = "embedding", idCol: String = "vec_id"): Unit = {
-    import newVecs.sparkSession.implicits._
+                    vecCol: String = "embedding", idCol: String = "vec_id"): Unit =
+    VersionedIndex.publish(newVecs.sparkSession, path, "cells", VersionedIndex.Append)(
+      writeAppend(newVecs, _, _, vecCol, idCol))
+
+  /** Version `dir`'s own cell shard of `newVecs`, assigned to its parent
+    * `cur`'s centroids.
+    */
+  private def writeAppend(newVecs: DataFrame, cur: String, dir: String,
+                          vecCol: String, idCol: String): Unit = {
     val spark = newVecs.sparkSession
-    val cur = indexDir(spark, path)
-    val next = currentVersion(spark, path).getOrElse(0L) + 1
-    val dir = s"$path/v$next"
     // self-contained per-version metadata: the tiny centroid table (and
     // any takedown tombstones, which stay in force) copied forward
     // (driver-scale); only the big cell shards share by reference
     val cents = copyCentroids(spark, cur, dir)
-    carryTombstones(spark, path, cur, dir)
-    val centB = spark.sparkContext.broadcast(cents)
-    newVecs.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val cs = centB.value
-        it.map { case (id, v) => (id, v, nearestCells(v, cs, 1).head) }
-      }.toDF("vec_id", "embedding", "cell")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/cells")
-    publishAppend(spark, path, cur, next)
+    VersionedIndex.writeTombstones(spark, cur, dir, "vec_id")
+    writeCells(newVecs, dir, cents, vecCol, idCol)
   }
-
-  /** Write version `next`'s `shards` manifest (parent's effective shards
-    * + `v<next>/cells`, path-relative) and move the CURRENT pointer —
-    * the shared O(1) publication step of both append paths. Runs strictly
-    * AFTER the new shard's data is fully on disk; the pointer move is the
-    * only commit point.
-    */
-  private def publishAppend(spark: org.apache.spark.sql.SparkSession, path: String,
-                            parentDir: String, next: Long): Unit =
-    VersionedIndex.publishAppend(spark, path, parentDir, next, "cells")
 
   /** Idempotent streaming maintenance body for the PLAIN IVF index (the
     * `foreachBatch` of [[graft.Streaming.ingestToIvfIndex]]): fold the
     * micro-batch in via the shared exactly-once protocol
-    * ([[VersionedIndex.foldBatch]] — in-version batch record made atomic
-    * with the version commit, vacuum-surviving root watermark), because a
-    * replayed [[appendToIndex]] would DOUBLE the appended vectors and
-    * every served top-k silently carries duplicates. The first batch on
-    * an empty index BUILDS (trains `nCells` centroids on that batch);
-    * later batches fold into the existing centroids as O(shard) versioned
-    * appends — drift is [[refreshIndex]]'s job, exactly as in the batch
-    * lifecycle.
+    * ([[VersionedIndex.foldBatch]] — the batch id commits in the new
+    * version's marker), because a replayed [[appendToIndex]] would DOUBLE
+    * the appended vectors and every served top-k silently carries
+    * duplicates. The first batch on an empty index BUILDS (trains
+    * `nCells` centroids on that batch); later batches fold into the
+    * existing centroids as O(shard) versioned appends — drift is
+    * [[refreshIndex]]'s job, exactly as in the batch lifecycle.
     */
   def appendBatchToIndex(newVecs: DataFrame, path: String, batchId: Long,
                          nCells: Int = 64,
                          vecCol: String = "embedding",
-                         idCol: String = "vec_id"): Unit = {
-    val spark = newVecs.sparkSession
-    VersionedIndex.foldBatch(spark, path, batchId) {
-      // EMPTY micro-batch: skip the fold body but still advance the
-      // watermark (DedupIndex's all-dup shape). An empty FIRST batch would
-      // otherwise commit a 0-centroid build whose every later append dies
-      // on `nearestCells(...).head` — and since the same batch replays
-      // forever, the stream would be permanently wedged.
-      if (!newVecs.isEmpty) {
-        if (currentVersion(spark, path).isEmpty)
-          buildIndex(newVecs, path, nCells, 0, vecCol, idCol)
-        else appendToIndex(newVecs, path, vecCol, idCol)
-      }
-    }
-    ()
-  }
+                         idCol: String = "vec_id"): Unit =
+    VersionedIndex.foldBatch(newVecs.sparkSession, path, batchId, "cells", newVecs)(
+      writeBuild(_, _, nCells, 0, vecCol, idCol), writeAppend(_, _, _, vecCol, idCol))
 
   /** [[appendBatchToIndex]]'s IVF-PQ twin (the `foreachBatch` of
     * [[graft.Streaming.ingestToPqIndex]]): first batch trains centroids
@@ -489,19 +398,10 @@ object Ivf {
   def appendBatchToPqIndex(newVecs: DataFrame, path: String, batchId: Long,
                            nCells: Int = 64, m: Int = 16, codes: Int = 32,
                            vecCol: String = "embedding",
-                           idCol: String = "vec_id"): Unit = {
-    val spark = newVecs.sparkSession
-    VersionedIndex.foldBatch(spark, path, batchId) {
-      // empty-batch skip, as in [[appendBatchToIndex]] (an empty first
-      // batch would train a degenerate model and wedge the stream)
-      if (!newVecs.isEmpty) {
-        if (currentVersion(spark, path).isEmpty)
-          buildPqIndex(newVecs, path, nCells, m, codes, 0, 3, vecCol, idCol)
-        else appendToPqIndex(newVecs, path, vecCol, idCol)
-      }
-    }
-    ()
-  }
+                           idCol: String = "vec_id"): Unit =
+    VersionedIndex.foldBatch(newVecs.sparkSession, path, batchId, "cells", newVecs)(
+      writePqBuild(_, _, nCells, m, codes, 0, 3, vecCol, idCol),
+      writePqAppend(_, _, _, vecCol, idCol))
 
   /** INDEX-CHAIN COMPACTION — collapse an appended chain's live shards
     * into ONE complete shard per table, published as a fresh version (the
@@ -518,7 +418,7 @@ object Ivf {
     * only live vectors and the new version no tombstone table (the
     * physical drain, same as refresh). The old chain stays intact for
     * pinned reads until [[vacuumIndex]] reclaims it; the commit is the
-    * same atomic marker create as every other publish.
+    * same exclusive marker create as every other publish.
     *
     * FULLY-TOMBSTONED REFUSAL (returns false, nothing committed — the
     * codebase's no-op convention): a `partitionBy` over zero rows emits
@@ -529,19 +429,15 @@ object Ivf {
     */
   def compactIndex(path: String,
                    spark: org.apache.spark.sql.SparkSession): Boolean = {
-    val cur = indexDir(spark, path)
-    val s = VersionedIndex.io(spark, path)
-    val next = currentVersion(spark, path).getOrElse(throw new IllegalStateException(
-      s"compactIndex: no committed version at $path")) + 1
-    val dir = s"$path/v$next"
+    val cur = VersionedIndex.requireLive(spark, path, "compactIndex")
     // the chain's LOGICAL content (tombstones folded), one partitioned
     // table — cell partitioning preserved, so probe pruning is unchanged
-    val live = minusTombstones(readCells(spark, path, cur),
-      tombstonesOf(spark, path, cur))
+    val live = liveCells(spark, path, cur)
     if (live.isEmpty) return false
-    copyModel(spark, s, cur, dir)
-    live.write.mode("overwrite").partitionBy("cell").parquet(s"$dir/cells")
-    commitVersion(spark, path, next)
+    VersionedIndex.publish(spark, path, "cells", VersionedIndex.Full) { (_, dir) =>
+      copyModel(spark, cur, dir)
+      live.write.mode("overwrite").partitionBy("cell").parquet(s"$dir/cells")
+    }
     true
   }
 
@@ -549,10 +445,10 @@ object Ivf {
     * re-learns centroids from the index's own contents (spherical k-means
     * seeded by the stored centroids — no access to the original corpus
     * needed) and writes a complete fresh version (the build never reads
-    * files it is replacing). The COMMIT is a single atomic move of the
-    * CURRENT pointer: a crash at any earlier instant leaves readers on the
-    * previous complete version — centroids and assignments always move
-    * together, no half-swapped window (crash-injected in tests via
+    * files it is replacing). The COMMIT is one exclusive marker create: a
+    * crash at any earlier instant leaves readers on the previous complete
+    * version — centroids and assignments always move together, no
+    * half-swapped window (crash-injected in tests via
     * [[refreshIndexImpl]]).
     */
   def refreshIndex(path: String, spark: org.apache.spark.sql.SparkSession,
@@ -561,35 +457,25 @@ object Ivf {
 
   /** [[refreshIndex]] with a crash-injection seam: `crashBeforeCommit`
     * returns after the new version's tables are fully written but BEFORE
-    * the CURRENT pointer moves — the worst-case crash instant, which must
+    * its marker is created — the worst-case crash instant, which must
     * leave queries on the old version.
     */
   private[graft] def refreshIndexImpl(path: String,
                                       spark: org.apache.spark.sql.SparkSession,
                                       refineIters: Int,
                                       crashBeforeCommit: Boolean): Unit = {
-    import spark.implicits._
     val cur = indexDir(spark, path)
     // read through the shard manifest: an appended chain's version holds
     // its cells as parent-shard references, not one literal directory.
     // LOGICAL content only — a refresh is the physical drain of any
     // accumulated takedown tombstones (the rebuilt version has none)
-    val all = minusTombstones(readCells(spark, path, cur),
-        tombstonesOf(spark, path, cur))
-      .select("vec_id", "embedding")
+    val all = liveCells(spark, path, cur).select("vec_id", "embedding")
     val init = centroidsOf(spark, cur).map { case (c, v, _) => (c, v) }.sortBy(_._1)
     val refined = refineCentroids(all, init, refineIters)
-    val next = currentVersion(spark, path).getOrElse(0L) + 1
-    val dir = s"$path/v$next"
-    val centB = spark.sparkContext.broadcast(writeCentroids(spark, dir, refined))
-    all.as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val cs = centB.value
-        it.map { case (id, v) => (id, v, nearestCells(v, cs, 1).head) }
-      }.toDF("vec_id", "embedding", "cell")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/cells")
-    if (crashBeforeCommit) return
-    commitVersion(spark, path, next)
+    VersionedIndex.publish(spark, path, "cells", VersionedIndex.Full,
+        crashBeforeCommit = crashBeforeCommit) { (_, dir) =>
+      writeCells(all, dir, writeCentroids(spark, dir, refined), "embedding", "vec_id")
+    }
   }
 
   /** [[queryIndex]] probes a query set on the driver up to this many rows
@@ -657,8 +543,8 @@ object Ivf {
     // isin literal list prunes the cells/ partitions at scan planning
     // (per shard: each shard dir of an appended chain prunes on its own)
     def probedScan(cells: Seq[Int]): DataFrame =
-      minusTombstones(readCells(spark, path, dir).where(col("cell").isin(cells: _*)),
-        tombstonesOf(spark, path, dir))
+      VersionedIndex.minusTombstones(spark, dir,
+        readCells(spark, path, dir).where(col("cell").isin(cells: _*)), "vec_id")
     def allowed(cand: DataFrame): DataFrame = allowedIds match {
       case None => cand
       case Some(ids) => cand.join(
@@ -758,9 +644,9 @@ object Ivf {
     * PRUNING (probe nProbe of nCells partitions), PQ codes for in-cell
     * SCORING (m small ints + the exact norm per vector — the inverted
     * file holds no float vectors at all), optional exact rerank on top.
-    * Layout under `path` (same versioned CURRENT-pointer commit as
-    * [[buildIndex]] — one atomic pointer move publishes centroids, pq
-    * model and cells together):
+    * Layout under `path` (same versioned marker commit as [[buildIndex]]
+    * — one exclusive marker create publishes centroids, pq model and
+    * cells together):
     *
     *   v<N>/centroids/       (cell, centroid) — tiny, read to the driver
     *   v<N>/pq/              (sub, code, centroid) — the codebooks
@@ -774,23 +660,40 @@ object Ivf {
   def buildPqIndex(corpus: DataFrame, path: String, nCells: Int = 64,
                    m: Int = 16, codes: Int = 32,
                    refineIters: Int = 0, pqIters: Int = 3,
-                   vecCol: String = "embedding", idCol: String = "vec_id"): Unit = {
+                   vecCol: String = "embedding", idCol: String = "vec_id"): Unit =
+    VersionedIndex.publish(corpus.sparkSession, path, "cells", VersionedIndex.Full)(
+      (_, dir) => writePqBuild(corpus, dir, nCells, m, codes, refineIters, pqIters,
+        vecCol, idCol))
+
+  /** A complete IVF-PQ version of `corpus` in `dir`: trained centroids
+    * and codebooks, then the encoded assignment.
+    */
+  private def writePqBuild(corpus: DataFrame, dir: String, nCells: Int,
+                           m: Int, codes: Int, refineIters: Int, pqIters: Int,
+                           vecCol: String, idCol: String): Unit = {
     import corpus.sparkSession.implicits._
     val seeds = centroids(corpus, nCells, vecCol, idCol)
     val cents =
       if (refineIters > 0) refineCentroids(corpus, seeds, refineIters, vecCol, idCol)
       else seeds
     val model = learnPq(corpus, m, codes, pqIters, vecCol, idCol)
-    val spark = corpus.sparkSession
-    val next = currentVersion(spark, path).getOrElse(0L) + 1
-    val dir = s"$path/v$next"
-    val centB = spark.sparkContext.broadcast(writeCentroids(spark, dir, cents))
+    val written = writeCentroids(corpus.sparkSession, dir, cents)
     model.codebooks.zipWithIndex.flatMap { case (book, s) =>
       book.zipWithIndex.map { case (cb, c) => (s, c, cb.toSeq) }
     }.toSeq.toDF("sub", "code", "centroid").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/pq")
-    val pqB = corpus.sparkSession.sparkContext.broadcast(model)
-    corpus.select(col(idCol).cast("long"), col(vecCol))
+    writePqCells(corpus, dir, written, model, vecCol, idCol)
+  }
+
+  /** Encode `vecs` with `model`, assign them to their nearest of `cents`
+    * and write them as version `dir`'s codes-only cell shard.
+    */
+  private def writePqCells(vecs: DataFrame, dir: String, cents: Centroids,
+                           model: PqModel, vecCol: String, idCol: String): Unit = {
+    import vecs.sparkSession.implicits._
+    val centB = vecs.sparkSession.sparkContext.broadcast(cents)
+    val pqB = vecs.sparkSession.sparkContext.broadcast(model)
+    vecs.select(col(idCol).cast("long"), col(vecCol))
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
         val cs = centB.value
@@ -801,7 +704,6 @@ object Ivf {
         }
       }.toDF("vec_id", "codes", "norm", "cell")
       .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/cells")
-    commitVersion(spark, path, next)
   }
 
   /** INCREMENTAL IVF-PQ maintenance, the twin of [[appendToIndex]]: a new
@@ -810,41 +712,31 @@ object Ivf {
     * shard write, published as a fresh version whose `shards` manifest
     * references the parent's code shards), never a re-cluster or codebook
     * re-train, and never an in-place write into a live directory (the
-    * CURRENT-pointer move is the only commit point — no torn-shard
+    * exclusive marker create is the only commit point — no torn-shard
     * window). Same drift trade-off as the plain index: appended data the
     * codebooks never saw quantizes worse, which is what a periodic
     * [[buildPqIndex]] rebuild is for.
     */
   def appendToPqIndex(newVecs: DataFrame, path: String,
                       vecCol: String = "embedding",
-                      idCol: String = "vec_id"): Unit = {
-    import newVecs.sparkSession.implicits._
+                      idCol: String = "vec_id"): Unit =
+    VersionedIndex.publish(newVecs.sparkSession, path, "cells", VersionedIndex.Append)(
+      writePqAppend(newVecs, _, _, vecCol, idCol))
+
+  /** Version `dir`'s own codes shard of `newVecs`, encoded with its parent
+    * `cur`'s model.
+    */
+  private def writePqAppend(newVecs: DataFrame, cur: String, dir: String,
+                            vecCol: String, idCol: String): Unit = {
     val spark = newVecs.sparkSession
-    val cur = indexDir(spark, path)
     val model = loadPqModel(spark, cur)
-    val next = currentVersion(spark, path).getOrElse(0L) + 1
-    val dir = s"$path/v$next"
     // per-version metadata copied forward (all driver-scale tables,
     // takedown tombstones included); the codes shards share by reference
     // like the plain index's vectors
     val cents = copyCentroids(spark, cur, dir)
-    spark.read.parquet(s"$cur/pq").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/pq")
-    carryTombstones(spark, path, cur, dir)
-    val centB = spark.sparkContext.broadcast(cents)
-    val pqB = spark.sparkContext.broadcast(model)
-    newVecs.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val cs = centB.value
-        val mo = pqB.value
-        it.map { case (id, v) =>
-          (id, encodeCodes(v, mo).toSeq, math.sqrt(dotLoop(v, v)),
-            nearestCells(v, cs, 1).head)
-        }
-      }.toDF("vec_id", "codes", "norm", "cell")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/cells")
-    publishAppend(spark, path, cur, next)
+    VersionedIndex.copyTable(spark, cur, dir, "pq")
+    VersionedIndex.writeTombstones(spark, cur, dir, "vec_id")
+    writePqCells(newVecs, dir, cents, model, vecCol, idCol)
   }
 
   /** Query a persisted IVF-PQ index: per query, probe the `nProbe`
@@ -897,10 +789,10 @@ object Ivf {
     }
     val probed = perQuery.flatMap(_._4).toSeq.distinct
     val qB = spark.sparkContext.broadcast(perQuery)
-    val cand0 = minusTombstones(
-        readCells(spark, path, dir)
-          .where(col("cell").isInCollection(probed)), // partition-pruned scan
-        tombstonesOf(spark, path, dir))
+    val cand0 = VersionedIndex.minusTombstones(spark, dir,
+      readCells(spark, path, dir)
+        .where(col("cell").isInCollection(probed)), // partition-pruned scan
+      "vec_id")
     val cand = allowedIds match {
       case None => cand0
       case Some(ids) => cand0.join(

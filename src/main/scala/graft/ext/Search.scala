@@ -247,8 +247,8 @@ object Search {
   // ---------------------------------------------------------------------
 
   /** VERSIONED layout under `path` (the shared [[VersionedIndex]]
-    * protocol — atomic `CURRENT.v<N>` marker commits, shard-manifest
-    * appends, retention + explicit [[vacuumIndex]]):
+    * protocol — one exclusive `CURRENT.v<N>` marker create per commit,
+    * shard-manifest appends, retention + explicit [[vacuumIndex]]):
     *
     *   v<N>/data/postings/  (term, doc_id, tf) — range-partitioned and
     *                        sorted BY TERM, so a query's `term IN (…)`
@@ -269,35 +269,30 @@ object Search {
     * skipping them here changes nothing bit-wise.
     */
   def buildIndex(docs: DataFrame, path: String,
-                 textCol: String = "text", idCol: String = "doc_id"): Unit = {
-    val spark = docs.sparkSession
-    val next = VersionedIndex.currentVersion(spark, path).getOrElse(0L) + 1
-    writeShard(docs, s"$path/v$next/data", textCol, idCol)
-    VersionedIndex.commit(spark, path, next)
-  }
+                 textCol: String = "text", idCol: String = "doc_id"): Unit =
+    VersionedIndex.publish(docs.sparkSession, path, "data", VersionedIndex.Full)(
+      (_, dir) => writeShard(docs, s"$dir/data", textCol, idCol))
 
   /** Fold a NEW shard in as a fresh version referencing the parent's data
-    * by manifest — O(shard) work, one atomic pointer move. The caller
+    * by manifest — O(shard) work, one exclusive marker create. The caller
     * guarantees shard doc ids are new (dedup upstream); corpus stats and
     * per-term df compose additively across shards by construction.
     */
   def appendToIndex(docs: DataFrame, path: String,
-                    textCol: String = "text", idCol: String = "doc_id"): Unit = {
-    import org.apache.spark.sql.SaveMode
+                    textCol: String = "text", idCol: String = "doc_id"): Unit =
+    VersionedIndex.publish(docs.sparkSession, path, "data", VersionedIndex.Append)(
+      writeAppend(docs, _, _, textCol, idCol))
+
+  /** Version `dir`'s own data shard of `docs`, with its parent `cur`'s
+    * takedown metadata copied forward (driver-scale); only the big side
+    * tables share by reference through the shard manifest.
+    */
+  private def writeAppend(docs: DataFrame, cur: String, dir: String,
+                          textCol: String, idCol: String): Unit = {
     val spark = docs.sparkSession
-    val cur = VersionedIndex.resolveDir(spark, path, None)
-    val next = VersionedIndex.currentVersion(spark, path).getOrElse(0L) + 1
-    // per-version takedown metadata is copied forward (driver-scale); only
-    // the big side tables share by reference through the shard manifest
-    tombstonesOf(spark, path, cur).foreach(_.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/v$next/tombstones"))
-    statsAdjustOf(spark, path, cur).foreach { case (n, dl) =>
-      import spark.implicits._
-      Seq((n, dl)).toDF("dead_docs", "dead_dl").coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$path/v$next/stats_adjust")
-    }
-    writeShard(docs, s"$path/v$next/data", textCol, idCol)
-    VersionedIndex.publishAppend(spark, path, cur, next, "data")
+    VersionedIndex.writeTombstones(spark, cur, dir, "doc_id")
+    statsAdjustOf(spark, cur).foreach { case (n, dl) => writeStatsAdjust(spark, dir, n, dl) }
+    writeShard(docs, s"$dir/data", textCol, idCol)
   }
 
   /** Live (or pinned) version directory — shared resolution surface. */
@@ -308,28 +303,20 @@ object Search {
   /** Idempotent streaming maintenance body (the `foreachBatch` of
     * [[graft.Streaming.ingestToSearchIndex]]): fold the micro-batch into
     * the index via the shared exactly-once protocol
-    * ([[VersionedIndex.foldBatch]] — in-version batch record made atomic
-    * with the commit, vacuum-surviving root watermark), because a
-    * replayed [[appendToIndex]] would DOUBLE the shard's postings (df and
-    * scores silently wrong — unlike the warehouse upsert, an index append
-    * is not naturally idempotent). First batch on an empty index builds.
+    * ([[VersionedIndex.foldBatch]] — the batch id commits in the new
+    * version's marker), because a replayed [[appendToIndex]] would DOUBLE
+    * the shard's postings (df and scores silently wrong — unlike the
+    * warehouse upsert, an index append is not naturally idempotent).
+    * First batch on an empty index builds; an empty batch commits nothing
+    * (empty shards would compose, but the chain stays free of zero-row
+    * shard versions).
     */
   def appendBatchToIndex(docs: DataFrame, path: String, batchId: Long,
                          textCol: String = "text",
-                         idCol: String = "doc_id"): Unit = {
-    val spark = docs.sparkSession
-    VersionedIndex.foldBatch(spark, path, batchId) {
-      // empty-batch skip (watermark still advances) — harmless here
-      // (empty shards compose), but it keeps the chain free of zero-row
-      // shard versions, mirroring the vector indexes' guard
-      if (!docs.isEmpty) {
-        if (VersionedIndex.currentVersion(spark, path).isEmpty)
-          buildIndex(docs, path, textCol, idCol)
-        else appendToIndex(docs, path, textCol, idCol)
-      }
-    }
-    ()
-  }
+                         idCol: String = "doc_id"): Unit =
+    VersionedIndex.foldBatch(docs.sparkSession, path, batchId, "data", docs)(
+      (b, dir) => writeShard(b, s"$dir/data", textCol, idCol),
+      writeAppend(_, _, _, textCol, idCol))
 
   /** TAKEDOWN for the search index — the twin of `Ivf.removeFromIndex` /
     * `DedupIndex.removeFromIndex`: void `removeIds`' postings and doc
@@ -351,48 +338,25 @@ object Search {
     */
   def removeFromIndex(path: String, removeIds: DataFrame,
                       idCol: String = "doc_id"): Long = {
-    import org.apache.spark.sql.SaveMode
     val spark = removeIds.sparkSession
     val cur = VersionedIndex.resolveDir(spark, path, None)
     val dead = removeIds.select(col(idCol).cast("long").as("doc_id")).distinct()
     val roots = VersionedIndex.shardsOf(spark, path, cur, "data")
     def side(name: String): DataFrame =
       roots.map(r => spark.read.parquet(s"$r/$name")).reduce(_.unionByName(_))
-    val prior = tombstonesOf(spark, path, cur)
-    val lens = prior.foldLeft(side("doclens"))((df, t) =>
-      df.join(t.select(col("doc_id").as("_dead")),
-        df("doc_id") === col("_dead"), "left_anti"))
+    val lens = VersionedIndex.minusTombstones(spark, cur, side("doclens"), "doc_id")
     // the dead docs' own (count, total length): O(removed) rows
     val gone = lens.join(dead, Seq("doc_id"), "left_semi")
       .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("dl"))
       .first()
     val present = gone.getLong(0)
     if (present == 0L) return 0L
-    val next = VersionedIndex.currentVersion(spark, path).getOrElse(0L) + 1
-    val dir = s"$path/v$next"
-    val mergedDead = prior match {
-      case Some(t) => t.select("doc_id").unionByName(dead).distinct()
-      case None => dead
+    VersionedIndex.publish(spark, path, "data", VersionedIndex.Carry) { (_, dir) =>
+      VersionedIndex.writeTombstones(spark, cur, dir, "doc_id", Some(dead))
+      val (priorN, priorDl) = statsAdjustOf(spark, cur).getOrElse((0L, 0L))
+      writeStatsAdjust(spark, dir, priorN + present, priorDl + gone.getLong(1))
     }
-    mergedDead.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$dir/tombstones")
-    val (priorN, priorDl) = statsAdjustOf(spark, path, cur)
-      .getOrElse((0L, 0L))
-    import spark.implicits._
-    Seq((priorN + present, priorDl + gone.getLong(1)))
-      .toDF("dead_docs", "dead_dl")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$dir/stats_adjust")
-    VersionedIndex.publishCarry(spark, path, cur, next, "data")
     present
-  }
-
-  private def tombstonesOf(spark: org.apache.spark.sql.SparkSession,
-                           path: String, dir: String): Option[DataFrame] = {
-    val s = VersionedIndex.io(spark, path)
-    if (s.exists(s"$dir/tombstones"))
-      Some(spark.read.parquet(s"$dir/tombstones"))
-    else None
   }
 
   /** Chain compaction, the twin of [[Ivf.compactIndex]]: merge the live
@@ -407,42 +371,45 @@ object Search {
   def compactIndex(path: String,
                    spark: org.apache.spark.sql.SparkSession): Boolean = {
     import org.apache.spark.sql.SaveMode
-    val cur = VersionedIndex.resolveDir(spark, path, None)
-    val next = VersionedIndex.currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"compactIndex: no committed version at $path")) + 1
-    val dir = s"$path/v$next"
+    val cur = VersionedIndex.requireLive(spark, path, "compactIndex")
     val roots = VersionedIndex.shardsOf(spark, path, cur, "data")
     def side(name: String): DataFrame =
       roots.map(r => spark.read.parquet(s"$r/$name")).reduce(_.unionByName(_))
-    val tomb = tombstonesOf(spark, path, cur)
-    def live(df: DataFrame): DataFrame = tomb.fold(df)(t =>
-      df.join(t.select(col("doc_id").as("_dead")),
-        df("doc_id") === col("_dead"), "left_anti"))
+    def live(df: DataFrame): DataFrame =
+      VersionedIndex.minusTombstones(spark, cur, df, "doc_id")
     val lens = live(side("doclens"))
     // fully-tombstoned chain: refuse (no-op, nothing committed) — a
     // zero-row write can emit no part files, leaving unreadable data
     // dirs in the committed version (see Ivf.compactIndex)
     if (lens.isEmpty) return false
-    lens.write.mode(SaveMode.Overwrite).parquet(s"$dir/data/doclens")
-    lens.agg(count(lit(1)).as("n_docs"),
-        coalesce(sum(col("dl")), lit(0L)).as("total_dl"))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/data/stats")
-    live(side("postings"))
-      .repartitionByRange(col("term"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/data/postings")
-    VersionedIndex.commit(spark, path, next)
+    VersionedIndex.publish(spark, path, "data", VersionedIndex.Full) { (_, dir) =>
+      lens.write.mode(SaveMode.Overwrite).parquet(s"$dir/data/doclens")
+      lens.agg(count(lit(1)).as("n_docs"),
+          coalesce(sum(col("dl")), lit(0L)).as("total_dl"))
+        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/data/stats")
+      live(side("postings"))
+        .repartitionByRange(col("term"))
+        .sortWithinPartitions("term", "doc_id")
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/data/postings")
+    }
     true
   }
 
   private def statsAdjustOf(spark: org.apache.spark.sql.SparkSession,
-                            path: String, dir: String): Option[(Long, Long)] = {
-    val s = VersionedIndex.io(spark, path)
-    if (s.exists(s"$dir/stats_adjust")) {
+                            dir: String): Option[(Long, Long)] =
+    if (VersionedIndex.io(spark, dir).exists(s"$dir/stats_adjust")) {
       val r = spark.read.parquet(s"$dir/stats_adjust").first()
       Some((r.getLong(0), r.getLong(1)))
     } else None
+
+  /** Version `dir`'s cumulative takedown adjustment: `n` dead docs of
+    * total length `dl`.
+    */
+  private def writeStatsAdjust(spark: org.apache.spark.sql.SparkSession,
+                               dir: String, n: Long, dl: Long): Unit = {
+    import spark.implicits._
+    Seq((n, dl)).toDF("dead_docs", "dead_dl").coalesce(1)
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$dir/stats_adjust")
   }
 
   /** Reclaim superseded versions past the retention window. */
@@ -510,11 +477,10 @@ object Search {
     // version's takedown adjustment — scores stay as-if-rebuilt after a
     // removeFromIndex, with zero corpus-side work at query time
     val st = side("stats").agg(sum("n_docs"), sum("total_dl")).first()
-    val (deadN, deadDl) = statsAdjustOf(spark, path, dir).getOrElse((0L, 0L))
+    val (deadN, deadDl) = statsAdjustOf(spark, dir).getOrElse((0L, 0L))
     val qTerms = queries.select(
       col(queryIdCol).cast("string").as("query_id"),
       explode(col(termsCol)).as("term")).distinct()
-    val tomb = tombstonesOf(spark, path, dir)
     // the vocabulary restriction reaches the postings scan as a pushed IN
     // filter when the query set is literal-small, and stays a
     // (broadcastable) semi-join for genuinely large batches — either way
@@ -525,9 +491,7 @@ object Search {
     // from df (counted off this filtered frame in the scoring tail); its
     // doclens rows never surface because the length join is inner from the
     // postings side
-    val post = tomb.fold(post0)(t =>
-      post0.join(t.select(col("doc_id").as("_dead")),
-        post0("doc_id") === col("_dead"), "left_anti"))
+    val post = VersionedIndex.minusTombstones(spark, dir, post0, "doc_id")
     scoreBatch(qTerms, post, side("doclens"),
       st.getLong(0) - deadN, st.getLong(1) - deadDl, k1, b, topK)
   }

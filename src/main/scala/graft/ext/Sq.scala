@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   * scores with no codebook lookups — the faiss `SQ8` deployment shape,
   * used when PQ's recall loss is unacceptable but float32 doesn't fit.
   *
-  * Layout under `path` (the shared [[VersionedIndex]] protocol — atomic
-  * `CURRENT.v<N>` marker commits, shard-manifest O(shard) appends,
-  * retention + [[vacuumIndex]]):
+  * Layout under `path` (the shared [[VersionedIndex]] protocol — one
+  * exclusive `CURRENT.v<N>` marker create per commit, shard-manifest
+  * O(shard) appends, retention + [[vacuumIndex]]):
   *
   *   v<N>/params/  1 row: (dim, lo: float[dim], hi: float[dim]) — FROZEN
   *                 at build, copied forward by appends (an append encodes
@@ -114,37 +114,41 @@ object Sq {
       Seq("codes", "params", "tombstones"))
 
   def buildIndex(corpus: DataFrame, path: String,
-                 vecCol: String = "embedding", idCol: String = "vec_id"): Unit = {
+                 vecCol: String = "embedding", idCol: String = "vec_id"): Unit =
+    VersionedIndex.publish(corpus.sparkSession, path, "codes", VersionedIndex.Full)(
+      (_, dir) => writeBuild(corpus, dir, vecCol, idCol))
+
+  /** A complete version of `corpus` in `dir`: learned bounds, then codes. */
+  private def writeBuild(corpus: DataFrame, dir: String,
+                         vecCol: String, idCol: String): Unit = {
     import corpus.sparkSession.implicits._
-    val spark = corpus.sparkSession
     val (lo, hi) = learnBounds(corpus, vecCol)
-    val next = VersionedIndex.currentVersion(spark, path).getOrElse(0L) + 1
-    val dir = s"$path/v$next"
     Seq((lo.length, lo.toSeq, hi.toSeq)).toDF("dim", "lo", "hi")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/params")
     writeCodes(corpus, s"$dir/codes", lo, hi, vecCol, idCol)
-    VersionedIndex.commit(spark, path, next)
   }
 
   /** Fold a new shard in against the FROZEN bounds — O(shard) encode +
-    * one atomic pointer publish; the parent's code shards ride by
+    * one exclusive marker create; the parent's code shards ride by
     * manifest reference. Out-of-range append values clamp (the encode
     * contract), which only widens their quantization error — the exact
     * rerank stage is unaffected.
     */
   def appendToIndex(newVecs: DataFrame, path: String,
-                    vecCol: String = "embedding", idCol: String = "vec_id"): Unit = {
+                    vecCol: String = "embedding", idCol: String = "vec_id"): Unit =
+    VersionedIndex.publish(newVecs.sparkSession, path, "codes", VersionedIndex.Append)(
+      writeAppend(newVecs, _, _, vecCol, idCol))
+
+  /** Version `dir`'s own codes shard of `newVecs`, encoded against its
+    * parent `cur`'s bounds, which it copies forward with the tombstones.
+    */
+  private def writeAppend(newVecs: DataFrame, cur: String, dir: String,
+                          vecCol: String, idCol: String): Unit = {
     val spark = newVecs.sparkSession
-    val cur = indexDir(spark, path)
     val (lo, hi) = readParams(spark, cur)
-    val next = VersionedIndex.currentVersion(spark, path).getOrElse(0L) + 1
-    val dir = s"$path/v$next"
-    spark.read.parquet(s"$cur/params").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/params")
-    tombstonesOf(spark, path, cur).foreach(_.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/tombstones"))
+    VersionedIndex.copyTable(spark, cur, dir, "params")
+    VersionedIndex.writeTombstones(spark, cur, dir, "vec_id")
     writeCodes(newVecs, s"$dir/codes", lo, hi, vecCol, idCol)
-    VersionedIndex.publishAppend(spark, path, cur, next, "codes")
   }
 
   /** Idempotent streaming maintenance body (`foreachBatch` shape): the
@@ -153,19 +157,9 @@ object Sq {
     */
   def appendBatchToIndex(newVecs: DataFrame, path: String, batchId: Long,
                          vecCol: String = "embedding",
-                         idCol: String = "vec_id"): Unit = {
-    val spark = newVecs.sparkSession
-    VersionedIndex.foldBatch(spark, path, batchId) {
-      // empty-batch skip (watermark still advances): an empty first batch
-      // would throw in learnBounds, and the replay would fail forever
-      if (!newVecs.isEmpty) {
-        if (VersionedIndex.currentVersion(spark, path).isEmpty)
-          buildIndex(newVecs, path, vecCol, idCol)
-        else appendToIndex(newVecs, path, vecCol, idCol)
-      }
-    }
-    ()
-  }
+                         idCol: String = "vec_id"): Unit =
+    VersionedIndex.foldBatch(newVecs.sparkSession, path, batchId, "codes", newVecs)(
+      writeBuild(_, _, vecCol, idCol), writeAppend(_, _, _, vecCol, idCol))
 
   /** Chain compaction, the twin of [[Ivf.compactIndex]]: merge the live
     * code shards into one table under a fresh version, tombstones folded,
@@ -174,20 +168,16 @@ object Sq {
     */
   def compactIndex(path: String,
                    spark: org.apache.spark.sql.SparkSession): Boolean = {
-    val cur = indexDir(spark, path)
-    val next = VersionedIndex.currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"compactIndex: no committed version at $path")) + 1
-    val dir = s"$path/v$next"
+    val cur = VersionedIndex.requireLive(spark, path, "compactIndex")
     // fully-tombstoned chain: refuse (no-op, nothing committed) — a
     // zero-row write can emit no part files, leaving an unreadable
     // `codes` dir in the committed version (see Ivf.compactIndex)
     val live = codesOf(spark, path, cur)
     if (live.isEmpty) return false
-    spark.read.parquet(s"$cur/params").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/params")
-    live.write.mode(SaveMode.Overwrite).parquet(s"$dir/codes")
-    VersionedIndex.commit(spark, path, next)
+    VersionedIndex.publish(spark, path, "codes", VersionedIndex.Full) { (_, dir) =>
+      VersionedIndex.copyTable(spark, cur, dir, "params")
+      live.write.mode(SaveMode.Overwrite).parquet(s"$dir/codes")
+    }
     true
   }
 
@@ -198,23 +188,14 @@ object Sq {
   def removeFromIndex(path: String, removeIds: DataFrame,
                       idCol: String = "vec_id"): Long = {
     val spark = removeIds.sparkSession
-    val cur = indexDir(spark, path)
     val dead = removeIds.select(col(idCol).cast("long").as("vec_id")).distinct()
-    val live = codesOf(spark, path, cur)
-      .join(dead, Seq("vec_id"), "left_semi")
-    val present = live.count()
+    val present = codesOf(spark, path, indexDir(spark, path))
+      .join(dead, Seq("vec_id"), "left_semi").count()
     if (present == 0L) return 0L
-    val next = VersionedIndex.currentVersion(spark, path).getOrElse(0L) + 1
-    val dir = s"$path/v$next"
-    val merged = tombstonesOf(spark, path, cur) match {
-      case Some(t) => t.select("vec_id").unionByName(dead).distinct()
-      case None => dead
+    VersionedIndex.publish(spark, path, "codes", VersionedIndex.Carry) { (cur, dir) =>
+      VersionedIndex.writeTombstones(spark, cur, dir, "vec_id", Some(dead))
+      VersionedIndex.copyTable(spark, cur, dir, "params")
     }
-    merged.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$dir/tombstones")
-    spark.read.parquet(s"$cur/params").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/params")
-    VersionedIndex.publishCarry(spark, path, cur, next, "codes")
     present
   }
 
@@ -333,18 +314,6 @@ object Sq {
       .map(r => spark.read.parquet(r))
       .reduce(_.unionByName(_))
       .select(col("vec_id").cast("long"), col("codes"), col("dnorm"))
-    tombstonesOf(spark, path, dir) match {
-      case None => raw
-      case Some(t) =>
-        raw.join(broadcast(t.select(col("vec_id").as("_dead"))),
-          raw("vec_id") === col("_dead"), "left_anti")
-    }
-  }
-
-  private def tombstonesOf(spark: org.apache.spark.sql.SparkSession,
-                           path: String, dir: String): Option[DataFrame] = {
-    val s = VersionedIndex.io(spark, path)
-    if (s.exists(s"$dir/tombstones")) Some(spark.read.parquet(s"$dir/tombstones"))
-    else None
+    VersionedIndex.minusTombstones(spark, dir, raw, "vec_id")
   }
 }

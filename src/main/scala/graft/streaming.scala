@@ -286,7 +286,7 @@ object Streaming {
   /** Streaming SEARCH-INDEX maintenance: each micro-batch of documents
     * folds into the persisted BM25 inverted index as one O(shard)
     * versioned append (the first batch builds it), exactly-once via the
-    * index-side batch watermark ([[ext.Search.appendBatchToIndex]]) —
+    * batch id its commit marker records ([[ext.Search.appendBatchToIndex]]) —
     * a crawler feed keeps the retrieval index current without ever
     * rebuilding or rescanning the corpus. Shard doc ids must be new
     * (dedupe upstream — compose [[dedupIngest]] or the persisted dedup
@@ -328,7 +328,7 @@ object Streaming {
 
   /** [[ingestToIvfIndex]]'s IVF-PQ twin: first batch trains centroids and
     * codebooks, later batches encode against the frozen model — same
-    * exactly-once batch-watermark protocol.
+    * exactly-once fold protocol.
     */
   def ingestToPqIndex(vecs: DataFrame, indexPath: String,
                       checkpoint: String, nCells: Int = 64,

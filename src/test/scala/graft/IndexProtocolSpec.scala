@@ -189,6 +189,148 @@ class IndexProtocolSpec extends SparkSpec {
       spark.conf.unset(tag)
     }
   }
+
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Four documents with no 3-word shingle in common. */
+  private def distinctDocs = Seq(
+    (0L, "alpha beta gamma delta epsilon zeta"),
+    (1L, "one two three four five six"),
+    (2L, "red orange yellow green blue indigo"),
+    (3L, "north south east west up down")
+  ).toDF("doc_id", "text")
+
+  /** A stream-maintained index family: its fold entry point, a one-shot
+    * build of the same rows, a fingerprint of what it serves, its
+    * compaction and its vacuum to one version, and two batches to fold.
+    */
+  private case class Family(name: String,
+                            fold: (org.apache.spark.sql.DataFrame, String, Long) => Unit,
+                            oneShot: (org.apache.spark.sql.DataFrame, String) => Unit,
+                            content: String => Seq[String],
+                            compact: String => Boolean,
+                            vacuum: String => Unit,
+                            batches: () => (org.apache.spark.sql.DataFrame,
+                              org.apache.spark.sql.DataFrame))
+
+  private def families: Seq[Family] = Seq(
+    Family("search",
+      ext.Search.appendBatchToIndex(_, _, _),
+      ext.Search.buildIndex(_, _),
+      p => asRows(ext.Search.queryIndex(spark, p,
+        Seq("q" -> Seq("cat", "dog", "fish", "bird")), topK = 10)),
+      ext.Search.compactIndex(_, spark),
+      ext.Search.vacuumIndex(spark, _, retainVersions = 1),
+      () => (corpus.where(col("doc_id") < 3), corpus.where(col("doc_id") >= 3))),
+    Family("ivf",
+      ext.Ivf.appendBatchToIndex(_, _, _, nCells = 2),
+      ext.Ivf.buildIndex(_, _, nCells = 2),
+      p => asRows(ext.Ivf.cells(spark, p).select("vec_id", "embedding")),
+      ext.Ivf.compactIndex(_, spark),
+      ext.Ivf.vacuumIndex(spark, _, retainVersions = 1),
+      () => (vecs.where(col("vec_id") < 4), vecs.where(col("vec_id") >= 4))),
+    Family("ivfpq",
+      ext.Ivf.appendBatchToPqIndex(_, _, _, nCells = 2, m = 2, codes = 2),
+      ext.Ivf.buildPqIndex(_, _, nCells = 2, m = 2, codes = 2),
+      p => asRows(ext.Ivf.cells(spark, p).select("vec_id", "norm")),
+      ext.Ivf.compactIndex(_, spark),
+      ext.Ivf.vacuumIndex(spark, _, retainVersions = 1),
+      () => (vecs.where(col("vec_id") < 4), vecs.where(col("vec_id") >= 4))),
+    Family("sq8",
+      ext.Sq.appendBatchToIndex(_, _, _),
+      ext.Sq.buildIndex(_, _),
+      p => asRows(ext.Sq.queryIndex(p, vecs, k = 2, rerank = 8,
+        rerankAgainst = Some(vecs))),
+      ext.Sq.compactIndex(_, spark),
+      ext.Sq.vacuumIndex(spark, _, retainVersions = 1),
+      () => (vecs.where(col("vec_id") < 4), vecs.where(col("vec_id") >= 4))),
+    Family("dedup",
+      ext.DedupIndex.appendBatchDeduped(_, _, _),
+      ext.DedupIndex.buildIndex(_, _),
+      p => asRows(ext.DedupIndex.indexedIds(spark, p)),
+      ext.DedupIndex.compactIndex(_, spark),
+      ext.DedupIndex.vacuumIndex(spark, _, retainVersions = 1),
+      () => (distinctDocs.where(col("doc_id") < 2), distinctDocs.where(col("doc_id") >= 2))))
+
+  /** `f`'s two batches folded as batches 0 and 1 into a fresh index. */
+  private def folded(f: Family): String = {
+    val path = tmp(s"graft-fold-${f.name}")
+    val (b0, b1) = f.batches()
+    f.fold(b0, path, 0L)
+    f.fold(b1, path, 1L)
+    path
+  }
+
+  private def oneShotContent(f: Family): Seq[String] = {
+    val path = tmp(s"graft-once-${f.name}")
+    val (b0, b1) = f.batches()
+    f.oneShot(b0.unionByName(b1), path)
+    f.content(path)
+  }
+
+  test("a fold that crashed before its marker create replays exactly once " +
+    "(Search, IVF, IVF-PQ, SQ8, dedup)") {
+    for (f <- families) {
+      val path = folded(f)
+      val (_, b1) = f.batches()
+      val v = ext.VersionedIndex.currentVersion(spark, path).get
+      // batch 1's tables are on disk, its commit never happened
+      assert(new java.io.File(s"$path/CURRENT.v$v").delete(), f.name)
+      f.fold(b1, path, 1L) // the restarted stream replays batch 1
+      assert(ext.VersionedIndex.currentVersion(spark, path).contains(v), f.name)
+      f.fold(b1, path, 1L) // a second replay is skipped
+      assert(ext.VersionedIndex.currentVersion(spark, path).contains(v), f.name)
+      assert(f.content(path) == oneShotContent(f), f.name)
+    }
+  }
+
+  test("a committed fold stays skipped after compaction and a vacuum to " +
+    "one version (Search, IVF, IVF-PQ, SQ8, dedup)") {
+    for (f <- families) {
+      val path = folded(f)
+      val (b0, b1) = f.batches()
+      assert(f.compact(path), f.name)
+      f.vacuum(path)
+      val v = ext.VersionedIndex.currentVersion(spark, path)
+      f.fold(b1, path, 1L)
+      f.fold(b0, path, 0L)
+      assert(ext.VersionedIndex.currentVersion(spark, path) == v, f.name)
+      assert(f.content(path) == oneShotContent(f), f.name)
+    }
+  }
+
+  test("an index written before markers recorded txn= still vetoes its " +
+    "folded batches (Search, IVF, IVF-PQ, SQ8, dedup)") {
+    for (f <- families; record <- Seq("in-version", "root")) {
+      val path = folded(f)
+      val (b0, b1) = f.batches()
+      val io = ext.VersionedIndex.io(spark, path)
+      // the earlier layout: bare `v<N>` markers, the batch id in the fold's
+      // version directory and in a root watermark file that outlived vacuum
+      val committed = ext.VersionedIndex.committedVersions(spark, path)
+      committed.foreach(v => io.writeString(s"$path/CURRENT.v$v", s"v$v"))
+      val legacy =
+        if (record == "in-version") s"$path/v${committed.last}/ingest_batch_id"
+        else s"$path/ingest_batch_hwm.v1"
+      io.writeString(legacy, "1")
+      val v = committed.last
+      val served = f.content(path)
+      f.fold(b1, path, 1L)
+      f.fold(b0, path, 0L)
+      assert(ext.VersionedIndex.currentVersion(spark, path).contains(v), s"${f.name} $record")
+      assert(f.content(path) == served, s"${f.name} $record")
+      // the next commit records the cursor it read in its own marker, so
+      // the earlier record is not needed any more
+      assert(f.compact(path), s"${f.name} $record")
+      assert(io.readString(s"$path/CURRENT.v${v + 1}").contains("txn=fold:1"),
+        s"${f.name} $record")
+      io.deleteFile(legacy)
+      f.fold(b1, path, 1L)
+      assert(ext.VersionedIndex.currentVersion(spark, path).contains(v + 1), s"${f.name} $record")
+      assert(f.content(path) == served, s"${f.name} $record")
+    }
+  }
 }
 
 /** The local filesystem under its own URI scheme, `graftlocal`. Its

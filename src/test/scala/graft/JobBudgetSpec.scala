@@ -187,4 +187,53 @@ class JobBudgetSpec extends SparkSpec {
     assert(jobs.isEmpty, jobs.mkString("\n----\n"))
     assert(ds.currentVersion == v)
   }
+
+  private def vectors(n: Int, seed: Int) = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    (0 until n).map(i => (i.toLong, Array.fill(8)(rnd.nextFloat() - 0.5f)))
+      .toDF("vec_id", "embedding")
+  }
+
+  /** Every file and directory under `dir`. */
+  private def tree(dir: String): Set[String] = {
+    val walk = Files.walk(java.nio.file.Paths.get(dir))
+    try walk.iterator().asScala.map(_.toString).toSet finally walk.close()
+  }
+
+  test("a replayed Ivf.appendBatchToIndex launches no job and creates no file") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-budget-fold").toString
+    val corpus = vectors(64, 13)
+    val (b0, b1) = (corpus.where($"vec_id" < 32), corpus.where($"vec_id" >= 32))
+    ext.Ivf.appendBatchToIndex(b0, dir, 0L, nCells = 4)
+    ext.Ivf.appendBatchToIndex(b1, dir, 1L)
+    val files = tree(dir)
+    val (jobs, _) = launched {
+      ext.Ivf.appendBatchToIndex(b1, dir, 1L)
+      ext.Ivf.appendBatchToIndex(b0, dir, 0L)
+    }
+    assert(jobs.isEmpty, jobs.mkString("\n----\n"))
+    assert(tree(dir) == files)
+  }
+
+  test("a warm Ivf.appendBatchToIndex launches exactly the jobs of its " +
+    "emptiness probe plus Ivf.appendToIndex") {
+    import spark.implicits._
+    val corpus = vectors(96, 17)
+    val batch = (0 until 3).map(i => corpus.where($"vec_id" % 3 === i))
+    val plain = Files.createTempDirectory("graft-budget-plain").toString
+    val sink = Files.createTempDirectory("graft-budget-sink").toString
+    ext.Ivf.buildIndex(batch(0), plain, nCells = 4)
+    ext.Ivf.appendBatchToIndex(batch(0), sink, 0L, nCells = 4)
+    ext.Ivf.appendToIndex(batch(1), plain)
+    ext.Ivf.appendBatchToIndex(batch(1), sink, 1L)
+    val (probeJobs, _) = launched(batch(2).isEmpty)
+    val (plainJobs, _) = launched(ext.Ivf.appendToIndex(batch(2), plain))
+    val (sinkJobs, _) = launched(ext.Ivf.appendBatchToIndex(batch(2), sink, 2L))
+    assert(plainJobs.nonEmpty)
+    assert(sinkJobs.size == probeJobs.size + plainJobs.size,
+      sinkJobs.mkString("\n----\n") + "\n====\n" +
+        (probeJobs ++ plainJobs).mkString("\n----\n"))
+  }
 }
