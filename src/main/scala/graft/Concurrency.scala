@@ -13,7 +13,9 @@ import org.apache.spark.sql.SparkSession
   * Results come back in INPUT ORDER (never completion order) and each thunk
   * runs exactly once, so a caller whose units are deterministic gets a
   * deterministic result — parallelism here changes wall clock, not values.
-  * The first failure is rethrown after all threads settle (no thread leak).
+  * The first failure is rethrown only after EVERY thunk has settled: a
+  * caller that cleans up shared state on failure (a commit clearing its
+  * write scope and retirements) never races a sibling still running.
   */
 object Concurrency {
   /** Default in-flight bound: a few jobs are enough to fill stage tails
@@ -41,8 +43,7 @@ object Concurrency {
 
   def inParallel[T](thunks: Seq[() => T], maxConcurrent: Int = 0): Seq[T] = {
     if (thunks.isEmpty) return Seq.empty
-    if (thunks.size == 1 || sys.env.contains("GRAFT_NO_PARALLEL"))
-      return thunks.map(_())
+    if (thunks.size == 1) return thunks.map(_())
     val n = math.min(
       if (maxConcurrent > 0) maxConcurrent else DefaultMaxConcurrent,
       thunks.size)

@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 /** The reference's API facade re-expressed over a parquet warehouse
@@ -71,31 +72,6 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   private def exists(path: String): Boolean = io.exists(path)
 
   private def rmTree(path: String): Unit = io.rmTree(path)
-
-  /** Decode Spark's URI-style %XX partition-directory escaping (e.g. ':' →
-    * `%3A`) — safer than re-implementing the escape when matching on-disk
-    * partition values against stream ids. A '%' NOT followed by two hex
-    * digits is kept literally: Spark-written dirs always escape '%', but
-    * this also walks dirs it did not write (hand-created or foreign-tool
-    * partition directories), and a decode crash there would abort a
-    * delete/maintenance mutation mid-sequence.
-    */
-  private def unescapePartitionValue(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val hex =
-        if (s.charAt(i) == '%' && i + 3 <= s.length)
-          try Some(Integer.parseInt(s.substring(i + 1, i + 3), 16))
-          catch { case _: NumberFormatException => None }
-        else None
-      hex match {
-        case Some(c) => sb.append(c.toChar); i += 3
-        case None => sb.append(s.charAt(i)); i += 1
-      }
-    }
-    sb.toString
-  }
 
   /** The live registry generation (max `CURRENT.g<N>` marker), or None on
     * a warehouse still carrying only the legacy single `streams` dir.
@@ -449,10 +425,12 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
         else {
           val flat = ts.flatten
           val isAscii = (s: String) => s.forall(_ < 0x80)
+          // a null stream id voids the bounds: with min == max they would
+          // prove a file single-stream (soleStream) that also holds nulls
           val sid = colStats("stream_id").map(_.flatMap { s =>
             (s.genericGetMin, s.genericGetMax) match {
               case (mn: org.apache.parquet.io.api.Binary,
-                    mx: org.apache.parquet.io.api.Binary) =>
+                    mx: org.apache.parquet.io.api.Binary) if s.getNumNulls == 0 =>
                 val (a, b) = (mn.toStringUsingUTF8, mx.toStringUsingUTF8)
                 if (isAscii(a) && isAscii(b)) Some((a, b)) else None
               case _ => None
@@ -929,25 +907,14 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       scopeBefore.putIfAbsent((table, p), listFilesUnder(table, p)); ()
     }
 
-  /** Logically delete the committed files under `table`/`prefixes` from
-    * the snapshot this commit will publish; returns the retired set. The
-    * files are NOT touched on disk — readers of older snapshots keep
-    * working and vacuum reclaims them once unreferenced. On a table with
-    * no committed coverage yet (legacy warehouse) the LIVE files present
-    * at call time are retired instead — call before the replacing write.
+  /** Logically delete `files` of `table` from the snapshot this commit
+    * will publish. The files are NOT touched on disk — readers of older
+    * snapshots keep working and vacuum reclaims them once unreferenced.
+    * A whole table retires its [[committedFiles]] — on a legacy table, the
+    * LIVE files present at call time, so call before the replacing write.
     */
-  private def retireFiles(table: String, prefixes: Seq[String]): Set[String] = {
-    val committed = rawSnapshot.flatMap(_.tableFiles(table))
-    val out = prefixes.flatMap { p =>
-      committed match {
-        case Some(files) =>
-          if (p.isEmpty) files else files.filter(_.startsWith(p + "/"))
-        case None => listFilesUnder(table, p)
-      }
-    }.toSet
-    out.foreach(f => retiredFiles.add((table, f)))
-    out
-  }
+  private def retireFiles(table: String, files: Set[String]): Unit =
+    files.foreach(f => retiredFiles.add((table, f)))
 
   /** Files this commit has written so far under `table`'s declared scopes
     * (current listing minus the captured pre-write listing).
@@ -973,13 +940,85 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
         import scala.jdk.CollectionConverters._
         val retired = retiredFiles.asScala.collect { case (t, f) if t == table => f }
         val files = (committed -- retired) ++ writtenSoFar(table)
-        if (files.isEmpty) None
-        else Some(spark.read.option("basePath", tablePath(table)).schema(schema)
-          .parquet(files.toSeq.sorted.map(f => s"${tablePath(table)}/$f"): _*))
+        if (files.isEmpty) None else Some(readFiles(table, schema, files))
       case None =>
         if (exists(tablePath(table)))
           Some(spark.read.schema(schema).parquet(tablePath(table)))
         else None
+    }
+
+  /** Read exactly `files` (paths relative to `table`) with `schema` — the
+    * one explicit-file-list read. `basePath` makes partition columns and
+    * partition pruning behave as in a directory read. No files is an empty
+    * local relation.
+    */
+  private def readFiles(table: String,
+                        schema: org.apache.spark.sql.types.StructType,
+                        files: Iterable[String]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+    else spark.read.option("basePath", tablePath(table)).schema(schema)
+      .parquet(files.toSeq.sorted.map(f => s"${tablePath(table)}/$f"): _*)
+
+  /** The one copy-on-write rewrite: declare `files`' partition
+    * directories (plus `extraScope`) as this commit's write scope, retire
+    * `files`, read exactly them, and append `transform`'s output
+    * partitioned by `partCol` as fresh files beside the retired ones.
+    * Nothing is deleted in place: a crash at any instant leaves every
+    * reader on the pre-mutation snapshot and the new files as orphans
+    * vacuum reclaims. The retired files stay immutable until vacuum, so
+    * the append never reads a path it replaces. `extraScope` names
+    * partitions the output may reach that no retired file lives in;
+    * `maxRecordsPerFile` caps the output files. Nothing to read and no
+    * extra scope is a no-op.
+    */
+  private def rewriteFiles(table: String,
+                           schema: org.apache.spark.sql.types.StructType,
+                           partCol: String, files: Set[String],
+                           extraScope: Seq[String] = Seq.empty,
+                           maxRecordsPerFile: Option[Long] = None)(
+      transform: DataFrame => DataFrame): Unit =
+    if (files.nonEmpty || extraScope.nonEmpty) {
+      val dirs = files.map(f => f.indexOf('/') match {
+        case -1 => ""
+        case i => f.substring(0, i)
+      })
+      scopeWrite(table, (dirs ++ extraScope).toSeq.sorted)
+      retireFiles(table, files)
+      val w = transform(readFiles(table, schema, files)).write.mode(SaveMode.Append)
+      maxRecordsPerFile.fold(w)(n => w.option("maxRecordsPerFile", n))
+        .partitionBy(partCol).parquet(tablePath(table))
+    }
+
+  /** The fact tables (raw, derived) with their read schema and partition
+    * column.
+    */
+  private def factTables: Seq[(String, org.apache.spark.sql.types.StructType, String)] =
+    Seq(("raw", rawSchemaPartitioned, "dp_date"),
+      ("derived", Schemas.rawDatapoints, "stream_id"))
+
+  /** Every rewritable data table: the fact tables and the seven rollup
+    * levels.
+    */
+  private def dataTables: Seq[(String, org.apache.spark.sql.types.StructType, String)] =
+    factTables ++ Granularity.ladder.map(g => (s"rollup/granularity=${g.name}",
+      Schemas.downsampledPartitioned, "bucket_date"))
+
+  /** `table`'s committed files; on a table the manifests do not cover
+    * yet (legacy warehouse), every live file.
+    */
+  private def committedFiles(table: String): Set[String] =
+    rawSnapshot.flatMap(_.tableFiles(table)).getOrElse(listFilesUnder(table))
+
+  /** [[committedFiles]] that the stats test `keep` admits (every live file
+    * of an uncovered table: it has no stats to prune with).
+    */
+  private def committedFilesWhere(table: String)(
+      keep: (Snapshot, String) => Boolean): Set[String] =
+    rawSnapshot match {
+      case Some(s) if s.covered(table) => s.tableFiles(table).get.filter(keep(s, _))
+      case _ => listFilesUnder(table)
     }
 
   /** Run a MULTI-TABLE write sequence inside a write-ahead intent marker —
@@ -1576,25 +1615,33 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
 
   /** Refuses while surviving derived streams depend on doomed ones
     * (`OutstandingDependenciesError`); deletes metadata AND all datapoints —
-    * raw and every rollup level, like the reference's delete of all
-    * per-granularity collections [ds :: backends/mongodb.py ::
-    * delete_streams]. At Delta/Iceberg scale these rewrites become
-    * `DELETE WHERE stream_id IN (...)`; plain parquet here — but the
-    * rewrite is PRUNED to the partitions that can actually hold doomed
-    * rows: the doomed streams' registry bounds (earliest/latest datapoint)
-    * partition-prune the discovery scan, the exact affected date set comes
-    * from that slice, and only those `dp_date`/`bucket_date` partitions are
-    * rewritten (dynamic partition overwrite; partitions left with zero
-    * survivors are dropped explicitly). The stream_id-partitioned derived
-    * table needs no rewrite at all — a doomed stream's slice is its own
-    * partition directory, deleted outright. Deleting a 1-day stream out of
-    * a years-deep warehouse touches one raw partition, not all of them.
+    * raw, derived and every rollup level, like the reference's delete of
+    * all per-granularity collections [ds :: backends/mongodb.py ::
+    * delete_streams]. The Delta `DELETE WHERE stream_id IN (...)` shape:
+    * the touched files come from the commit log and only those are
+    * rewritten, through the one copy-on-write path ([[rewriteFiles]]).
+    * Per table:
     *
-    * The registry bounds are a PRUNING HINT, not a correctness assumption:
-    * a doomed stream with null bounds (pre-upgrade warehouses, out-of-band
-    * writes) falls back to full-partition discovery, and even with bounds a
-    * limit-1 probe outside the window catches escaped rows and escalates —
-    * so a delete never silently leaves doomed datapoints behind.
+    *  1. candidates: every committed file whose stream id ([[keepFile]]:
+    *     the derived table's `stream_id=` directory, else footer sid
+    *     bounds and bloom) may be doomed, over ALL time — the registry
+    *     bounds are no safe window, rows appended while a stream was
+    *     unregistered (or by a foreign writer, then adopted) lie outside
+    *     them;
+    *  2. a candidate that provably holds only doomed rows
+    *     ([[soleStream]] is doomed) is retired without being read — every
+    *     derived file of a doomed stream, for one;
+    *  3. the other candidates go through ONE `_metadata.file_path` scan,
+    *     semi-joined to the doomed ids (an IN filter), which names the
+    *     files that really hold doomed rows; only those are rewritten,
+    *     minus the doomed ids.
+    *
+    * The registry swap comes last: the rewrites publish nothing until the
+    * manifest commits, so a crash anywhere before leaves the warehouse,
+    * registry included, on the pre-mutation snapshot. Only the
+    * swap→commit tail (milliseconds) can leave the registry ahead of the
+    * data; the intent marker flags that window. Returns the number of
+    * streams deleted.
     */
   def deleteStreams(tagQuery: Map[String, String]): Long = {
     val all = streams
@@ -1603,194 +1650,104 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       .limit(5).collect()
     if (violSample.nonEmpty)
       throw new errors.OutstandingDependenciesError(violSample.mkString(", "))
-    // the doomed rows come from the in-memory registry generation: local
-    // rows the registry swap at the end cannot change
-    val doomedMeta =
-      doomed0.select("stream_id", "earliest_datapoint", "latest_datapoint")
-    val doomedIds = doomedMeta.select("stream_id")
-    // one metadata-sized agg answers everything driver-side: doomed count,
-    // combined date bounds, and whether ANY doomed stream lacks bounds.
-    // Null bounds do NOT mean "no data rows": rows written around the
-    // bound-maintaining APIs (out-of-band parquet writes into the
-    // warehouse, pre-upgrade warehouses whose derived streams carried
-    // null bounds) exist without a registry trace — such a stream
-    // disables the bounds window and its delete scans every partition.
-    val b = doomedMeta.agg(
-      count(lit(1)).as("n"),
-      min("earliest_datapoint").as("lo"), max("latest_datapoint").as("hi"),
-      sum(when(col("earliest_datapoint").isNull ||
-        col("latest_datapoint").isNull, 1L).otherwise(0L)).as("n_null"))
-      .first()
-    val n = b.getLong(0)
-    val anyNullBounds = n > 0 && b.getLong(3) > 0
+    // from the in-memory registry generation: local rows the registry swap
+    // at the end cannot change
+    val doomedSorted = doomed0.select("stream_id").collect()
+      .map(_.getString(0)).sorted.toIndexedSeq
+    // an IN filter, not a broadcast join: the id set is already on the
+    // driver, and a broadcast costs a Spark job per plan
+    val isDoomed = col("stream_id").isInCollection(doomedSorted)
     withCommit("delete_streams") {
-    /** Rewrite only the `partCol` partitions containing doomed rows:
-      * discovery scan partition-pruned by the registry bounds, exact
-      * affected set from that slice (O(affected dates) on the driver),
-      * then anti-join the SNAPSHOT files of those partitions, append the
-      * survivors as fresh files, and logically retire the old files from
-      * the manifest this commit publishes. Nothing is deleted in place:
-      * a crash at ANY instant (including after every write) leaves the
-      * committed manifest — and so every reader — on the complete
-      * pre-mutation snapshot; the new files are orphans vacuum reclaims.
-      * Discovery and the rewrite both read through the snapshot file
-      * list, never the live directory, so orphan rows from an earlier
-      * torn mutation are neither merged nor adopted.
-      *
-      * The bounds window is only trusted as far as the registry is: when
-      * any doomed stream has NULL bounds the discovery scans every
-      * partition, and when bounds exist a limit-1 existence probe checks
-      * OUTSIDE the window for escaped rows (both the out-of-band-write
-      * cases above). The probe reads one dictionary column and stops at
-      * the first hit, so the happy path keeps the pruned cost; a hit
-      * escalates that delete to full discovery rather than letting
-      * doomed datapoints silently survive.
-      */
-    def purgePruned(table: String, schema: org.apache.spark.sql.types.StructType,
-                    partCol: String): Unit =
-      commitRead(table, schema).foreach { full =>
-        if (n > 0) {
-        def affectedIn(df: DataFrame): Array[java.sql.Date] =
-          df.join(broadcast(doomedIds), Seq("stream_id"), "left_semi")
-            .select(partCol).distinct().collect().map(_.getDate(0))
-        val affected: Array[java.sql.Date] =
-          if (anyNullBounds) affectedIn(full)
-          else {
-            val (lo, hi) = (b.getTimestamp(1), b.getTimestamp(2))
-            val inWindow =
-              col(partCol) >= to_date(lit(lo)) && col(partCol) <= to_date(lit(hi))
-            val outside = full.where(!inWindow)
-            val escaped = outside
-              .join(broadcast(doomedIds), Seq("stream_id"), "left_semi")
-              .limit(1).count() > 0
-            val base = affectedIn(full.where(inWindow))
-            if (escaped) (base ++ affectedIn(outside)).distinct else base
-          }
-        if (affected.nonEmpty) {
-          val prefixes = affected.toSeq.map(d => s"$partCol=$d")
-          scopeWrite(table, prefixes)
-          val old = retireFiles(table, prefixes)
-          if (old.nonEmpty) {
-            val slice = spark.read.option("basePath", tablePath(table))
-              .schema(schema)
-              .parquet(old.toSeq.sorted.map(f => s"${tablePath(table)}/$f"): _*)
-            // survivors land as NEW files beside the retired ones — no
-            // checkpoint needed: the source files are immutable until
-            // vacuum, so the write never reads paths it is replacing
-            slice.join(broadcast(doomedIds), Seq("stream_id"), "left_anti")
-              .write.mode(SaveMode.Append).partitionBy(partCol)
-              .parquet(tablePath(table))
-          }
+      if (doomedSorted.nonEmpty) {
+        val snap = rawSnapshot
+        val mixed = dataTables.map { case (table, schema, _) =>
+          val (pure, rest) = committedFilesWhere(table)(
+              keepFile(_, table, _, None, Some(doomedSorted)))
+            .partition(f => soleStream(snap, table, f)
+              .exists(sid => anyIdInRange(doomedSorted, sid, sid)))
+          retireFiles(table, pure)
+          (table, schema, rest)
         }
-        }
+        val held = filesHolding(mixed.filter(_._3.nonEmpty), isDoomed)
+        Concurrency.inParallel(dataTables.flatMap { case (table, schema, partCol) =>
+          held.get(table).map(files => () =>
+            rewriteFiles(table, schema, partCol, files)(
+              _.where(col("stream_id").isNull || !isDoomed)))
+        })
       }
-    /** The derived table is partitioned BY stream_id: a doomed stream's
-      * entire slice is its own partition — retire its files, write
-      * nothing. Matching rides a join against the snapshot's partition
-      * segments (decoded from their %XX-escaped dir names); the collect
-      * is O(doomed ∩ derived).
-      */
-    def purgeDerived(): Unit = {
-      val dirs = rawSnapshot.flatMap(_.tableFiles("derived"))
-        .getOrElse(listFilesUnder("derived"))
-        .map(_.split('/').head).filter(_.startsWith("stream_id="))
-        .map(d => (d, unescapePartitionValue(d.stripPrefix("stream_id="))))
-        .toSeq
-      if (dirs.nonEmpty) {
-        val doomedDirs = dirs.toDF("dir", "stream_id")
-          .join(doomedIds, Seq("stream_id"), "left_semi")
-          .select("dir").collect().map(_.getString(0))
-        if (doomedDirs.nonEmpty) retireFiles("derived", doomedDirs.toSeq)
-        ()
-      }
+      // crash seam for tests: the instant after ALL data rewrites, before
+      // the registry swap — the widest mid-purge window, where isolation
+      // must be total (nothing committed, registry untouched)
+      if (crashBeforeCommitOf("delete_streams_purge"))
+        throw new IllegalStateException("injected crash mid delete_streams")
+      swapRegistry(all.where(!isDoomed))
     }
-    // the per-path purges are independent read→rewrite pipelines; submit
-    // them as concurrent Spark jobs (thread-safe on one SparkContext) —
-    // the scheduler interleaves their stages instead of serializing
-    // 9 × (materialize + write) round-trips
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val purges =
-      Seq(Future(purgePruned("raw", rawSchemaPartitioned, "dp_date")),
-        Future(purgeDerived())) ++
-        Granularity.ladder.map(g => Future(
-          purgePruned(s"rollup/granularity=${g.name}",
-            Schemas.downsampledPartitioned, "bucket_date")))
-    Await.result(Future.sequence(purges), scala.concurrent.duration.Duration.Inf)
-    // crash seam for tests: the instant after ALL data rewrites, before
-    // the registry swap — the widest mid-purge window, where isolation
-    // must be total (nothing committed, registry untouched)
-    if (crashBeforeCommitOf("delete_streams_purge"))
-      throw new IllegalStateException("injected crash mid delete_streams")
-    // registry swap LAST: the data rewrites above publish nothing until
-    // the manifest commits, so a crash anywhere during them leaves the
-    // warehouse fully on the pre-mutation snapshot — registry included.
-    // Only the swap→commit tail (milliseconds, vs seconds of rewrites)
-    // can leave the registry ahead of the data; the intent marker flags
-    // exactly that window.
-    swapRegistry(all.join(doomedIds, Seq("stream_id"), "left_anti"))
-    }
-    n
+    doomedSorted.size.toLong
   }
+
+  /** Which of `files` (per table, with its read schema) hold a row
+    * matching `pred`: ONE scan of their `stream_id` and
+    * `_metadata.file_path` over all the tables, each task deduplicating
+    * its own paths, so the answer costs one Spark job and no shuffle.
+    */
+  private def filesHolding(
+      files: Seq[(String, org.apache.spark.sql.types.StructType, Set[String])],
+      pred: org.apache.spark.sql.Column): Map[String, Set[String]] =
+    if (files.isEmpty) Map.empty
+    else {
+      import spark.implicits._
+      // `_metadata.file_path` is a URL-encoded URI; decoded and qualified
+      // it matches the table root plus the relative path
+      def key(p: org.apache.hadoop.fs.Path) = io.fs.makeQualified(p).toUri.getPath
+      val byKey = files.flatMap { case (table, _, fs) =>
+        fs.toSeq.map(f =>
+          key(new org.apache.hadoop.fs.Path(s"${tablePath(table)}/$f")) -> (table, f))
+      }.toMap
+      files.map { case (table, schema, fs) =>
+          readFiles(table, schema, fs)
+            .select(col("stream_id"), col("_metadata.file_path").as("path"))
+        }.reduce(_.unionByName(_))
+        .where(pred).select("path").as[String].mapPartitions(_.toSet.iterator)
+        .collect().toSet
+        .map((p: String) =>
+          byKey(key(new org.apache.hadoop.fs.Path(java.net.URI.create(p)))))
+        .groupMap(_._1)(_._2)
+    }
 
   // ---- row-level deletes (GDPR takedown; Iceberg-style equality deletes) --
 
   private def usOfTs(t: Timestamp): Long =
     t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
 
-  /** Logically retire every committed file of `table` that MAY hold rows of
-    * any `(loUs, hiUs, sortedSids)` group — decided purely from the
-    * manifest's per-file ts bounds / sid bounds / sid bloom ([[keepFile]]),
-    * so provably-disjoint files are never rewritten. Pruning by the
-    * manifest's REAL `ts` stats (not the `dp_date` partition dir) also
-    * catches rows a foreign writer placed in a mismatched partition — the
-    * escape hazard [[deleteStreams]] needs a probe for. Declares the write
-    * scope (the touched files' partition dirs) so the survivors' rewrite is
-    * picked up by the commit. Returns the touched set.
+  /** Every committed file of `table` that MAY hold rows of any
+    * `(loUs, hiUs, sortedSids)` group — decided purely from the manifest's
+    * per-file ts bounds / sid bounds / sid bloom and the derived table's
+    * stream directories ([[keepFile]]), so provably-disjoint files are
+    * never rewritten. Pruning by the manifest's REAL `ts` stats (not the
+    * `dp_date` partition dir) also catches rows a foreign writer placed in
+    * a mismatched partition. `sids = None` is the PAST-THE-BOUND
+    * fallback: a mutation touching more distinct streams than the driver
+    * may collect prunes by time range only.
     */
-  private def retireTouchedByRanges(table: String,
-      groups: Seq[(Long, Long, Option[IndexedSeq[String]])]): Set[String] = {
-    val committed = rawSnapshot.flatMap(_.tableFiles(table))
-    val candidates = committed.getOrElse(listFilesUnder(table))
-    val touched = committed match {
-      case Some(_) =>
-        val s = rawSnapshot.get
-        // sids = None is the PAST-THE-BOUND fallback: a mutation touching
-        // more distinct streams than the driver may collect prunes by time
-        // range only (still manifest-stats pruning, just a wider superset)
-        candidates.filter(f => groups.exists { case (lo, hi, sids) =>
-          keepFile(s, table, f, Some((lo, hi)), sids)
-        })
-      case None => candidates
-    }
-    touched.foreach(f => retiredFiles.add((table, f)))
-    val prefixes = touched.map { f =>
-      val i = f.lastIndexOf('/')
-      if (i < 0) "" else f.substring(0, i)
-    }
-    if (touched.nonEmpty) scopeWrite(table, prefixes.toSeq.distinct.sorted)
-    touched
-  }
+  private def touchedByRanges(table: String,
+      groups: Seq[(Long, Long, Option[IndexedSeq[String]])]): Set[String] =
+    committedFilesWhere(table)((s, f) => groups.exists { case (lo, hi, sids) =>
+      keepFile(s, table, f, Some((lo, hi)), sids)
+    })
 
-  /** Copy-on-write survivor rewrite: read exactly the `touched` snapshot
-    * files, void rows matching `ranges` (the same broadcast anti-join the
-    * merge-on-read path applies at read time — one code path, one
-    * semantics), and append the survivors as fresh files beside the retired
-    * ones. Nothing is deleted in place; a crash leaves every reader on the
-    * pre-mutation snapshot and the new files as orphans vacuum reclaims.
+  /** Copy-on-write survivor rewrite ([[rewriteFiles]]) of the files
+    * [[touchedByRanges]] selects, voiding rows matching `ranges` with the
+    * same broadcast anti-join the merge-on-read path applies at read time
+    * — one code path, one semantics.
     */
   private def rewriteMinusRanges(table: String,
                                  schema: org.apache.spark.sql.types.StructType,
-                                 partCol: String, touched: Set[String],
+                                 partCol: String,
+                                 groups: Seq[(Long, Long, Option[IndexedSeq[String]])],
                                  ranges: DataFrame,
                                  hinted: Boolean = true): Unit =
-    if (touched.nonEmpty) {
-      val slice = spark.read.option("basePath", tablePath(table)).schema(schema)
-        .parquet(touched.toSeq.sorted.map(f => s"${tablePath(table)}/$f"): _*)
-      minusDeleted(slice, Some(ranges), hinted)
-        .write.mode(SaveMode.Append).partitionBy(partCol)
-        .parquet(tablePath(table))
-    }
+    rewriteFiles(table, schema, partCol, touchedByRanges(table, groups))(
+      minusDeleted(_, Some(ranges), hinted))
 
   /** Purge + recompute the finalized rollup buckets a row delete
     * invalidated, inside the delete's own commit — so the cascade is never
@@ -1816,8 +1773,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * now: maintenance will never revisit it. Buckets at-or-above the
     * watermark stay untouched — maintenance owns them, and pre-adding them
     * here would double their rows when the cascade finalizes.
-    */
-  /** `doomedIds` arrives pre-hinted by the caller: `broadcast(...)` when
+    *
+    * `doomedIds` arrives pre-hinted by the caller: `broadcast(...)` when
     * the id set fit the driver-collect bound, a plain (shuffle-joined)
     * frame on the past-the-bound fallback path — the repair plan itself is
     * identical either way. `doomedSorted` is `None` exactly on that
@@ -1891,40 +1848,30 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
             (base, extra) => base.unionByName(extra).distinct()))
         try {
           if (!purged.isEmpty) {
-            val touched = retireTouchedByRanges(table,
-              Seq((winLo, winHi, doomedSorted)))
             // upsert can create buckets in partitions NO touched file
             // covers (gap buckets, fresh dates) — declare those partitions
             // as write scope explicitly, or the commit diff never adopts
             // the recomputed files and the write is silently invisible.
             // Batch-bucket-scale collect; the delete path (recomputed ⊆
-            // touched partitions by construction) skips it.
-            if (upsertKeys.nonEmpty) {
-              val dates = purged.select(to_date(col("bucket_start")).as("d"))
+            // touched partitions by construction) skips it. A purely
+            // gap-bucket upsert touches no existing rollup file at all.
+            val gapDates =
+              if (upsertKeys.isEmpty) Seq.empty
+              else purged.select(to_date(col("bucket_start")).as("d"))
                 .distinct().collect().map(r => s"bucket_date=${r.getDate(0)}")
-              scopeWrite(table, dates.toSeq.sorted)
+                .toSeq
+            rewriteFiles(table, Schemas.downsampledPartitioned, "bucket_date",
+                touchedByRanges(table, Seq((winLo, winHi, doomedSorted))),
+                extraScope = gapDates) { old =>
+              val recomputed = Downsample.aggregateRaw(
+                  fact.join(doomedIds, Seq("stream_id"), "left_semi")
+                    .where(unix_micros(col("ts")) >= lit(winLo) &&
+                      unix_micros(col("ts")) < lit(winHi + durUs)), g)
+                .join(purged, Seq("stream_id", "bucket_start"), "left_semi")
+                .withColumn("bucket_date", to_date(col("bucket_start")))
+              old.join(purged, Seq("stream_id", "bucket_start"), "left_anti")
+                .unionByName(recomputed)
             }
-            // a purely-gap-bucket upsert touches no existing rollup file
-            val old =
-              if (touched.isEmpty)
-                spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                  Schemas.downsampledPartitioned)
-              else spark.read.option("basePath", tablePath(table))
-                .schema(Schemas.downsampledPartitioned)
-                .parquet(touched.toSeq.sorted
-                  .map(f => s"${tablePath(table)}/$f"): _*)
-            val keptRows = old.join(purged,
-              Seq("stream_id", "bucket_start"), "left_anti")
-            val recomputed = Downsample.aggregateRaw(
-                fact.join(doomedIds, Seq("stream_id"), "left_semi")
-                  .where(unix_micros(col("ts")) >= lit(winLo) &&
-                    unix_micros(col("ts")) < lit(winHi + durUs)), g)
-              .join(purged, Seq("stream_id", "bucket_start"), "left_semi")
-              .withColumn("bucket_date", to_date(col("bucket_start")))
-            keptRows.unionByName(recomputed)
-              .write.mode(SaveMode.Append).partitionBy("bucket_date")
-              .parquet(tablePath(table))
           }
         } finally rdds.foreach(_.unpersist(blocking = false))
       }
@@ -2071,12 +2018,10 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
             ranges.coalesce(1).write.mode(SaveMode.Append)
               .parquet(tablePath("raw_deletes"))
           case DeleteMode.CopyOnWrite =>
-            val groups = Seq((loUs, hiUs, doomedSorted))
-            rewriteMinusRanges("raw", rawSchemaPartitioned,
-              "dp_date", retireTouchedByRanges("raw", groups), ranges, hinted)
-            rewriteMinusRanges("derived", Schemas.rawDatapoints,
-              "stream_id", retireTouchedByRanges("derived", groups), ranges,
-              hinted)
+            factTables.foreach { case (table, schema, partCol) =>
+              rewriteMinusRanges(table, schema, partCol,
+                Seq((loUs, hiUs, doomedSorted)), ranges, hinted)
+            }
         }
         // crash seam for tests: after the fact-table mutation, before the
         // rollup repair — isolation must be total (nothing visible)
@@ -2315,10 +2260,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
             // (point ranges, lo_us = hi_us); survivors land as fresh files.
             // Past the collect bound the matched-keys frame is batch-scale
             // with no size guarantee — no broadcast hint there.
-            rewriteMinusRanges("raw", rawSchemaPartitioned,
-              "dp_date",
-              retireTouchedByRanges("raw",
-                Seq((usOfTs(loTs), usOfTs(hiTs), sidsSorted))),
+            rewriteMinusRanges("raw", rawSchemaPartitioned, "dp_date",
+              Seq((usOfTs(loTs), usOfTs(hiTs), sidsSorted)),
               matchedKeys, hinted = sidsSorted.isDefined)
           }
           // touched dates come from the single validation aggregation above
@@ -2369,11 +2312,10 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       val groups = rangeRows.groupBy(r => (r._2, r._3)).toSeq.map {
         case ((lo, hi), rs) => (lo, hi, Some(rs.map(_._1).sorted.toIndexedSeq))
       }
-      rewriteMinusRanges("raw", rawSchemaPartitioned,
-        "dp_date", retireTouchedByRanges("raw", groups), ranges)
-      rewriteMinusRanges("derived", Schemas.rawDatapoints,
-        "stream_id", retireTouchedByRanges("derived", groups), ranges)
-      retireFiles("raw_deletes", Seq(""))
+      factTables.foreach { case (table, schema, partCol) =>
+        rewriteMinusRanges(table, schema, partCol, groups, ranges)
+      }
+      retireFiles("raw_deletes", committedFiles("raw_deletes"))
       ()
     }
     rangeRows.size.toLong
@@ -2850,35 +2792,61 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * SKIPPING: files whose manifest min/max stats provably miss the
     * predicate are dropped from the plan before Spark ever sees them —
     * pruning below partition granularity, exactly what a table format's
-    * per-file stats buy. A file survives the sid check iff ANY requested
-    * id falls inside its [sidMin, sidMax] bounds (binary search per file,
-    * so a snapshot with many files pays O(log |ids|) each). Files without
-    * the relevant stat are never skipped, so this is always a
-    * correctness-neutral subset of the snapshot.
+    * per-file stats buy. A derived-table file survives the sid check iff
+    * its `stream_id=` directory's id is requested ([[dirStream]]); any
+    * other file iff ANY requested id falls inside its [sidMin, sidMax]
+    * bounds and its bloom (binary search per file, so a snapshot with many
+    * files pays O(log |ids|) each). Files without the relevant stat are
+    * never skipped, so this is always a correctness-neutral subset of the
+    * snapshot.
     */
   private def keepFile(snap: Snapshot, table: String, f: String,
                        skipRange: Option[(Long, Long)],
-                       skipStreams: Option[IndexedSeq[String]]): Boolean =
-    snap.stats.get((table, f)) match {
-      case None => true
-      case Some(st) =>
-        val tsOk = skipRange.forall { case (lo, hi) =>
-          st.tsMax >= lo && st.tsMin <= hi
-        }
-        val sidOk = skipStreams.forall { sids =>
-          val boundsOk = (st.sidMin, st.sidMax) match {
+                       skipStreams: Option[IndexedSeq[String]]): Boolean = {
+    val st = snap.stats.get((table, f))
+    val tsOk = skipRange.forall { case (lo, hi) =>
+      st.forall(s => s.tsMax >= lo && s.tsMin <= hi)
+    }
+    val sidOk = skipStreams.forall { sids =>
+      dirStream(table, f) match {
+        case Some(sid) => anyIdInRange(sids, sid, sid)
+        case None => st.forall { s =>
+          val boundsOk = (s.sidMin, s.sidMax) match {
             case (Some(a), Some(b)) => anyIdInRange(sids, a, b)
             case _ => true
           }
           // the bloom catches what bounds cannot: a multi-stream file
           // whose [min, max] admits ids it does not actually contain
-          boundsOk && (st.sidBloom match {
-            case Some(bits) => sids.exists(sidBloomMaybeContains(bits, _))
-            case None => true
-          })
+          boundsOk && s.sidBloom.forall(bits => sids.exists(sidBloomMaybeContains(bits, _)))
         }
-        tsOk && sidOk
+      }
     }
+    tsOk && sidOk
+  }
+
+  /** The stream id of a derived-table file, read from its `stream_id=`
+    * directory: exact, since the derived table is partitioned by stream
+    * and each of its files holds one stream. None for other tables and
+    * for a file outside such a directory (or in the null partition).
+    */
+  private def dirStream(table: String, f: String): Option[String] =
+    if (table != "derived" || !f.startsWith("stream_id=")) None
+    else {
+      val seg = f.substring("stream_id=".length).takeWhile(_ != '/')
+      if (seg == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) None
+      else Some(ExternalCatalogUtils.unescapePathName(seg))
+    }
+
+  /** The one stream id every row of `f` provably holds: its derived
+    * directory ([[dirStream]]), else footer stream-id bounds with
+    * min == max (recorded only for files with no null stream id, see
+    * [[footerStats]]).
+    */
+  private def soleStream(snap: Option[Snapshot], table: String,
+                         f: String): Option[String] =
+    dirStream(table, f).orElse(snap.flatMap(_.stats.get((table, f)))
+      .filter(st => st.sidMin.isDefined && st.sidMin == st.sidMax)
+      .flatMap(_.sidMin))
 
   /** Does the SORTED `sorted` contain any element in `[lo, hi]`? Binary
     * search for the first element ≥ lo, then one bound check.
@@ -2929,9 +2897,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
             Some(indexedReadCache.computeIfAbsent(key, _ =>
               indexedRead(snap.get, table, schema, keptSorted,
                 partCol, tsCol)))
-          case None =>
-            Some(spark.read.option("basePath", tablePath(table)).schema(schema)
-              .parquet(kept.toSeq.sorted.map(f => s"${tablePath(table)}/$f"): _*))
+          case None => Some(readFiles(table, schema, kept))
         }
       // an explicitly PINNED historical snapshot must never fall through
       // to the live directory: a legacy-era manifest that does not cover
@@ -3051,16 +3017,6 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
         end.map(us).getOrElse(Long.MaxValue)))
     }
 
-  /** `rawDatapoints` with optional time bounds applied as PARTITION-PRUNING
-    * `dp_date` predicates on the appended side (the derived side is
-    * stream_id-partitioned; its rows flow through unpruned and the caller's
-    * exact `ts` predicate still applies to both). Both sides are snapshot
-    * reads ([[tableReadOpt]]): a torn append OR a torn rewrite (delete
-    * purge, compaction, derived refresh) leaves readers on the previous
-    * consistent snapshot — rewrites append new files and logically retire
-    * old ones, so the pre-mutation file set stays intact on disk until the
-    * new manifest commits (and until vacuum, after).
-    */
   /** The snapshot's ACTIVE row-level delete ranges (merge-on-read files a
     * [[deleteDatapoints]] commit published and no [[applyDeletes]] has
     * rewritten away yet), or None when the snapshot carries none — the
@@ -3133,7 +3089,17 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     }
   }
 
-  /** `evolved = true` serves the raw table's declared extra columns (as
+  /** `rawDatapoints` with optional time bounds applied as PARTITION-PRUNING
+    * `dp_date` predicates on the appended side (the derived side is
+    * stream_id-partitioned; its rows flow through unpruned and the caller's
+    * exact `ts` predicate still applies to both). Both sides are snapshot
+    * reads ([[tableReadOpt]]): a torn append OR a torn rewrite (delete
+    * purge, compaction, derived refresh) leaves readers on the previous
+    * consistent snapshot — rewrites append new files and logically retire
+    * old ones, so the pre-mutation file set stays intact on disk until the
+    * new manifest commits (and until vacuum, after).
+    *
+    * `evolved = true` serves the raw table's declared extra columns (as
     * of `asOfVersion`, or current) alongside the base fields — the
     * changefeed's delete-decode needs the voided rows' extras, not a
     * null-filled shadow of them. Derived rows null-fill the extras (the
@@ -3200,13 +3166,14 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * commit itself wrote).
     *
     * Stream-scoped counts (`streamIds`) ride the same path: a file
-    * counts from the manifest only when its stats also PROVE stream
-    * purity — `sidMin == sidMax` and that one id is requested (string
-    * bounds cannot prove subset membership for a wider range, and the
-    * bloom is one-sided) — otherwise it joins the boundary scan with the
-    * exact `stream_id IN` predicate. Per-stream files (the derived
-    * table's layout, or a z-ordered day at high `maxRecordsPerFile`
-    * resolution) make most of the table provably pure.
+    * counts from the manifest only when it PROVABLY holds one requested
+    * stream ([[soleStream]]: a derived file's `stream_id=` directory, or
+    * footer bounds with `sidMin == sidMax` — string bounds cannot prove
+    * subset membership for a wider range, and the bloom is one-sided) —
+    * otherwise it joins the boundary scan with the exact `stream_id IN`
+    * predicate. Per-stream files (the derived table's layout, or a
+    * z-ordered day at high `maxRecordsPerFile` resolution) make most of
+    * the table provably pure.
     *
     * Pinned (`asOfVersion`) counts follow the same contract as every
     * other time-travel read: a snapshot that does not cover a table fails
@@ -3267,16 +3234,9 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     // deletes provably did not reach
     val delRanges =
       if (applyRowDeletes) deleteRangesList(snap) else Seq.empty
-    def sidMayContain(st: FileStats, sid: String): Boolean = {
-      val boundsOk = (st.sidMin, st.sidMax) match {
-        case (Some(a), Some(b)) => a <= sid && sid <= b
-        case _ => true
-      }
-      boundsOk && st.sidBloom.forall(bits => sidBloomMaybeContains(bits, sid))
-    }
-    def delOverlaps(st: FileStats): Boolean =
+    def delOverlaps(s: Snapshot, table: String, f: String): Boolean =
       delRanges.exists { case (sid, lo, hi) =>
-        st.tsMax >= lo && st.tsMin <= hi && sidMayContain(st, sid)
+        keepFile(s, table, f, Some((lo, hi)), Some(IndexedSeq(sid)))
       }
     def filtered(df: DataFrame): DataFrame = {
       val withStart = start.map(t => df.where(col(tsColName) >= lit(t))).getOrElse(df)
@@ -3297,18 +3257,15 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
               st.rows.isDefined && range.forall { case (lo, hi) =>
                 st.tsMin >= lo && st.tsMax <= hi
               } && sidSet.forall(set =>
-                st.sidMin.isDefined && st.sidMin == st.sidMax &&
-                  set(st.sidMin.get)) && !delOverlaps(st)
+                soleStream(snap, table, f).exists(set)) &&
+                !delOverlaps(s, table, f)
             }
           }
           val metaRows = interior.iterator
             .map(f => s.stats((table, f)).rows.get).sum
           val scanned =
             if (boundary.isEmpty) 0L
-            else filtered(spark.read.option("basePath", tablePath(table))
-              .schema(schema)
-              .parquet(boundary.toSeq.sorted
-                .map(f => s"${tablePath(table)}/$f"): _*)).count()
+            else filtered(readFiles(table, schema, boundary)).count()
           metaRows + scanned
         case None if asOfVersion.nonEmpty && snap.isDefined =>
           throw new IllegalStateException(
@@ -3328,9 +3285,9 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * (delete purge, compaction, derived refresh) only retired this
     * version's files logically, so the read is bit-identical until an
     * aggressive vacuum reclaims them (then it fails at planning, loudly).
-    * Registry METADATA is not time-travelled: the registry is a
-    * swap-atomic dimension outside the manifest chain (documented on
-    * [[snapshotVersions]]'s scope).
+    * Registry metadata travels too, through its own surface: each manifest
+    * records the registry generation live at its commit (`registry=g<N>`),
+    * which [[streamsAt]] serves.
     */
   def rawDatapointsAt(version: Long): DataFrame =
     rawDatapointsInRange(None, None, Some(version))
@@ -3823,7 +3780,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
             s"restore: snapshot $version does not cover table '$t' " +
               "(pre-coverage legacy manifest) — the table's state at that " +
               "version is unknowable; reprocess instead of restoring")
-        retireFiles(t, Seq(""))
+        retireFiles(t, committedFiles(t))
         if (targetFiles.nonEmpty) {
           val missing = targetFiles -- listFilesUnder(t)
           if (missing.nonEmpty)
@@ -4011,8 +3968,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       // commit and the rebuild see empty rollups, exactly as the previous
       // physical delete behaved — but a crash mid-reprocess leaves the
       // pre-reprocess rollups intact and still served
-      Granularity.ladder.foreach(g =>
-        retireFiles(s"rollup/granularity=${g.name}", Seq("")))
+      Granularity.ladder.map(g => s"rollup/granularity=${g.name}")
+        .foreach(t => retireFiles(t, committedFiles(t)))
       // reset every stream's per-granularity watermark
       if (hasStreams)
         swapRegistry(
@@ -4038,12 +3995,13 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * rewrite — bit-identical data, gated by `q_compaction` — that restores
     * both: O(1) files per partition and tight per-file (stream_id, time)
     * ranges, so stream-selective and time-range scans skip whole row
-    * groups. The Delta/Iceberg spelling is `OPTIMIZE … ZORDER BY`; plain
-    * parquet here, so affected partitions are materialized lineage-free
-    * (the rewrite targets the very path being read) and replaced via
-    * dynamic partition overwrite. At cluster scale add a max-records-per-
-    * file split instead of strict one-file-per-partition; single-writer
-    * per warehouse as with every mutation verb.
+    * groups. The Delta/Iceberg spelling is `OPTIMIZE … ZORDER BY`. Like
+    * every rewrite it goes through [[rewriteFiles]]: the clustered files
+    * are appended beside the fat partitions' files, which are retired in
+    * the same commit (they stay on disk for older snapshots until vacuum).
+    * [[compactZOrder]] is the max-records-per-file split for partitions
+    * too big for one file; single-writer per warehouse as with every
+    * mutation verb.
     *
     * Returns per-table (data files before, after).
     */
@@ -4074,69 +4032,47 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
           .toOption.exists(d => !d.before(lo) && !d.after(hi))
     }
     /** Rewrite every partition whose MANIFEST-REFERENCED file count
-      * exceeds the cap: read exactly those files through the snapshot
-      * (never the live directory — orphans from torn mutations are
-      * neither merged nor adopted), append one fresh clustered file per
-      * partition value, retire the old files. Counts ("files before/
-      * after") are snapshot counts: retired-but-unvacuumed garbage never
-      * makes a partition look fat again.
+      * exceeds the cap through [[rewriteFiles]]: exactly those files are
+      * read through the snapshot (never the live directory — orphans from
+      * torn mutations are neither merged nor adopted) and one fresh
+      * clustered file per partition value is appended. Counts ("files
+      * before/after") are snapshot counts: retired-but-unvacuumed garbage
+      * never makes a partition look fat again.
       */
     def compactTable(table: String,
                      schema: org.apache.spark.sql.types.StructType,
-                     partCol: String, sortCols: Seq[String]): (Long, Long) = {
-      val files = rawSnapshot.flatMap(_.tableFiles(table))
-        .getOrElse(listFilesUnder(table))
-      val byPart = files.toSeq.map(_.split('/').head)
+                     partCol: String): (Long, Long) = {
+      val files = committedFiles(table)
+      def partOf(f: String) = f.split('/').head
+      val byPart = files.toSeq.map(partOf)
         .filter(_.startsWith(partCol + "="))
         .groupBy(identity).view.mapValues(_.size.toLong).toMap
-      val before = byPart.values.sum
       val fat = byPart.filter { case (p, n) =>
         n > maxFilesPerPartition && partInScope(p)
-      }.keys.toSeq.sorted
-      var retiredN = 0L
-      if (fat.nonEmpty) {
-        scopeWrite(table, fat)
-        val old = retireFiles(table, fat)
-        retiredN = old.size.toLong
-        val slice = spark.read.option("basePath", tablePath(table)).schema(schema)
-          .parquet(old.toSeq.sorted.map(f => s"${tablePath(table)}/$f"): _*)
-        // hash-cluster on the partition value so every value's rows land in
-        // ONE task (one output file each); the within-task sort leads with
-        // partCol to keep values contiguous for the partitioned writer. No
-        // checkpoint needed: the source files are immutable until vacuum,
-        // so the append never reads paths it is replacing.
-        slice.repartition(col(partCol))
-          .sortWithinPartitions((partCol +: sortCols).map(col): _*)
-          .write.mode(SaveMode.Append).partitionBy(partCol)
-          .parquet(tablePath(table))
-      }
-      (before, before - retiredN + writtenSoFar(table).size)
+      }.keySet
+      val old = files.filter(f => fat(partOf(f)))
+      // hash-cluster on the partition value so every value's rows land in
+      // ONE task (one output file each); the within-task sort leads with
+      // partCol to keep values contiguous for the partitioned writer, then
+      // clusters by (stream_id, time)
+      val sortCols = partCol +: Seq("stream_id", tableLayout(table).get._2)
+        .filterNot(_ == partCol)
+      rewriteFiles(table, schema, partCol, old)(
+        _.repartition(col(partCol)).sortWithinPartitions(sortCols.map(col): _*))
+      val before = byPart.values.sum
+      (before, before - old.size + writtenSoFar(table).size)
     }
     withCommit("compact") {
       // the per-table compactions are independent read→append pipelines
-      // over different paths — run them as concurrent Spark jobs (same
-      // pattern as the delete purges) so a 9-table pass costs the slowest
-      // table, not the sum; the commit bookkeeping they share is
-      // concurrent by construction
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val jobs: Seq[(String, Future[(Long, Long)])] =
-        Seq("raw" -> Future(compactTable("raw",
-            rawSchemaPartitioned, "dp_date",
-            Seq("stream_id", "ts")))) ++
-          // the derived table is stream-partitioned (no date axis): it
-          // joins a FULL compaction only — a scoped run leaves it alone
-          (if (scopeDates.isEmpty)
-            Seq("derived" -> Future(compactTable("derived",
-              Schemas.rawDatapoints, "stream_id", Seq("ts"))))
-          else Seq.empty) ++
-          Granularity.ladder.map(g => s"rollup/${g.name}" ->
-            Future(compactTable(s"rollup/granularity=${g.name}",
-              Schemas.downsampledPartitioned, "bucket_date",
-              Seq("stream_id", "bucket_start"))))
-      jobs.map { case (k, f) =>
-        k -> Await.result(f, scala.concurrent.duration.Duration.Inf)
-      }.toMap
+      // over different paths; the commit bookkeeping they share is
+      // concurrent by construction. The derived table is
+      // stream-partitioned (no date axis): it joins a FULL compaction
+      // only — a scoped run leaves it alone
+      val tables = dataTables.filter(t => scopeDates.isEmpty || t._1 != "derived")
+      tables.map(_._1.replace("/granularity=", "/")).zip(
+        Concurrency.inParallel(tables.map { case (table, schema, partCol) =>
+          () => compactTable(table, schema, partCol)
+        })).toMap
     }
   }
 
@@ -4245,9 +4181,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     // whole table. Date-granularity prune on the partition directory
     // names; untouched partitions keep their files and stats verbatim.
     // An empty scope is a true no-op: no commit version is spent.
-    def scopedParts(): Seq[String] = {
-      val files = rawSnapshot.flatMap(_.tableFiles("raw"))
-        .getOrElse(listFilesUnder("raw"))
+    def scopedFiles(): Set[String] = {
       val dateLo = start.map(t => t.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate)
       val dateHi = end.map(t => t.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate)
       def inScope(part: String): Boolean =
@@ -4255,29 +4189,36 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
           .toOption.forall(d =>
             dateLo.forall(lo => !d.isBefore(lo)) &&
               dateHi.forall(hi => !d.isAfter(hi)))
-      files.toSeq.map(_.split('/').head)
-        .filter(_.startsWith("dp_date=")).distinct.sorted.filter(inScope)
+      committedFiles("raw").filter { f =>
+        val part = f.split('/').head
+        part.startsWith("dp_date=") && inScope(part)
+      }
     }
-    if (scopedParts().isEmpty) (0L, 0L)
+    if (scopedFiles().isEmpty) (0L, 0L)
     else withCommit("compact") {
       // re-resolve under the writer lock — the advisory pre-check only
       // decided whether a commit is worth opening at all
-      val parts = scopedParts()
-      if (parts.isEmpty) (0L, 0L)
-      else zorderRewrite(parts, maxRecordsPerFile)
+      val old = scopedFiles()
+      if (old.isEmpty) (0L, 0L)
+      else zorderRewrite(old, maxRecordsPerFile)
     }
   }
 
-  /** The clustered-rewrite body of [[compactZOrder]], already scoped to
-    * the partitions being rewritten and running inside its commit.
+  /** The clustered-rewrite body of [[compactZOrder]]: rewrites the raw
+    * files `old` (whole `dp_date` partitions) inside its commit.
     */
-  private def zorderRewrite(parts: Seq[String],
+  private def zorderRewrite(old: Set[String],
                             maxRecordsPerFile: Long): (Long, Long) = {
-    scopeWrite("raw", parts)
-    val old = retireFiles("raw", parts)
-    val slice = spark.read.option("basePath", rawPath)
-      .schema(rawSchemaPartitioned)
-      .parquet(old.toSeq.sorted.map(f => s"$rawPath/$f"): _*)
+    rewriteFiles("raw", rawSchemaPartitioned, "dp_date", old,
+      maxRecordsPerFile = Some(maxRecordsPerFile))(zOrdered(_, old))
+    (old.size.toLong, writtenSoFar("raw").size.toLong)
+  }
+
+  /** `slice` (the raw files `old`) range-clustered on the Morton key of
+    * (stream rank, ts offset) within each `dp_date`, in the raw schema's
+    * column order.
+    */
+  private def zOrdered(slice: DataFrame, old: Set[String]): DataFrame = {
     val nStreams = math.max(registry.rows.size.toLong, 1L)
     // stream ranks, SIZE-ADAPTIVE: a plain `Window.orderBy(stream_id)`
     // coalesces the registry into ONE task — fine (and cheapest: no
@@ -4334,10 +4275,6 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       // restore the exact schema column order (the join moved
       // stream_id to the front) — order-preserving projection
       .select(rawSchemaPartitioned.fieldNames.toSeq.map(col): _*)
-      .write.mode(SaveMode.Append)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("dp_date").parquet(rawPath)
-    (old.size.toLong, writtenSoFar("raw").size.toLong)
   }
 
   /** Finalized downsampled table at granularity `g` (read shape of S3) —
@@ -4720,27 +4657,18 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       // clears it (its files stay on disk for older snapshots until vacuum)
       val prevSidecar =
         if (full) None else commitRead("derive_prev", derivePrevSchema)
-      retireFiles("derive_prev", Seq(""))
+      retireFiles("derive_prev", committedFiles("derive_prev"))
       // bootstrapping streams re-derive their full history: retire their
       // current slices (files stay until vacuum; readers on the previous
       // snapshot keep them until this commit lands). In the full refresh
       // every stream bootstraps, so the whole table goes.
-      if (full) retireFiles("derived", Seq(""))
+      if (full) retireFiles("derived", committedFiles("derived"))
       else if (anyBootstrap) {
-        val segs = rawSnapshot.flatMap(_.tableFiles("derived"))
-          .getOrElse(listFilesUnder("derived"))
-          .map(_.split('/').head).filter(_.startsWith("stream_id="))
-          .map(d => (d, unescapePartitionValue(d.stripPrefix("stream_id="))))
-          .toSeq
-        if (segs.nonEmpty) {
-          import spark.implicits._
-          val bootDirs = segs.toDF("dir", "stream_id")
-            .join(work.where(col("_lo") === Long.MinValue)
-              .select(col("derived_id").as("stream_id")), Seq("stream_id"),
-              "left_semi")
-            .select("dir").collect().map(_.getString(0))
-          if (bootDirs.nonEmpty) retireFiles("derived", bootDirs.toSeq)
-        }
+        // a local collect: `work` is the in-memory registry generation
+        val boots = work.where(col("_lo") === Long.MinValue)
+          .select("derived_id").collect().map(_.getString(0)).toSet
+        retireFiles("derived",
+          committedFiles("derived").filter(f => dirStream("derived", f).exists(boots)))
       }
       scopeWrite("derived")
       // the bounded source slice: dp_date partition pruning via the global
@@ -4830,8 +4758,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
         // bootstrap SETS them (its slice was replaced), others extend; and
         // the watermark → hi (the full refresh clears it instead). Derived
         // streams never pass through appendMultiple, so without this they'd
-        // have null bounds — and the bounds-pruned deleteStreams purge
-        // would skip their rollup rows.
+        // have null bounds.
         val emittedBounds = emitted.groupBy("stream_id")
           .agg(min("ts").as("_elo"), max("ts").as("_ehi"))
         val boot = col("_lo") === Long.MinValue

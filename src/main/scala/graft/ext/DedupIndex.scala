@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Persisted dedup index — the INCREMENTAL ingest story for X1/X2: build
   * the MinHash/exact index over the existing corpus ONCE, then dedup each
@@ -96,7 +97,7 @@ object DedupIndex {
       .join(broadcast(dead), Seq("doc_id"), "left_semi").count()
     if (present == 0L) return 0L
     VersionedIndex.publish(spark, path, "data", VersionedIndex.Carry) { (_, dir) =>
-      VersionedIndex.copyTable(spark, cur, dir, "params")
+      VersionedIndex.copyTable(spark, cur, dir, "params", paramsSchema)
       VersionedIndex.writeTombstones(spark, cur, dir, "doc_id", Some(dead))
     }
     present
@@ -155,7 +156,7 @@ object DedupIndex {
                           textCol: String, idCol: String): Unit = {
     val spark = docs.sparkSession
     val (n, bands, rowsPerBand) = paramsAt(spark, cur)
-    VersionedIndex.copyTable(spark, cur, dir, "params")
+    VersionedIndex.copyTable(spark, cur, dir, "params", paramsSchema)
     VersionedIndex.writeTombstones(spark, cur, dir, "doc_id")
     writeSides(docs, s"$dir/data", n, bands, rowsPerBand, textCol, idCol)
   }
@@ -177,7 +178,7 @@ object DedupIndex {
     // dirs in the committed version (see Ivf.compactIndex)
     if (readSide(spark, path, cur, "exact").isEmpty) return false
     VersionedIndex.publish(spark, path, "data", VersionedIndex.Full) { (_, dir) =>
-      VersionedIndex.copyTable(spark, cur, dir, "params")
+      VersionedIndex.copyTable(spark, cur, dir, "params", paramsSchema)
       // independent merged-side writes into the unpublished version dir —
       // overlap them; the commit marker still lands strictly after
       graft.Concurrency.inParallel[Unit](
@@ -321,19 +322,27 @@ object DedupIndex {
     } finally { sh.unpersist(); () }
   }
 
+  /** A version's `params` table, read with its schema: inferring it costs
+    * a Spark job.
+    */
+  private val paramsSchema = StructType(Seq(StructField("n", IntegerType),
+    StructField("bands", IntegerType), StructField("rows_per_band", IntegerType),
+    StructField("probe_hash", LongType)))
+
   /** The banding params of index version `dir`, checked against this
     * runtime's hashing scheme.
     */
   private def paramsAt(spark: org.apache.spark.sql.SparkSession,
                        dir: String): (Int, Int, Int) = {
-    val row = spark.read.parquet(s"$dir/params")
-      .select("n", "bands", "rows_per_band", "probe_hash").head()
+    val row = spark.read.schema(paramsSchema).parquet(s"$dir/params").head()
     val (n, bands, rowsPerBand) = (row.getInt(0), row.getInt(1), row.getInt(2))
     val expected = probeHash(bands, rowsPerBand)
-    if (row.getLong(3) != expected)
+    // a params table written without the probe reads it as null
+    val stored = if (row.isNullAt(3)) None else Some(row.getLong(3))
+    if (!stored.contains(expected))
       throw new IllegalStateException(
         s"dedup index at $dir was built under a different hashing scheme " +
-          s"(stored probe ${row.getLong(3)}, this runtime computes $expected) — " +
+          s"(stored probe ${stored.getOrElse("none")}, this runtime computes $expected) — " +
           "MurmurHash3/Random internals differ from build time; stored band " +
           "hashes would never collide with freshly computed signatures. " +
           "Rebuild the index with buildIndex on this runtime.")

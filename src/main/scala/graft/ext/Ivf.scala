@@ -187,6 +187,8 @@ object Ivf {
   private val pqCellSchema = StructType(Seq(StructField("vec_id", LongType),
     StructField("codes", ArrayType(IntegerType)), StructField("norm", DoubleType),
     StructField("cell", IntegerType)))
+  private val pqSchema = StructType(Seq(StructField("sub", IntegerType),
+    StructField("code", IntegerType), StructField("centroid", ArrayType(FloatType))))
 
   /** `(cell, centroid, norm)` rows of a version's centroid table. */
   private type Centroids = Array[(Int, Array[Float], Double)]
@@ -245,7 +247,7 @@ object Ivf {
                         cur: String, dir: String): Unit = {
     val s = VersionedIndex.io(spark, cur)
     if (s.exists(s"$cur/centroids")) copyCentroids(spark, cur, dir)
-    if (s.exists(s"$cur/pq")) VersionedIndex.copyTable(spark, cur, dir, "pq")
+    if (s.exists(s"$cur/pq")) VersionedIndex.copyTable(spark, cur, dir, "pq", pqSchema)
   }
 
   /** PUBLIC read surface for a version's inverted file: the union of its
@@ -734,7 +736,7 @@ object Ivf {
     // takedown tombstones included); the codes shards share by reference
     // like the plain index's vectors
     val cents = copyCentroids(spark, cur, dir)
-    VersionedIndex.copyTable(spark, cur, dir, "pq")
+    VersionedIndex.copyTable(spark, cur, dir, "pq", pqSchema)
     VersionedIndex.writeTombstones(spark, cur, dir, "vec_id")
     writePqCells(newVecs, dir, cents, model, vecCol, idCol)
   }
@@ -888,7 +890,7 @@ object Ivf {
   private def loadPqModel(spark: org.apache.spark.sql.SparkSession,
                           dir: String): PqModel = {
     import spark.implicits._
-    val pqRows = spark.read.parquet(s"$dir/pq")
+    val pqRows = spark.read.schema(pqSchema).parquet(s"$dir/pq")
       .select(col("sub"), col("code"), col("centroid"))
       .as[(Int, Int, Array[Float])].collect()
     val mM = pqRows.map(_._1).max + 1

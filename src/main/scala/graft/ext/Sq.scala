@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** SQ8 scalar-quantized vector index — the memory-bandwidth middle ground
   * between the brute float32 scan and product quantization: each dimension
@@ -146,7 +147,7 @@ object Sq {
                           vecCol: String, idCol: String): Unit = {
     val spark = newVecs.sparkSession
     val (lo, hi) = readParams(spark, cur)
-    VersionedIndex.copyTable(spark, cur, dir, "params")
+    VersionedIndex.copyTable(spark, cur, dir, "params", paramsSchema)
     VersionedIndex.writeTombstones(spark, cur, dir, "vec_id")
     writeCodes(newVecs, s"$dir/codes", lo, hi, vecCol, idCol)
   }
@@ -175,7 +176,7 @@ object Sq {
     val live = codesOf(spark, path, cur)
     if (live.isEmpty) return false
     VersionedIndex.publish(spark, path, "codes", VersionedIndex.Full) { (_, dir) =>
-      VersionedIndex.copyTable(spark, cur, dir, "params")
+      VersionedIndex.copyTable(spark, cur, dir, "params", paramsSchema)
       live.write.mode(SaveMode.Overwrite).parquet(s"$dir/codes")
     }
     true
@@ -194,7 +195,7 @@ object Sq {
     if (present == 0L) return 0L
     VersionedIndex.publish(spark, path, "codes", VersionedIndex.Carry) { (cur, dir) =>
       VersionedIndex.writeTombstones(spark, cur, dir, "vec_id", Some(dead))
-      VersionedIndex.copyTable(spark, cur, dir, "params")
+      VersionedIndex.copyTable(spark, cur, dir, "params", paramsSchema)
     }
     present
   }
@@ -299,12 +300,17 @@ object Sq {
       .write.mode(SaveMode.Overwrite).parquet(dir)
   }
 
+  /** A version's `params` table (dim, per-dimension bounds), read with
+    * its schema: inferring it costs a Spark job.
+    */
+  private val paramsSchema = StructType(Seq(StructField("dim", IntegerType),
+    StructField("lo", ArrayType(FloatType)), StructField("hi", ArrayType(FloatType))))
+
   private def readParams(spark: org.apache.spark.sql.SparkSession,
                          dir: String): (Array[Float], Array[Float]) = {
     import spark.implicits._
-    val r = spark.read.parquet(s"$dir/params")
+    spark.read.schema(paramsSchema).parquet(s"$dir/params")
       .select(col("lo"), col("hi")).as[(Array[Float], Array[Float])].head()
-    r
   }
 
   /** Codes side across the shard manifest, tombstones voided. */

@@ -257,10 +257,12 @@ private[graft] object VersionedIndex {
     else None
 
   /** Copy version `cur`'s small table `name` (model parameters) forward
-    * into version `dir`, as one file.
+    * into version `dir`, as one file. Read with its `schema`: inferring it
+    * costs a Spark job.
     */
-  def copyTable(spark: SparkSession, cur: String, dir: String, name: String): Unit =
-    spark.read.parquet(s"$cur/$name").coalesce(1)
+  def copyTable(spark: SparkSession, cur: String, dir: String, name: String,
+                schema: StructType): Unit =
+    spark.read.schema(schema).parquet(s"$cur/$name").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/$name")
 
   /** `df` without the rows whose `idCol` is in version `dir`'s tombstone

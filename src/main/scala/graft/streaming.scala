@@ -246,8 +246,8 @@ object Streaming {
     * through `Datastream.appendBatch`, so rows land dp_date-partitioned AND
     * the registry's earliest/latest bounds advance with them. A plain
     * `ingest` pointed at a warehouse's raw path writes rows the registry
-    * never hears about — degrading the bounds-pruned delete purge to its
-    * full-scan fallback and breaking monotonicity bookkeeping; this sink
+    * never hears about — leaving its bounds stale and breaking
+    * monotonicity bookkeeping; this sink
     * keeps the registry contract on the streaming path. Exactly-once rides
     * the batch-id cursor `appendBatch` commits in the same snapshot
     * manifest as the rows (foreachBatch's own writes are only

@@ -36,6 +36,20 @@ class ConcurrencySpec extends AnyFunSuite {
     assert(boom.getMessage === "boom")
   }
 
+  test("a failure is rethrown only after every sibling thunk has settled") {
+    val finished = new java.util.concurrent.atomic.AtomicInteger
+    intercept[IllegalStateException] {
+      Concurrency.inParallel[Unit](Seq(
+        () => throw new IllegalStateException("first"),
+        () => { Thread.sleep(200); finished.incrementAndGet(); () },
+        () => { Thread.sleep(300); finished.incrementAndGet(); () }),
+        maxConcurrent = 3)
+    }
+    // a sibling still running at the rethrow could touch state the caller
+    // clears on failure (a commit's scope and retirements)
+    assert(finished.get() === 2)
+  }
+
   test("default in-flight bound is capped (guide §2.6), not thunks.size") {
     assert(Concurrency.DefaultMaxConcurrent >= 2)
     assert(Concurrency.DefaultMaxConcurrent <= 4)

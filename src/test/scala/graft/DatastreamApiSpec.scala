@@ -462,6 +462,78 @@ class DatastreamApiSpec extends SparkSpec {
     assert(ds.rawDatapoints.count() == 0)
   }
 
+  test("deleteStreams leaves every table equal to an anti-join of its rows before") {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{col, to_date}
+    val dir = Files.createTempDirectory("graft-ds").toString
+    val ds = new Datastream(spark, dir)
+    ds.ensureStream("k1", Map("fate" -> "keep"))
+    ds.ensureStream("k2", Map("fate" -> "keep", "name" -> "k2"))
+    // `x` takes rows before it is registered: they lie outside its
+    // registry bounds, in files shared with the kept streams
+    ds.appendMultiple(dp(Seq(
+      ("k1", "2023-03-01T00:00:10Z", 1.0), ("k2", "2023-03-01T00:00:20Z", 2.0),
+      ("x", "2023-03-01T00:00:30Z", 3.0))).select("stream_id", "ts", "value"))
+    ds.ensureStream("x", Map("fate" -> "doomed"))
+    ds.ensureStream("y", Map("fate" -> "doomed"))
+    ds.appendMultiple(dp(Seq(
+      ("k1", "2023-06-01T00:00:10Z", 4.0), ("k1", "2023-06-02T00:00:10Z", 7.0),
+      ("k2", "2023-06-01T00:00:20Z", 5.0), ("k2", "2023-06-02T00:00:20Z", 8.0),
+      ("x", "2023-06-01T00:00:30Z", 6.0), ("y", "2023-06-02T00:00:40Z", 9.0),
+      ("y", "2023-06-02T00:01:40Z", 10.0))).select("stream_id", "ts", "value"))
+    ds.ensureStream("dk", Map("fate" -> "keep"),
+      deriveOp = Some("derivative"), derivedFrom = Seq("k1"))
+    ds.ensureStream("dy", Map("fate" -> "doomed"),
+      deriveOp = Some("derivative"), derivedFrom = Seq("y"))
+    ds.updateDerivedStreams()
+    ds.downsampleStreams(ts("2023-07-01T00:00:00Z"))
+    // a pending merge-on-read delete of a kept stream
+    assert(ds.deleteDatapoints(Map("name" -> "k2"),
+      ts("2023-06-02T00:00:15Z"), ts("2023-06-02T00:00:25Z")) === 1L)
+    // a foreign file adopted without stats, holding doomed and kept rows
+    Seq(("x", ts("2023-09-01T00:00:00Z"), 11.0, null: String),
+        ("k2", ts("2023-09-01T00:00:05Z"), 12.0, null: String))
+      .toDF("stream_id", "ts", "value", "value_json")
+      .withColumn("dp_date", to_date(col("ts")))
+      .write.partitionBy("dp_date").mode("append").parquet(s"$dir/raw")
+    ds.adoptRaw()
+    val tables = Seq("raw" -> Schemas.rawDatapointsPartitioned,
+      "derived" -> Schemas.rawDatapoints, "raw_deletes" -> Schemas.rawDeletes) ++
+      Granularity.ladder.map(g =>
+        s"rollup/granularity=${g.name}" -> Schemas.downsampledPartitioned)
+    def rowsOf(table: String, schema: org.apache.spark.sql.types.StructType): Seq[Row] = {
+      val files = ds.plannedFiles(table, None, None)
+      if (files.isEmpty) Seq.empty
+      else spark.read.option("basePath", s"$dir/$table").schema(schema)
+        .parquet(files.toSeq.map(f => s"$dir/$table/$f"): _*)
+        .select(schema.fieldNames.toSeq.map(col): _*).collect().toSeq
+    }
+    def multiset(rows: Seq[Row]) = rows.groupBy(identity).view.mapValues(_.size).toMap
+    val before = tables.map { case (t, s) => t -> rowsOf(t, s) }.toMap
+    assert(Granularity.ladder.forall(g =>
+      before(s"rollup/granularity=${g.name}").exists(_.getAs[String]("stream_id") == "y")))
+    assert(before("raw").count(_.getAs[String]("stream_id") == "x") === 3)
+    assert(before("derived").exists(_.getAs[String]("stream_id") == "dy"))
+    val logicalBefore = ds.rawDatapoints.collect().toSeq
+    val doomed = Seq("x", "y", "dy").toDF("stream_id")
+    assert(ds.deleteStreams(Map("fate" -> "doomed")) === 3L)
+    tables.foreach { case (t, s) =>
+      val expected = if (before(t).isEmpty) Seq.empty[Row]
+        else spark.createDataFrame(spark.sparkContext.parallelize(before(t)), s)
+          .join(doomed, Seq("stream_id"), "left_anti")
+          .select(s.fieldNames.toSeq.map(col): _*).collect().toSeq
+      assert(multiset(rowsOf(t, s)) === multiset(expected), t)
+    }
+    val logicalExpected = spark.createDataFrame(
+        spark.sparkContext.parallelize(logicalBefore), Schemas.rawDatapoints)
+      .join(doomed, Seq("stream_id"), "left_anti")
+      .select(Schemas.rawDatapoints.fieldNames.toSeq.map(col): _*).collect().toSeq
+    assert(multiset(ds.rawDatapoints.collect().toSeq) === multiset(logicalExpected))
+    assert(ds.streams.select("stream_id").as[String].collect().toSet ===
+      Set("k1", "k2", "dk"))
+  }
+
   test("ensure validates granularity strings and derive ops at the door") {
     val ds = freshDs()
     assertThrows[errors.InvalidOperatorArguments](

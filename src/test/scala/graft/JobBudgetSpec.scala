@@ -236,4 +236,59 @@ class JobBudgetSpec extends SparkSpec {
       sinkJobs.mkString("\n----\n") + "\n====\n" +
         (probeJobs ++ plainJobs).mkString("\n----\n"))
   }
+
+  private def fourStreams(): Datastream = {
+    val ds = new Datastream(spark, Files.createTempDirectory("graft-budget").toString)
+    Seq("s1", "s2", "s3", "s4").foreach(s => ds.ensureStream(s, Map("id" -> s)))
+    ds.ensureStream("d1", Map("id" -> "d1"),
+      deriveOp = Some("derivative"), derivedFrom = Seq("s1"))
+    ds.appendMultiple(dp(Seq("s1", "s2", "s3", "s4").flatMap(s => Seq(
+      (s, "2024-01-01T00:00:10Z", 1.0), (s, "2024-01-01T00:01:10Z", 2.0),
+      (s, "2024-01-02T00:00:10Z", 3.0)))).select("stream_id", "ts", "value"))
+    ds.updateDerivedStreams()
+    ds.downsampleStreams(ts("2024-01-03T00:00:00Z"))
+    ds
+  }
+
+  /** Every job `body` launched, whichever thread launched it: a verb that
+    * fans out on a shared pool whose threads predate the job group would
+    * hide its jobs from [[launched]].
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+    }
+    GraftBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      GraftBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    n.get()
+  }
+
+  test("a warm one-stream deleteStreams launches 12 jobs: one file scan, one write per table holding the stream") {
+    val ds = fourStreams()
+    assert(ds.deleteStreams(Map("id" -> "s4")) == 1L)
+    // 3 for the dependency check's broadcasts, 1 `_metadata.file_path`
+    // scan, 7 rewrites (one per table whose files hold s3; d1's derived
+    // files are not even candidates) and 1 registry generation: no job
+    // per table to find the files
+    val n = jobsDuring(assert(ds.deleteStreams(Map("id" -> "s3")) == 1L))
+    assert(n == 12, s"$n jobs")
+  }
+
+  test("a warm Sq.appendToIndex launches 3 jobs: the params table is read with its schema") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-budget-sq").toString
+    val corpus = vectors(96, 19)
+    ext.Sq.buildIndex(corpus.where($"vec_id" < 32), dir)
+    ext.Sq.appendToIndex(corpus.where($"vec_id" >= 32 && $"vec_id" < 64), dir)
+    // the params head, its one-file copy and the codes write: an inferred
+    // params schema would cost one more job at each of the first two
+    val (jobs, _) = launched(ext.Sq.appendToIndex(corpus.where($"vec_id" >= 64), dir))
+    assert(jobs.size == 3, jobs.mkString("\n----\n"))
+  }
 }

@@ -216,6 +216,30 @@ class RowDeleteSpec extends SparkSpec {
     assert(ds.countDatapoints() === 6L)
   }
 
+  test("a copy-on-write delete of one stream retires no derived file of another stream") {
+    val (ds, _) = freshDs
+    seed(ds)
+    ds.ensureStream("da", Map("team" -> "derived-a"),
+      deriveOp = Some("derivative"), derivedFrom = Seq("a"))
+    ds.ensureStream("db", Map("team" -> "derived-b"),
+      deriveOp = Some("derivative"), derivedFrom = Seq("b"))
+    ds.updateDerivedStreams()
+    def derivedFiles(sid: String) =
+      ds.plannedFiles("derived", None, None).filter(_.startsWith(s"stream_id=$sid/"))
+    val dbFiles = derivedFiles("db")
+    assert(dbFiles.nonEmpty)
+    val daRows = ds.rawDatapoints.where(col("stream_id") === "da").count()
+    // `da`'s derivative points at 00:00:40 and 00:01:10 fall in the window
+    assert(ds.deleteDatapoints(Map("team" -> "derived-a"),
+      ts("2024-01-01T00:00:30Z"), ts("2024-01-01T00:01:30Z"),
+      DeleteMode.CopyOnWrite) === 2L)
+    assert(ds.rawDatapoints.where(col("stream_id") === "da").count() === daRows - 2)
+    // each derived file holds one stream (its `stream_id=` directory):
+    // `db`'s files provably hold no `da` row and keep their names
+    assert(derivedFiles("db") === dbFiles)
+    assert(ds.countDatapoints(streamIds = Some(Seq("db"))) === 2L)
+  }
+
   test("deleteDatapointsWhere targets streams via the full tag-query algebra") {
     val (ds, _) = freshDs
     seed(ds)
