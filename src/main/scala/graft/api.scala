@@ -52,7 +52,6 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     */
   private val io = new WarehouseIO(() => WarehouseIO.confOf(spark), warehouse)
 
-  private val streamsPath = s"$warehouse/streams"
   // immutable registry generations (time-travelled metadata): one parquet
   // dir per swap under streams_versions/g<N>, live = max CURRENT.g<N> marker
   private val streamsVersionsPath = s"$warehouse/streams_versions"
@@ -73,8 +72,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
 
   private def rmTree(path: String): Unit = io.rmTree(path)
 
-  /** The live registry generation (max `CURRENT.g<N>` marker), or None on
-    * a warehouse still carrying only the legacy single `streams` dir.
+  /** The live registry generation (max `CURRENT.g<N>` marker), or None
+    * before the first registry swap.
     */
   private def registryGen: Option[Long] = registryHead.map(_._1)
 
@@ -116,8 +115,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
 
   @volatile private var loadedRegistry: Option[Registry] = None
 
-  /** The live registry, loaded at most once per generation. A legacy
-    * single `streams` directory has no generation key and is read per call.
+  /** The live registry, loaded at most once per generation; empty before
+    * the first registry swap.
     */
   private def registry: Registry = registryHead match {
     case head @ Some((g, _)) =>
@@ -126,7 +125,6 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
         loadedRegistry = Some(r)
         r
       }
-    case None if exists(streamsPath) => new Registry(None, readRegistry(streamsPath))
     case None => new Registry(None, Seq.empty)
   }
 
@@ -171,8 +169,6 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     io.writeString(marker, s"g$next")
     loadedRegistry =
       Some(new Registry(Some(next -> io.modificationTime(marker)), rows))
-    // the legacy live dir is never consulted once a generation exists
-    if (exists(streamsPath)) rmTree(streamsPath)
     sweepRegistryGenerations(next)
   }
 
@@ -211,38 +207,6 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       else if (n.contains(".tmp-"))
         rmTree(s"$streamsVersionsPath/$n")
     }
-  }
-
-  /** Startup repair of a crashed directory swap left by older engine
-    * versions, which replaced the legacy `streams` registry and the
-    * `derive_prev` sidecar in place (`.swap-*` temp, `.bak-*` copy): if
-    * the live dir is missing, promote the newest COMMITTED `.swap-*` temp
-    * (it carries parquet's `_SUCCESS` marker — the content the interrupted
-    * swap was promoting), else restore the newest `.bak-*`; then delete
-    * remaining `.swap-*`/`.bak-*` siblings. Nothing writes these any more.
-    */
-  private def recoverSwap(path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val name = p.getName
-    val parent = p.getParent.toString
-    val siblings = io.childNames(parent)
-    val swaps = siblings.filter(_.startsWith(name + ".swap-"))
-    val baks = siblings.filter(_.startsWith(name + ".bak-"))
-    if (!io.exists(path)) {
-      def suffixNanos(n: String, marker: String): Long =
-        try n.substring(name.length + marker.length).toLong
-        catch { case _: NumberFormatException => Long.MinValue }
-      val committed = swaps.filter(s => io.exists(s"$parent/$s/_SUCCESS"))
-      val pick =
-        if (committed.nonEmpty) Some(committed.maxBy(suffixNanos(_, ".swap-")))
-        else baks.sortBy(suffixNanos(_, ".bak-")).lastOption
-      pick.foreach { src =>
-        if (!io.rename(s"$parent/$src", path))
-          throw new IllegalStateException(
-            s"recoverSwap: cannot restore $parent/$src to $path")
-      }
-    }
-    (swaps ++ baks).map(s => s"$parent/$s").filter(io.exists).foreach(rmTree)
   }
 
   // ---- commit log (multi-table mutation atomicity witness) ---------------
@@ -490,24 +454,22 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
 
   // ---- snapshot manifests (multi-table read isolation) --------------------
 
-  /** A committed snapshot: which tables the manifest chain covers and each
-    * covered table's exact relative file set. Readers resolve this instead
-    * of listing directories, so files a torn or in-flight mutation wrote
-    * are invisible until their commit, and files a rewrite logically
-    * retired stay on disk (for older readers / vacuum) but out of plans.
+  /** A committed snapshot: every manifest table's exact relative file
+    * set. Readers resolve this instead of listing directories, so files a
+    * torn or in-flight mutation wrote are invisible until their commit,
+    * and files a rewrite logically retired stay on disk (for older readers
+    * / vacuum) but out of plans.
     */
-  private case class Snapshot(version: Long, covered: Set[String],
+  private case class Snapshot(version: Long,
                               files: Map[String, Set[String]],
                               stats: Map[(String, String), FileStats]) {
-    def tableFiles(table: String): Option[Set[String]] =
-      if (covered(table)) Some(files.getOrElse(table, Set.empty)) else None
+    def tableFiles(table: String): Set[String] = files.getOrElse(table, Set.empty)
   }
 
   private case class ManifestFile(version: Long, parent: Long, depth: Int,
                                   full: Boolean, tables: Set[String],
                                   adds: Seq[(String, String, Option[FileStats])],
                                   removes: Seq[(String, String)],
-                                  legacy: Boolean,
                                   registry: Option[Long],
                                   rawCols: Seq[(String, String)],
                                   txn: Map[String, Long])
@@ -537,8 +499,12 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * its parent — O(mutation) to write, like a Delta/Iceberg commit log
     * entry. Every `FullManifestEvery`-th version is written FULL (all `+`
     * lines, no parent) to bound the resolution chain — the checkpoint
-    * cadence table formats use for exactly this reason. Files without the
-    * header are pre-delta legacy manifests: a full raw-only file list.
+    * cadence table formats use for exactly this reason.
+    *
+    * THE FORMAT FLOOR: a manifest without a `#graft v3` or `v4` header, and
+    * a resolved snapshot whose `tables=` lists (unioned along its delta
+    * chain) miss a manifest table, are refused with
+    * `errors.UnsupportedFormat` — no writer of this engine produces either.
     *
     * Optional header attributes after `tables=`: `registry=g<N>` (the
     * registry generation live at the commit), `rawcols=` (declared raw
@@ -550,14 +516,13 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * committed batch is skipped by construction. `txn=` is re-recorded
     * whole on every commit (carried from the parent), so restore never
     * rewinds a cursor. Readers ignore header attributes they do not know,
-    * so `txn=` needs no protocol bump; a downgraded binary falls back to
-    * its cursor marker files, which stop advancing here.
+    * so `txn=` needs no protocol bump.
     *
     * The optional trailing pair is the file's MIN/MAX of its table's time
     * column (epoch-µs, from the parquet footer the commit just wrote) —
     * the per-file stats a table format keeps for data skipping. Stats are
-    * a pruning HINT only: a file without them (foreign writer, legacy
-    * manifest, unreadable footer) is simply never skipped. Full manifests
+    * a pruning HINT only: a file without them (an adopted foreign file,
+    * an unreadable footer) is simply never skipped. Full manifests
     * carry stats FORWARD from the resolved parent, so the checkpoint never
     * re-reads footers — collection cost stays O(files written this commit).
     *
@@ -568,11 +533,10 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * silently-thinner snapshot (the failure mode the un-validated v2
     * parser had: a line carrying an unknown tag resolved to an unknown
     * arity and the file vanished from the snapshot on a rolling
-    * downgrade). History: v2 = positional stats (+bloom); v3 = v2 plus
-    * the TAGGED `len=`/`rows=` fields — bumped precisely because pre-tag
-    * v2 binaries mis-parse tagged lines; v2-only readers cannot read a
-    * v3 warehouse and now say so instead of dropping its files. This
-    * reader accepts v2 and v3 and always writes v3.
+    * downgrade). v3 added the TAGGED `len=`/`rows=` fields to the
+    * positional stats (+bloom) of v2; v2 is below the format floor. This
+    * reader accepts v3 and v4 and writes v3 (v4 once a raw column is
+    * declared).
     */
   private val ManifestWriteVersion = 3
   // v4 = v3 plus the `rawcols=` header attribute (additive raw-table
@@ -582,7 +546,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   // binaries, whose BASE-schema compactions/CoW rewrites would silently
   // DROP the declared column from every file they rewrite.
   private val ManifestEvolvedWriteVersion = 4
-  private val ManifestReadVersions: Set[Int] = Set(2, 3, 4)
+  private val ManifestReadVersions: Set[Int] = Set(3, 4)
 
   private val FullManifestEvery = 10
 
@@ -609,110 +573,106 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
           "adoptRaw() to re-baseline the warehouse")
     val txt = io.readString(f)
     val lines = txt.split('\n').toSeq.map(_.stripLineEnd).filter(_.nonEmpty)
-    if (!lines.headOption.exists(_.startsWith("#graft ")))
-      ManifestFile(v, -1L, 0, full = true, Set("raw"),
-        lines.map(f => ("raw", f.trim, Option.empty[FileStats]))
-          .filter(_._2.nonEmpty),
-        Seq.empty, legacy = true, registry = None, rawCols = Seq.empty,
-        txn = Map.empty)
-    else {
-      // reader-protocol guard (see the format scaladoc): an unknown
-      // version token means a newer writer whose lines this parser would
-      // mis-read — fail at resolve time, loudly, instead of serving a
-      // silently-thinner snapshot
-      val verTok = lines.head.split(' ').lift(1).getOrElse("")
-      val ver = verTok.stripPrefix("v").toIntOption.filter(_ => verTok.startsWith("v"))
-      if (!ver.exists(ManifestReadVersions.contains))
-        throw new IllegalStateException(
-          s"commitlog: manifest $v requires reader protocol '$verTok' but " +
-            s"this binary reads only ${ManifestReadVersions.toSeq.sorted
-              .map("v" + _).mkString(", ")} — upgrade the engine to read " +
-            "this warehouse (a newer writer committed it)")
-      val attrs = lines.head.split(' ').drop(2)
-        .flatMap(_.split('=') match {
-          case Array(k, rest @ _*) => Some(k -> rest.mkString("="))
-          case _ => None
-        }).toMap
-      val adds = Seq.newBuilder[(String, String, Option[FileStats])]
-      val removes = Seq.newBuilder[(String, String)]
-      def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-      lines.tail.foreach { l =>
-        l.splitAt(1) match {
-          case ("+", rest) =>
-            // tagged fields first (order-free `len=<n>` / `rows=<n>`),
-            // then the positional arities — a positional token can never
-            // start with a tag prefix (strings are URL-encoded, '=' → %3D)
-            val toks = rest.split('\t')
-            def tagged(tag: String) = toks.collectFirst {
-              case s if s.startsWith(tag) => s.stripPrefix(tag).toLongOption
-            }.flatten
-            val len = tagged("len=")
-            val rows = tagged("rows=")
-            toks.filterNot(s => s.startsWith("len=") || s.startsWith("rows=")) match {
-            case Array(t, f) => adds += ((t, f, None))
-            case Array(t, f, mn, mx) =>
-              adds += ((t, f,
-                for (a <- mn.toLongOption; b <- mx.toLongOption)
-                  yield FileStats(a, b, None, None, None, len, rows)))
-            case Array(t, f, mn, mx, smn, smx) =>
-              adds += ((t, f,
-                for (a <- mn.toLongOption; b <- mx.toLongOption)
-                  yield FileStats(a, b, Some(dec(smn)), Some(dec(smx)), None, len, rows)))
-            case arr if arr.length >= 7 =>
-              // 7+ positional fields: parse the prefix this reader knows;
-              // EXTRA trailing positional fields from a NEWER writer are
-              // ignored rather than dropping the file from the snapshot —
-              // losing committed data to an unknown stat would be silent
-              // corruption, losing an unknown stat only costs pruning
-              val Array(t, f, mn, mx, smn, smx, bl) = arr.take(7)
-              val bloom =
-                if (bl.length == 64 && bl.forall(c => c.isDigit ||
-                    (c >= 'a' && c <= 'f')))
-                  scala.util.Try(bl.grouped(16)
-                    .map(java.lang.Long.parseUnsignedLong(_, 16)).toSeq).toOption
-                else None
-              adds += ((t, f,
-                for (a <- mn.toLongOption; b <- mx.toLongOption)
-                  yield FileStats(a, b, Some(dec(smn)), Some(dec(smx)), bloom, len, rows)))
-            // unknown arities (3, 5 — never written by this code) still
-            // name a committed file: keep it stat-less, never drop it
-            case arr if arr.length >= 2 => adds += ((arr(0), arr(1), None))
-            case _ => ()
-          }
-          case ("-", rest) => rest.split('\t') match {
-            case Array(t, f, _*) => removes += ((t, f))
-            case _ => ()
-          }
+    // reader-protocol guard (see the format scaladoc): a version token
+    // this parser does not know is a newer writer whose lines it would
+    // mis-read, or a layout below the format floor — fail at resolve
+    // time, loudly, instead of serving a silently-thinner snapshot
+    val verTok = lines.headOption.filter(_.startsWith("#graft "))
+      .flatMap(_.split(' ').lift(1)).getOrElse("")
+    val ver = verTok.stripPrefix("v").toIntOption.filter(_ => verTok.startsWith("v"))
+    if (!ver.exists(ManifestReadVersions.contains))
+      throw new errors.UnsupportedFormat(
+        s"commitlog: manifest $v requires reader protocol " +
+          s"'${if (verTok.isEmpty) "none (no #graft header)" else verTok}' but " +
+          s"this binary reads only ${ManifestReadVersions.toSeq.sorted
+            .map("v" + _).mkString(", ")} — " +
+          (if (ver.exists(_ > ManifestReadVersions.max))
+            "upgrade the engine to read this warehouse (a newer writer committed it)"
+          else "the warehouse predates the format floor; rebuild it, or " +
+            "adoptRaw() its raw files into a fresh warehouse"))
+    val attrs = lines.head.split(' ').drop(2)
+      .flatMap(_.split('=') match {
+        case Array(k, rest @ _*) => Some(k -> rest.mkString("="))
+        case _ => None
+      }).toMap
+    val adds = Seq.newBuilder[(String, String, Option[FileStats])]
+    val removes = Seq.newBuilder[(String, String)]
+    def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
+    lines.tail.foreach { l =>
+      l.splitAt(1) match {
+        case ("+", rest) =>
+          // tagged fields first (order-free `len=<n>` / `rows=<n>`),
+          // then the positional arities — a positional token can never
+          // start with a tag prefix (strings are URL-encoded, '=' → %3D)
+          val toks = rest.split('\t')
+          def tagged(tag: String) = toks.collectFirst {
+            case s if s.startsWith(tag) => s.stripPrefix(tag).toLongOption
+          }.flatten
+          val len = tagged("len=")
+          val rows = tagged("rows=")
+          toks.filterNot(s => s.startsWith("len=") || s.startsWith("rows=")) match {
+          case Array(t, f) => adds += ((t, f, None))
+          case Array(t, f, mn, mx) =>
+            adds += ((t, f,
+              for (a <- mn.toLongOption; b <- mx.toLongOption)
+                yield FileStats(a, b, None, None, None, len, rows)))
+          case Array(t, f, mn, mx, smn, smx) =>
+            adds += ((t, f,
+              for (a <- mn.toLongOption; b <- mx.toLongOption)
+                yield FileStats(a, b, Some(dec(smn)), Some(dec(smx)), None, len, rows)))
+          case arr if arr.length >= 7 =>
+            // 7+ positional fields: parse the prefix this reader knows;
+            // EXTRA trailing positional fields from a NEWER writer are
+            // ignored rather than dropping the file from the snapshot —
+            // losing committed data to an unknown stat would be silent
+            // corruption, losing an unknown stat only costs pruning
+            val Array(t, f, mn, mx, smn, smx, bl) = arr.take(7)
+            val bloom =
+              if (bl.length == 64 && bl.forall(c => c.isDigit ||
+                  (c >= 'a' && c <= 'f')))
+                scala.util.Try(bl.grouped(16)
+                  .map(java.lang.Long.parseUnsignedLong(_, 16)).toSeq).toOption
+              else None
+            adds += ((t, f,
+              for (a <- mn.toLongOption; b <- mx.toLongOption)
+                yield FileStats(a, b, Some(dec(smn)), Some(dec(smx)), bloom, len, rows)))
+          // unknown arities (3, 5 — never written by this code) still
+          // name a committed file: keep it stat-less, never drop it
+          case arr if arr.length >= 2 => adds += ((arr(0), arr(1), None))
           case _ => ()
         }
+        case ("-", rest) => rest.split('\t') match {
+          case Array(t, f, _*) => removes += ((t, f))
+          case _ => ()
+        }
+        case _ => ()
       }
-      ManifestFile(v,
-        attrs.getOrElse("parent", "-1").toLong,
-        attrs.getOrElse("depth", "0").toInt,
-        attrs.getOrElse("full", "0") == "1",
-        attrs.get("tables").map(_.split(',').filter(_.nonEmpty).toSet)
-          .getOrElse(Set.empty),
-        adds.result(), removes.result(),
-        legacy = false,
-        // registry generation current when this version committed — the
-        // metadata half of the snapshot; absent on pre-generation commits
-        registry = attrs.get("registry").flatMap(_.stripPrefix("g").toLongOption),
-        // additive raw-table schema evolution (protocol v4): the FULL
-        // declared extra-column list, re-recorded by every commit —
-        // `<urlenc(name)>:<urlenc(typeDDL)>,...` in declaration order
-        rawCols = attrs.get("rawcols").toSeq.flatMap(_.split(',').toSeq)
-          .flatMap(_.split(':') match {
-            case Array(n, t) => Some((dec(n), dec(t)))
-            case _ => None
-          }),
-        // batch-sink cursors: `<sink>:<batchId>,...`, re-recorded whole
-        // by every commit, like `rawcols=`
-        txn = attrs.get("txn").toSeq.flatMap(_.split(',').toSeq)
-          .flatMap(_.split(':') match {
-            case Array(k, id) => id.toLongOption.map(k -> _)
-            case _ => None
-          }).toMap)
     }
+    ManifestFile(v,
+      attrs.getOrElse("parent", "-1").toLong,
+      attrs.getOrElse("depth", "0").toInt,
+      attrs.getOrElse("full", "0") == "1",
+      attrs.get("tables").map(_.split(',').filter(_.nonEmpty).toSet)
+        .getOrElse(Set.empty),
+      adds.result(), removes.result(),
+      // registry generation current when this version committed — the
+      // metadata half of the snapshot; absent before the first registry swap
+      registry = attrs.get("registry").flatMap(_.stripPrefix("g").toLongOption),
+      // additive raw-table schema evolution (protocol v4): the FULL
+      // declared extra-column list, re-recorded by every commit —
+      // `<urlenc(name)>:<urlenc(typeDDL)>,...` in declaration order
+      rawCols = attrs.get("rawcols").toSeq.flatMap(_.split(',').toSeq)
+        .flatMap(_.split(':') match {
+          case Array(n, t) => Some((dec(n), dec(t)))
+          case _ => None
+        }),
+      // batch-sink cursors: `<sink>:<batchId>,...`, re-recorded whole
+      // by every commit, like `rawcols=`
+      txn = attrs.get("txn").toSeq.flatMap(_.split(',').toSeq)
+        .flatMap(_.split(':') match {
+          case Array(k, id) => id.toLongOption.map(k -> _)
+          case _ => None
+        }).toMap)
   }
 
   // versions are immutable once committed — resolution memoizes freely
@@ -727,7 +687,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     else {
       val m = parseManifest(v)
       val (pc, pf, ps) =
-        if (m.full || m.legacy || m.parent < 0)
+        if (m.full || m.parent < 0)
           (Set.empty[String], Map.empty[String, Set[String]],
             Map.empty[(String, String), FileStats])
         else resolveManifest(m.parent)
@@ -741,7 +701,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
         files = files.updated(t, files.getOrElse(t, Set.empty) + f)
         st.foreach(s => stats = stats.updated((t, f), s))
       }
-      val covered = pc ++ m.tables ++ (if (m.legacy) Set("raw") else Set.empty)
+      val covered = pc ++ m.tables
       val out = (covered, files, stats)
       resolveCache.put(v, out)
       out
@@ -757,17 +717,30 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   }
 
   /** Newest COMMITTED snapshot, or None on a warehouse with no committed
-    * manifest yet (fresh or pre-manifest legacy) — readers then fall back
-    * to live directories. The newest-version probe is a cheap commit-log
-    * dir listing per read; resolution is memoized per immutable version.
+    * manifest yet — an empty warehouse: nothing on disk is visible before
+    * the first commit. The newest-version probe is a cheap commit-log dir
+    * listing per read; resolution is memoized per immutable version.
     */
   private def rawSnapshot: Option[Snapshot] = {
     val vs = committedVersions
-    vs.lastOption.map { v =>
-      validateLineage(vs, v)
-      val (covered, files, stats) = resolveManifest(v)
-      Snapshot(v, covered, files, stats)
-    }
+    vs.lastOption.map(snapshotOf(vs, _))
+  }
+
+  /** Committed version `v` of `versions` as a snapshot, after the lineage
+    * check ([[validateLineage]]) and the coverage half of the format floor:
+    * the `tables=` lists along its delta chain must cover every manifest
+    * table.
+    */
+  private def snapshotOf(versions: Seq[Long], v: Long): Snapshot = {
+    validateLineage(versions, v)
+    val (covered, files, stats) = resolveManifest(v)
+    val missing = manifestTables.filterNot(covered)
+    if (missing.nonEmpty)
+      throw new errors.UnsupportedFormat(
+        s"commitlog: snapshot $v does not cover table(s) " +
+          s"${missing.mkString(", ")} — the warehouse predates the format " +
+          "floor; rebuild it, or adoptRaw() its raw files into a fresh warehouse")
+    Snapshot(v, files, stats)
   }
 
   /** LINEAGE INVARIANT (reader half of the optimistic commit protocol):
@@ -778,22 +751,21 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * staleness check interleaved, or an operator removed commit markers out
     * of band) and the higher version was built blind to the lower —
     * resolving it would serve a silently-thinner snapshot, so the read
-    * fails at planning instead. Skipped for legacy manifests (no header)
-    * and for the oldest retained version (its parent aged out of the
-    * bounded history — indistinguishable from a genuine first commit).
+    * fails at planning instead. Skipped for the oldest retained version
+    * (its parent aged out of the bounded history — indistinguishable from
+    * a genuine first commit).
     */
   private def validateLineage(versions: Seq[Long], v: Long): Unit = {
     val m = parseManifest(v)
-    if (!m.legacy)
-      versions.filter(_ < v).lastOption.foreach { expected =>
-        if (m.parent != expected)
-          throw new IllegalStateException(
-            s"commitlog: version $v records parent ${m.parent} but the " +
-              s"next-lower committed version is $expected — a concurrent " +
-              "commit was built blind to the other and one update would be " +
-              "silently lost; restore the commit log or reprocess the " +
-              "warehouse")
-      }
+    versions.filter(_ < v).lastOption.foreach { expected =>
+      if (m.parent != expected)
+        throw new IllegalStateException(
+          s"commitlog: version $v records parent ${m.parent} but the " +
+            s"next-lower committed version is $expected — a concurrent " +
+            "commit was built blind to the other and one update would be " +
+            "silently lost; restore the commit log or reprocess the " +
+            "warehouse")
+    }
   }
 
   /** Committed snapshot versions still resolvable, oldest first — the
@@ -820,7 +792,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * contract ([[streamsAt]]: pinned reads resolve tags/validation against
     * THAT generation), so data-and-metadata-travel-together is auditable
     * straight from the log; None for a version whose manifest aged out of
-    * the delta-chain retention or predates registry generations.
+    * the delta-chain retention or committed before the first registry
+    * swap.
     */
   def history: Seq[(Long, String, Option[Long])] = {
     io.childNames(commitLogPath)
@@ -854,9 +827,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
         s"time travel: version $version is not a committed, retained " +
           s"snapshot (retained: ${vs.mkString(", ")}); commit-log history " +
           "is bounded, older versions age out")
-    validateLineage(vs, version)
-    val (covered, files, stats) = resolveManifest(version)
-    Snapshot(version, covered, files, stats)
+    snapshotOf(vs, version)
   }
 
   // ---- commit protocol ----------------------------------------------------
@@ -910,8 +881,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   /** Logically delete `files` of `table` from the snapshot this commit
     * will publish. The files are NOT touched on disk — readers of older
     * snapshots keep working and vacuum reclaims them once unreferenced.
-    * A whole table retires its [[committedFiles]] — on a legacy table, the
-    * LIVE files present at call time, so call before the replacing write.
+    * A whole table retires its [[committedFiles]].
     */
   private def retireFiles(table: String, files: Set[String]): Unit =
     files.foreach(f => retiredFiles.add((table, f)))
@@ -934,18 +904,12 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * would miss this commit's own writes.
     */
   private def commitRead(table: String,
-                         schema: org.apache.spark.sql.types.StructType): Option[DataFrame] =
-    rawSnapshot.flatMap(_.tableFiles(table)) match {
-      case Some(committed) =>
-        import scala.jdk.CollectionConverters._
-        val retired = retiredFiles.asScala.collect { case (t, f) if t == table => f }
-        val files = (committed -- retired) ++ writtenSoFar(table)
-        if (files.isEmpty) None else Some(readFiles(table, schema, files))
-      case None =>
-        if (exists(tablePath(table)))
-          Some(spark.read.schema(schema).parquet(tablePath(table)))
-        else None
-    }
+                         schema: org.apache.spark.sql.types.StructType): Option[DataFrame] = {
+    import scala.jdk.CollectionConverters._
+    val retired = retiredFiles.asScala.collect { case (t, f) if t == table => f }
+    val files = (committedFiles(table) -- retired) ++ writtenSoFar(table)
+    if (files.isEmpty) None else Some(readFiles(table, schema, files))
+  }
 
   /** Read exactly `files` (paths relative to `table`) with `schema` — the
     * one explicit-file-list read. `basePath` makes partition columns and
@@ -1005,21 +969,14 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     factTables ++ Granularity.ladder.map(g => (s"rollup/granularity=${g.name}",
       Schemas.downsampledPartitioned, "bucket_date"))
 
-  /** `table`'s committed files; on a table the manifests do not cover
-    * yet (legacy warehouse), every live file.
-    */
+  /** `table`'s committed files (none before the first commit). */
   private def committedFiles(table: String): Set[String] =
-    rawSnapshot.flatMap(_.tableFiles(table)).getOrElse(listFilesUnder(table))
+    rawSnapshot.fold(Set.empty[String])(_.tableFiles(table))
 
-  /** [[committedFiles]] that the stats test `keep` admits (every live file
-    * of an uncovered table: it has no stats to prune with).
-    */
+  /** [[committedFiles]] that the stats test `keep` admits. */
   private def committedFilesWhere(table: String)(
       keep: (Snapshot, String) => Boolean): Set[String] =
-    rawSnapshot match {
-      case Some(s) if s.covered(table) => s.tableFiles(table).get.filter(keep(s, _))
-      case _ => listFilesUnder(table)
-    }
+    rawSnapshot.fold(Set.empty[String])(s => s.tableFiles(table).filter(keep(s, _)))
 
   /** Run a MULTI-TABLE write sequence inside a write-ahead intent marker —
     * the sandbox-scale stand-in for the Delta/Iceberg commit the mutation
@@ -1052,6 +1009,9 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   private def withCommit[T](op: String, adoptAll: Boolean = false,
                             txn: Option[(String, Long)] = None)(body: => T): T = withWriterLock(op) {
     io.mkdirs(commitLogPath)
+    // resolved before the intent marker, so a warehouse below the format
+    // floor is refused with nothing written
+    val prev = rawSnapshot
     def markerOf(v: Long, suffix: String) = f"$commitLogPath/$v%09d.$suffix"
     def alloc(): Long = 1L + io.childNames(commitLogPath)
       .flatMap(_.split('.').headOption.flatMap(_.toLongOption))
@@ -1088,14 +1048,6 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     adoptedFiles.clear()
     adoptedStats.clear()
     pendingRawCols.clear()
-    val prev = rawSnapshot
-    // Tables the manifest chain does not cover yet adopt their full
-    // PRE-mutation listing as baseline (first-manifest semantics) — the
-    // one-time migration walk for a legacy warehouse; covered tables are
-    // never walked outside declared scopes.
-    val baseline: Map[String, Set[String]] =
-      manifestTables.filterNot(t => prev.exists(_.covered(t)))
-        .map(t => t -> listFilesUnder(t)).toMap
     val out =
       try {
         val r = body
@@ -1110,9 +1062,9 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
         throw e
       }
     // OPTIMISTIC STALENESS CHECK (the second half of the commit CAS): the
-    // snapshot below is assembled against `prev`, captured before the body
-    // ran. If ANOTHER writer committed meanwhile — possible exactly where
-    // the advisory lock has no reach — publishing ours would smuggle a
+    // snapshot below is assembled against `prev`, captured before the
+    // version CAS. If ANOTHER writer committed meanwhile — possible exactly
+    // where the advisory lock has no reach — publishing ours would smuggle a
     // parent pointer past their changes and readers at the higher version
     // would lose one of the two updates silently. The loser ABORTS instead:
     // its intent renames to `.failed` (the torn-mutation path — its data
@@ -1136,10 +1088,10 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
           "mutation (its partial writes are invisible orphans, " +
           "vacuumRaw() reclaims them)")
     }
-    // Assemble the new snapshot per table: (previous ∪ baseline) minus
-    // retirements plus this commit's written files — NEVER a directory
-    // listing on a covered table, so orphans from earlier torn mutations
-    // are not adopted (adoptRaw's full listing is the explicit opt-in).
+    // Assemble the new snapshot per table: previous minus retirements plus
+    // this commit's written files — NEVER a directory listing, so orphans
+    // from earlier torn mutations are not adopted, not even by the first
+    // commit (adoptRaw's full listing is the explicit opt-in).
     import scala.jdk.CollectionConverters._
     val retiredByTable: Map[String, Set[String]] =
       retiredFiles.asScala.toSet[(String, String)].groupMap(_._1)(_._2)
@@ -1151,8 +1103,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       val files =
         if (adoptAll) listFilesUnder(t)
         else {
-          val base = prev.flatMap(_.tableFiles(t))
-            .getOrElse(baseline.getOrElse(t, Set.empty))
+          val base = prev.fold(Set.empty[String])(_.tableFiles(t))
           (base -- retiredByTable.getOrElse(t, Set.empty)) ++
             writtenByTable(t) ++ adoptedByTable.getOrElse(t, Set.empty)
         }
@@ -1186,8 +1137,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     // manifest readers ignore.
     val prevFiles: Map[String, Set[String]] =
       prev.map(_.files).getOrElse(Map.empty)
-    val prevDepth = prev.map(s => parseManifest(s.version))
-      .map(m => if (m.legacy) FullManifestEvery else m.depth).getOrElse(0)
+    val prevDepth = prev.map(s => parseManifest(s.version).depth).getOrElse(0)
     val full = prev.isEmpty || adoptAll || prevDepth + 1 >= FullManifestEvery
     // the registry generation live as this version commits — the metadata
     // half of the snapshot (mutation bodies that swap the registry do so
@@ -1276,7 +1226,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     manifestVersions.takeRight(20).foreach { v =>
       keep += v
       var m = parseManifest(v)
-      while (!m.full && !m.legacy && m.parent >= 0 && !keep(m.parent) &&
+      while (!m.full && m.parent >= 0 && !keep(m.parent) &&
         manifestVersions.contains(m.parent)) {
         keep += m.parent
         m = parseManifest(m.parent)
@@ -1322,8 +1272,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * were never visible through the snapshot read path), plus files a
     * rewrite (delete purge, compaction, derived refresh) logically retired
     * once every retained snapshot referencing them has aged out. Covers
-    * every manifest table; tables the manifest chain does not cover yet
-    * are untouched. Empty partition directories left behind are pruned.
+    * every manifest table. Empty partition directories left behind are
+    * pruned.
     * Under the writer lock but NOT a commit: visible state is unchanged by
     * construction. Returns the number of files removed.
     *
@@ -1337,18 +1287,20 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   def vacuumRaw(retainVersions: Int = Int.MaxValue): Long = withWriterLock("vacuum_raw") {
     require(retainVersions >= 1, "retainVersions must be >= 1")
     val versions = committedVersions
-    if (versions.isEmpty) 0L // no snapshot era yet: nothing is garbage
+    if (versions.isEmpty) 0L // nothing is garbage before the first commit
     else {
+      // the current snapshot first: a warehouse below the format floor is
+      // refused before any file is deleted
+      snapshotOf(versions, versions.last)
       // protect the union of every RETAINED snapshot's file set — a reader
       // holding one of those versions must keep resolving
       val resolved = versions.takeRight(retainVersions.min(versions.size))
         .map(resolveManifest)
-      val coveredNow = resolveManifest(versions.last)._1
       val referenced: Map[String, Set[String]] = resolved
         .flatMap(_._2.toSeq)
         .groupMapReduce(_._1)(_._2)(_ ++ _)
       var removed = 0L
-      coveredNow.foreach { t =>
+      manifestTables.foreach { t =>
         val doomed = listFilesUnder(t) -- referenced.getOrElse(t, Set.empty)
         doomed.foreach { rel =>
           if (io.deleteFile(s"${tablePath(t)}/$rel")) removed += 1
@@ -1406,8 +1358,17 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     torn.length
   }
 
-  // run recovery once per facade instance, before any registry read
-  Seq(streamsPath, derivePrevPath).foreach(recoverSwap)
+  // THE FORMAT FLOOR at open: one root listing refuses what older engines
+  // left at the warehouse root (the single `streams` registry directory,
+  // `.swap-*`/`.bak-*` directory-swap leftovers, `*_batch_hwm*` cursor
+  // markers) before anything is read or written
+  io.childNames(warehouse).find(n => n == "streams" || n.contains(".swap-") ||
+      n.contains(".bak-") || n.contains("_batch_hwm")).foreach { n =>
+    throw new errors.UnsupportedFormat(
+      s"warehouse $warehouse holds '$n', a layout below the format floor " +
+        "(no writer of this engine produces it); rebuild the warehouse, or " +
+        "adoptRaw() its raw files into a fresh one")
+  }
   locally {
     val torn = tornOperations
     if (torn.nonEmpty)
@@ -1417,8 +1378,6 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   }
 
   // ---- registry -----------------------------------------------------------
-
-  private def hasStreams: Boolean = registryGen.isDefined || exists(streamsPath)
 
   /** The live registry as a local frame: reading it runs no Spark job. */
   def streams: DataFrame = registry.frame
@@ -1576,7 +1535,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     */
   def updateTags(tagQuery: Map[String, String],
                  tags: Map[String, String]): Long = {
-    if (!hasStreams || tags.isEmpty) return 0L
+    if (tags.isEmpty) return 0L
     val matched = StreamRegistry.findStreams(streams, tagQuery)
       .select(col("stream_id"), lit(true).as("_m"))
     val n = matched.collect().length.toLong // local rows: no Spark job
@@ -1600,7 +1559,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * ignored. Returns the number of matched streams.
     */
   def removeTags(tagQuery: Map[String, String], keys: Seq[String]): Long = {
-    if (!hasStreams || keys.isEmpty) return 0L
+    if (keys.isEmpty) return 0L
     val matched = StreamRegistry.findStreams(streams, tagQuery)
       .select(col("stream_id"), lit(true).as("_m"))
     val n = matched.collect().length.toLong
@@ -1611,6 +1570,18 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       .drop("_m")
     withWriterLock("remove_tags")(swapRegistry(updated))
     n
+  }
+
+  /** Refuse while a surviving derived stream of `rows` depends on a
+    * stream of `doomed` (a frame with a `stream_id` column), naming up to
+    * five `[source,derived]` pairs.
+    */
+  private def refuseOutstandingDependencies(rows: Seq[StreamMeta],
+                                            doomed: DataFrame): Unit = {
+    val viol = StreamRegistry.outstandingDependencies(rows, doomed)
+    if (viol.nonEmpty)
+      throw new errors.OutstandingDependenciesError(
+        viol.take(5).map { case (d, src) => s"[$src,$d]" }.mkString(", "))
   }
 
   /** Refuses while surviving derived streams depend on doomed ones
@@ -1644,12 +1615,10 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * streams deleted.
     */
   def deleteStreams(tagQuery: Map[String, String]): Long = {
-    val all = streams
+    val reg = registry
+    val all = reg.frame
     val doomed0 = StreamRegistry.findStreams(all, tagQuery)
-    val violSample = StreamRegistry.outstandingDependencies(all, doomed0)
-      .limit(5).collect()
-    if (violSample.nonEmpty)
-      throw new errors.OutstandingDependenciesError(violSample.mkString(", "))
+    refuseOutstandingDependencies(reg.rows, doomed0)
     // from the in-memory registry generation: local rows the registry swap
     // at the end cannot change
     val doomedSorted = doomed0.select("stream_id").collect()
@@ -1945,11 +1914,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     if (start.after(end))
       throw new errors.InvalidTimestamp(
         s"delete_datapoints: start $start is after end $end")
-    val all = streams
-    val violSample = StreamRegistry.outstandingDependencies(all, doomed0)
-      .limit(5).collect()
-    if (violSample.nonEmpty)
-      throw new errors.OutstandingDependenciesError(violSample.mkString(", "))
+    refuseOutstandingDependencies(registry.rows, doomed0)
     // BOUNDED driver collect (the house head(max+1) fail-fast): the id set
     // drives driver-side manifest pruning and must survive any registry
     // rewrite underneath — but a takedown matching millions of streams must
@@ -2200,11 +2165,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
             joined.where(isBadNumeric).select("stream_id").distinct()
               .collect().map(_.getString(0)).mkString(", "))
       val sidDf = points.select("stream_id").distinct()
-      val violSample = StreamRegistry.outstandingDependencies(streams, sidDf)
-        .limit(5).collect()
-      if (violSample.nonEmpty)
-        throw new errors.OutstandingDependenciesError(
-          violSample.mkString(", "))
+      refuseOutstandingDependencies(registry.rows, sidDf)
       val loTs = flags.getTimestamp(4)
       val hiTs = flags.getTimestamp(5)
       val touchedDates = flags.getSeq[java.sql.Date](6)
@@ -2535,8 +2496,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     }
     val schema = rawSchemaAt(asOfVersion)
     val cols = schema.fieldNames.toSeq.map(col)
-    val raw = tableReadFrom(snap, "raw", rawSchemaPartitionedAt(asOfVersion),
-        pinned = asOfVersion.nonEmpty)
+    val raw = tableReadFrom(snap, "raw", rawSchemaPartitionedAt(asOfVersion))
       .map(_.select(cols: _*))
       .getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
@@ -2739,25 +2699,12 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   private[graft] def ingestHighWatermark: Long = batchCursor("ingest")
 
   /** `sink`'s cursor as the newest committed manifest records it (memoized
-    * per version: one `commitlog/` listing, no Spark job). While that
-    * manifest has no entry for the sink, the warehouse predates manifest
-    * cursors: read the marker files older versions wrote, never written
-    * again (the highest `<sink>_batch_hwm.v<id>`, or a plain
-    * `<sink>_batch_hwm` file).
+    * per version: one `commitlog/` listing, no Spark job), −1 when it
+    * records none.
     */
   private def batchCursor(sink: String): Long =
     committedVersions.lastOption.flatMap(v => parseManifest(v).txn.get(sink))
-      .getOrElse {
-        val base = s"${sink}_batch_hwm"
-        val markers = io.childNames(warehouse)
-          .filter(_.startsWith(s"$base.v"))
-          .flatMap(_.stripPrefix(s"$base.v").toLongOption)
-        val plain =
-          if (io.exists(s"$warehouse/$base"))
-            io.readString(s"$warehouse/$base").trim.toLongOption
-          else None
-        (markers ++ plain).foldLeft(-1L)(math.max)
-      }
+      .getOrElse(-1L)
 
   /** Every datapoint the engine serves: the appended fact table plus the
     * derived streams' sibling table (maintained by `updateDerivedStreams`).
@@ -2767,15 +2714,14 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     */
   def rawDatapoints: DataFrame = rawDatapointsInRange(None, None)
 
-  /** SNAPSHOT table read: when the newest committed manifest covers
-    * `table`, the plan reads EXACTLY that file set (explicit file list +
+  /** SNAPSHOT table read: the plan reads EXACTLY the file set the newest
+    * committed manifest records for `table` (explicit file list +
     * basePath, so partition-column values and pruning behave as with a
     * directory read) — files an in-flight or crashed mutation wrote after
     * that commit are invisible, and files a rewrite retired stay out of
-    * the plan even though they are still on disk. Uncovered (legacy)
-    * tables fall back to the live directory. None ⇔ definitely no rows
-    * (covered-and-empty, or uncovered with no directory) so callers can
-    * skip union/read nodes outright.
+    * the plan even though they are still on disk. None ⇔ definitely no
+    * rows (no commit yet, or no files) so callers can skip union/read
+    * nodes outright.
     */
   private def tableReadOpt(table: String,
                            schema: org.apache.spark.sql.types.StructType): Option[DataFrame] =
@@ -2871,53 +2817,36 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   private def tableReadFrom(snap: Option[Snapshot], table: String,
                             schema: org.apache.spark.sql.types.StructType,
                             skipRange: Option[(Long, Long)] = None,
-                            skipStreams: Option[IndexedSeq[String]] = None,
-                            pinned: Boolean = false): Option[DataFrame] =
-    snap.flatMap(_.tableFiles(table)) match {
-      case Some(files) if files.isEmpty => None
-      case Some(files) =>
-        val kept =
-          if (skipRange.isEmpty && skipStreams.isEmpty) files
-          else files.filter(keepFile(snap.get, table, _, skipRange, skipStreams))
-        if (kept.isEmpty) None
-        else tableLayout(table) match {
-          case Some((partCol, tsCol)) =>
-            // memoized per (version, table, file set, schema): snapshot
-            // file sets are immutable per version, so the analyzed frame
-            // (and its FileIndex's statuses) are freely reusable — a
-            // lifecycle verb re-reading the same slice pays relation
-            // construction once
-            val keptSorted = kept.toSeq.sorted
-            val filesDigest = java.security.MessageDigest.getInstance("MD5")
-              .digest(keptSorted.mkString("\n").getBytes("UTF-8"))
-              .map("%02x".format(_)).mkString
-            val key = s"${snap.get.version}|$table|" +
-              s"${schema.fieldNames.mkString(",")}|$filesDigest"
-            if (indexedReadCache.size > 256) indexedReadCache.clear()
-            Some(indexedReadCache.computeIfAbsent(key, _ =>
-              indexedRead(snap.get, table, schema, keptSorted,
-                partCol, tsCol)))
-          case None => Some(readFiles(table, schema, kept))
-        }
-      // an explicitly PINNED historical snapshot must never fall through
-      // to the live directory: a legacy-era manifest that does not cover
-      // `table` cannot say what that table held at its commit, and
-      // silently serving current files would contradict the snapshotAt
-      // contract ("fails at planning, never returns partial rows")
-      case None if pinned && snap.isDefined =>
-        throw new IllegalStateException(
-          s"time travel: snapshot ${snap.get.version} does not cover table " +
-            s"'$table' (pre-coverage legacy manifest) — the table's state " +
-            "at that version is unknowable; read it live or pin a newer " +
-            "version")
-      case None if exists(tablePath(table)) =>
-        Some(spark.read.schema(schema).parquet(tablePath(table)))
-      case None => None
+                            skipStreams: Option[IndexedSeq[String]] = None): Option[DataFrame] =
+    snap.flatMap { s =>
+      val files = s.tableFiles(table)
+      val kept =
+        if (skipRange.isEmpty && skipStreams.isEmpty) files
+        else files.filter(keepFile(s, table, _, skipRange, skipStreams))
+      if (kept.isEmpty) None
+      else tableLayout(table) match {
+        case Some((partCol, tsCol)) =>
+          // memoized per (version, table, file set, schema): snapshot
+          // file sets are immutable per version, so the analyzed frame
+          // (and its FileIndex's statuses) are freely reusable — a
+          // lifecycle verb re-reading the same slice pays relation
+          // construction once
+          val keptSorted = kept.toSeq.sorted
+          val filesDigest = java.security.MessageDigest.getInstance("MD5")
+            .digest(keptSorted.mkString("\n").getBytes("UTF-8"))
+            .map("%02x".format(_)).mkString
+          val key = s"${s.version}|$table|" +
+            s"${schema.fieldNames.mkString(",")}|$filesDigest"
+          if (indexedReadCache.size > 256) indexedReadCache.clear()
+          Some(indexedReadCache.computeIfAbsent(key, _ =>
+            indexedRead(s, table, schema, keptSorted, partCol, tsCol)))
+        case None => Some(readFiles(table, schema, kept))
+      }
     }
 
   /** Partition layout + manifest-stats time column per warehouse table,
-    * for the Catalyst FileIndex read path; None = table served by the
-    * legacy explicit-file-list read.
+    * for the Catalyst FileIndex read path; None = a table served by a
+    * plain explicit-file-list read ([[readFiles]]).
     */
   private def tableLayout(table: String): Option[(String, String)] = table match {
     case "raw" => Some(("dp_date", "ts"))
@@ -2931,8 +2860,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * plan-time FS calls, exactly how Delta/Iceberg serve scans from the
     * log alone (safe because committed files are immutable; the synthetic
     * mtime is 0, so the `_metadata.file_modification_time` pseudo-column
-    * is not meaningful on this path). Stat-less files (legacy manifests,
-    * foreign writers) fall back to one listing per containing directory.
+    * is not meaningful on this path). Stat-less files (adopted foreign
+    * files) fall back to one listing per containing directory.
     */
   private def statusesFor(snap: Snapshot, table: String, rels: Seq[String])
       : Seq[(String, org.apache.hadoop.fs.FileStatus)] = {
@@ -2959,7 +2888,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     synth ++ listed
   }
 
-  /** Serve a covered snapshot read through [[plans.GraftFileIndex]]: the
+  /** Serve a snapshot read through [[plans.GraftFileIndex]]: the
     * hint-pruned manifest file set becomes a Catalyst [[org.apache.spark
     * .sql.execution.datasources.FileIndex]], so partition filters AND
     * pushed data filters (time bounds, stream-id sets) prune files INSIDE
@@ -2999,7 +2928,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       case None => Set.empty
       case Some(snap) =>
         val sids = streamIds.map(_.sorted.toIndexedSeq)
-        snap.tableFiles(table).getOrElse(Set.empty)
+        snap.tableFiles(table)
           .filter(keepFile(snap, table, _, usSkipRange(start, end), sids))
     }
 
@@ -3020,15 +2949,10 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   /** The snapshot's ACTIVE row-level delete ranges (merge-on-read files a
     * [[deleteDatapoints]] commit published and no [[applyDeletes]] has
     * rewritten away yet), or None when the snapshot carries none — the
-    * zero-cost common case every read path checks first. Snapshots that
-    * predate `raw_deletes` coverage (pre-feature manifests) simply have no
-    * deletes: this is NOT a pinned-table-coverage error like the fact
-    * tables', because absence of the table is absence of deletes, not an
-    * unknowable state.
+    * zero-cost common case every read path checks first.
     */
   private def deleteRangesDF(snap: Option[Snapshot]): Option[DataFrame] =
-    snap.filter(_.covered("raw_deletes"))
-      .map(_.files.getOrElse("raw_deletes", Set.empty))
+    snap.map(_.tableFiles("raw_deletes"))
       .filter(_.nonEmpty)
       .map(fs => spark.read.schema(Schemas.rawDeletes)
         .parquet(fs.toSeq.sorted
@@ -3129,11 +3053,10 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     val raw = tableReadFrom(snap, "raw",
         if (evolved) rawSchemaPartitionedAt(asOfVersion)
         else Schemas.rawDatapointsPartitioned,
-        skip, sids, pinned = asOfVersion.nonEmpty)
+        skip, sids)
       .map(df => bounds.foldLeft(df)(_.where(_)).select(cols: _*))
       .getOrElse(emptyRaw)
-    val fact = tableReadFrom(snap, "derived", Schemas.rawDatapoints, skip, sids,
-        pinned = asOfVersion.nonEmpty) match {
+    val fact = tableReadFrom(snap, "derived", Schemas.rawDatapoints, skip, sids) match {
       // full schema supplied: the stream_id partition column takes its type
       // from the schema instead of partition-value inference
       case Some(der) =>
@@ -3157,7 +3080,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * constantly, served Delta-style from the commit log: a file whose
     * manifest stats prove it lies FULLY inside the range contributes its
     * recorded exact `rows=` count with zero I/O; only boundary-straddling
-    * files (and stat-less legacy files) are actually scanned, with the
+    * files (and stat-less adopted files) are actually scanned, with the
     * exact µs predicate applied. Unbounded counts over a stats-covered
     * table touch NO data files at all. At 100 TB that is the difference
     * between a O(boundary files) metadata operation and a full scan —
@@ -3246,37 +3169,26 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       if (delRanges.isEmpty) scoped
       else minusDeleted(scoped, deleteRangesDF(snap))
     }
-    def tableCount(table: String,
-                   schema: org.apache.spark.sql.types.StructType): Long =
-      snap.flatMap(_.tableFiles(table)) match {
-        case Some(files) =>
-          val s = snap.get
-          val kept = files.filter(keepFile(s, table, _, range, sids))
-          val (interior, boundary) = kept.partition { f =>
-            s.stats.get((table, f)).exists { st =>
-              st.rows.isDefined && range.forall { case (lo, hi) =>
-                st.tsMin >= lo && st.tsMax <= hi
-              } && sidSet.forall(set =>
-                soleStream(snap, table, f).exists(set)) &&
-                !delOverlaps(s, table, f)
-            }
-          }
-          val metaRows = interior.iterator
-            .map(f => s.stats((table, f)).rows.get).sum
-          val scanned =
-            if (boundary.isEmpty) 0L
-            else filtered(readFiles(table, schema, boundary)).count()
-          metaRows + scanned
-        case None if asOfVersion.nonEmpty && snap.isDefined =>
-          throw new IllegalStateException(
-            s"time travel: snapshot ${snap.get.version} does not cover " +
-              s"table '$table' (pre-coverage legacy manifest) — the " +
-              "table's state at that version is unknowable")
-        case None if exists(tablePath(table)) =>
-          filtered(spark.read.schema(schema).parquet(tablePath(table))).count()
-        case None => 0L
+    def tableCount(s: Snapshot, table: String,
+                   schema: org.apache.spark.sql.types.StructType): Long = {
+      val kept = s.tableFiles(table).filter(keepFile(s, table, _, range, sids))
+      val (interior, boundary) = kept.partition { f =>
+        s.stats.get((table, f)).exists { st =>
+          st.rows.isDefined && range.forall { case (lo, hi) =>
+            st.tsMin >= lo && st.tsMax <= hi
+          } && sidSet.forall(set =>
+            soleStream(snap, table, f).exists(set)) &&
+            !delOverlaps(s, table, f)
+        }
       }
-    tables.map { case (t, sch) => tableCount(t, sch) }.sum
+      val metaRows = interior.iterator
+        .map(f => s.stats((table, f)).rows.get).sum
+      val scanned =
+        if (boundary.isEmpty) 0L
+        else filtered(readFiles(table, schema, boundary)).count()
+      metaRows + scanned
+    }
+    snap.fold(0L)(s => tables.map { case (t, sch) => tableCount(s, t, sch) }.sum)
   }
 
   /** TIME TRAVEL: the logical fact table (raw ∪ derived) exactly as the
@@ -3297,8 +3209,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     */
   def rollupAt(g: Granularity, version: Long): DataFrame =
     tableReadFrom(Some(snapshotAt(version)),
-        s"rollup/granularity=${g.name}", Schemas.downsampledPartitioned,
-        pinned = true)
+        s"rollup/granularity=${g.name}", Schemas.downsampledPartitioned)
       .getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         Schemas.downsampledPartitioned))
@@ -3439,9 +3350,9 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
         if (skippedRewrite) Seq.empty
         else m.adds.filter { case (t, _, _) => tables.contains(t) }
           .groupBy(_._1).toSeq.sortBy(_._1).map { case (t, tAdds) =>
-            val snap = Snapshot(v, Set(t), Map(t -> tAdds.map(_._2).toSet),
+            val snap = Snapshot(v, Map(t -> tAdds.map(_._2).toSet),
               tAdds.collect { case (_, rel, Some(st)) => ((t, rel), st) }.toMap)
-            project(tableReadFrom(Some(snap), t, tables(t), pinned = true).get)
+            project(tableReadFrom(Some(snap), t, tables(t)).get)
               .withColumn("_change_type", lit("insert"))
               .withColumn("_commit_version", lit(v))
               .withColumn("_commit_op", lit(op))
@@ -3548,9 +3459,9 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
           // a synthetic one-commit snapshot: exactly the files this commit
           // added to `t`, with their manifest stats so the read keeps the
           // zero-listing FileIndex path and data skipping
-          val snap = Snapshot(v, Set(t), Map(t -> tAdds.map(_._2).toSet),
+          val snap = Snapshot(v, Map(t -> tAdds.map(_._2).toSet),
             tAdds.collect { case (_, rel, Some(st)) => ((t, rel), st) }.toMap)
-          project(tableReadFrom(Some(snap), t, tables(t), pinned = true).get)
+          project(tableReadFrom(Some(snap), t, tables(t)).get)
             .withColumn("_commit_version", lit(v))
             .withColumn("_commit_op", lit(op))
         }
@@ -3675,11 +3586,11 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
           applied += 1L
         }
       } else if (rawAdds.nonEmpty) {
-        val snap = Snapshot(v, Set("raw"),
+        val snap = Snapshot(v,
           Map("raw" -> rawAdds.map(_._2).toSet),
           rawAdds.collect { case (_, rel, Some(st)) => (("raw", rel), st) }.toMap)
         val rows = tableReadFrom(Some(snap), "raw",
-          rawSchemaPartitioned, pinned = true).get.select(cols: _*)
+          rawSchemaPartitioned).get.select(cols: _*)
         dest.appendBatch(rows, v)
         applied += 1L
       }
@@ -3688,7 +3599,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   }
 
   /** EXTERNAL-READER snapshot export — Delta's `GENERATE
-    * symlink_format_manifest`: writes, per covered table of the current
+    * symlink_format_manifest`: writes, per table of the current
     * (or pinned) snapshot, a text manifest listing the ABSOLUTE paths of
     * exactly that snapshot's data files, so an engine without a graft
     * reader (DuckDB, Trino, Hive, a plain `spark.read.parquet`) can scan
@@ -3711,8 +3622,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     // apply merge-on-read delete files — exporting a snapshot with active
     // row deletes would hand it rows the engine's own readers void. Refuse
     // loudly; applyDeletes() makes the snapshot physically clean.
-    if (snap.covered("raw_deletes") &&
-        snap.files.getOrElse("raw_deletes", Set.empty).nonEmpty)
+    if (snap.tableFiles("raw_deletes").nonEmpty)
       throw new IllegalStateException(
         s"generateSymlinkManifest: snapshot ${snap.version} carries active " +
           "merge-on-read row deletes an external reader cannot apply — run " +
@@ -3722,8 +3632,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     var n = 0L
     // raw_deletes (empty past the guard) and the derive_prev sidecar are
     // engine-internal — not tables external readers should see
-    snap.covered.toSeq.filterNot(Set("raw_deletes", "derive_prev")).sorted.foreach { t =>
-      val files = snap.files.getOrElse(t, Set.empty).toSeq.sorted
+    manifestTables.filterNot(Set("raw_deletes", "derive_prev")).sorted.foreach { t =>
+      val files = snap.tableFiles(t).toSeq.sorted
       io.writeString(s"$outDir/${t.replace('/', '_')}.txt",
         files.map(f => s"${tablePath(t)}/$f").mkString("\n"))
       n += files.size
@@ -3760,26 +3670,16 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     *
     * Fails loudly when: `version` is outside the retained window; a
     * needed historical file was reclaimed by an aggressive
-    * `vacuumRaw(retainVersions=…)`; the target predates manifest coverage
-    * of a table that currently has data (its state at `version` is
-    * unknowable); or the target's registry generation was reclaimed out
+    * `vacuumRaw(retainVersions=…)`; or the target's registry generation
+    * was reclaimed out
     * of band. Each failure aborts BEFORE the commit marker lands, so the
     * warehouse is never left half-restored.
     */
   def restore(version: Long): Unit = {
     val target = snapshotAt(version)
     withCommit("restore") {
-      // a target from before `derive_prev` became a manifest table recorded
-      // no sidecar: keep the current one
-      manifestTables.filter(t => t != "derive_prev" || target.covered(t)).foreach { t =>
-        val targetFiles =
-          if (target.covered(t)) target.files.getOrElse(t, Set.empty)
-          else Set.empty[String]
-        if (!target.covered(t) && listFilesUnder(t).nonEmpty)
-          throw new IllegalStateException(
-            s"restore: snapshot $version does not cover table '$t' " +
-              "(pre-coverage legacy manifest) — the table's state at that " +
-              "version is unknowable; reprocess instead of restoring")
+      manifestTables.foreach { t =>
+        val targetFiles = target.tableFiles(t)
         retireFiles(t, committedFiles(t))
         if (targetFiles.nonEmpty) {
           val missing = targetFiles -- listFilesUnder(t)
@@ -3971,7 +3871,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       Granularity.ladder.map(g => s"rollup/granularity=${g.name}")
         .foreach(t => retireFiles(t, committedFiles(t)))
       // reset every stream's per-granularity watermark
-      if (hasStreams)
+      if (registryGen.isDefined)
         swapRegistry(
           registry.rows.map(_.copy(downsampled_until = Map.empty)))
     }
@@ -4077,10 +3977,10 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   }
 
   /** DESCRIBE DETAIL analog, served from the CURRENT snapshot manifest
-    * with zero data I/O: per covered table, the exact file count, total
+    * with zero data I/O: per manifest table, the exact file count, total
     * bytes (`len=` stats), total rows (`rows=` stats) and the µs time
-    * bounds. A column is null when any file lacks the backing stat
-    * (legacy/foreign writer) — absent, never wrong. At 100 TB this is
+    * bounds. A column is null when any file lacks the backing stat (an
+    * adopted foreign file) — absent, never wrong. At 100 TB this is
     * the table-health dashboard query; nothing here opens a data file.
     */
   def tableDetail: DataFrame = {
@@ -4090,8 +3990,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       rawSnapshot match {
         case None => Seq.empty
         case Some(s) =>
-          s.covered.toSeq.sorted.map { t =>
-            val files = s.files.getOrElse(t, Set.empty).toSeq
+          manifestTables.sorted.map { t =>
+            val files = s.tableFiles(t).toSeq
             val sts = files.flatMap(f => s.stats.get((t, f)))
             def total(get: FileStats => Option[Long]): Option[Long] =
               if (sts.size == files.size && sts.forall(get(_).isDefined))
@@ -4238,8 +4138,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
         ext.Pack.globalRankByKey(
           streams.select(col("stream_id")), "stream_id", "_sr")
     // ts bounds from the manifest stats when EVERY retired file carries
-    // them (zero data I/O); a stat-less file (foreign writer, legacy
-    // manifest) falls back to one min/max aggregate over the slice being
+    // them (zero data I/O); a stat-less file (an adopted foreign file)
+    // falls back to one min/max aggregate over the slice being
     // rewritten anyway — bounds must COVER the data or the offset key
     // goes negative and the clustering silently degenerates
     val sts = rawSnapshot.map(_.stats).getOrElse(Map.empty)
@@ -4422,8 +4322,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
             asOfVersion.map(snapshotAt).orElse(rawSnapshot),
             s"rollup/granularity=${granularity.name}",
             Schemas.downsampledPartitioned,
-            usSkipRange(start, end), Some(IndexedSeq(streamId)),
-            pinned = asOfVersion.nonEmpty)
+            usSkipRange(start, end), Some(IndexedSeq(streamId)))
           .getOrElse(spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             Schemas.downsampledPartitioned)))(_.where(_))

@@ -38,9 +38,8 @@ import org.apache.spark.sql.types._
   *                        bands/shingles/exact mutually torn on a crash
   *                        mid-append — silent recall loss)
   *
-  * A pre-versioned legacy index (root-level bands/shingles/exact/params)
-  * keeps resolving until its next append migrates it. Single-writer per
-  * index, as before; readers are safe against any committed version.
+  * Single-writer per index, as before; readers are safe against any
+  * committed version.
   */
 object DedupIndex {
 
@@ -55,12 +54,9 @@ object DedupIndex {
     */
   def vacuumIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                   retainVersions: Int = 2): Unit =
-    VersionedIndex.vacuum(spark, path, retainVersions, "data",
-      Seq("bands", "shingles", "exact", "params", "data"))
+    VersionedIndex.vacuum(spark, path, retainVersions, "data")
 
-  /** The data-shard roots of the resolved version (legacy indexes with
-    * side tables at the root resolve to `path` itself via the `.` rel).
-    */
+  /** The data-shard roots of the resolved version. */
   private def dataRoots(spark: org.apache.spark.sql.SparkSession, path: String,
                         dir: String): Seq[String] =
     VersionedIndex.shardsOf(spark, path, dir, "data")

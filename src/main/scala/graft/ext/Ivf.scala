@@ -132,9 +132,7 @@ object Ivf {
     * tables of a version become visible in ONE exclusive marker create
     * ([[VersionedIndex.publish]]), so a rebuild or [[refreshIndex]] crash
     * at any instant leaves queries on a complete older version — never a
-    * half-swapped index (pre-versioned layouts without a marker still
-    * resolve to `path` itself, so legacy indexes stay readable and migrate
-    * on their next refresh). On an object store the marker create is the
+    * half-swapped index. On an object store the marker create is the
     * metadata commit a table format provides.
     *
     * Build = the same assignment map `ivfTopK` runs, plus one partitioned
@@ -162,8 +160,7 @@ object Ivf {
 
   /** Directory holding the index tables (`centroids/`, `cells/` or a
     * `shards` manifest): the LIVE version (the newest `CURRENT.v<N>`
-    * marker) — or `path` itself for an index written by a pre-versioned
-    * build — or, with `asOfVersion`, a PINNED historical version.
+    * marker) — or, with `asOfVersion`, a PINNED historical version.
     * Superseded versions stay resolvable until [[vacuumIndex]] reclaims
     * them (retention mirrors the warehouse snapshot contract); a pinned
     * resolve fails loudly on a version that was never committed or whose
@@ -320,8 +317,7 @@ object Ivf {
     */
   def vacuumIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                   retainVersions: Int = 2): Unit =
-    VersionedIndex.vacuum(spark, path, retainVersions, "cells",
-      Seq("cells", "centroids", "pq", "centroids_next", "cells_next"))
+    VersionedIndex.vacuum(spark, path, retainVersions, "cells")
 
   /** Assign `vecs` to their nearest of `cents` and write them as version
     * `dir`'s cell shard, partitioned by cell.

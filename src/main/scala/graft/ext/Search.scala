@@ -415,9 +415,7 @@ object Search {
   /** Reclaim superseded versions past the retention window. */
   def vacuumIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                   retainVersions: Int = 2): Unit =
-    VersionedIndex.vacuum(spark, path, retainVersions, "data",
-      Seq("postings", "doclens", "stats", "data", "tombstones",
-        "stats_adjust"))
+    VersionedIndex.vacuum(spark, path, retainVersions, "data")
 
   private def writeShard(docs: DataFrame, dir: String,
                          textCol: String, idCol: String): Unit = {

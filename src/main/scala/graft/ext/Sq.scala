@@ -111,8 +111,7 @@ object Sq {
 
   def vacuumIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                   retainVersions: Int = 2): Unit =
-    VersionedIndex.vacuum(spark, path, retainVersions, "codes",
-      Seq("codes", "params", "tombstones"))
+    VersionedIndex.vacuum(spark, path, retainVersions, "codes")
 
   def buildIndex(corpus: DataFrame, path: String,
                  vecCol: String = "embedding", idCol: String = "vec_id"): Unit =

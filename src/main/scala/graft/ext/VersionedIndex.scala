@@ -15,9 +15,7 @@ package graft.ext
   *    the version has one, and commits by CREATING `CURRENT.v<N>`
   *    exclusively — the one commit point. Create-if-absent is atomic on
   *    every store class (visible only once closed/PUT), unlike
-  *    overwrite-rename, which is atomic on POSIX but not on HDFS+S3A; a
-  *    legacy single `CURRENT` file (pre-marker layout) keeps resolving
-  *    until the next commit supersedes it;
+  *    overwrite-rename, which is atomic on POSIX but not on HDFS+S3A;
   *  - the live version is the max over the markers;
   *  - a version directory holds either its full data under `defaultSub`
   *    (build/refresh/compaction) or a `shards` manifest naming data roots
@@ -27,6 +25,10 @@ package graft.ext
   *    from the parent marker on every commit (Delta's `SetTransaction`,
   *    as the warehouse manifest's `txn=` attribute), so the batch id
   *    commits atomically with the data it guards;
+  *  - the format floor: a publish or fold on an index root that holds a
+  *    bare `CURRENT` file, or whose live marker has no `txn=` line, fails
+  *    with `errors.UnsupportedFormat` before anything is written — no
+  *    writer of this engine produces either;
   *  - committing NEVER reclaims superseded versions — an in-flight
   *    reader resolved on the old version completes, pinned (`asOf`)
   *    reads keep working; [[vacuum]] is the only reclamation path and
@@ -57,25 +59,15 @@ private[graft] object VersionedIndex {
   def committedVersions(spark: SparkSession, path: String): Seq[Long] =
     markersIn(io(spark, path).childNames(path))
 
-  /** The live version among the root entries `names`. */
-  private def liveIn(s: graft.WarehouseIO, path: String, names: Seq[String]): Option[Long] =
-    markersIn(names).lastOption.orElse(
-      if (names.contains("CURRENT"))
-        Some(s.readString(s"$path/CURRENT").trim.stripPrefix("v").toLong)
-      else None)
+  def currentVersion(spark: SparkSession, path: String): Option[Long] =
+    committedVersions(spark, path).lastOption
 
-  def currentVersion(spark: SparkSession, path: String): Option[Long] = {
-    val s = io(spark, path)
-    liveIn(s, path, s.childNames(path))
-  }
-
-  /** Directory holding the index tables: the LIVE version — or `path`
-    * itself for a pre-versioned legacy layout — or, with `asOf`, a PINNED
-    * historical version that fails loudly when never committed or already
-    * vacuumed.
+  /** Directory holding the index tables: the LIVE version, or with `asOf`
+    * a PINNED historical version; fails loudly when nothing was committed,
+    * or the pinned version never was or was already vacuumed.
     */
   def resolveDir(spark: SparkSession, path: String, asOf: Option[Long]): String = asOf match {
-    case None => currentVersion(spark, path).map(v => s"$path/v$v").getOrElse(path)
+    case None => requireLive(spark, path, "index read")
     case Some(v) =>
       if (!committedVersions(spark, path).contains(v))
         throw new IllegalArgumentException(
@@ -97,27 +89,19 @@ private[graft] object VersionedIndex {
 
   /** The data-shard roots of version dir `dir`, PATH-RELATIVE: the
     * `shards` manifest's entries when present (append-published version),
-    * else the literal `<dirRel>/defaultSub` (full build / legacy layout).
-    * The entry `.` names the index root itself — the legacy pre-versioned
-    * layout whose side tables live directly under `path`.
+    * else `v<N>/defaultSub` (full build).
     */
   def shardRels(spark: SparkSession, path: String, dir: String, defaultSub: String): Seq[String] = {
     val s = io(spark, path)
     val mf = s"$dir/shards"
     if (s.exists(mf))
       s.readString(mf).split('\n').toSeq.map(_.trim).filter(_.nonEmpty)
-    else if (dir == path && !s.exists(s"$path/$defaultSub"))
-      Seq(".") // legacy layout with side tables directly under the root
-    else relRoot(path, s"$dir/$defaultSub")
+    else Seq(s"$dir/$defaultSub".stripPrefix(path + "/"))
   }
-
-  private def relRoot(path: String, abs: String): Seq[String] =
-    Seq(if (abs == path) "." else abs.stripPrefix(path + "/").stripPrefix("/"))
 
   /** [[shardRels]] resolved to absolute paths. */
   def shardsOf(spark: SparkSession, path: String, dir: String, defaultSub: String): Seq[String] =
-    shardRels(spark, path, dir, defaultSub)
-      .map(rel => if (rel == ".") path else s"$path/$rel")
+    shardRels(spark, path, dir, defaultSub).map(rel => s"$path/$rel")
 
   /** How many data shards the LIVE version unions per read — the read
     * amplification a query pays, and the number `compactIndex` resets to
@@ -139,17 +123,16 @@ private[graft] object VersionedIndex {
 
   /** Publish one new version: allocate `v<N>` (the live version + 1), run
     * `write(parentDir, dir)` to write its tables into `dir` (`parentDir`
-    * is the live version's directory, or `path` when none), write the
-    * `shards` manifest the `layout` asks for, and commit by CREATING
-    * `CURRENT.v<N>` — create-fails-if-exists, so two writers colliding on
-    * one version number fail LOUDLY instead of silently double-publishing.
-    * Indexes are single-writer by contract; this guard turns a violated
-    * contract into an error. A crash before the create leaves readers on
-    * the parent and an uncommitted `v<N>/`, which the next publish clears
-    * before it writes (with any batch record a fold attempt left there
-    * before markers carried `txn=`: committed, [[legacyFoldCursor]] would
-    * read it and skip that batch's replay) and [[vacuum]] reclaims.
-    * Superseded versions are retired, never reclaimed here.
+    * is the live version's directory, or `path` when none: only a [[Full]]
+    * version may have no parent), write the `shards` manifest the `layout`
+    * asks for, and commit by CREATING `CURRENT.v<N>` —
+    * create-fails-if-exists, so two writers colliding on one version
+    * number fail LOUDLY instead of silently double-publishing. Indexes are
+    * single-writer by contract; this guard turns a violated contract into
+    * an error. A crash before the create leaves readers on the parent and
+    * an uncommitted `v<N>/`, which the next publish clears before it
+    * writes and [[vacuum]] reclaims. Superseded versions are retired,
+    * never reclaimed here.
     *
     * The marker records `txn=fold:<foldId>` when [[foldBatch]] commits a
     * batch, else the parent's entry unchanged. `crashBeforeCommit` stops
@@ -161,7 +144,10 @@ private[graft] object VersionedIndex {
       write: (String, String) => Unit): Unit = {
     val s = io(spark, path)
     val names = s.childNames(path)
-    val parent = liveIn(s, path, names)
+    // read before anything is written: the format floor refuses here
+    val cursor = foldId.getOrElse(foldCursor(s, path, names))
+    val parent = markersIn(names).lastOption
+    if (parent.isEmpty && layout != Full) requireLive(spark, path, s"$layout publish")
     val cur = parent.fold(path)(v => s"$path/v$v")
     val next = parent.getOrElse(0L) + 1
     val dir = s"$path/v$next"
@@ -172,7 +158,6 @@ private[graft] object VersionedIndex {
       s.writeString(s"$dir/shards", (shardRels(spark, path, cur, defaultSub) ++ own).mkString("\n"))
     }
     if (crashBeforeCommit) return
-    val cursor = foldId.getOrElse(foldCursor(s, path, names))
     val txn = if (cursor < 0) "txn=" else s"txn=fold:$cursor"
     if (!s.createExclusive(s"$path/CURRENT.v$next", s"v$next\n$txn\n"))
       throw new IllegalStateException(
@@ -183,36 +168,21 @@ private[graft] object VersionedIndex {
 
   /** The last batch id [[foldBatch]] committed, −1 when none: the
     * `txn=fold:<id>` entry of the newest marker among the root entries
-    * `names`. While that marker has no `txn=` line, the index predates it:
-    * see [[legacyFoldCursor]].
+    * `names`. The format floor: a root holding a bare `CURRENT` file, or a
+    * newest marker without a `txn=` line, is refused.
     */
   private def foldCursor(s: graft.WarehouseIO, path: String, names: Seq[String]): Long = {
-    val markers = markersIn(names)
-    markers.lastOption
-      .flatMap(v => s.readString(s"$path/CURRENT.v$v").linesIterator.find(_.startsWith("txn=")))
-      .map(_.stripPrefix("txn=").split(',').collectFirst {
-        case e if e.startsWith("fold:") => e.stripPrefix("fold:").toLong
-      }.getOrElse(-1L))
-      .getOrElse(legacyFoldCursor(s, path, names, markers))
-  }
-
-  /** The fold cursor of an index written before markers carried `txn=`,
-    * from the records its folds wrote and nothing writes any more: the
-    * newest `v<N>/ingest_batch_id` under a committed marker (batch ids are
-    * monotone in version order under the single-writer contract, so the
-    * newest record holds the max) and the root `ingest_batch_hwm.v<id>`
-    * files, which outlived vacuum. Only read; the next commit records the
-    * result in its marker.
-    */
-  private def legacyFoldCursor(s: graft.WarehouseIO, path: String, names: Seq[String],
-                               markers: Seq[Long]): Long = {
-    val inVersion = markers.reverseIterator.map { v =>
-      val p = s"$path/v$v/ingest_batch_id"
-      if (s.exists(p)) s.readString(p).trim.toLongOption else None
-    }.collectFirst { case Some(id) => id }
-    val atRoot = names.filter(_.startsWith("ingest_batch_hwm.v"))
-      .flatMap(_.stripPrefix("ingest_batch_hwm.v").toLongOption)
-    (inVersion ++ atRoot).foldLeft(-1L)(math.max)
+    def refuse(what: String) = throw new graft.errors.UnsupportedFormat(
+      s"index $path: $what, a layout below the format floor (no writer of " +
+        "this engine produces it); rebuild the index")
+    if (names.contains("CURRENT")) refuse("the root holds a bare CURRENT file")
+    markersIn(names).lastOption.fold(-1L) { v =>
+      s.readString(s"$path/CURRENT.v$v").linesIterator.find(_.startsWith("txn="))
+        .getOrElse(refuse(s"marker CURRENT.v$v has no txn= line"))
+        .stripPrefix("txn=").split(',').collectFirst {
+          case e if e.startsWith("fold:") => e.stripPrefix("fold:").toLong
+        }.getOrElse(-1L)
+    }
   }
 
   /** Exactly-once micro-batch fold — the `foreachBatch` body of every
@@ -239,7 +209,7 @@ private[graft] object VersionedIndex {
     if (batchId <= foldCursor(s, path, names)) return
     val b = batch
     if (b.isEmpty) return
-    if (liveIn(s, path, names).isEmpty)
+    if (markersIn(names).isEmpty)
       publish(spark, path, defaultSub, Full, Some(batchId))((_, dir) => build(b, dir))
     else
       publish(spark, path, defaultSub, Append, Some(batchId))(append(b, _, _))
@@ -290,13 +260,12 @@ private[graft] object VersionedIndex {
 
   /** Reclaim versions superseded past the retention window. Keeps the
     * newest `retainVersions` committed versions PLUS any older version
-    * directory (or legacy root) a retained version's shard manifest
-    * still references; `legacyNames` are the pre-versioned root entries
-    * swept once unreferenced. Markers stay as the audit trail (the newest
-    * one also holds the fold cursor).
+    * directory a retained version's shard manifest still references.
+    * Markers stay as the audit trail (the newest one also holds the fold
+    * cursor).
     */
   def vacuum(spark: SparkSession, path: String, retainVersions: Int,
-             defaultSub: String, legacyNames: Seq[String]): Unit = {
+             defaultSub: String): Unit = {
     require(retainVersions >= 1, "retainVersions must be >= 1")
     val s = io(spark, path)
     val committed = committedVersions(spark, path)
@@ -305,18 +274,10 @@ private[graft] object VersionedIndex {
     val referenced: Set[String] =
       retained.map(v => s"v$v").toSet ++
         retained.filter(v => s.exists(s"$path/v$v")).flatMap { v =>
-          shardRels(spark, path, s"$path/v$v", defaultSub).flatMap { rel =>
-            // a `.` entry references the legacy ROOT data — every legacy
-            // name stays protected while any retained version names it
-            if (rel == ".") legacyNames else Seq(rel.split('/').head)
-          }
+          shardRels(spark, path, s"$path/v$v", defaultSub).map(_.split('/').head)
         }
     s.childNames(path).foreach { n =>
-      val stale =
-        (n.matches("v\\d+") && !referenced(n)) ||
-          (legacyNames.contains(n) && !referenced(n)) ||
-          n == "CURRENT" || n.startsWith("CURRENT.tmp-")
-      if (stale) s.rmTree(s"$path/$n")
+      if (n.matches("v\\d+") && !referenced(n)) s.rmTree(s"$path/$n")
     }
   }
 }

@@ -228,6 +228,12 @@ object errors {
     * lock exists (HDFS / object stores).
     */
   final class CommitConflict(msg: String) extends IllegalStateException(msg)
+  /** A warehouse or index directory holds a layout below the format floor
+    * (one no writer of this engine produces) or one a newer engine wrote.
+    * Raised before anything is written; rebuild the directory, or bring
+    * foreign raw files in with `adoptRaw`.
+    */
+  final class UnsupportedFormat(msg: String) extends IllegalStateException(msg)
   /** A CHECK constraint rejected an append (or could not be added because
     * existing rows already violate it). SQL-standard semantics: a
     * constraint fails only when its expression evaluates to FALSE — NULL

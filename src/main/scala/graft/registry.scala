@@ -204,13 +204,22 @@ object StreamRegistry {
   /** Dependency check backing `delete_streams`
     * [ds :: backends/mongodb.py :: delete_streams]: refuse deletion when a
     * surviving derived stream lists a doomed stream in `derived_from`.
-    * Returns the violating (derived, source) pairs; empty ⇒ safe to delete.
+    * Returns the violating (derived, source) pairs, sorted; empty ⇒ safe
+    * to delete. Runs on the driver over the registry rows: with no stream
+    * derived from another it runs no Spark work, else it collects only the
+    * `doomed` ids that can take part in a pair (an IN filter; over a
+    * registry-derived local relation the collect runs no job).
     */
-  def outstandingDependencies(registry: DataFrame, doomed: DataFrame): DataFrame = {
-    val survivors = registry.join(doomed.select("stream_id"), Seq("stream_id"), "left_anti")
-    survivors
-      .select(col("stream_id").as("derived_stream"),
-        explode_outer(col("derived_from")).as("source_stream"))
-      .join(doomed.select(col("stream_id").as("source_stream")), Seq("source_stream"))
+  def outstandingDependencies(registry: Seq[StreamMeta],
+                              doomed: DataFrame): Seq[(String, String)] = {
+    val deriving = registry.filter(_.derived_from.nonEmpty)
+    if (deriving.isEmpty) Seq.empty
+    else {
+      val ids = deriving.flatMap(d => d.stream_id +: d.derived_from).distinct.sorted
+      val gone = doomed.select("stream_id").where(col("stream_id").isInCollection(ids))
+        .collect().map(_.getString(0)).toSet
+      (for (d <- deriving if !gone(d.stream_id); src <- d.derived_from if gone(src))
+        yield (d.stream_id, src)).distinct.sorted
+    }
   }
 }

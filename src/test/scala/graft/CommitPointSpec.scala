@@ -18,13 +18,6 @@ class CommitPointSpec extends SparkSpec {
   private def rows(r: (String, String, Double)*): DataFrame =
     dp(r).select("stream_id", "ts", "value")
 
-  /** Delete the warehouse-root files named `<prefix>*`: what a crash
-    * between a data commit and a separate cursor-marker write leaves.
-    */
-  private def dropRootFiles(ds: Datastream, prefix: String): Unit =
-    new java.io.File(ds.warehouse).listFiles()
-      .filter(_.getName.startsWith(prefix)).foreach(_.delete())
-
   private def us(t: String): Long = ts(t).getTime * 1000L
 
   private def sinkWarehouse(): Datastream = {
@@ -39,7 +32,6 @@ class CommitPointSpec extends SparkSpec {
   test("an appendBatch replayed after a crash in the cursor window appends nothing") {
     val ds = sinkWarehouse()
     ds.appendBatch(rows(batch: _*), 7L)
-    dropRootFiles(ds, "ingest_batch_hwm")
     val n = ds.rawDatapoints.count()
     val v = ds.currentVersion
     ds.appendBatch(rows(batch: _*), 7L)
@@ -52,7 +44,6 @@ class CommitPointSpec extends SparkSpec {
     ds.appendMultiple(rows(batch: _*))
     val u = rows(("s1", "2024-01-01T00:00:10Z", 5.0))
     ds.upsertBatch(u, 3L)
-    dropRootFiles(ds, "upsert_batch_hwm")
     val v = ds.currentVersion
     ds.upsertBatch(u, 3L)
     assert(ds.currentVersion == v)
@@ -63,39 +54,40 @@ class CommitPointSpec extends SparkSpec {
     ds.appendMultiple(rows(batch: _*))
     val ranges = Seq(("s2", us("2024-01-01T00:00:00Z"), us("2024-01-01T00:01:00Z")))
     ds.applyDeleteBatch(ranges, 9L)
-    dropRootFiles(ds, "ingest_batch_hwm")
     val v = ds.currentVersion
     ds.applyDeleteBatch(ranges, 9L)
     assert(ds.currentVersion == v)
     assert(ds.rawDatapoints.select("stream_id").as[String].collect().toSeq == Seq("s1"))
   }
 
-  test("cursors are read from the manifest; older warehouses' marker files are read, never written") {
+  test("cursors are read from the manifest; a root holding cursor marker files is refused at open") {
     val ds = freshDs()
     ds.ensureStream("s1")
-    ds.appendMultiple(rows(("s1", "2024-01-01T00:00:00Z", 1.0)))
-    // a warehouse written before cursors moved into the manifest
-    Files.writeString(java.nio.file.Paths.get(ds.warehouse, "ingest_batch_hwm.v4"), "4")
-    Files.writeString(java.nio.file.Paths.get(ds.warehouse, "upsert_batch_hwm"), "2")
-    val v = ds.currentVersion
     ds.appendBatch(rows(("s1", "2024-01-01T00:00:10Z", 2.0)), 4L)
-    ds.upsertBatch(rows(("s1", "2024-01-01T00:00:00Z", 9.0)), 2L)
+    ds.upsertBatch(rows(("s1", "2024-01-01T00:00:10Z", 9.0)), 2L)
+    val v = ds.currentVersion
+    ds.appendBatch(rows(("s1", "2024-01-01T00:00:20Z", 3.0)), 4L)
+    ds.upsertBatch(rows(("s1", "2024-01-01T00:00:10Z", 5.0)), 2L)
     assert(ds.currentVersion == v)
     assert(ds.ingestHighWatermark == 4L)
-    ds.appendBatch(rows(("s1", "2024-01-01T00:00:10Z", 2.0)), 5L)
-    ds.upsertBatch(rows(("s1", "2024-01-01T00:00:00Z", 9.0)), 3L)
-    assert(ds.rawDatapoints.count() == 2)
     val header = scala.io.Source.fromFile(
-      f"${ds.warehouse}/commitlog/${ds.currentVersion.get}%09d.manifest").getLines().next()
-    assert(header.endsWith(" txn=ingest:5,upsert:3"), header)
-    // the markers are left as they were: nothing writes or sweeps them
-    assert(new java.io.File(ds.warehouse).list().filter(_.contains("batch_hwm")).sorted
-      .toSeq == Seq("ingest_batch_hwm.v4", "upsert_batch_hwm"))
+      f"${ds.warehouse}/commitlog/${v.get}%09d.manifest").getLines().next()
+    assert(header.endsWith(" txn=ingest:4,upsert:2"), header)
     // a commit that is not a batch sink carries the cursors forward
-    ds.appendMultiple(rows(("s1", "2024-01-01T00:00:20Z", 3.0)))
-    ds.appendBatch(rows(("s1", "2024-01-01T00:00:30Z", 4.0)), 5L)
-    assert(ds.rawDatapoints.count() == 3)
-    assert(ds.ingestHighWatermark == 5L)
+    ds.appendMultiple(rows(("s1", "2024-01-01T00:00:30Z", 4.0)))
+    ds.appendBatch(rows(("s1", "2024-01-01T00:00:40Z", 5.0)), 4L)
+    assert(ds.rawDatapoints.count() == 2)
+    assert(ds.ingestHighWatermark == 4L)
+    // the root cursor markers older engines wrote are below the format floor
+    for (name <- Seq("ingest_batch_hwm.v4", "upsert_batch_hwm")) {
+      val f = java.nio.file.Paths.get(ds.warehouse, name)
+      Files.writeString(f, "4")
+      val before = treeOf(ds.warehouse)
+      val e = intercept[errors.UnsupportedFormat](new Datastream(spark, ds.warehouse))
+      assert(e.getMessage.contains(name))
+      assert(treeOf(ds.warehouse) == before)
+      Files.delete(f)
+    }
   }
 
   /** Derived rows (stream, ts, value) of the lag-op derived streams. */
@@ -153,11 +145,11 @@ class CommitPointSpec extends SparkSpec {
     assert(ds.rawDatapoints.count() == 2)
   }
 
-  test("a sidecar written before it was a manifest table is adopted by the next commit") {
+  test("a snapshot that does not cover the sidecar table is refused before anything is written") {
     val ds = derivedWarehouse()
     ds.updateDerivedStreamsIncremental(ts("2024-01-01T00:01:00Z"))
-    // an older engine wrote one live `derive_prev` directory and kept it
-    // out of the manifests: strip the table from every manifest
+    // the manifests an engine wrote before `derive_prev` was a manifest
+    // table: strip the table from every manifest
     val log = new java.io.File(ds.warehouse, "commitlog")
     log.listFiles().filter(_.getName.endsWith(".manifest")).foreach { f =>
       val kept = scala.io.Source.fromFile(f).getLines().toSeq
@@ -165,17 +157,16 @@ class CommitPointSpec extends SparkSpec {
         .map(_.replace(",derive_prev,", ","))
       Files.writeString(f.toPath, kept.mkString("", "\n", "\n"))
     }
-    val legacy = new Datastream(spark, ds.warehouse)
-    legacy.updateDerivedStreamsIncremental(ts("2024-01-01T00:02:00Z"))
-    val oneShot = derivedWarehouse()
-    oneShot.updateDerivedStreams()
-    assert(derived(legacy) == derived(oneShot))
-    // the full refresh clears the adopted sidecar from the snapshot
-    legacy.updateDerivedStreams()
-    assert(derived(legacy) == derived(oneShot))
-    legacy.vacuumRaw(retainVersions = 1)
-    assert(Option(new java.io.File(ds.warehouse, "derive_prev").list())
-      .forall(_.forall(n => n.startsWith(".") || n.startsWith("_"))))
+    val before = treeOf(ds.warehouse)
+    val old = new Datastream(spark, ds.warehouse)
+    Seq[() => Any](
+      () => old.rawDatapoints.count(),
+      () => old.updateDerivedStreamsIncremental(ts("2024-01-01T00:02:00Z")),
+      () => old.vacuumRaw(retainVersions = 1)).foreach { op =>
+      val e = intercept[errors.UnsupportedFormat](op())
+      assert(e.getMessage.contains("derive_prev"))
+    }
+    assert(treeOf(ds.warehouse) == before)
   }
 
   test("the sidecar stays out of the symlink export") {

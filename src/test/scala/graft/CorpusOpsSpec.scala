@@ -842,7 +842,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("DedupIndex: versioned appends share parent shards atomically; " +
-      "vacuum keeps referenced ancestors; legacy root layout migrates") {
+      "vacuum keeps referenced ancestors; a root-level layout is refused") {
     import spark.implicits._
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val dir = java.nio.file.Files.createTempDirectory("graft-didx-ver").toString
@@ -868,38 +868,34 @@ class CorpusOpsSpec extends SparkSpec {
     assert(new java.io.File(s"$dir/v1/data/bands").exists())
     assert(ext.DedupIndex.dedupeAgainstIndex(probe, dir, threshold = 0.7)
       .count() === 1L)
-    // LEGACY layout (pre-versioned: side tables at the root): reads keep
-    // working, and the first append migrates it by referencing the root
-    // data as the `.` shard
+    // the pre-versioned layout (side tables at the root, no marker) has
+    // no committed version to read or append to, and the same root with
+    // the bare `CURRENT` file of the pre-marker layout is below the format
+    // floor: both refuse with nothing written
     val leg = java.nio.file.Files.createTempDirectory("graft-didx-leg").toString
     ext.DedupIndex.buildIndex(docsDF(Seq((0L, base, "en"))), leg)
-    // flatten v1 into the legacy root shape
-    for (n <- Seq("params", "data")) {
-      val src = java.nio.file.Paths.get(s"$leg/v1/$n")
-      if (n == "params")
-        java.nio.file.Files.move(src, java.nio.file.Paths.get(s"$leg/params"))
-      else
-        for (side <- Seq("bands", "shingles", "exact"))
-          java.nio.file.Files.move(
-            java.nio.file.Paths.get(s"$leg/v1/data/$side"),
-            java.nio.file.Paths.get(s"$leg/$side"))
-    }
+    java.nio.file.Files.move(java.nio.file.Paths.get(s"$leg/v1/params"),
+      java.nio.file.Paths.get(s"$leg/params"))
+    for (side <- Seq("bands", "shingles", "exact"))
+      java.nio.file.Files.move(java.nio.file.Paths.get(s"$leg/v1/data/$side"),
+        java.nio.file.Paths.get(s"$leg/$side"))
     new java.io.File(s"$leg/CURRENT.v1").delete()
     deleteRecursively(new java.io.File(s"$leg/v1"))
-    assert(ext.DedupIndex.dedupeAgainstIndex(
-      docsDF(Seq((9L, base, "en"))), leg, threshold = 0.7).count() === 0L)
-    ext.DedupIndex.appendToIndex(
-      docsDF(Seq((6L, "brand new unseen material for the index", "en"))), leg)
-    val legShards = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$leg/v1/shards")).split('\n').toSeq
-    assert(legShards == Seq(".", "v1/data"))
-    // both generations consulted post-migration
-    val probe2 = docsDF(Seq(
-      (20L, base, "en"),
-      (21L, "brand new unseen material for the index", "en"),
-      (22L, "genuinely novel text", "en")))
-    assert(ext.DedupIndex.dedupeAgainstIndex(probe2, leg, threshold = 0.7)
-      .select("doc_id").as[Long].collect().toSet === Set(22L))
+    val more = docsDF(Seq((6L, "brand new unseen material for the index", "en")))
+    val before = treeOf(leg)
+    val noVersion = Seq[() => Any](
+      () => ext.DedupIndex.dedupeAgainstIndex(docsDF(Seq((9L, base, "en"))), leg,
+        threshold = 0.7),
+      () => ext.DedupIndex.appendToIndex(more, leg))
+    noVersion.foreach { op =>
+      val e = intercept[IllegalStateException](op())
+      assert(e.getMessage.contains("no committed version"))
+    }
+    assert(treeOf(leg) == before)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$leg/CURRENT"), "v1")
+    val beforeBare = treeOf(leg)
+    intercept[errors.UnsupportedFormat](ext.DedupIndex.appendToIndex(more, leg))
+    assert(treeOf(leg) == beforeBare)
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {

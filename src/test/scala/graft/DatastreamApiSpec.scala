@@ -49,8 +49,9 @@ class DatastreamApiSpec extends SparkSpec {
     ds.ensureStream("src", Map("role" -> "source"))
     ds.ensureStream("d", Map("role" -> "derived"),
       deriveOp = Some("derivative"), derivedFrom = Seq("src"))
-    assertThrows[errors.OutstandingDependenciesError](
+    val e = intercept[errors.OutstandingDependenciesError](
       ds.deleteStreams(Map("role" -> "source")))
+    assert(e.getMessage == "[src,d]") // (source, derived) pairs
     assert(ds.deleteStreams(Map("role" -> "derived")) == 1)
     assert(ds.deleteStreams(Map("role" -> "source")) == 1)
     assert(ds.streams.count() == 0)
@@ -378,7 +379,7 @@ class DatastreamApiSpec extends SparkSpec {
     assert(markers().exists(m => m.startsWith("000000100") && m.endsWith(".commit")))
   }
 
-  test("registry generations: crash orphans stay invisible and are reclaimed; legacy swap leftovers repaired") {
+  test("registry generations: crash orphans stay invisible and are reclaimed; older engines' root leftovers are refused at open") {
     val dir = Files.createTempDirectory("graft-ds").toString
     val ds = new Datastream(spark, dir)
     ds.ensureStream("s1"); ds.ensureStream("s2")
@@ -399,20 +400,17 @@ class DatastreamApiSpec extends SparkSpec {
     ds2.ensureStream("s3")
     assert(ds2.streams.count() == 3)
     assert(!new java.io.File(orphan, "_stale").exists()) // orphan reclaimed
-    // legacy warehouse (pre-generation single `streams` dir): swap-crash
-    // leftovers are repaired at construction, and the first new-style
-    // swap migrates the registry into generations
-    val dir2 = Files.createTempDirectory("graft-ds").toString
-    ds2.streams.coalesce(1).write.parquet(s"$dir2/streams")
-    val live = new java.io.File(s"$dir2/streams")
-    assert(live.renameTo(new java.io.File(s"$dir2/streams.bak-300")))
-    val ds3 = new Datastream(spark, dir2)
-    assert(ds3.streams.count() == 3) // .bak restored at construction
-    assert(live.exists() && !new java.io.File(s"$dir2/streams.bak-300").exists())
-    ds3.ensureStream("s4")
-    assert(ds3.streams.count() == 4)
-    assert(!live.exists()) // migrated: legacy dir retired by the swap
-    assert(new java.io.File(dir2, "streams_versions").isDirectory)
+    // what older engines left at the root — the single `streams` registry
+    // directory and the leftovers of in-place directory swaps — is below
+    // the format floor: refused at open, with nothing written
+    for (name <- Seq("streams", "streams.bak-300", "derive_prev.swap-7")) {
+      val dir2 = Files.createTempDirectory("graft-ds").toString
+      ds2.streams.coalesce(1).write.parquet(s"$dir2/$name")
+      val before = treeOf(dir2)
+      val e = intercept[errors.UnsupportedFormat](new Datastream(spark, dir2))
+      assert(e.getMessage.contains(name))
+      assert(treeOf(dir2) == before)
+    }
   }
 
   test("deleteStreams purges out-of-band rows: null registry bounds disable the pruning window") {

@@ -300,35 +300,23 @@ class IndexProtocolSpec extends SparkSpec {
     }
   }
 
-  test("an index written before markers recorded txn= still vetoes its " +
-    "folded batches (Search, IVF, IVF-PQ, SQ8, dedup)") {
-    for (f <- families; record <- Seq("in-version", "root")) {
+  test("an index below the format floor (a marker without txn=, a bare " +
+    "CURRENT file) refuses folds and commits with nothing written " +
+    "(Search, IVF, IVF-PQ, SQ8, dedup)") {
+    for (f <- families; shape <- Seq("txn-less marker", "bare CURRENT")) {
       val path = folded(f)
-      val (b0, b1) = f.batches()
+      val (b0, _) = f.batches()
       val io = ext.VersionedIndex.io(spark, path)
-      // the earlier layout: bare `v<N>` markers, the batch id in the fold's
-      // version directory and in a root watermark file that outlived vacuum
-      val committed = ext.VersionedIndex.committedVersions(spark, path)
-      committed.foreach(v => io.writeString(s"$path/CURRENT.v$v", s"v$v"))
-      val legacy =
-        if (record == "in-version") s"$path/v${committed.last}/ingest_batch_id"
-        else s"$path/ingest_batch_hwm.v1"
-      io.writeString(legacy, "1")
-      val v = committed.last
-      val served = f.content(path)
-      f.fold(b1, path, 1L)
-      f.fold(b0, path, 0L)
-      assert(ext.VersionedIndex.currentVersion(spark, path).contains(v), s"${f.name} $record")
-      assert(f.content(path) == served, s"${f.name} $record")
-      // the next commit records the cursor it read in its own marker, so
-      // the earlier record is not needed any more
-      assert(f.compact(path), s"${f.name} $record")
-      assert(io.readString(s"$path/CURRENT.v${v + 1}").contains("txn=fold:1"),
-        s"${f.name} $record")
-      io.deleteFile(legacy)
-      f.fold(b1, path, 1L)
-      assert(ext.VersionedIndex.currentVersion(spark, path).contains(v + 1), s"${f.name} $record")
-      assert(f.content(path) == served, s"${f.name} $record")
+      val v = ext.VersionedIndex.currentVersion(spark, path).get
+      // the layouts markers had before they carried `txn=`, and before
+      // there were per-version markers at all
+      if (shape == "txn-less marker") io.writeString(s"$path/CURRENT.v$v", s"v$v")
+      else io.writeString(s"$path/CURRENT", s"v$v")
+      val before = treeOf(path)
+      Seq[() => Any](() => f.fold(b0, path, 2L), () => f.compact(path)).foreach { op =>
+        intercept[errors.UnsupportedFormat](op())
+      }
+      assert(treeOf(path) == before, s"${f.name} $shape")
     }
   }
 }

@@ -269,15 +269,15 @@ class JobBudgetSpec extends SparkSpec {
     n.get()
   }
 
-  test("a warm one-stream deleteStreams launches 12 jobs: one file scan, one write per table holding the stream") {
+  test("a warm one-stream deleteStreams launches 9 jobs: one file scan, one write per table holding the stream") {
     val ds = fourStreams()
     assert(ds.deleteStreams(Map("id" -> "s4")) == 1L)
-    // 3 for the dependency check's broadcasts, 1 `_metadata.file_path`
-    // scan, 7 rewrites (one per table whose files hold s3; d1's derived
-    // files are not even candidates) and 1 registry generation: no job
-    // per table to find the files
+    // 1 `_metadata.file_path` scan, 7 rewrites (one per table whose files
+    // hold s3; d1's derived files are not even candidates) and 1 registry
+    // generation: no job per table to find the files, and none for the
+    // dependency check, which runs on the driver over the registry rows
     val n = jobsDuring(assert(ds.deleteStreams(Map("id" -> "s3")) == 1L))
-    assert(n == 12, s"$n jobs")
+    assert(n == 9, s"$n jobs")
   }
 
   test("a warm Sq.appendToIndex launches 3 jobs: the params table is read with its schema") {

@@ -117,19 +117,18 @@ class RegistryAndDedupSpec extends SparkSpec {
   }
 
   test("outstandingDependencies finds derived streams that survive a delete") {
-    val registry = Seq(
-      ("raw1", Seq.empty[String]),
-      ("raw2", Seq.empty[String]),
-      ("derived", Seq("raw1", "raw2"))).toDF("stream_id", "derived_from")
+    def meta(id: String, from: Seq[String]) = StreamMeta(id, Map.empty,
+      ValueType.Numeric, Seq.empty, Seq.empty, "seconds", derived_from = from)
+    val registry = Seq(meta("raw1", Nil), meta("raw2", Nil),
+      meta("derived", Seq("raw1", "raw2")))
     // deleting raw1 alone: derived depends on it → violation
     val viol = StreamRegistry.outstandingDependencies(
       registry, Seq("raw1").toDF("stream_id"))
-    assert(viol.select("derived_stream", "source_stream").as[(String, String)]
-      .collect().toSeq == Seq(("derived", "raw1")))
+    assert(viol == Seq(("derived", "raw1")))
     // deleting raw1 + derived together: no violation
     val ok = StreamRegistry.outstandingDependencies(
       registry, Seq("raw1", "derived").toDF("stream_id"))
-    assert(ok.count() == 0)
+    assert(ok.isEmpty)
   }
 
   test("exact dedup groups identical texts and keeps min doc_id") {

@@ -61,6 +61,39 @@ class SnapshotSpec extends SparkSpec {
     assert(ds.tornOperations === Seq("append"))
   }
 
+  test("a torn first append is invisible: before any commit every read is " +
+      "empty, and the first commit publishes and walks only its own scope") {
+    def firstCommit(torn: Boolean): (Datastream, Long) = {
+      val (ds, dir) = freshDs
+      ds.ensureStream("s1")
+      if (torn) {
+        tornAppend(dir, Seq(("s1", "2024-01-01T00:00:01Z", 99.0)))
+        // the orphan file is on disk; no version was ever committed
+        assert(spark.read.parquet(s"$dir/raw").count() === 1)
+        assert(ds.currentVersion.isEmpty)
+        assert(ds.rawDatapoints.count() === 0)
+        assert(ds.rawDatapointsWithExtras().count() === 0)
+        assert(ds.getData("s1", Granularity.Seconds).count() === 0)
+        assert(ds.countDatapoints() === 0L)
+        assert(ds.countDatapoints(streamIds = Some(Seq("s1"))) === 0L)
+        assert(ds.plannedFiles("raw", None, None).isEmpty)
+        assert(ds.tableDetail.count() === 0L)
+      }
+      ds.walkMeter.set(0L)
+      ds.appendMultiple(dp(Seq(("s1", "2024-01-02T00:00:00Z", 5.0)))
+        .select("stream_id", "ts", "value"))
+      (ds, ds.walkMeter.get())
+    }
+    val (ds, walked) = firstCommit(torn = true)
+    // the first commit publishes only its own rows: the orphan stays out
+    assert(ds.rawDatapoints.select("value").as[Double].collect().toSeq === Seq(5.0))
+    assert(ds.countDatapoints() === 1L)
+    assert(ds.tornOperations === Seq("append"))
+    // ...and walks exactly what the same commit walks with no orphan on
+    // disk: its declared write scope, never the whole table
+    assert(walked === firstCommit(torn = false)._2)
+  }
+
   test("later commits never adopt orphans; vacuum reclaims them") {
     val (ds, dir) = freshDs
     ds.ensureStream("s1")
@@ -427,27 +460,33 @@ class SnapshotSpec extends SparkSpec {
       .map(_.getAs[Double]("value")).toSeq === Seq(1.0))
   }
 
-  test("pinned legacy-era snapshot refuses uncovered tables instead of serving live files") {
+  test("manifests below the format floor are refused with nothing written") {
     val (ds, dir) = freshDs
-    // fabricate a PRE-COVERAGE legacy commit: a headerless manifest covers
-    // only `raw` (empty file list ⇒ zero rows), exactly the shape an
-    // upgraded warehouse's oldest retained versions have
-    val clog = java.nio.file.Paths.get(dir, "commitlog")
-    java.nio.file.Files.createDirectories(clog)
-    java.nio.file.Files.writeString(clog.resolve("000000001.manifest"), "")
-    java.nio.file.Files.writeString(clog.resolve("000000001.commit"),
-      """{"op":"legacy"}""")
     ds.ensureStream("s1")
-    ds.appendMultiple(dp(Seq(("s1", "2024-01-01T00:10:00Z", 1.0)))
-      .select("stream_id", "ts", "value"))
+    ds.append("s1", 1.0, ts("2024-01-01T00:10:00Z"))
     ds.downsampleStreams(ts("2024-02-01T00:00:00Z"))
-    // current reads are healthy: post-legacy commits cover the rollups
-    assert(ds.rollup(Granularity.Hours).count() === 1L)
-    // the pinned v1 read cannot know what the rollup held at that commit —
-    // it must fail AT PLANNING, never fall through to the live directory
-    val e = intercept[IllegalStateException](
-      ds.rollupAt(Granularity.Hours, 1L))
-    assert(e.getMessage.contains("does not cover"))
+    val v = ds.currentVersion.get
+    val manifests = new java.io.File(s"$dir/commitlog").listFiles()
+      .filter(_.getName.endsWith(".manifest")).toSeq
+    val good = manifests.map(f => f -> Files.readString(f.toPath))
+    // a header-less file list, a v2 header, and `tables=` lists that miss
+    // the rollup tables: what engines before the format floor wrote
+    Seq[String => String](
+      _ => "raw/dp_date=2024-01-01/part-0.parquet\n",
+      _.replaceFirst("#graft v3 ", "#graft v2 "),
+      _.replaceFirst(",rollup/granularity=[^ \n]*", "")).foreach { forge =>
+      good.foreach { case (f, txt) => Files.writeString(f.toPath, forge(txt)) }
+      val before = treeOf(dir)
+      val old = new Datastream(spark, dir)
+      Seq[() => Any](
+        () => old.rawDatapoints.count(),
+        () => old.rollupAt(Granularity.Hours, v),
+        () => old.append("s1", 2.0, ts("2024-01-01T00:20:00Z")),
+        () => old.vacuumRaw()).foreach { op =>
+        intercept[errors.UnsupportedFormat](op())
+      }
+      assert(treeOf(dir) == before)
+    }
   }
 
   test("registry time travel: as-of metadata pins tags, existence and getData validation") {

@@ -20,6 +20,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map { case ((sid, t, v), i) => (sid, ts(t), v, i.toLong) }
       .toDF("stream_id", "ts", "value", "event_id")
   }
+
+  /** Every entry under `dir` (relative path, byte length), sorted: equal
+    * before and after a call shows the call wrote nothing there.
+    */
+  def treeOf(dir: String): Seq[(String, Long)] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.toSeq
+        .map(p => (root.relativize(p).toString, p.toFile.length)).sorted
+    } finally walk.close()
+  }
 }
 
 object SparkSpec {
