@@ -3671,9 +3671,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * Fails loudly when: `version` is outside the retained window; a
     * needed historical file was reclaimed by an aggressive
     * `vacuumRaw(retainVersions=…)`; or the target's registry generation
-    * was reclaimed out
-    * of band. Each failure aborts BEFORE the commit marker lands, so the
-    * warehouse is never left half-restored.
+    * was reclaimed out of band. Each failure aborts BEFORE the commit
+    * marker lands, so the warehouse is never left half-restored.
     */
   def restore(version: Long): Unit = {
     val target = snapshotAt(version)
