@@ -66,7 +66,6 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       StructField("stream_id", StringType), StructField("ts", TimestampType),
       StructField("value", DoubleType)))
   }
-  private def rollupPath(g: Granularity) = s"$warehouse/rollup/granularity=${g.name}"
 
   private def exists(path: String): Boolean = io.exists(path)
 
@@ -1048,6 +1047,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     adoptedFiles.clear()
     adoptedStats.clear()
     pendingRawCols.clear()
+    val headBefore = registryHead
+    val rowsBefore = loadedRegistry.filter(_.key == headBefore).map(_.rows)
     val out =
       try {
         val r = body
@@ -1059,6 +1060,14 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
         io.rename(intent, marker("failed"))
         scopeBefore.clear(); retiredFiles.clear()
         adoptedFiles.clear(); adoptedStats.clear(); pendingRawCols.clear()
+        // a body that swapped the registry (watermarks, bounds) and then
+        // failed must not leave it ahead of data it never committed: swap
+        // the generation it started from back in (a crash of the process
+        // itself can still leave that tail; the intent marker flags it)
+        if (registryHead.map(_._1) != headBefore.map(_._1))
+          try swapRegistry(rowsBefore.getOrElse(headBefore.fold(Seq.empty[StreamMeta])(
+            h => readRegistry(registryDir(h._1)))))
+          catch { case r: Throwable => e.addSuppressed(r) }
         throw e
       }
     // OPTIMISTIC STALENESS CHECK (the second half of the commit CAS): the
@@ -1315,6 +1324,13 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
               io.rmTree(st.getPath.toString)
           }
         io.children(tablePath(t)).foreach(prune)
+      }
+      // the rollup write stages its tasks' output under `rollup/`, outside
+      // every table: a torn downsample leaves its `_temporary` there
+      val staging = s"$warehouse/rollup/_temporary"
+      if (exists(staging)) {
+        removed += io.walkFiles(staging).size
+        rmTree(staging)
       }
       removed
     }
@@ -2541,49 +2557,57 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     }
     // ONE broadcast of the (small) metadata table carries all three checks
     // and the monotonicity bound: a single validation job, never a fact scan
-    val meta = streams.select(col("stream_id"), col("derive_op"),
+    val live = registry
+    val meta = live.frame.select(col("stream_id").as("_sid"), col("derive_op"),
       col("value_type"), col("latest_datapoint").as("latest"))
-    val joined = points.join(broadcast(meta), Seq("stream_id"), "left").cache()
+    val joined = points.join(broadcast(meta), col("stream_id") === col("_sid"), "left")
+      .cache()
     try {
       val isDerived = col("derive_op").isNotNull
       val isBadNumeric = col("value_type") === ValueType.Numeric && col("value").isNull
       val isStale = col("latest").isNotNull && col("ts") < col("latest")
-      // the touched-date set for the commit's write scope rides the same
-      // single validation job (stale rows contribute null → dropped by
-      // collect_set), saving one action per append
       val isNullKey = col("stream_id").isNull || col("ts").isNull
-      val flags = joined.agg(
+      // the one validation job, grouped by registered stream (every row of
+      // an unregistered or null id in one null group), so its result is
+      // bounded by the registry the driver already holds. It also carries
+      // the touched dates for the commit's write scope and each stream's
+      // kept bounds for the registry update (stale rows contribute null).
+      val perStream = joined.groupBy(col("_sid")).agg(
         sum(when(isDerived, 1L).otherwise(0L)).as("derived"),
         sum(when(isBadNumeric, 1L).otherwise(0L)).as("bad_numeric"),
-        sum(when(isStale, 1L).otherwise(0L)).as("stale"),
+        min(when(isStale, col("ts"))).as("stale_ts"),
         collect_set(when(!isStale, to_date(col("ts")))).as("_dates"),
         sum(when(isNullKey, 1L).otherwise(0L)).as("null_keys"),
-        count(lit(1)).as("_n")).first()
-      // an empty batch commits nothing (and its sums above are null)
-      if (flags.getLong(5) == 0) return
+        min(when(!isStale, col("ts"))).as("_lo"),
+        max(when(!isStale, col("ts"))).as("_hi")).collect()
+      // an empty batch commits nothing
+      if (perStream.isEmpty) return
+      def ids(flag: String) = perStream.filter(_.getAs[Long](flag) > 0)
+        .map(_.getAs[String]("_sid")).sorted
       // null keys rejected pre-write: the commit's declared scope is the
       // collect_set of dates above, which silently drops nulls — a
       // null-ts row would otherwise write an undeclared default-partition
       // file the commit diff never adopts
-      if (flags.getLong(4) > 0)
+      val nullKeys = perStream.map(_.getAs[Long]("null_keys")).sum
+      if (nullKeys > 0)
         throw new IllegalArgumentException(
-          s"append batch has ${flags.getLong(4)} row(s) with null " +
+          s"append batch has $nullKeys row(s) with null " +
             "stream_id or ts — keys must be non-null")
-      if (flags.getLong(0) > 0)
-        throw new errors.AppendToDerivedStreamNotAllowed(
-          joined.where(isDerived).select("stream_id").distinct()
-            .collect().map(_.getString(0)).mkString(", "))
-      if (flags.getLong(1) > 0)
+      val derived = ids("derived")
+      if (derived.nonEmpty)
+        throw new errors.AppendToDerivedStreamNotAllowed(derived.mkString(", "))
+      val badNumeric = ids("bad_numeric")
+      if (badNumeric.nonEmpty)
         throw new IllegalArgumentException(
-          s"null value appended to numeric stream(s): " +
-            joined.where(isBadNumeric).select("stream_id").distinct()
-              .collect().map(_.getString(0)).mkString(", "))
-      if (checkTimestamp && flags.getLong(2) > 0) {
-        val ex = joined.where(isStale).select("stream_id", "ts", "latest").first()
-        throw new errors.InvalidTimestamp(
-          s"append ts ${ex.getTimestamp(1)} < latest ${ex.getTimestamp(2)} " +
-            s"for stream ${ex.getString(0)}")
-      }
+          s"null value appended to numeric stream(s): " + badNumeric.mkString(", "))
+      if (checkTimestamp)
+        perStream.filter(_.getAs[Timestamp]("stale_ts") != null)
+          .sortBy(_.getAs[String]("_sid")).headOption.foreach { r =>
+            val sid = r.getAs[String]("_sid")
+            throw new errors.InvalidTimestamp(
+              s"append ts ${r.getAs[Timestamp]("stale_ts")} < latest " +
+                s"${live.byId(sid).latest_datapoint.get} for stream $sid")
+          }
       val kept = joined.where(!isStale)
         .select((Schemas.rawDatapoints.fieldNames.toSeq ++
           rawExtras.map(_._1)).map(col): _*)
@@ -2594,38 +2618,34 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
         // validation job above), so the commit diffs this append's files
         // with an O(batch dates) walk — per-append driver cost stays flat
         // no matter how many files the table holds
-        val touchedDates = flags.getSeq[java.sql.Date](3)
-          .map(d => s"dp_date=$d").sorted
+        val touchedDates = perStream.flatMap(r => r.getSeq[java.sql.Date](r.fieldIndex("_dates")))
+          .map(d => s"dp_date=$d").distinct.sorted.toSeq
         scopeWrite("raw", touchedDates)
         // the 100 TB fact-table layout: partitioned by date(ts), so
         // maintenance slices and get_data range scans prune whole partitions
         kept.withColumn("dp_date", to_date(col("ts")))
           .write.mode(SaveMode.Append).partitionBy("dp_date").parquet(rawPath)
         // advance the per-stream earliest/latest bookkeeping from the KEPT
-        // rows only (dropped stale rows must not lower earliest). Computed as
-        // a JOIN against the in-memory registry generation: the driver holds
-        // one whole generation, as the validation broadcast above already
-        // required, and the swap collects the joined rows back into it. The
-        // registry file itself is still rewritten (plain parquet has no
-        // row-level update; at cluster scale this table is Delta/Iceberg
-        // MERGE territory).
-        val bounds = kept.groupBy("stream_id")
-          .agg(min("ts").as("_lo"), max("ts").as("_hi"))
-        val updated = streams.join(bounds, Seq("stream_id"), "left")
-          .withColumn("earliest_datapoint",
-            when(col("_lo").isNotNull,
-              least(coalesce(col("earliest_datapoint"), col("_lo")), col("_lo")))
-              .otherwise(col("earliest_datapoint")))
-          .withColumn("latest_datapoint",
-            when(col("_hi").isNotNull,
-              greatest(coalesce(col("latest_datapoint"), col("_hi")), col("_hi")))
-              .otherwise(col("latest_datapoint")))
-          .drop("_lo", "_hi")
+        // rows' bounds of the validation job (dropped stale rows must not
+        // lower earliest): a driver-side update of the in-memory registry
+        // generation. The registry file itself is still rewritten (plain
+        // parquet has no row-level update; at cluster scale this table is
+        // Delta/Iceberg MERGE territory).
+        val bounds = perStream.collect {
+          case r if r.getAs[String]("_sid") != null && r.getAs[Timestamp]("_lo") != null =>
+            r.getAs[String]("_sid") -> (r.getAs[Timestamp]("_lo"), r.getAs[Timestamp]("_hi"))
+        }.toMap
         // registry is the small dimension table: one single-file swap write
         // keeps the many re-reads across a maintenance session from listing
         // and scheduling 32 shards of a few-KB table (shard only at true
         // millions-of-streams scale)
-        swapRegistry(updated)
+        swapRegistry(registry.rows.map { m =>
+          bounds.get(m.stream_id).fold(m) { case (lo, hi) =>
+            m.copy(
+              earliest_datapoint = Some(m.earliest_datapoint.filter(_.before(lo)).getOrElse(lo)),
+              latest_datapoint = Some(m.latest_datapoint.filter(_.after(hi)).getOrElse(hi)))
+          }
+        })
       }
     } finally joined.unpersist()
   }
@@ -3726,9 +3746,11 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     *    (a single global watermark would silently skip it);
     *  - `filterTags` restricts maintenance to matching streams
     *    (`filter_stream`); others keep their watermarks untouched;
-    *  - per level: ONE shuffle for all selected streams. The per-stream
-    *    lower bound rides a broadcast join; the GLOBAL min bound is applied
-    *    as a pushable literal so the scan still prunes;
+    *  - every level with work in ONE aggregation and ONE write
+    *    ([[Downsample.routedRollup]]): the raw slice and each finer
+    *    level's committed partials are routed to every level they feed,
+    *    with each stream's bounds on a broadcast join and each source's
+    *    GLOBAL bounds as pushable literals so its scan still prunes;
     *  - returns the newly finalized buckets per granularity
     *    (`return_datapoints=True`) as lazy reads of the written slices.
     *
@@ -3742,9 +3764,9 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     if (!exists(rawPath) && !exists(derivedPath)) return Map.empty
     val untilUs = until.toInstant.getEpochSecond * 1000000L +
       until.toInstant.getNano / 1000L
-    // The per-level watermark frames and the returned `produced` read-backs
-    // are built from the in-memory registry generation: local frames that
-    // the registry swap at the end of this call cannot change.
+    // The routing bounds and the returned `produced` read-backs are built
+    // from the in-memory registry generation: local frames that the
+    // registry swap at the end of this call cannot change.
     val live = registry
     val selected: Set[String] =
       if (filterTags.isEmpty) live.byId.keySet
@@ -3765,90 +3787,108 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       .map(_.durationSeconds).minOption
     if (finestOpt.isEmpty) return Map.empty // empty registry
     val levels = Granularity.ladder.filter(_.durationSeconds >= finestOpt.get)
-    val stats: Map[String, Long] = levels.flatMap { g =>
-      selectedRows.map(loOf(_, g)).filter(_ < hiOf(g)).minOption.map(g.name -> _)
+    val his = levels.map(hiOf)
+    val globalLo: Map[Int, Long] = levels.indices.flatMap { i =>
+      selectedRows.map(loOf(_, levels(i))).filter(_ < his(i)).minOption.map(i -> _)
     }.toMap
-    def loDfOf(g: Granularity): DataFrame =
-      selectedRows.map(m => (m.stream_id, loOf(m, g)))
-        .filter(_._2 < hiOf(g)).toDF("stream_id", "_lo")
-    var produced = Map.empty[Granularity, DataFrame]
-    var advanced = Map.empty[String, Long] // level name -> hi actually written
-    // no level with work ⇒ no writes at all: skip the commit-log entry too
-    if (!levels.exists(g => stats.contains(g.name))) return produced
-    // `break` (not `return`): a missing finer level must still fall through
-    // to the metadata write below, or watermark advances already recorded
-    // for earlier levels are lost and the next call re-aggregates the same
-    // buckets — duplicate rollup rows (round-3 verdict, wrong #3)
-    val halt = new scala.util.control.Breaks
-    withCommit("downsample") {
-    halt.breakable { levels.zipWithIndex.foreach { case (g, idx) =>
-      stats.get(g.name).foreach { globalLo =>
-        val hi = hiOf(g)
-        val loDf = broadcast(loDfOf(g))
-        val tsCol = if (idx == 0) "ts" else "bucket_start"
-        val source =
-          if (idx == 0)
-            // dp_date partition pruning on the maintenance slice [lo, hi)
-            rawDatapointsInRange(
-              if (globalLo != Long.MinValue) Some(tsOf(globalLo)) else None,
-              Some(tsOf(hi)))
-          else
-            // intra-commit read: the finer level's snapshot PLUS the
-            // buckets this very commit just wrote into it (a plain
-            // snapshot read would miss them; a live-directory read would
-            // adopt orphans from an earlier torn maintenance run)
-            commitRead(s"rollup/granularity=${levels(idx - 1).name}",
-                Schemas.downsampledPartitioned)
-              .getOrElse(halt.break()).drop("bucket_date")
-        // pushable global bounds first, exact per-stream bound via the join
-        val bounded0 = source.where(col(tsCol) < tsLit(hi))
-        val bounded =
-          if (globalLo != Long.MinValue) bounded0.where(col(tsCol) >= tsLit(globalLo))
-          else bounded0
-        val sliced = bounded.join(loDf, "stream_id")
-          .where(col("_lo") === Long.MinValue || unix_micros(col(tsCol)) >= col("_lo"))
-          .drop("_lo")
-        val agg =
-          if (idx == 0) Downsample.aggregateRaw(sliced, g)
-          else Downsample.rollup(sliced, g)
-        // partitioned by bucket date — the 100 TB layout; maintenance and
-        // reads prune partitions by date before row-group pruning kicks in
-        scopeWrite(s"rollup/granularity=${g.name}")
-        agg.withColumn("bucket_date", to_date(col("bucket_start")))
-          .write.mode(SaveMode.Append).partitionBy("bucket_date")
-          .parquet(rollupPath(g))
-        produced = produced + (g -> {
-          val read = commitRead(s"rollup/granularity=${g.name}",
-              Schemas.downsampledPartitioned)
-            .getOrElse(spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              Schemas.downsampledPartitioned))
-            .drop("bucket_date")
-            .where(col("bucket_start") < tsLit(hi))
-          read.join(loDf, "stream_id")
-            .where(col("_lo") === Long.MinValue ||
-              unix_micros(col("bucket_start")) >= col("_lo"))
-            .drop("_lo")
-        })
-        advanced = advanced + (g.name -> hi)
+    // levels with work, finest first; none ⇒ no writes and no commit
+    val work = levels.indices.filter(globalLo.contains)
+    if (work.isEmpty) return Map.empty
+    def table(i: Int) = s"rollup/granularity=${levels(i).name}"
+    def loDfOf(i: Int): DataFrame =
+      selectedRows.map(m => (m.stream_id, loOf(m, levels(i))))
+        .filter(_._2 < his(i)).toDF("stream_id", "_lo")
+    // pushable global bounds of one source level's scan, `[lo, hi)` on `t`
+    def bounded(df: DataFrame, t: String, lo: Long, hi: Long): DataFrame = {
+      val below = df.where(col(t) < tsLit(hi))
+      if (lo == Long.MinValue) below else below.where(col(t) >= tsLit(lo))
+    }
+    // the bucket_date partitions level i's buckets can land in (all of
+    // them when a bootstrapping stream leaves its window unbounded)
+    val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"),
+      java.time.ZoneId.SHORT_IDS)
+    def datesOf(i: Int): Seq[String] =
+      if (globalLo(i) == Long.MinValue) Seq("")
+      else {
+        def day(us: Long) = java.time.Instant.ofEpochSecond(Math.floorDiv(us, 1000000L))
+          .atZone(zone).toLocalDate
+        val last = day(his(i) - 1)
+        Iterator.iterate(day(globalLo(i)))(_.plusDays(1)).takeWhile(!_.isAfter(last))
+          .map(d => s"bucket_date=$d").toSeq
       }
-    } }
-    if (advanced.nonEmpty) {
-      // watermark advance: for selected streams, each written level's
-      // entry becomes max(old, hi) — identical to the per-stream semantics
-      // (work streams move to hi; already-current streams keep their ≥ hi
-      // value; unselected streams are untouched)
-      swapRegistry(registry.rows.map { m =>
-        if (!selected(m.stream_id)) m
-        else {
-          val du = Option(m.downsampled_until).getOrElse(Map.empty[String, Long])
-          m.copy(downsampled_until = du ++ advanced.map { case (k, hi) =>
-            k -> du.get(k).fold(hi)(math.max(_, hi)) })
-        }
-      })
+    withCommit("downsample") {
+      val snap = rawSnapshot
+      // the sources: the raw slice of level 0's window, and each finer
+      // level's COMMITTED partials in the window of the level above it
+      // (pruned by manifest stats; no listing). Partials this commit
+      // folds into a level reach the coarser levels through the router,
+      // never through a read-back of files written here.
+      val raw = if (!work.contains(0)) None else Some {
+        val lo = globalLo(0)
+        Downsample.pointPartial(bounded(rawDatapointsInRange(
+            if (lo != Long.MinValue) Some(tsOf(lo)) else None, Some(tsOf(his(0)))),
+          "ts", lo, his(0))).withColumn("_src", lit(-1))
+      }
+      val partials = work.filter(_ > 0).flatMap { i =>
+        val (lo, hi) = (globalLo(i), his(i))
+        tableReadFrom(snap, table(i - 1), Schemas.downsampledPartitioned,
+            Some((lo, hi - 1)))
+          .map(df => bounded(df, "bucket_start", lo, hi).drop("bucket_date")
+            .withColumn("_src", lit(i - 1)))
+      }
+      // every selected stream with work at some level, with its bounds
+      val lb = broadcast(selectedRows.flatMap { m =>
+        val los = levels.map(loOf(m, _))
+        if (work.exists(i => los(i) < his(i)))
+          Some(m.stream_id -> Downsample.routeBounds(los))
+        else None
+      }.toDF("stream_id", "_lb"))
+      work.foreach(i => scopeWrite(table(i), datesOf(i)))
+      (raw ++ partials).reduceOption(_.unionByName(_)).foreach { sources =>
+        // partitioned by bucket date — the 100 TB layout; maintenance and
+        // reads prune partitions by date before row-group pruning kicks
+        // in. The rebalance sizes the files of each (level, date) to its
+        // data, as a per-level write's coalesced shuffle did.
+        Downsample.routedRollup(sources.join(lb, "stream_id"), levels, his, work)
+          .withColumn("bucket_date", to_date(col("bucket_start")))
+          .hint("rebalance", col("granularity"), col("bucket_date"))
+          .write.mode(SaveMode.Append).partitionBy("granularity", "bucket_date")
+          .parquet(s"$warehouse/rollup")
+      }
+      // a finer level with no files at all halts the coarser levels: they
+      // keep their watermarks, and whatever the write put in them is
+      // removed again (never committed, so never visible)
+      val halt = work.find(i => i > 0 && committedFiles(table(i - 1)).isEmpty &&
+        writtenSoFar(table(i - 1)).isEmpty)
+      val (done, halted) = work.partition(i => halt.forall(i < _))
+      halted.foreach(i => writtenSoFar(table(i))
+        .foreach(f => io.deleteFile(s"${tablePath(table(i))}/$f")))
+      if (done.nonEmpty) {
+        // watermark advance: for selected streams, each written level's
+        // entry becomes max(old, hi) — identical to the per-stream
+        // semantics (work streams move to hi; already-current streams keep
+        // their ≥ hi value; unselected streams are untouched)
+        val advanced = done.map(i => levels(i).name -> his(i))
+        swapRegistry(registry.rows.map { m =>
+          if (!selected(m.stream_id)) m
+          else {
+            val du = Option(m.downsampled_until).getOrElse(Map.empty[String, Long])
+            m.copy(downsampled_until = du ++ advanced.map { case (k, hi) =>
+              k -> du.get(k).fold(hi)(math.max(_, hi)) })
+          }
+        })
+      }
+      done.map { i =>
+        val read = commitRead(table(i), Schemas.downsampledPartitioned)
+          .getOrElse(readFiles(table(i), Schemas.downsampledPartitioned, Nil))
+          .drop("bucket_date")
+          .where(col("bucket_start") < tsLit(his(i)))
+        levels(i) -> read.join(loDfOf(i), "stream_id")
+          .where(col("_lo") === Long.MinValue ||
+            unix_micros(col("bucket_start")) >= col("_lo"))
+          .drop("_lo")
+      }.toMap
     }
-    }
-    produced
   }
 
   /** T6 backfill/reprocess: drop all rollup state and recompute the whole
@@ -4488,6 +4528,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     */
   private def refreshDerived(until: Option[Timestamp]): Unit = {
     val full = until.isEmpty
+    import spark.implicits._
     // per-row bucket duration from each derived stream's granularity —
     // the same epoch-µs floor as Downsample.bucketStart, duration via the
     // joined metadata instead of a plan-time literal
@@ -4495,60 +4536,46 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       typedLit(Granularity.ladder
         .map(g => g.name -> g.durationSeconds * 1000000L).toMap),
       col("highest_granularity"))
-    // per-derived work window [_lo, _hi): lo = watermark (MinValue ⇒
-    // bootstrap), hi = floor(until, granularity); a stream already at hi
-    // has no work
-    val hi = until.fold(lit(Long.MaxValue)) { u =>
-      val us = u.toInstant.getEpochSecond * 1000000L + u.toInstant.getNano / 1000L
-      lit(us) - pmod(lit(us), durUs)
-    }
-    val lo = if (full) lit(Long.MinValue)
-      else coalesce(element_at(col("downsampled_until"), lit("derived")),
-        lit(Long.MinValue))
-    val work = streams.where(col("derive_op").isNotNull)
-      .withColumn("max_value",
-        regexp_extract(col("derive_args"), MaxValueArg, 1).cast("double"))
-      .withColumn("_hi", hi)
-      .withColumn("_lo", lo)
-      .where(col("_lo") < col("_hi"))
-      .select(col("stream_id").as("derived_id"), col("derive_op"),
-        col("max_value"), col("highest_granularity"), col("derived_from"),
-        col("_lo"), col("_hi"))
-    // driver-side stats: op classes present, global scan bounds, whether
-    // any stream bootstraps, and the max_value validation count — all in
-    // ONE O(op classes) job, never O(derived streams); the (rare) invalid
-    // case pays a second lookup only to name the offending stream
-    val stats = work.groupBy("derive_op")
-      .agg(min("_lo").as("lo"), max("_hi").as("hi"),
-        sum(when(col("_lo") === Long.MinValue, 1L).otherwise(0L)).as("boots"),
-        sum(when(col("derive_op") === "counter_derivative" &&
-          col("max_value").isNotNull && col("max_value") <= 0, 1L)
-          .otherwise(0L)).as("bad_maxv"))
-      .collect()
-    if (stats.isEmpty || !exists(rawPath)) return
-    val opCounts = stats.map(_.getString(0)).toSet
+    // per-derived work window [lo, hi), on the driver over the in-memory
+    // registry: lo = watermark (MinValue ⇒ bootstrap), hi =
+    // floor(until, granularity); a stream already at hi has no work
+    val untilUs = until.map(u =>
+      u.toInstant.getEpochSecond * 1000000L + u.toInstant.getNano / 1000L)
+    val work = registry.rows.flatMap { m =>
+      for {
+        op <- m.derive_op
+        hi <- untilUs.fold(Option(Long.MaxValue)) { us =>
+          Granularity.ladder.find(_.name == m.highest_granularity).map { g =>
+            us - Math.floorMod(us, g.durationSeconds * 1000000L)
+          }
+        }
+        lo = if (full) Long.MinValue else Option(m.downsampled_until)
+          .flatMap(_.get("derived")).getOrElse(Long.MinValue)
+        if lo < hi
+      } yield Datastream.DeriveWork(m.stream_id, op, m.derive_args.flatMap(a =>
+        MaxValueArg.r.findFirstMatchIn(a).flatMap(_.group(1).toDoubleOption)),
+        m.highest_granularity, m.derived_from, lo, hi)
+    }.sortBy(_.id)
+    if (work.isEmpty || !exists(rawPath)) return
+    val ops = work.map(_.op).toSet
     // ensure-time validation admits only Derive.ops; re-checked here because
     // this also reads registries written by older/foreign tools
-    opCounts.find(!Derive.ops(_)).foreach { op =>
+    ops.find(!Derive.ops(_)).foreach { op =>
       throw new errors.InvalidOperatorArguments(s"unknown derive op $op")
     }
-    if (stats.map(_.getLong(4)).sum > 0) {
-      val bad = work.where(col("derive_op") === "counter_derivative" &&
-          col("max_value").isNotNull && col("max_value") <= 0)
-        .select("derived_id").limit(1).collect()
+    work.find(w => w.op == "counter_derivative" && w.maxValue.exists(_ <= 0)).foreach { w =>
       throw new errors.InvalidOperatorArguments(
-        s"counter_derivative max_value must be positive " +
-          s"(stream ${bad.head.getString(0)})")
+        s"counter_derivative max_value must be positive (stream ${w.id})")
     }
-    val globalLo = stats.map(_.getLong(1)).min
-    val globalHi = stats.map(_.getLong(2)).max
-    val anyBootstrap = stats.map(_.getLong(3)).sum > 0
+    val globalLo = work.map(_.lo).min
+    val globalHi = work.map(_.hi).max
+    val boots = work.filter(_.lo == Long.MinValue).map(_.id).toSet
     // route every source row to every derived stream consuming it: one
     // broadcast of the registry-sized derived metadata
-    val routes = broadcast(work
-      .select(col("derived_id"), col("derive_op"), col("max_value"),
-        col("highest_granularity"), col("_lo"), col("_hi"),
-        explode(col("derived_from")).as("stream_id")))
+    val routes = broadcast(work.flatMap { w =>
+      w.from.map(src => (w.id, w.op, w.maxValue, w.granularity, w.lo, w.hi, src))
+    }.toDF("derived_id", "derive_op", "max_value", "highest_granularity",
+      "_lo", "_hi", "stream_id"))
     withCommit(if (full) "update_derived" else "update_derived_incremental") {
       // the prev-point sidecar as the previous snapshot published it: the
       // incremental refresh replaces it whole below, the full refresh
@@ -4561,13 +4588,9 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       // snapshot keep them until this commit lands). In the full refresh
       // every stream bootstraps, so the whole table goes.
       if (full) retireFiles("derived", committedFiles("derived"))
-      else if (anyBootstrap) {
-        // a local collect: `work` is the in-memory registry generation
-        val boots = work.where(col("_lo") === Long.MinValue)
-          .select("derived_id").collect().map(_.getString(0)).toSet
+      else if (boots.nonEmpty)
         retireFiles("derived",
           committedFiles("derived").filter(f => dirStream("derived", f).exists(boots)))
-      }
       scopeWrite("derived")
       // the bounded source slice: dp_date partition pruning via the global
       // bounds, the exact per-stream [lo, hi) window via the route join —
@@ -4592,14 +4615,21 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
             lit(null).cast("string").as("value_json"), col("derived_id"),
             col("derive_op"), col("max_value"), col("highest_granularity"),
             col("_lo"), col("_hi")))
-      val src = prevRows.fold(slice)(slice.unionByName(_))
-        .withColumn("event_id", monotonically_increasing_id())
+      // checkpoint, not cache: a derived stream's sources may include OTHER
+      // derived streams — slices this commit is retiring. A plain cache
+      // lost mid-write would silently recompute from lineage against the
+      // table being replaced; the lineage-free checkpoint cannot. The
+      // emitted points and the new sidecar rows are both derived from it,
+      // so the slice is scanned once.
+      val (src, srcRdds) = Plans.checkpointTracked(
+        prevRows.fold(slice)(slice.unionByName(_))
+          .withColumn("event_id", monotonically_increasing_id()))
       val part = Seq("derived_id", "stream_id")
       def shape(out: DataFrame, valueCol: String): DataFrame =
         out.select(col("derived_id").as("stream_id"), col("ts"),
           col(valueCol).cast("double").as("value"),
           lit(null).cast("string").as("value_json"))
-      val plans = opCounts.toSeq.sorted.map {
+      val plans = ops.toSeq.sorted.map {
         case "sum" =>
           shape(src.where(col("derive_op") === "sum")
             .groupBy(col("derived_id"),
@@ -4620,76 +4650,69 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       }
       // append-only emission: keep outputs at/above each stream's
       // watermark (a prev row's own output re-derives below it)
-      val loDf = broadcast(work.select(col("derived_id").as("stream_id"),
-        col("_lo"), col("_hi")))
-      val out = plans.reduce(_.unionByName(_))
+      val loDf = broadcast(work.map(w => (w.id, w.lo)).toDF("stream_id", "_lo"))
+      val (emitted, rdds) = Plans.checkpointTracked(plans.reduce(_.unionByName(_))
         .join(loDf, Seq("stream_id"))
         .where(col("_lo") === Long.MinValue || unix_micros(col("ts")) >= col("_lo"))
-        .drop("_lo", "_hi")
-      // checkpoint, not cache: a derived stream's sources may include OTHER
-      // derived streams — slices this commit is retiring. A plain cache
-      // lost mid-write would silently recompute from lineage against the
-      // table being replaced; the lineage-free checkpoint cannot.
-      val (emitted, rdds) = Plans.checkpointTracked(out)
+        .drop("_lo"))
       try {
         emitted.write.mode(SaveMode.Append)
           .partitionBy("stream_id")
           .parquet(derivedPath)
         if (!full) {
-          // advance the prev-point sidecar: per (derived, source) lag pair,
-          // the max-(ts, event_id) row of this window (the unioned prev row
-          // itself loses to any newer row); untouched pairs keep their rows
-          val newPrev = src.where(col("derive_op") =!= "sum")
+          // advance the prev-point sidecar in one aggregate: per (derived,
+          // source) lag pair, the max-(ts, event_id) row of this window (the
+          // unioned prev row itself loses to any newer row); a pair with no
+          // row in the window keeps its sidecar row, which ranks below them
+          val pair = Seq("derived_id", "stream_id", "ts", "value")
+          val ranked = src.where(col("derive_op") =!= "sum")
+            .select(pair.map(col) :+ lit(1).as("_rank") :+ col("event_id"): _*)
+          val newPrev = prevSidecar.fold(ranked)(p => ranked.unionByName(
+              p.select(pair.map(col) :+ lit(0).as("_rank") :+ lit(0L).as("event_id"): _*)))
             .groupBy("derived_id", "stream_id")
             .agg(max_by(struct(col("ts"), col("value")),
-              struct(col("ts"), col("event_id"))).as("_p"))
+              struct(col("_rank"), col("ts"), col("event_id"))).as("_p"))
             .select(col("derived_id"), col("stream_id"),
               col("_p.ts").as("ts"), col("_p.value").as("value"))
-          val mergedPrev = prevSidecar.fold(newPrev)(_
-            .join(newPrev.select("derived_id", "stream_id"),
-              Seq("derived_id", "stream_id"), "left_anti")
-            .unionByName(newPrev))
           scopeWrite("derive_prev")
-          mergedPrev.coalesce(1).write.mode(SaveMode.Append).parquet(derivePrevPath)
+          newPrev.coalesce(1).write.mode(SaveMode.Append).parquet(derivePrevPath)
         }
-        // registry, per worked stream: bounds from the emitted points — a
-        // bootstrap SETS them (its slice was replaced), others extend; and
-        // the watermark → hi (the full refresh clears it instead). Derived
-        // streams never pass through appendMultiple, so without this they'd
-        // have null bounds.
-        val emittedBounds = emitted.groupBy("stream_id")
-          .agg(min("ts").as("_elo"), max("ts").as("_ehi"))
-        val boot = col("_lo") === Long.MinValue
-        val kept = map_filter(coalesce(col("downsampled_until"),
-          map().cast("map<string,bigint>")), (k, _) => k =!= "derived")
-        val updated = streams
-          .join(work.select(col("derived_id").as("stream_id"), col("_lo"),
-            col("_hi")), Seq("stream_id"), "left")
-          .join(emittedBounds, Seq("stream_id"), "left")
-          .withColumn("earliest_datapoint",
-            when(col("_elo").isNotNull,
-              when(boot, col("_elo"))
-                .otherwise(least(coalesce(col("earliest_datapoint"),
-                  col("_elo")), col("_elo"))))
-              .otherwise(col("earliest_datapoint")))
-          .withColumn("latest_datapoint",
-            when(col("_ehi").isNotNull,
-              when(boot, col("_ehi"))
-                .otherwise(greatest(coalesce(col("latest_datapoint"),
-                  col("_ehi")), col("_ehi"))))
-              .otherwise(col("latest_datapoint")))
-          .withColumn("downsampled_until",
-            when(col("_hi").isNotNull,
-              if (full) kept else map_concat(kept, map(lit("derived"), col("_hi"))))
-              .otherwise(col("downsampled_until")))
-          .drop("_lo", "_hi", "_elo", "_ehi")
-        swapRegistry(updated)
-      } finally rdds.foreach(_.unpersist(blocking = false))
+        // registry, per worked stream: bounds from the emitted points (one
+        // registry-sized collect) — a bootstrap SETS them (its slice was
+        // replaced), others extend; and the watermark → hi (the full
+        // refresh clears it instead). Derived streams never pass through
+        // appendMultiple, so without this they'd have null bounds.
+        val bounds = emitted.groupBy("stream_id")
+          .agg(min("ts"), max("ts")).collect()
+          .map(r => r.getString(0) -> (r.getTimestamp(1), r.getTimestamp(2))).toMap
+        val his = work.map(w => w.id -> w.hi).toMap
+        def widen(old: Option[Timestamp], t: Timestamp, boot: Boolean)(
+            keep: Timestamp => Boolean): Option[Timestamp] =
+          Some(if (boot) t else old.filter(keep).getOrElse(t))
+        swapRegistry(registry.rows.map { m =>
+          his.get(m.stream_id).fold(m) { hi =>
+            val boot = boots(m.stream_id)
+            val du = Option(m.downsampled_until).getOrElse(Map.empty[String, Long]) - "derived"
+            bounds.get(m.stream_id).fold(m) { case (lo, hiTs) =>
+              m.copy(
+                earliest_datapoint = widen(m.earliest_datapoint, lo, boot)(_.before(lo)),
+                latest_datapoint = widen(m.latest_datapoint, hiTs, boot)(_.after(hiTs)))
+            }.copy(downsampled_until = if (full) du else du + ("derived" -> hi))
+          }
+        })
+      } finally (srcRdds ++ rdds).foreach(_.unpersist(blocking = false))
     }
   }
 }
 
 object Datastream {
+  /** One derived stream's refresh work: its op, parsed `max_value`,
+    * granularity, sources and window `[lo, hi)` in epoch-µs.
+    */
+  private final case class DeriveWork(id: String, op: String, maxValue: Option[Double],
+                                      granularity: String, from: Seq[String],
+                                      lo: Long, hi: Long)
+
   /** Bound on the driver-side distinct-stream-id collect the mutation
     * verbs ([[Datastream.upsertDatapoints]], [[Datastream.deleteDatapoints]])
     * use for manifest pruning — the house `head(max+1)` fail-fast: past

@@ -10,9 +10,11 @@ import org.apache.spark.sql.types._
   *
   * Design (Spark-first, not a port):
   *
-  *  - One `groupBy(stream_id, bucket)` per granularity level — a single
-  *    shuffle per level regardless of stream count. The reference iterates
-  *    streams in a Python driver loop; we must not (SURVEY.md §7.4.5).
+  *  - One `groupBy(stream_id, bucket)` per granularity level, a single
+  *    shuffle regardless of stream count; incremental maintenance folds
+  *    every level in one `groupBy(level, stream_id, bucket)`
+  *    ([[routedRollup]]). The reference iterates streams in a Python
+  *    driver loop; we must not (SURVEY.md §7.4.5).
   *  - Buckets are epoch-aligned, labeled by start, half-open
   *    `[start, start+duration)` — identical to the reference's
   *    `round_timestamp` [ds :: api.py :: Granularity.round_timestamp].
@@ -25,9 +27,10 @@ import org.apache.spark.sql.types._
   *    `std_dev` are derived at read time from (sum, count, sum_squares)
   *    [SURVEY.md §1.3].
   *  - At 100 TB: partial tables are written per granularity (partitioned by
-  *    `date(bucket_start)`, bucketed by `stream_id`); each level reads only
-  *    the next-finer level (`maxRowsScanned` per level shrinks ~60×), and
-  *    the shuffle key `(stream_id, bucket)` is high-cardinality → no skew.
+  *    `date(bucket_start)`, bucketed by `stream_id`); maintenance reads the
+  *    raw slice once and each finer level's committed partials only in the
+  *    window of the level above it, and the shuffle key
+  *    `(level, stream_id, bucket)` is high-cardinality → no skew.
   */
 object Downsample {
 
@@ -78,6 +81,73 @@ object Downsample {
         min("tfirst").as("tfirst"),
         max("tlast").as("tlast"),
         sum("tsum_us").as("tsum_us"))
+
+  /** One raw point as the partial state [[aggregateRaw]] gives a bucket
+    * holding only that point, at `bucket_start = ts`: the form in which raw
+    * rows enter [[routedRollup]] beside committed partials. Merging these
+    * with [[rollup]]'s aggregates is exactly [[aggregateRaw]].
+    */
+  def pointPartial(raw: DataFrame): DataFrame = {
+    val v = col("value")
+    raw.select(col("stream_id"), col("ts").as("bucket_start"), lit(1L).as("cnt"),
+      v.cast(DecV).as("vsum"), v.as("vmin"), v.as("vmax"),
+      (v * v).cast(DecV).as("vsumsq"), col("ts").as("tfirst"),
+      col("ts").as("tlast"), unix_micros(col("ts")).cast(DecT).as("tsum_us"))
+  }
+
+  /** Per-stream routing bounds for [[routedRollup]] over `levels.size` = L
+    * levels with watermarks `los` (epoch-µs, `Long.MinValue` for none):
+    * entry `(src + 1) * L + g` is the lowest time at which a row of source
+    * level `src` (−1 = raw) reaches level `g` — the largest watermark of
+    * the levels `src + 1 .. g` it is folded through — and `Long.MaxValue`
+    * where `g <= src`.
+    */
+  def routeBounds(los: IndexedSeq[Long]): Seq[Long] = {
+    val n = los.size
+    for (src <- -1 until n - 1; g <- 0 until n)
+      yield if (g <= src) Long.MaxValue else los.slice(src + 1, g + 1).max
+  }
+
+  /** The ladder in ONE expand-then-aggregate pass, the plan Spark uses for
+    * `GROUPING SETS`. Each row of `sources` is partial state at
+    * `bucket_start` from source level `_src` (−1 for a raw point, see
+    * [[pointPartial]]; `j` for a level-`j` partial) and carries its
+    * stream's `_lb` ([[routeBounds]]). It is copied to every level `g` of
+    * `targets` with `_lb(src, g) <= t < his(g)`, and one
+    * `groupBy(level, stream_id, bucket)` merges all copies.
+    *
+    * This equals folding the levels one at a time, each level reading the
+    * next-finer one as it stands after its own fold, restricted to the
+    * window `[watermark, his)`: watermarks and `his` are aligned to their
+    * level, and every level's duration divides the next, so a row lies in
+    * a window exactly when the finer bucket holding it does. Returns
+    * `granularity` (the level's name) beside the partial columns.
+    */
+  def routedRollup(sources: DataFrame, levels: IndexedSeq[Granularity],
+                   his: IndexedSeq[Long], targets: Seq[Int]): DataFrame = {
+    val n = levels.size
+    val t = unix_micros(col("bucket_start"))
+    val route = array(targets.map { g =>
+      when(t >= element_at(col("_lb"), (col("_src") + 1) * n + (g + 1)) &&
+        t < lit(his(g)), lit(g))
+    }: _*)
+    val dur = element_at(typedLit(levels.map(_.durationSeconds * 1000000L)),
+      col("_g") + 1)
+    sources.select(col("*"), explode(filter(route, _.isNotNull)).as("_g"))
+      .groupBy(col("_g"), col("stream_id"),
+        timestamp_micros(t - pmod(t, dur)).as("bucket_start"))
+      .agg(
+        sum("cnt").as("cnt"),
+        sum("vsum").as("vsum"),
+        min("vmin").as("vmin"),
+        max("vmax").as("vmax"),
+        sum("vsumsq").as("vsumsq"),
+        min("tfirst").as("tfirst"),
+        max("tlast").as("tlast"),
+        sum("tsum_us").as("tsum_us"))
+      .select(element_at(typedLit(levels.map(_.name)), col("_g") + 1)
+        .as("granularity") +: Schemas.downsampled.fieldNames.toSeq.map(col): _*)
+  }
 
   /** Run the full ladder cascade from `from` (exclusive start = raw at
     * `from`) up to `to`, re-aggregating each level from the next-finer one.

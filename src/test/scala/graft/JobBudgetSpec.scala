@@ -280,6 +280,58 @@ class JobBudgetSpec extends SparkSpec {
     assert(n == 9, s"$n jobs")
   }
 
+  /** Source streams `s1`, `s2` (seconds), a derived `sum` and a derived
+    * `counter_derivative` over them, a day of points downsampled and
+    * refreshed, and the next day's points appended: the next maintenance
+    * step to midnight has work at every ladder level and every op class.
+    */
+  private def maintained(): Datastream = {
+    val ds = new Datastream(spark, Files.createTempDirectory("graft-budget").toString)
+    ds.ensureStream("s1", Map("site" -> "a"))
+    ds.ensureStream("s2", Map("site" -> "b"))
+    ds.ensureStream("sum", Map("kind" -> "sum"),
+      deriveOp = Some("sum"), derivedFrom = Seq("s1", "s2"))
+    ds.ensureStream("rate", Map("kind" -> "rate"), deriveOp = Some("counter_derivative"),
+      deriveArgs = Some("{\"max_value\": 1000}"), derivedFrom = Seq("s1"))
+    def day(d: String) = dp(Seq("s1", "s2").flatMap(s => Seq(
+      (s, s"${d}T00:00:10Z", 1.0), (s, s"${d}T06:30:00Z", 2.0),
+      (s, s"${d}T23:59:50Z", 3.0)))).select("stream_id", "ts", "value")
+    ds.appendMultiple(day("2024-01-01"))
+    ds.downsampleStreams(ts("2024-01-02T00:00:00Z"))
+    ds.updateDerivedStreamsIncremental(ts("2024-01-02T00:00:00Z"))
+    ds.appendMultiple(day("2024-01-02"))
+    ds
+  }
+
+  test("a warm 7-level downsampleStreams launches at most 5 jobs") {
+    val ds = maintained()
+    // before: 22, a write execution per level, each reading back the
+    // level below it; now one routed aggregation and one write
+    val (jobs, _) = launched {
+      val produced = ds.downsampleStreams(ts("2024-01-03T00:00:00Z"))
+      assert(produced.keySet == Granularity.ladder.toSet)
+    }
+    assert(jobs.size <= 5, jobs.mkString("\n----\n"))
+  }
+
+  test("a warm updateDerivedStreamsIncremental launches 13 jobs") {
+    val ds = maintained()
+    // before: 24 — the op-class stats, a second scan of the source slice
+    // for the sidecar and a joined registry collect; now the slice is
+    // checkpointed once, the sidecar advances in one aggregate, and the
+    // stats and the registry update run on the driver
+    val (jobs, _) = launched(ds.updateDerivedStreamsIncremental(ts("2024-01-03T00:00:00Z")))
+    assert(jobs.size == 13, s"${jobs.size} jobs\n" + jobs.mkString("\n----\n"))
+  }
+
+  test("a warm appendMultiple launches 6 jobs") {
+    val ds = maintained()
+    // before: 9 — the per-stream bounds were a second aggregate joined to
+    // the registry and collected; now they ride the validation job
+    val (jobs, _) = launched(ds.appendMultiple(batchAt("2024-01-03T01:00:00Z")))
+    assert(jobs.size == 6, s"${jobs.size} jobs\n" + jobs.mkString("\n----\n"))
+  }
+
   test("a warm Sq.appendToIndex launches 3 jobs: the params table is read with its schema") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-budget-sq").toString

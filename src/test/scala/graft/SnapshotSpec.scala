@@ -195,6 +195,59 @@ class SnapshotSpec extends SparkSpec {
     assert(ds.rawDatapoints.collect().toSet === before)
   }
 
+  test("crash mid-downsample: readers stay on the prior snapshot; a rerun " +
+    "gives the rollups and watermarks of an uncrashed run; vacuum reclaims " +
+    "a torn write's staging leftover") {
+    def day(d: String) = dp(Seq(("s1", s"${d}T00:00:10Z", 1.0),
+      ("s2", s"${d}T06:30:00Z", 2.0), ("s1", s"${d}T23:59:50Z", 3.0)))
+      .select("stream_id", "ts", "value")
+    def warehouse() = {
+      val (ds, dir) = freshDs
+      Seq("s1", "s2").foreach(ds.ensureStream(_))
+      ds.appendMultiple(day("2024-01-01"))
+      ds.downsampleStreams(ts("2024-01-02T00:00:00Z"))
+      ds.appendMultiple(day("2024-01-02"))
+      (ds, dir)
+    }
+    val until = ts("2024-01-03T00:00:00Z")
+    def rollups(ds: Datastream) = Granularity.ladder.map(g =>
+      g -> ds.rollup(g).drop("bucket_date").collect().toSet).toMap
+    def watermarks(ds: Datastream) =
+      Seq("s1", "s2").map(s => s -> ds.streamMeta(s).downsampled_until).toMap
+    def rows(produced: Map[Granularity, org.apache.spark.sql.DataFrame]) =
+      produced.map { case (g, df) => g -> df.collect().toSet }
+    val (ds, dir) = warehouse()
+    val (rollupsBefore, marksBefore) = (rollups(ds), watermarks(ds))
+    val version = ds.currentVersion
+    ds.crashBeforeCommitOf = Set("downsample")
+    try intercept[IllegalStateException](ds.downsampleStreams(until))
+    finally ds.crashBeforeCommitOf = Set.empty
+    // every rollup file of the crashed write is on disk, none is visible,
+    // and the watermarks did not move
+    assert(ds.currentVersion === version)
+    assert(rollups(ds) === rollupsBefore)
+    assert(watermarks(ds) === marksBefore)
+    assert(ds.getData("s1", Granularity.Days).count() === 1)
+    assert(ds.tornOperations === Seq("downsample"))
+    val produced = rows(ds.downsampleStreams(until))
+    val (clean, _) = warehouse()
+    val cleanProduced = rows(clean.downsampleStreams(until))
+    assert(produced.keySet === Granularity.ladder.toSet)
+    assert(produced === cleanProduced)
+    assert(rollups(ds) === rollups(clean))
+    assert(watermarks(ds) === watermarks(clean))
+    // a torn write leaves its task output under `rollup/_temporary`,
+    // outside every table; vacuum reclaims it with the crash's orphans
+    val staging = new java.io.File(s"$dir/rollup/_temporary/0/_temporary/" +
+      "attempt_0/granularity=days/bucket_date=2024-01-02")
+    staging.mkdirs()
+    Files.write(new java.io.File(staging, "part-00000.snappy.parquet").toPath,
+      Array[Byte](1, 2, 3))
+    assert(ds.vacuumRaw() >= 2L)
+    assert(!new java.io.File(s"$dir/rollup/_temporary").exists())
+    assert(rollups(ds) === rollups(clean))
+  }
+
   test("rollup reads prune bucket_date partitions through the manifest file list") {
     val (ds, _) = freshDs
     ds.ensureStream("s1")
