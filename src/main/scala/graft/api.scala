@@ -900,13 +900,18 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * bodies use this for intra-commit reads (e.g. the rollup cascade
     * reading the finer level it just wrote) — a live-directory read would
     * adopt orphans from earlier torn mutations, and a plain snapshot read
-    * would miss this commit's own writes.
+    * would miss this commit's own writes. Non-empty `within` keeps only
+    * the committed files that may hold rows of one of its groups
+    * ([[touchedByRanges]]).
     */
   private def commitRead(table: String,
-                         schema: org.apache.spark.sql.types.StructType): Option[DataFrame] = {
+                         schema: org.apache.spark.sql.types.StructType,
+                         within: Seq[(Long, Long, Option[IndexedSeq[String]])] = Nil)
+      : Option[DataFrame] = {
     import scala.jdk.CollectionConverters._
     val retired = retiredFiles.asScala.collect { case (t, f) if t == table => f }
-    val files = (committedFiles(table) -- retired) ++ writtenSoFar(table)
+    val committed = if (within.isEmpty) committedFiles(table) else touchedByRanges(table, within)
+    val files = (committed -- retired) ++ writtenSoFar(table)
     if (files.isEmpty) None else Some(readFiles(table, schema, files))
   }
 
@@ -927,7 +932,10 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
   /** The one copy-on-write rewrite: declare `files`' partition
     * directories (plus `extraScope`) as this commit's write scope, retire
     * `files`, read exactly them, and append `transform`'s output
-    * partitioned by `partCol` as fresh files beside the retired ones.
+    * partitioned by `partCols` as fresh files beside the retired ones.
+    * Paths are relative to `table`, which may be the root of several
+    * manifest tables (`rollup`, partitioned first by `granularity`): each
+    * path's scope and retirement go to the table it lies in.
     * Nothing is deleted in place: a crash at any instant leaves every
     * reader on the pre-mutation snapshot and the new files as orphans
     * vacuum reclaims. The retired files stay immutable until vacuum, so
@@ -938,20 +946,22 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     */
   private def rewriteFiles(table: String,
                            schema: org.apache.spark.sql.types.StructType,
-                           partCol: String, files: Set[String],
+                           partCols: Seq[String], files: Set[String],
                            extraScope: Seq[String] = Seq.empty,
                            maxRecordsPerFile: Option[Long] = None)(
       transform: DataFrame => DataFrame): Unit =
     if (files.nonEmpty || extraScope.nonEmpty) {
-      val dirs = files.map(f => f.indexOf('/') match {
-        case -1 => ""
-        case i => f.substring(0, i)
-      })
-      scopeWrite(table, (dirs ++ extraScope).toSeq.sorted)
-      retireFiles(table, files)
+      def owned(paths: Iterable[String]): Map[String, Seq[String]] =
+        paths.toSeq.sorted.map { p =>
+          val t = manifestTables.find(t => s"$table/$p".startsWith(s"$t/")).get
+          t -> s"$table/$p".stripPrefix(s"$t/")
+        }.groupMap(_._1)(_._2)
+      val dirs = files.map(_.split('/').dropRight(1).take(partCols.size).mkString("/"))
+      owned(dirs ++ extraScope).foreach { case (t, ps) => scopeWrite(t, ps) }
+      owned(files).foreach { case (t, fs) => retireFiles(t, fs.toSet) }
       val w = transform(readFiles(table, schema, files)).write.mode(SaveMode.Append)
       maxRecordsPerFile.fold(w)(n => w.option("maxRecordsPerFile", n))
-        .partitionBy(partCol).parquet(tablePath(table))
+        .partitionBy(partCols: _*).parquet(tablePath(table))
     }
 
   /** The fact tables (raw, derived) with their read schema and partition
@@ -1656,7 +1666,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
         val held = filesHolding(mixed.filter(_._3.nonEmpty), isDoomed)
         Concurrency.inParallel(dataTables.flatMap { case (table, schema, partCol) =>
           held.get(table).map(files => () =>
-            rewriteFiles(table, schema, partCol, files)(
+            rewriteFiles(table, schema, Seq(partCol), files)(
               _.where(col("stream_id").isNull || !isDoomed)))
         })
       }
@@ -1731,138 +1741,121 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
                                  groups: Seq[(Long, Long, Option[IndexedSeq[String]])],
                                  ranges: DataFrame,
                                  hinted: Boolean = true): Unit =
-    rewriteFiles(table, schema, partCol, touchedByRanges(table, groups))(
+    rewriteFiles(table, schema, Seq(partCol), touchedByRanges(table, groups))(
       minusDeleted(_, Some(ranges), hinted))
 
-  /** Purge + recompute the finalized rollup buckets a row delete
-    * invalidated, inside the delete's own commit — so the cascade is never
-    * observably inconsistent with the post-delete fact table. Per
-    * granularity: the (stream, bucket) pairs overlapping the deleted window
-    * are captured from the committed rollup (checkpointed — the rewrite
-    * below replaces the files they were read from), their files are
-    * manifest-pruned-retired, and each purged bucket is recomputed straight
-    * from the SURVIVING fact rows. Recomputing from raw is bit-identical to
-    * the ladder cascade by the decimal-partials associativity the cascade
-    * is built on ([[Downsample]]); a bucket whose rows were all deleted
-    * simply vanishes (empty aggregate), and buckets beyond the maintenance
-    * watermark were never finalized, so the semi-join against the purged
-    * set re-adds exactly what existed. Work is proportional to the deleted
-    * window × doomed streams, never the table.
+  /** Purge + recompute the rollup buckets a row delete or an upsert
+    * invalidated, inside the mutation's own commit — so the cascade is
+    * never observably inconsistent with the post-mutation fact table.
+    * `groups` are `(loUs, hiUs, sids)` windows as [[touchedByRanges]]
+    * takes them; at level g a group's window is `[winLo_g, winHi_g]`, its
+    * ends aligned down to g. `sids = None` is the past-the-bound fallback:
+    * `doomedIds` then names the streams (a semi-join) and file pruning
+    * degrades to time-range-only. One pass for all seven levels:
     *
-    * `upsertKeys` (the upsert path): the purge set is widened with the
-    * FINALIZED bucket of every upserted `(stream_id, ts)` key — finalized
-    * means `bucket_start < downsampled_until[g]`, the exact predicate the
-    * maintenance watermark advances under — whether or not that bucket
-    * currently exists in the rollup. An upsert into a finalized GAP bucket
-    * (no prior rows, watermark already past) must materialize the bucket
-    * now: maintenance will never revisit it. Buckets at-or-above the
-    * watermark stay untouched — maintenance owns them, and pre-adding them
-    * here would double their rows when the cascade finalizes.
+    *  1. ONE purged-key frame `(granularity, stream_id, bucket_start)`,
+    *     checkpointed (the rewrite below replaces the files it is read
+    *     from): each level's committed rows of the groups' streams inside
+    *     their windows and, with `upsertKeys`, the FINALIZED bucket of
+    *     every upserted key at each level — `bucket_start <
+    *     downsampled_until[g]`, the predicate the maintenance watermark
+    *     advances under — whether or not it exists yet. An upsert into a
+    *     finalized GAP bucket must materialize it now: maintenance never
+    *     revisits it. Buckets at or above the watermark are maintenance's:
+    *     adding one here would double its rows when the cascade finalizes.
+    *     One collect of its `(granularity, bucket_date)` pairs says
+    *     whether anything was purged and where the write may land.
+    *  2. ONE recompute: the SURVIVING fact rows of the groups' streams in
+    *     their coarsest windows, routed as raw points to every purged
+    *     level ([[Downsample.routedRollup]]) under the bounds
+    *     `[winLo_g, winHi_g + dur_g)` spanning the groups, semi-joined to
+    *     the purged keys. Bit-identical to aggregating each level from
+    *     raw ([[Downsample.pointPartial]]); a bucket whose rows were all
+    *     deleted simply vanishes.
+    *  3. ONE rewrite of `rollup/` ([[rewriteFiles]]): each purged level's
+    *     touched files are retired, and their rows minus the purged keys
+    *     plus the recomputed rows are written once, partitioned by
+    *     `(granularity, bucket_date)`.
     *
-    * `doomedIds` arrives pre-hinted by the caller: `broadcast(...)` when
-    * the id set fit the driver-collect bound, a plain (shuffle-joined)
-    * frame on the past-the-bound fallback path — the repair plan itself is
-    * identical either way. `doomedSorted` is `None` exactly on that
-    * fallback, degrading file pruning to time-range-only.
+    * Work is proportional to the mutated windows × streams, never the
+    * table.
     */
-  private def repairRollups(doomedIds: DataFrame,
-                            doomedSorted: Option[IndexedSeq[String]],
-                            loUs: Long, hiUs: Long,
+  private def repairRollups(groups: Seq[(Long, Long, Option[IndexedSeq[String]])],
+                            doomedIds: Option[DataFrame] = None,
                             upsertKeys: Option[DataFrame] = None): Unit = {
-    def survivorsFact(): DataFrame = {
-      val cols = Schemas.rawDatapoints.fieldNames.toSeq.map(col)
-      val raw = commitRead("raw", Schemas.rawDatapointsPartitioned)
-        .map(_.select(cols: _*))
-      val der = commitRead("derived", Schemas.rawDatapoints)
-        .map(_.select(cols: _*))
-      val fact = (raw ++ der).reduceOption(_.unionByName(_)).getOrElse(
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          Schemas.rawDatapoints))
-      // commitRead sees this commit's own writes: the in-flight delete file
-      // (merge-on-read) or the already-rewritten raw (copy-on-write), plus
-      // every previously committed range — one uniform survivor view
-      minusDeleted(fact, commitRead("raw_deletes", Schemas.rawDeletes))
+    import spark.implicits._
+    val ladder = Granularity.ladder
+    def dur(g: Granularity) = g.durationSeconds * 1000000L
+    def align(us: Long, g: Granularity) = us - java.lang.Math.floorMod(us, dur(g))
+    // the groups' windows aligned to level g; `whole` extends each to the
+    // end of its last bucket
+    def at(g: Granularity, whole: Boolean = false) = groups.map { case (lo, hi, sids) =>
+      (align(lo, g), align(hi, g) + (if (whole) dur(g) - 1 else 0L), sids)
     }
-    lazy val fact = survivorsFact()
-    // per-stream downsample watermarks, captured eagerly (the registry swap
-    // in the surrounding commit must not invalidate this plan) — only the
-    // upsert path needs them, and only for the doomed streams
-    val wmSlice = upsertKeys.map { _ =>
-      val slice = streams.select(col("stream_id"), col("downsampled_until"))
-        .join(doomedIds, Seq("stream_id"), "left_semi")
-      // metadata-sized ONLY on the bounded/hinted path (doomedSorted
-      // defined); the maxPruneStreams=0 fallback joins a potentially
-      // stream-count-sized id frame — funneling it through one task
-      // would undo the distributed fallback's point
-      Plans.checkpointTracked(
-        if (doomedSorted.isDefined) slice.coalesce(1) else slice)
+    // rows of `df` of some group's streams with `t` inside that group's
+    // window, both ends inclusive
+    def inGroups(df: DataFrame, t: String,
+                 windows: Seq[(Long, Long, Option[IndexedSeq[String]])]): DataFrame = {
+      val kept = df.where(windows.map { case (a, b, sids) =>
+        sids.fold(lit(true))(col("stream_id").isInCollection(_)) &&
+          col(t) >= tsLit(a) && col(t) <= tsLit(b)
+      }.reduce(_ || _))
+      doomedIds.fold(kept)(kept.join(_, Seq("stream_id"), "left_semi"))
     }
-    try {
-    // The seven ladder levels are INDEPENDENT: each reads and rewrites only
-    // its own rollup table, `fact` / `wmSlice` are shared read-only plans,
-    // and the commit bookkeeping (scopeBefore/retiredFiles) is concurrent
-    // by design ("some mutation bodies fan out concurrent per-table jobs").
-    // Overlapping them (guide §2.6) lets one level's small-job tails
-    // back-fill cores another level freed — the repair was the dominant
-    // sequential span of every upsert/row-delete commit.
-    Concurrency.inParallel[Unit](Granularity.ladder.map(g => () => {
-      val durUs = g.durationSeconds * 1000000L
-      val winLo = loUs - java.lang.Math.floorMod(loUs, durUs)
-      val winHi = hiUs - java.lang.Math.floorMod(hiUs, durUs)
-      val table = s"rollup/granularity=${g.name}"
-      commitRead(table, Schemas.downsampledPartitioned).foreach { cur =>
-        val bucketInWin = col("bucket_start") >= tsLit(winLo) &&
-          col("bucket_start") <= tsLit(winHi)
-        // upsert: every finalized bucket an upserted key lands in, existing
-        // in the rollup or not (the gap-bucket case in the scaladoc)
-        val extraPurged = upsertKeys.map { keys =>
-          keys.select(col("stream_id"),
-              Downsample.bucketStart(col("ts"), g).as("bucket_start"))
-            .join(wmSlice.get._1, Seq("stream_id"))
-            .where(unix_micros(col("bucket_start")) <
-              coalesce(element_at(col("downsampled_until"), lit(g.name)),
-                lit(Long.MinValue)))
-            .select("stream_id", "bucket_start").distinct()
-        }
-        val (purged, rdds) = Plans.checkpointTracked(
-          extraPurged.foldLeft(
-            cur.where(bucketInWin)
-              .join(doomedIds, Seq("stream_id"), "left_semi")
-              .select("stream_id", "bucket_start"))(
-            (base, extra) => base.unionByName(extra).distinct()))
-        try {
-          if (!purged.isEmpty) {
-            // upsert can create buckets in partitions NO touched file
-            // covers (gap buckets, fresh dates) — declare those partitions
-            // as write scope explicitly, or the commit diff never adopts
-            // the recomputed files and the write is silently invisible.
-            // Batch-bucket-scale collect; the delete path (recomputed ⊆
-            // touched partitions by construction) skips it. A purely
-            // gap-bucket upsert touches no existing rollup file at all.
-            val gapDates =
-              if (upsertKeys.isEmpty) Seq.empty
-              else purged.select(to_date(col("bucket_start")).as("d"))
-                .distinct().collect().map(r => s"bucket_date=${r.getDate(0)}")
-                .toSeq
-            rewriteFiles(table, Schemas.downsampledPartitioned, "bucket_date",
-                touchedByRanges(table, Seq((winLo, winHi, doomedSorted))),
-                extraScope = gapDates) { old =>
-              val recomputed = Downsample.aggregateRaw(
-                  fact.join(doomedIds, Seq("stream_id"), "left_semi")
-                    .where(unix_micros(col("ts")) >= lit(winLo) &&
-                      unix_micros(col("ts")) < lit(winHi + durUs)), g)
-                .join(purged, Seq("stream_id", "bucket_start"), "left_semi")
-                .withColumn("bucket_date", to_date(col("bucket_start")))
-              old.join(purged, Seq("stream_id", "bucket_start"), "left_anti")
-                .unionByName(recomputed)
-            }
-          }
-        } finally rdds.foreach(_.unpersist(blocking = false))
+    val committed = ladder.flatMap { g =>
+      commitRead(s"rollup/granularity=${g.name}", Schemas.downsampledPartitioned, at(g))
+        .map(inGroups(_, "bucket_start", at(g))
+          .select(lit(g.name).as("granularity"), col("stream_id"), col("bucket_start")))
+    }
+    val finalized = upsertKeys.map { keys =>
+      // watermarks from the in-memory registry generation
+      val marks = groups.head._3.fold(registry.rows)(_.flatMap(registry.byId.get))
+        .map(m => m.stream_id -> (ladder.map(g => Option(m.downsampled_until)
+          .flatMap(_.get(g.name)).getOrElse(Long.MinValue)): Seq[Long]))
+      val buckets = ladder.zipWithIndex.map { case (g, i) =>
+        val b = Downsample.bucketStart(col("ts"), g)
+        when(unix_micros(b) < element_at(col("_wm"), i + 1),
+          struct(lit(g.name).as("granularity"), b.as("bucket_start")))
       }
-    }), maxConcurrent = 4)
-    } finally wmSlice.foreach(_._2.foreach(_.unpersist(blocking = false)))
-    ()
+      keys.join(marks.toDF("stream_id", "_wm"), "stream_id")
+        .select(col("stream_id"), explode(filter(array(buckets: _*), _.isNotNull)).as("_k"))
+        .select(col("_k.granularity"), col("stream_id"), col("_k.bucket_start"))
+    }
+    val key = Seq("granularity", "stream_id", "bucket_start")
+    (committed ++ finalized).reduceOption(_.unionByName(_)).foreach { all =>
+      val (purged, rdds) = Plans.checkpointTracked(all.distinct())
+      try {
+        val dates = purged.select(col("granularity"), to_date(col("bucket_start")).cast("string"))
+          .as[(String, String)].mapPartitions(_.toSet.iterator).collect().toSet
+        val levels = ladder.indices.filter(i => dates.exists(_._1 == ladder(i).name))
+        val touched = levels.map(ladder).flatMap(g =>
+          touchedByRanges(s"rollup/granularity=${g.name}", at(g)).map(f => s"granularity=${g.name}/$f"))
+        val days = at(ladder.last, whole = true)
+        val cols = Seq("stream_id", "ts", "value").map(col)
+        val fact = Seq(commitRead("raw", Schemas.rawDatapointsPartitioned, days),
+            commitRead("derived", Schemas.rawDatapoints, days)).flatten.map(_.select(cols: _*))
+          .reduceOption(_.unionByName(_))
+          .getOrElse(readFiles("raw", Schemas.rawDatapoints, Nil).select(cols: _*))
+        // commitRead sees this commit's own writes: the in-flight delete file
+        // (merge-on-read) or the already-rewritten raw (copy-on-write), plus
+        // every previously committed range — one uniform survivor view
+        val survivors = minusDeleted(inGroups(fact, "ts", days),
+          commitRead("raw_deletes", Schemas.rawDeletes))
+        val los = ladder.map(at(_).map(_._1).min)
+        val his = ladder.map(g => at(g).map(_._2).max + dur(g))
+        val recomputed = Downsample.routedRollup(
+            Downsample.pointPartial(survivors)
+              .withColumn("_src", lit(-1)).withColumn("_lb", typedLit(los)),
+            ladder, his, levels)
+          .join(purged, key, "left_semi")
+          .withColumn("bucket_date", to_date(col("bucket_start")))
+        rewriteFiles("rollup", Schemas.downsampledPartitioned.add("granularity", "string"),
+            Seq("granularity", "bucket_date"), touched.toSet,
+            extraScope = dates.toSeq.map { case (g, d) => s"granularity=$g/bucket_date=$d" }) {
+          _.join(purged, key, "left_anti").unionByName(recomputed)
+        }
+      } finally rdds.foreach(_.unpersist(blocking = false))
+    }
   }
 
   /** ROW-LEVEL DELETE — the takedown/right-to-be-forgotten verb a training
@@ -1879,11 +1872,12 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     *  - copy-on-write: the manifest-pruned touched files are rewritten in
     *    this commit (survivors only); nothing is left for readers to merge.
     *
-    * Both strategies repair the downsample cascade in the SAME commit
-    * ([[repairRollups]]): finalized buckets overlapping the window are
-    * recomputed from the surviving rows (or vanish when emptied), so
-    * `get_data` at any granularity is consistent with the post-delete fact
-    * table the moment the commit lands. Time travel to a pre-delete version
+    * Both strategies repair the downsample cascade in the SAME commit, in
+    * one pass over all seven levels ([[repairRollups]]): the doomed
+    * streams' rollup rows overlapping the window are recomputed from the
+    * surviving rows (or vanish when emptied), so `get_data` at any
+    * granularity is consistent with the post-delete fact table the moment
+    * the commit lands. Time travel to a pre-delete version
     * still serves the deleted rows until vacuum; [[restore]] undoes the
     * delete wholesale.
     *
@@ -1973,19 +1967,21 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     import spark.implicits._
     val hinted = doomedSorted.isDefined
     val (doomedIds, doomedRdds) = doomedSorted match {
-      case Some(sids) => (broadcast(sids.toDF("stream_id")),
-        Seq.empty[org.apache.spark.rdd.RDD[_]])
+      case Some(sids) => (sids.toDF("stream_id"), Seq.empty[org.apache.spark.rdd.RDD[_]])
       case None => Plans.checkpointTracked(doomedDistinct)
     }
+    // the fallback's id frame; the bounded path filters by its id set
+    // (an IN filter: a broadcast costs a Spark job per plan)
+    val fallbackIds = if (hinted) None else Some(doomedIds)
     try {
       // exact voided-row count (the verb's return value): counted through
       // the CURRENT snapshot, so rows an earlier delete already voided are
       // not double-counted. `streamIds` below is FILE-level skipping only
-      // (a superset by contract) — the semi-join is the exact stream
-      // predicate.
-      val matched = rawDatapointsInRange(Some(start), Some(end), None,
-          doomedSorted)
-        .join(doomedIds, Seq("stream_id"), "left_semi")
+      // (a superset by contract) — the IN filter or semi-join is the exact
+      // stream predicate.
+      val inRange = rawDatapointsInRange(Some(start), Some(end), None, doomedSorted)
+      val matched = doomedSorted.fold(inRange.join(doomedIds, Seq("stream_id"), "left_semi"))(
+          ids => inRange.where(col("stream_id").isInCollection(ids)))
         .where(col("ts") >= lit(start) && col("ts") <= lit(end)).count()
       if (matched == 0L) return 0L
       val ranges = doomedIds
@@ -2009,7 +2005,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
         if (crashBeforeCommitOf("delete_datapoints_repair"))
           throw new IllegalStateException(
             "injected crash mid delete_datapoints")
-        repairRollups(doomedIds, doomedSorted, loUs, hiUs)
+        repairRollups(Seq((loUs, hiUs, doomedSorted)), fallbackIds)
       }
       matched
     } finally doomedRdds.foreach(_.unpersist(blocking = false))
@@ -2058,13 +2054,14 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * pure insert rewrites nothing and a point correction rewrites one
     * file, not the table. No pending-delete state is left behind.
     *
-    * The downsample cascade is repaired in the SAME commit
-    * ([[repairRollups]]): every finalized bucket an upserted key lands in
-    * is recomputed from the post-merge rows — including a finalized GAP
-    * bucket the insert creates (maintenance will never revisit it; the
-    * repair must materialize it now). Buckets above the watermark are left
-    * to maintenance. Registry bounds WIDEN from the batch (least/greatest)
-    * — an upsert may extend history at either end.
+    * The downsample cascade is repaired in the SAME commit, in one pass
+    * over all seven levels ([[repairRollups]]): the batch streams' rollup
+    * rows inside the batch's time window, and every finalized bucket an
+    * upserted key lands in, are recomputed from the post-merge rows —
+    * including a finalized GAP bucket the insert creates (maintenance will
+    * never revisit it; the repair must materialize it now). Buckets above
+    * the watermark are left to maintenance. Registry bounds WIDEN from the
+    * batch (least/greatest) — an upsert may extend history at either end.
     *
     * Contract edges, all pinned by tests: the merge key must be unique
     * within the batch (rejected otherwise — "last write wins" inside one
@@ -2186,7 +2183,6 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       val hiTs = flags.getTimestamp(5)
       val touchedDates = flags.getSeq[java.sql.Date](6)
         .map(d => s"dp_date=$d").sorted
-      import spark.implicits._
       // BOUNDED batch-scale collect (house head(max+1) fail-fast): the id
       // set drives manifest pruning, but a batch touching millions of
       // streams must refuse loudly, not OOM the driver mid-collect.
@@ -2207,10 +2203,6 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
                 "for the distributed (time-range-pruned) path")
           Some(head.sorted.toIndexedSeq)
         }
-      val doomedIds = sidsSorted match {
-        case Some(sids) => broadcast(sids.toDF("stream_id"))
-        case None => sidDf
-      }
       val keys = points.select("stream_id", "ts")
       // matched through the CURRENT snapshot (earlier-voided rows excluded).
       // The per-key match COUNT rides the same checkpointed frame (`_n`),
@@ -2262,8 +2254,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
                 .otherwise(col("latest_datapoint")))
             .drop("_lo", "_hi")
           swapRegistry(updated)
-          repairRollups(doomedIds, sidsSorted, usOfTs(loTs), usOfTs(hiTs),
-            upsertKeys = Some(keys))
+          repairRollups(Seq((usOfTs(loTs), usOfTs(hiTs), sidsSorted)),
+            if (sidsSorted.isEmpty) Some(sidDf) else None, upsertKeys = Some(keys))
         }
         nReplaced
       } finally mRdds.foreach(_.unpersist(blocking = false))
@@ -2689,8 +2681,8 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     * cursor [[appendBatch]] uses — the delete twin of the exactly-once
     * ingest verb, and what lets [[replicateTo]] propagate a source
     * merge-on-read delete instead of degrading the replica to insert-only.
-    * Commits one merge-on-read delete file plus the rollup repair for each
-    * distinct range window, with the cursor; a batch id at or below the
+    * Commits one merge-on-read delete file plus one rollup repair over
+    * every distinct range window, with the cursor; a batch id at or below the
     * cursor is a no-op. No dependency check: the ranges were validated
     * where they were first issued (the source warehouse), and a replica
     * mirrors, not re-adjudicates.
@@ -2702,11 +2694,9 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       scopeWrite("raw_deletes")
       ranges.toDF("stream_id", "lo_us", "hi_us").coalesce(1)
         .write.mode(SaveMode.Append).parquet(tablePath("raw_deletes"))
-      ranges.groupBy(r => (r._2, r._3)).toSeq.sortBy(_._1).foreach {
-        case ((lo, hi), rs) =>
-          val sids = rs.map(_._1).distinct.sorted.toIndexedSeq
-          repairRollups(broadcast(sids.toDF("stream_id")), Some(sids), lo, hi)
-      }
+      repairRollups(ranges.groupBy(r => (r._2, r._3)).toSeq.sortBy(_._1).map {
+        case ((lo, hi), rs) => (lo, hi, Some(rs.map(_._1).distinct.sorted.toIndexedSeq))
+      })
     }
   }
 
@@ -3996,7 +3986,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
       // clusters by (stream_id, time)
       val sortCols = partCol +: Seq("stream_id", tableLayout(table).get._2)
         .filterNot(_ == partCol)
-      rewriteFiles(table, schema, partCol, old)(
+      rewriteFiles(table, schema, Seq(partCol), old)(
         _.repartition(col(partCol)).sortWithinPartitions(sortCols.map(col): _*))
       val before = byPart.values.sum
       (before, before - old.size + writtenSoFar(table).size)
@@ -4148,7 +4138,7 @@ class Datastream(spark: SparkSession, private[graft] val warehouse: String) {
     */
   private def zorderRewrite(old: Set[String],
                             maxRecordsPerFile: Long): (Long, Long) = {
-    rewriteFiles("raw", rawSchemaPartitioned, "dp_date", old,
+    rewriteFiles("raw", rawSchemaPartitioned, Seq("dp_date"), old,
       maxRecordsPerFile = Some(maxRecordsPerFile))(zOrdered(_, old))
     (old.size.toLong, writtenSoFar("raw").size.toLong)
   }

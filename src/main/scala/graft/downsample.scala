@@ -26,11 +26,11 @@ import org.apache.spark.sql.types._
   *    the ladder is a pure rollup with no float drift, and `mean` /
   *    `std_dev` are derived at read time from (sum, count, sum_squares)
   *    [SURVEY.md §1.3].
-  *  - At 100 TB: partial tables are written per granularity (partitioned by
-  *    `date(bucket_start)`, bucketed by `stream_id`); maintenance reads the
-  *    raw slice once and each finer level's committed partials only in the
-  *    window of the level above it, and the shuffle key
-  *    `(level, stream_id, bucket)` is high-cardinality → no skew.
+  *  - At 100 TB: every level's partials land in one write, partitioned by
+  *    `(granularity, date(bucket_start))`; maintenance reads the raw slice
+  *    once and each finer level's committed partials only in the window of
+  *    the level above it, and the shuffle key `(level, stream_id, bucket)`
+  *    is high-cardinality → no skew.
   */
 object Downsample {
 

@@ -195,9 +195,8 @@ object Plans {
     * data is no longer referenced. The backing RDD is read directly off the
     * checkpointed Dataset's `LogicalRDD` plan leaf (GraftBridge) — NOT by
     * diffing `sparkContext.getPersistentRDDs` around the call, which a
-    * concurrent persist from another thread (e.g. the rollup repair's
-    * parallel levels) could contaminate, capturing an unrelated caller's blocks for
-    * later wrongful unpersist. The checkpoint is lineage-free: immune to
+    * concurrent persist from another thread could contaminate, capturing
+    * an unrelated caller's blocks for later wrongful unpersist. The checkpoint is lineage-free: immune to
     * later overwrites of the paths it was computed from (the
     * cached-plan-recompute hazard), and resident on executors — the driver
     * holds nothing proportional to the data.

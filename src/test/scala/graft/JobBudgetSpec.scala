@@ -332,6 +332,57 @@ class JobBudgetSpec extends SparkSpec {
     assert(jobs.size == 6, s"${jobs.size} jobs\n" + jobs.mkString("\n----\n"))
   }
 
+  /** Three seconds streams with three points a day on 2024-01-01 and
+    * 2024-01-02, downsampled to 2024-01-03 and warmed by one upsert and
+    * one copy-on-write delete: the next upsert or delete repairs finalized
+    * buckets at every ladder level.
+    */
+  private def repairable(): Datastream = {
+    val ds = new Datastream(spark, Files.createTempDirectory("graft-budget").toString)
+    val ids = Seq("s1", "s2", "s3")
+    ids.foreach(s => ds.ensureStream(s, Map("id" -> s)))
+    ds.appendMultiple(dp(for {
+      s <- ids; d <- Seq("2024-01-01", "2024-01-02"); t <- Seq("00:00:10", "06:30:00", "23:59:50")
+    } yield (s, s"${d}T${t}Z", 1.0)).select("stream_id", "ts", "value"))
+    ds.downsampleStreams(ts("2024-01-03T00:00:00Z"))
+    ds.upsertDatapoints(dp(Seq(("s1", "2024-01-01T06:30:00Z", 4.0))).select("stream_id", "ts", "value"))
+    ds.deleteDatapoints(Map("id" -> "s2"), ts("2024-01-01T06:00:00Z"),
+      ts("2024-01-01T07:00:00Z"), DeleteMode.CopyOnWrite)
+    ds
+  }
+
+  // before: 104, 102, 54 and 60 — the repair ran seven per-level arms,
+  // each checkpointing its purged keys and re-aggregating the survivors;
+  // now one purged-key checkpoint, one routed rollup and one write
+
+  test("a warm replacing upsertDatapoints launches 26 jobs") {
+    val ds = repairable()
+    val n = jobsDuring(assert(ds.upsertDatapoints(dp(Seq(("s2", "2024-01-02T06:30:00Z", 5.0)))
+      .select("stream_id", "ts", "value")) == 1L))
+    assert(n == 26, s"$n jobs")
+  }
+
+  test("a warm gap-bucket upsertDatapoints launches 24 jobs") {
+    val ds = repairable()
+    val n = jobsDuring(assert(ds.upsertDatapoints(dp(Seq(("s3", "2024-01-01T12:00:00Z", 5.0)))
+      .select("stream_id", "ts", "value")) == 0L))
+    assert(n == 24, s"$n jobs")
+  }
+
+  test("a warm copy-on-write deleteDatapoints launches 10 jobs") {
+    val ds = repairable()
+    val n = jobsDuring(assert(ds.deleteDatapoints(Map("id" -> "s3"), ts("2024-01-02T06:00:00Z"),
+      ts("2024-01-02T07:00:00Z"), DeleteMode.CopyOnWrite) == 1L))
+    assert(n == 10, s"$n jobs")
+  }
+
+  test("a warm merge-on-read deleteDatapoints launches 10 jobs") {
+    val ds = repairable()
+    val n = jobsDuring(assert(ds.deleteDatapoints(Map("id" -> "s3"), ts("2024-01-02T06:00:00Z"),
+      ts("2024-01-02T07:00:00Z"), DeleteMode.MergeOnRead) == 1L))
+    assert(n == 10, s"$n jobs")
+  }
+
   test("a warm Sq.appendToIndex launches 3 jobs: the params table is read with its schema") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-budget-sq").toString
